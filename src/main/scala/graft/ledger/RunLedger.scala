@@ -85,6 +85,12 @@ final class InMemoryLedger extends RunLedger {
   * reference's X4 model is 50 parallel Glue runs — separate JVMs, not
   * threads; `routing/lambda_function.py:78-104` races its get+put where
   * DynamoDB offered the conditional write).
+  *
+  * Reads are incremental: each instance keeps a latest-wins index of the
+  * lines it has read and the byte offset where it stopped, and every
+  * `get`/`tryAdmit` reads only what was appended since — by this instance
+  * or any other writer. A file that was replaced or truncated is read
+  * again from the start.
   */
 final class FileLedger(path: Path) extends RunLedger {
   Files.createDirectories(path.getParent)
@@ -164,56 +170,99 @@ final class FileLedger(path: Path) extends RunLedger {
       StandardOpenOption.CREATE, StandardOpenOption.APPEND)
   }
 
-  private def read(): Seq[LedgerEntry] = synchronized {
-    if (!Files.exists(path)) Nil
-    else {
-      val lines = Files.readAllLines(path).asScala.toSeq
-        .zipWithIndex.filter(_._1.nonEmpty)
-      // An unparseable FINAL line is the expected torn in-flight tail of a
-      // crashed (or legacy unlocked) writer — skip it quietly; latest-wins
-      // still holds. An unparseable MID-FILE line is either such a
-      // fragment later isolated by the putUnlocked newline defense
-      // (benign, inevitable after a writer crash) or real corruption of a
-      // committed record — the reader cannot distinguish them, and a
-      // corrupted Succeeded record means a later tryAdmit re-runs work
-      // that already committed. Failing hard would brick the ledger after
-      // every writer crash (this IS the crash-recovery gate), so the
-      // policy is skip-but-REPORT: every skipped line is surfaced on
-      // stderr with its position so corruption is visible, never silent
-      // (ADVICE r11).
-      val skipped = scala.collection.mutable.ArrayBuffer[Int]()
-      val out = lines.flatMap { case (l, i) =>
-        val parsed = scala.util.Try(JsonMethods.parse(l)).toOption
-        if (parsed.isEmpty && i < lines.last._2) skipped += (i + 1)
-        parsed.map { j =>
-          LedgerEntry(
-        executionHashId = (j \ "executionHashId") match { case JString(s) => s; case _ => "" },
-        sourceTable = (j \ "sourceTable") match { case JString(s) => s; case _ => "" },
-        status = (j \ "status") match { case JString(s) => s; case _ => "" },
-        rowCount = (j \ "rowCount") match { case JInt(i) => Some(i.toLong); case JLong(i) => Some(i); case _ => None },
-        expectedRows = (j \ "expectedRows") match { case JInt(i) => Some(i.toLong); case JLong(i) => Some(i); case _ => None },
-        schemaTree = (j \ "schemaTree") match { case JString(s) => Some(s); case _ => None },
-        startTs = (j \ "startTs") match { case JString(s) => Some(s); case _ => None },
-        endTs = (j \ "endTs") match { case JString(s) => Some(s); case _ => None },
-        errorMessage = (j \ "errorMessage") match { case JString(s) => Some(s); case _ => None })
-        }
+  // Latest-wins index over the lines read so far, and where reading stopped:
+  // `offset` is the byte just past the last line consumed, `anchor` the
+  // bytes ending there and `fileKey` the file's identity, so a replaced or
+  // truncated file is noticed and read again from the start.
+  private val index = scala.collection.mutable.HashMap.empty[(String, String), LedgerEntry]
+  private var offset = 0L
+  private var anchor = Array.emptyByteArray
+  private var fileKey: Any = null
+  private var linesRead = 0
+
+  /** Bring the index up to date with the file: read only the bytes appended
+    * since the last call, unless the file was replaced or truncated, in
+    * which case start again from byte zero. Admission therefore costs
+    * O(new lines), not O(ledger). */
+  private def refresh(): Unit = {
+    if (!Files.exists(path)) { reset(); return }
+    val ch = java.nio.channels.FileChannel.open(path, StandardOpenOption.READ)
+    try {
+      val key = Files.readAttributes(path,
+        classOf[java.nio.file.attribute.BasicFileAttributes]).fileKey()
+      val size = ch.size()
+      if (key != fileKey || size < offset || !anchorHolds(ch)) {
+        reset(); fileKey = key
       }
-      if (skipped.nonEmpty) System.err.println(
-        s"[graft] ledger $path: skipped ${skipped.size} unparseable " +
-          s"mid-file line(s) at ${skipped.mkString(",")} — possible " +
-          s"corruption of committed records; inspect before trusting " +
-          s"re-admission decisions")
-      out
+      if (size > offset) consume(readBytes(ch, offset, (size - offset).toInt), size)
+    } finally ch.close()
+  }
+
+  private def reset(): Unit = {
+    index.clear(); offset = 0L; anchor = Array.emptyByteArray
+    fileKey = null; linesRead = 0
+  }
+
+  private def readBytes(ch: java.nio.channels.FileChannel, at: Long,
+      n: Int): Array[Byte] = {
+    val buf = java.nio.ByteBuffer.allocate(n)
+    while (buf.hasRemaining && ch.read(buf, at + buf.position()) > 0) ()
+    java.util.Arrays.copyOf(buf.array(), buf.position())
+  }
+
+  private def anchorHolds(ch: java.nio.channels.FileChannel): Boolean =
+    java.util.Arrays.equals(
+      readBytes(ch, offset - anchor.length, anchor.length), anchor)
+
+  /** Parse the complete lines of `bytes` (read from `offset`) into the
+    * index. A newline-less tail is an append still in flight or the torn
+    * tail of a crashed writer: it is left unread. An unparseable line that
+    * ends the file is skipped quietly and left unread too, so it is judged
+    * again once lines follow it. An unparseable MID-FILE line is either
+    * such a fragment later isolated by the putUnlocked newline defense
+    * (benign, inevitable after a writer crash) or real corruption of a
+    * committed record — the reader cannot distinguish them, and a
+    * corrupted Succeeded record means a later tryAdmit re-runs work that
+    * already committed. Failing hard would brick the ledger after every
+    * writer crash (this IS the crash-recovery gate), so the policy is
+    * skip-but-REPORT: every skipped line is surfaced on stderr with its
+    * position so corruption is visible, never silent (ADVICE r11). */
+  private def consume(bytes: Array[Byte], fileSize: Long): Unit = {
+    val skipped = scala.collection.mutable.ArrayBuffer[Int]()
+    var start = 0
+    var nl = bytes.indexOf('\n'.toByte)
+    while (nl >= 0) {
+      val line = new String(bytes, start, nl - start, "UTF-8")
+      val parsed =
+        if (line.isEmpty) None else scala.util.Try(JsonMethods.parse(line)).toOption
+      val garbage = line.nonEmpty && parsed.isEmpty
+      if (garbage && offset + nl + 1 == fileSize) nl = -1
+      else {
+        linesRead += 1
+        if (garbage) skipped += linesRead
+        parsed.foreach { j => val e = FileLedger.entry(j); index(e.key) = e }
+        start = nl + 1
+        nl = bytes.indexOf('\n'.toByte, start)
+      }
     }
+    if (start > 0) {
+      offset += start
+      anchor = java.util.Arrays.copyOfRange(bytes, math.max(0, start - 256), start)
+    }
+    if (skipped.nonEmpty) System.err.println(
+      s"[graft] ledger $path: skipped ${skipped.size} unparseable " +
+        s"mid-file line(s) at ${skipped.mkString(",")} — possible " +
+        s"corruption of committed records; inspect before trusting " +
+        s"re-admission decisions")
   }
 
   /** Latest-wins by (hashId, table) — the "row_number() = 1 by ts desc" view
     * over an append-only log (SURVEY.md §2.1 K4 mapping). */
-  def get(h: String, t: String): Option[LedgerEntry] =
-    read().filter(_.key == (h, t)).lastOption
+  def get(h: String, t: String): Option[LedgerEntry] = synchronized {
+    refresh(); index.get((h, t))
+  }
 
-  def all: Seq[LedgerEntry] =
-    read().groupBy(_.key).map(_._2.last).toSeq
+  def all: Seq[LedgerEntry] = synchronized { refresh(); index.values.toSeq }
 }
 
 object FileLedger {
@@ -224,4 +273,15 @@ object FileLedger {
   private[ledger] def monitorFor(p: Path): Object =
     monitors.computeIfAbsent(
       p.toAbsolutePath.normalize.toString, _ => new Object)
+
+  private def entry(j: JValue): LedgerEntry = {
+    def str(k: String) = j \ k match { case JString(s) => Some(s); case _ => None }
+    def long(k: String) = j \ k match {
+      case JInt(i) => Some(i.toLong); case JLong(i) => Some(i); case _ => None
+    }
+    LedgerEntry(str("executionHashId").getOrElse(""),
+      str("sourceTable").getOrElse(""), str("status").getOrElse(""),
+      long("rowCount"), long("expectedRows"), str("schemaTree"),
+      str("startTs"), str("endTs"), str("errorMessage"))
+  }
 }

@@ -100,6 +100,13 @@ final class PlanRunner(
     } finally { pool.shutdown(); pool.awaitTermination(1, TimeUnit.HOURS) }
   }
 
+  /** One plan part: validate → admit (X6) → read → transform → write →
+    * register → reconcile → ledger → notify. X1 is one pass over the
+    * source: the lake write counts the rows it lands, and that count feeds
+    * the reconciliation and the ledger's `rowCount`. Only the unpartitioned
+    * K1 layout persists its rows, inside [[LakeWriter.writeCounted]], to
+    * size its files before writing them.
+    */
   def runSpec(spec: ExtractionSpec): RunReport = {
     val problems = graft.plan.PlanValidator.validate(spec)
     if (problems.nonEmpty) {
@@ -127,28 +134,27 @@ final class PlanRunner(
       notifier.notify(s"Extraction of ${spec.SourceTable} SKIPPED", hashId)
       return report
     }
-    var cached: Option[org.apache.spark.sql.DataFrame] = None
     try {
       val df = readSource(spec)
-      // X1 — cache so count + write share one source scan
-      // (`sybaseiq_extractor.py:295-296`). Unpersisted in the finally so a
-      // failing part doesn't pin cache memory for the rest of a long run.
-      df.cache()
-      cached = Some(df)
-      // Quirk preserved: count precedes rename/trim — reconciliation counts
-      // raw rows (`sybaseiq_extractor.py:296` vs `:312`; SURVEY.md §7.4).
-      val rawCount = df.count()
       val loadTs = java.sql.Timestamp.from(Instant.now)
       val cleaned = Transforms.pipeline(hashId, loadTs)(df)
-      val wr = LakeWriter.write(cleaned, lakeBase, spec.lakePathSuffix,
-        spec.s3PartitionColumn.map(Transforms.normalizeName), rawCount, writeMode)
+      // X1 — one pass over the source: the write counts the rows it lands.
+      // The transform chain and the date-part columns only add or rewrite
+      // columns, never rows, so the landed count equals the raw count the
+      // reference takes before its renames (`sybaseiq_extractor.py:296` vs
+      // `:312`; SURVEY.md §7.4). Only the unpartitioned K1 layout persists
+      // and counts before the write, inside the writer, for its size tier.
+      val wr = LakeWriter.writeCounted(cleaned, lakeBase, spec.lakePathSuffix,
+        spec.s3PartitionColumn.map(Transforms.normalizeName), writeMode)
       // Catalog registration `{SourceName}_{SourceTable}` in the target db,
-      // as the reference's Glue sink does (`sybaseiq_extractor.py:163`).
+      // as the reference's Glue sink does (`sybaseiq_extractor.py:163`),
+      // declared from the landed schema.
       LakeWriter.registerInCatalog(spark, targetDb,
-        Transforms.normalizeName(spec.lakeTableName), wr.path, wr.partitionColumns)
-      val rec = Reconciliation(spec.ExpectedAmountOfRecords, rawCount)
+        Transforms.normalizeName(spec.lakeTableName), wr.path,
+        wr.partitionColumns, wr.schema)
+      val rec = Reconciliation(spec.ExpectedAmountOfRecords, wr.rows)
       ledger.put(LedgerEntry(hashId, spec.SourceTable, RunStatus.Succeeded,
-        rowCount = Some(rawCount), expectedRows = spec.ExpectedAmountOfRecords,
+        rowCount = Some(wr.rows), expectedRows = spec.ExpectedAmountOfRecords,
         schemaTree = Some(cleaned.schema.treeString),
         startTs = Some(startTs), endTs = Some(Instant.now.toString)))
       notifier.notify(rec.subject(spec.SourceTable, RunStatus.Succeeded),
@@ -163,7 +169,7 @@ final class PlanRunner(
         notifier.notify(s"Extraction of ${spec.SourceTable} FAILED",
           String.valueOf(e.getMessage))
         RunReport(spec, RunStatus.Failed, None, None, Some(String.valueOf(e.getMessage)))
-    } finally cached.foreach(_.unpersist())
+    }
   }
 }
 

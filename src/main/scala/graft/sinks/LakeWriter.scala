@@ -1,6 +1,8 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.types.StructType
 import graft.operators.Transforms
 
 /** Lake sink layer — K1/K2/K3 of SURVEY.md §2.1.
@@ -33,8 +35,11 @@ object LakeFormat extends Enumeration {
   val Parquet, Delta = Value
 }
 
+/** What one write landed: its path and layout, the Parquet file count under
+  * the path, and the row count and schema of the landed frame (partition
+  * columns included). */
 final case class WriteResult(path: String, partitionColumns: Seq[String],
-    files: Long)
+    files: Long, rows: Long, schema: StructType)
 
 object LakeWriter {
 
@@ -63,7 +68,12 @@ object LakeWriter {
     * the reference does (`sybaseiq_extractor.py:168-171,239-250`):
     *   - date-like S3 partition column → derive year/month/day (P5), layout K2
     *   - other column → single-column layout K3
-    *   - none → unpartitioned K1 with size-tiered coalesce (X2)
+    *   - none → unpartitioned K1 with size-tiered coalesce (X2) sized by the
+    *     caller's `rowCount` (the partitioned layouts ignore it)
+    *
+    * One pass over `df`: the write itself counts the rows it lands (a
+    * `count(1)` [[org.apache.spark.sql.Observation]] on the landed frame),
+    * and the result carries that count and the landed schema.
     */
   def write(df: DataFrame, basePath: String, pathSuffix: String,
       s3PartitionColumn: Option[String], rowCount: Long,
@@ -92,7 +102,9 @@ object LakeWriter {
     // split into advisory-sized tasks instead of funneling through one.
     // Plain hash repartition is the no-AQE fallback (the hint would be
     // silently ignored there, reintroducing the pathology).
-    val out = clusterForWrite(out0, partCols)
+    val landed = Observation()
+    val out = clusterForWrite(
+      out0.observe(landed, count(lit(1)).as("rows")), partCols)
     val writer = out.write.format(
       if (format == LakeFormat.Delta) "delta" else "parquet")
     val configured = mode match {
@@ -105,7 +117,34 @@ object LakeWriter {
       if (partCols.nonEmpty) configured.partitionBy(partCols: _*) else configured
     withParts.save(path)
     val files = countParquetFiles(java.nio.file.Paths.get(path))
-    WriteResult(path, partCols, files)
+    WriteResult(path, partCols, files, observedRows(landed), out0.schema)
+  }
+
+  /** [[write]] for a caller that does not know the row count. The
+    * partitioned layouts (K2/K3) do not use it, so they take one pass over
+    * `df`. Only K1 needs the count before the write, because its X2 size
+    * tier depends on it: it persists `df`, counts it, lands the persisted
+    * rows and unpersists, so its source is also evaluated once.
+    */
+  def writeCounted(df: DataFrame, basePath: String, pathSuffix: String,
+      s3PartitionColumn: Option[String], mode: WriteMode.Value): WriteResult =
+    if (s3PartitionColumn.nonEmpty)
+      write(df, basePath, pathSuffix, s3PartitionColumn, 0L, mode)
+    else {
+      val pinned = df.persist()
+      try write(pinned, basePath, pathSuffix, None, pinned.count(), mode)
+      finally pinned.unpersist()
+    }
+
+  /** The row count a write's `count(1)` observation reported. Observations
+    * complete on the listener bus after the action returns, so this waits
+    * for it, boundedly. A frame with no partitions runs no task and
+    * reports an empty row: it landed no rows. */
+  private def observedRows(o: Observation): Long = {
+    import scala.concurrent.Await
+    import scala.concurrent.duration._
+    val row = Await.result(o.future, 5.minutes)
+    if (row.length == 0) 0L else row.getLong(0)
   }
 
   /** Latest-wins upsert — the MERGE analogue on plain partitioned Parquet
@@ -176,12 +215,15 @@ object LakeWriter {
     // cluster by partition columns: see the write() rationale — the merge
     // window shuffles by KEY, so without this every task holds every live
     // partition and the overwrite lands tasks × partitions files
-    val clustered = clusterForWrite(latest, partCols)
+    val landed = Observation()
+    val clustered = clusterForWrite(
+      latest.observe(landed, count(lit(1)).as("rows")), partCols)
     val writer = clustered.write.format("parquet").mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
     (if (partCols.nonEmpty) writer.partitionBy(partCols: _*) else writer)
       .save(path)
-    WriteResult(path, partCols, countParquetFiles(java.nio.file.Paths.get(path)))
+    WriteResult(path, partCols, countParquetFiles(java.nio.file.Paths.get(path)),
+      observedRows(landed), latest.schema)
   }
 
   /** Small-file compaction (the OPTIMIZE analogue for plain parquet): an
@@ -278,12 +320,17 @@ object LakeWriter {
     * `setCatalogInfo`). External datasource table over the written layout;
     * partitioned layouts get explicit partition columns + RECOVER PARTITIONS
     * so catalog-driven partition pruning works immediately.
+    *
+    * The DDL declares `schema`, the landed frame's own schema
+    * ([[WriteResult.schema]]), so registration reads nothing back from the
+    * lake and a write that landed no rows registers too. The K2
+    * `year`/`month`/`day` columns are therefore STRING, as the writer lands
+    * them and as the reference's Glue catalog holds them.
     */
-  def registerInCatalog(spark: org.apache.spark.sql.SparkSession, db: String,
-      table: String, path: String, partitionColumns: Seq[String]): Unit = {
+  def registerInCatalog(spark: SparkSession, db: String, table: String,
+      path: String, partitionColumns: Seq[String], schema: StructType): Unit = {
     spark.sql(s"CREATE DATABASE IF NOT EXISTS `$db`")
     spark.sql(s"DROP TABLE IF EXISTS `$db`.`$table`")
-    val schema = spark.read.parquet(path).schema
     val partSet = partitionColumns.toSet
     val dataCols = schema.fields.filterNot(f => partSet(f.name))
       .map(f => s"`${f.name}` ${f.dataType.sql}").mkString(", ")
@@ -300,6 +347,15 @@ object LakeWriter {
     if (partitionColumns.nonEmpty)
       spark.sql(s"ALTER TABLE `$db`.`$table` RECOVER PARTITIONS")
   }
+
+  /** [[registerInCatalog]] for a path whose schema is not known: the schema
+    * is inferred from the landed files (one footer-read job; partition
+    * column types are inferred from the directory names). Fails on a path
+    * that holds no Parquet file. */
+  def registerInCatalog(spark: SparkSession, db: String, table: String,
+      path: String, partitionColumns: Seq[String]): Unit =
+    registerInCatalog(spark, db, table, path, partitionColumns,
+      spark.read.parquet(path).schema)
 
   private def countParquetFiles(p: java.nio.file.Path): Long = {
     if (!java.nio.file.Files.exists(p)) 0L

@@ -436,16 +436,13 @@ object EventStreams {
       .option("checkpointLocation",
         checkpointDir.getOrElse(s"$lakeBase/_checkpoints/$pathSuffix"))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // Persist before counting: the count (coalesce sizing) and the lake
-        // write would otherwise each rescan the micro-batch source.
-        val pinned = batch.persist()
-        try {
-          val loadTs = java.sql.Timestamp.from(java.time.Instant.now)
-          val cleaned = Transforms.pipeline(hashId, loadTs)(pinned)
-          LakeWriter.write(cleaned, lakeBase, pathSuffix, Some("ts"),
-            pinned.count(), WriteMode.Append)
-          ()
-        } finally pinned.unpersist()
+        // The date layout needs no row count, so the micro-batch is read
+        // once, by the write.
+        val loadTs = java.sql.Timestamp.from(java.time.Instant.now)
+        val cleaned = Transforms.pipeline(hashId, loadTs)(batch)
+        LakeWriter.writeCounted(cleaned, lakeBase, pathSuffix, Some("ts"),
+          WriteMode.Append)
+        ()
       }
       .start()
   }

@@ -49,6 +49,76 @@ class RunnerSpec extends SparkSpec {
     assert(viaCatalog == n)
   }
 
+  test("a K2 part whose window holds no rows succeeds, registers its full " +
+      "schema and is SKIPPED on readmit") {
+    val (runner, _, notifier) = newRunner()
+    val plan = PlanCodec.parse(mkPlan(
+      "SELECT * FROM lineitem WHERE l_shipdate >= TIMESTAMP '1990-01-01' AND l_shipdate < TIMESTAMP '1990-02-01'",
+      table = "lineitem_empty", s3Col = "l_shipdate", expected = 0))
+    val r = runner.runPlan(plan).head
+    assert(r.status == RunStatus.Succeeded, r.error)
+    assert(r.reconciliation.contains(Reconciliation(Some(0L), 0L)))
+    assert(notifier.messages.exists(_._1 == "Extraction of lineitem_empty SUCCEEDED"))
+    val table = spark.table("graft_lake.graft_lineitem_empty")
+    assert(table.count() == 0)
+    assert(table.schema.map(f => f.name -> f.dataType) ==
+      r.writeResult.get.schema.map(f => f.name -> f.dataType))
+    assert(Seq("l_orderkey", "migration_executionhashid", "year", "month", "day")
+      .forall(table.columns.contains), table.columns.toSeq)
+    assert(runner.runPlan(plan).head.status == RunStatus.Skipped)
+  }
+
+  test("the catalog declares the landed types: K2 year/month/day are STRING") {
+    import org.apache.spark.sql.types.StringType
+    val (runner, _, _) = newRunner()
+    val plan = PlanCodec.parse(mkPlan(
+      "SELECT * FROM lineitem WHERE l_shipdate >= TIMESTAMP '1995-01-01' AND l_shipdate < TIMESTAMP '1995-02-01'",
+      table = "lineitem_types", s3Col = "l_shipdate"))
+    val r = runner.runPlan(plan).head
+    assert(r.status == RunStatus.Succeeded, r.error)
+    val schema = spark.table("graft_lake.graft_lineitem_types").schema
+    assert(Seq("year", "month", "day").forall(c => schema(c).dataType == StringType))
+    assert(schema.map(f => f.name -> f.dataType) ==
+      r.writeResult.get.schema.map(f => f.name -> f.dataType))
+    assert(spark.sql("SELECT count(*) FROM graft_lake.graft_lineitem_types " +
+      "WHERE year = '1995' AND month = '1'").collect()(0).getLong(0) ==
+      r.reconciliation.get.actual)
+  }
+
+  test("each part is one pass over its source (K1, K2, K3) and leaves " +
+      "nothing cached, whether it succeeds or fails") {
+    val (runner, _, _) = newRunner()
+    val evals = spark.sparkContext.longAccumulator("source_row_evals")
+    spark.udf.register("graft_count_eval", (k: Long) => { evals.add(1); k })
+    spark.udf.register("graft_fail_eval",
+      (k: Long) => { if (k >= 0) throw new IllegalStateException("boom"); k })
+    spark.catalog.clearCache()
+    val cases = Seq(
+      ("lineitem", "l_orderkey", "l_shipdate",
+        "WHERE l_shipdate >= TIMESTAMP '1995-01-01' AND l_shipdate < TIMESTAMP '1995-04-01'"),
+      ("orders", "o_orderkey", "o_orderstatus", ""),
+      ("region", "r_regionkey", "", ""))
+    cases.foreach { case (src, key, s3Col, where) =>
+      val sourceRows = graft.sources.TableCatalog.sql(spark, sf0001,
+        s"SELECT count(*) FROM $src $where").collect()(0).getLong(0)
+      assert(sourceRows > 0)
+      evals.reset()
+      val r = runner.runPlan(PlanCodec.parse(mkPlan(
+        s"SELECT *, graft_count_eval(CAST($key AS BIGINT)) AS probe FROM $src $where",
+        table = s"${src}_one_pass", s3Col = s3Col))).head
+      assert(r.status == RunStatus.Succeeded, r.error)
+      assert(r.reconciliation.get.actual == sourceRows)
+      assert(evals.sum == sourceRows,
+        s"$src: ${evals.sum} evaluations of $sourceRows source rows")
+      assert(spark.sharedState.cacheManager.isEmpty, s"$src left a cache entry")
+    }
+    val failed = runner.runPlan(PlanCodec.parse(mkPlan(
+      "SELECT *, graft_fail_eval(CAST(r_regionkey AS BIGINT)) AS probe FROM region",
+      table = "region_fails"))).head
+    assert(failed.status == RunStatus.Failed)
+    assert(spark.sharedState.cacheManager.isEmpty, "a failed K1 part left a cache entry")
+  }
+
   test("partitioned writes land ONE file per leaf partition (clustered)") {
     val (runner, lake, _) = newRunner()
     val plan = PlanCodec.parse(mkPlan(

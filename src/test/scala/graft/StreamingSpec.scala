@@ -217,15 +217,14 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming ingestion lands in the partitioned lake via foreachBatch") {
     val lake = java.nio.file.Files.createTempDirectory("graft_slake_").toString
-    // The micro-batch is persisted before the sizing count, so the lake
-    // write must consume the cached batch (InMemoryTableScan) instead of
-    // rescanning the source — record every execution plan during the run
-    // and assert the write's shape.
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    // The date layout needs no row count, so each micro-batch is read once,
+    // by its write: no persisted batch, no separate count action — record
+    // every action and execution plan during the run and assert that.
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
     val qel = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
-        plans.add(qe.executedPlan.toString)
+        plans.add(funcName -> qe.executedPlan.toString)
       override def onFailure(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
     }
@@ -238,7 +237,7 @@ class StreamingSpec extends SparkSpec {
       // plan instead of racing a fixed sleep
       import scala.jdk.CollectionConverters._
       val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!plans.asScala.exists(_.contains("WriteFiles")) &&
+      while (!plans.asScala.exists(_._2.contains("WriteFiles")) &&
         System.nanoTime() < deadline) Thread.sleep(100)
       plans.asScala.toVector
     } finally spark.listenerManager.unregister(qel)
@@ -251,11 +250,13 @@ class StreamingSpec extends SparkSpec {
     // restartability: offsets checkpoint landed next to the data
     val ckpt = new java.io.File(s"$lake/_checkpoints/ev/main/events/offsets")
     assert(ckpt.exists && ckpt.list().nonEmpty, "checkpoint offsets missing")
-    val writes = streamedWritePlans.filter(_.contains("WriteFiles"))
+    val writes = streamedWritePlans.map(_._2).filter(_.contains("WriteFiles"))
     assert(writes.nonEmpty, "no write execution recorded")
-    assert(writes.exists(_.contains("InMemoryTableScan")),
-      s"lake write rescanned the source instead of the persisted batch:\n${
-        writes.headOption.getOrElse("").take(1500)}")
+    assert(!writes.exists(_.contains("InMemoryTableScan")),
+      s"lake write read a persisted batch:\n${
+        writes.find(_.contains("InMemoryTableScan")).getOrElse("").take(1500)}")
+    assert(!streamedWritePlans.exists(_._1 == "count"),
+      s"a micro-batch was counted: ${streamedWritePlans.map(_._1)}")
   }
 
   test("snapshot-lake streaming sink is exactly-once across kill/restart + zombie retry") {
