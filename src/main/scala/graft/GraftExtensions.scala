@@ -19,10 +19,9 @@ import graft.plans.{AutoBandedRangeJoin, TopKPerKeyStrategy}
   *
   * every session on the cluster gets, with no code changes:
   *
-  *  - the graft scalar functions (`nfc_normalize`, `minhash_sig`,
-  *    `simhash_sig`, `cosine_sim`, `gram_shingle_hashes`) as REAL catalog functions — visible to
-  *    plain SQL, `DESCRIBE FUNCTION`, and views, not just sessions that
-  *    called a register helper first; and
+  *  - the graft scalar functions (see [[GraftExtensions.functions]]) as
+  *    REAL catalog functions — visible to plain SQL, `DESCRIBE FUNCTION`,
+  *    and views; and
   *  - [[graft.plans.AutoBandedRangeJoin]], which turns equality-free range
   *    joins from O(n x m) BroadcastNestedLoopJoin into banded equi-joins
   *    (opt-in per `spark.graft.rangeJoin.binSize`); and
@@ -30,10 +29,11 @@ import graft.plans.{AutoBandedRangeJoin, TopKPerKeyStrategy}
   *    logical node as partial+final bounded-heap execs (k rows per key per
   *    partition reach the shuffle, vs the window form's full-data shuffle).
   *
-  * Injection beats per-session `functionRegistry.createOrReplaceTempFunction`
-  * (the [[graft.functions.SketchFunctions.registerAll]] path, still kept for
-  * embedded use) at scale because it is configuration, applied uniformly at
-  * session build — no ordering hazard between registration and first query.
+  * Injection is configuration, applied uniformly at session build — no
+  * ordering hazard between registration and first query. Graft's own
+  * Column helpers ([[graft.functions.VectorFunctions]],
+  * [[graft.functions.SketchFunctions]]) build the same expressions
+  * directly, so they work in sessions without the extension too.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -45,9 +45,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftExtensions {
 
-  /** Canonical builder list shared by the injector. Argument shapes mirror
-    * [[graft.functions.SketchFunctions.registerAll]].
-    */
+  /** The catalog functions every session gets, as injector builders. */
   val functions: Seq[(FunctionIdentifier, ExpressionInfo,
       Seq[Expression] => Expression)] = Seq(
     (FunctionIdentifier("gram_shingle_hashes"),

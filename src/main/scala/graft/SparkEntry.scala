@@ -76,11 +76,11 @@ object SparkEntry {
     ss
   }
 
-  /** Streaming-source staging dir for the events table (micros timestamps),
-    * memoized per sf dir so the four ev_stream_* queries stage it once. */
-  private val streamSrcCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val dupStreamSrcCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val mmStreamSrcCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** Memo for everything several queries share (see [[graft.util.SessionMemo]]):
+    * fronts, ANN layouts and trained models per session; staged stream
+    * fixtures per process, so a caller that opens a fresh session per pass
+    * does not re-stage the same files. */
+  private val memo = new graft.util.SessionMemo
 
   /** Video fixture parquet, memoized per sf dir and SHARED by
     * ev_stream_mm_video and mm_video_dedup: the 5 000-container PNG encode
@@ -88,16 +88,18 @@ object SparkEntry {
     * spread() so the encode uses every core, written with a fixed file
     * count so downstream reads see stable partitioning. */
   private def videoMediaSrc(s: SparkSession, dir: String): String =
-    mmStreamSrcCache.computeIfAbsent(s"$dir#video", _ => {
+    memo.shared(s"mm_video:$dir") {
       val d = java.nio.file.Files.createTempDirectory("graft_evmv_").toString
       graft.operators.Multimodal.videoNearDupTableFromDocuments(
         s, spread(tbl(s, dir, "documents")), nDistinct = 20, nFrames = 8)
         .repartition(4)
         .write.mode("overwrite").parquet(d)
       d
-    })
+    }
+  /** Streaming-source staging dir for the events table (micros timestamps),
+    * memoized per sf dir so the ev_stream_* queries stage it once. */
   private def streamSource(s: SparkSession, dir: String): String =
-    streamSrcCache.computeIfAbsent(dir, _ => {
+    memo.shared(s"events:$dir") {
       val src = java.nio.file.Files.createTempDirectory("graft_evsrc_").toString
       // FIXED file count: the staged file list is the micro-batch
       // structure (FileStreamSource batches by files), so a floating
@@ -106,7 +108,7 @@ object SparkEntry {
       tbl(s, dir, "events").withColumn("ts", col("ts").cast("timestamp"))
         .repartition(4).write.mode("overwrite").parquet(src)
       src
-    })
+    }
 
   /** [[streamSource]] plus far-future sentinel rows on BOTH event types
     * (user_id −1, 10/15 days past the real maximum), so a draining outer
@@ -115,9 +117,8 @@ object SparkEntry {
     * emit — the finite-source flush for outer joins (see
     * [[graft.streaming.EventStreams.streamingViewPurchaseLeftJoin]]).
     */
-  private val flushedStreamSrcCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def streamSourceFlushed(s: SparkSession, dir: String): String =
-    flushedStreamSrcCache.computeIfAbsent(dir, _ => {
+    memo.shared(s"events_flushed:$dir") {
       val src = java.nio.file.Files.createTempDirectory("graft_evsrcf_").toString
       val ev = tbl(s, dir, "events").withColumn("ts", col("ts").cast("timestamp"))
       val mx = ev.agg(max(col("ts"))).collect()(0).getTimestamp(0)
@@ -131,7 +132,7 @@ object SparkEntry {
       ev.unionByName(sentinels).repartition(4)
         .write.mode("overwrite").parquet(src)
       src
-    })
+    }
 
   /** Shared dedup front, memoized per (session, sf dir): the gram-hash table
     * and the exact-Jaccard pair mine at the LOOSEST threshold any dedup
@@ -145,57 +146,31 @@ object SparkEntry {
     * lazily; keyed by session identity so test/driver sessions never share
     * RDD state.
     */
-  // Keyed on the session instance (no identityHashCode aliasing of a dead
-  // session). The cached DataFrames strongly reference their session, so
-  // weak keys alone would never collect — instead a listener evicts the
-  // entry when the session's underlying context stops (checkpointed blocks
-  // die with the context anyway).
-  private val dedupFrontCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.IdentityHashMap[SparkSession,
-        scala.collection.mutable.Map[String, (DataFrame, DataFrame, DataFrame)]]())
   private def dedupFront(s: SparkSession,
-      dir: String): (DataFrame, DataFrame, DataFrame) = {
-    val perSession = dedupFrontCache.synchronized {
-      var m = dedupFrontCache.get(s)
-      if (m == null) {
-        m = scala.collection.mutable.Map.empty
-        dedupFrontCache.put(s, m)
-        s.sparkContext.addSparkListener(
-          new org.apache.spark.scheduler.SparkListener {
-            override def onApplicationEnd(
-                e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-              dedupFrontCache.remove(s)
-          })
-      }
-      m
+      dir: String): (DataFrame, DataFrame, DataFrame) =
+    memo(s, s"dedup:$dir") {
+      val hashed = Dedup.gramHashes(spread(tbl(s, dir, "documents")),
+        "doc_id", "text", shingleK = 8).localCheckpoint(false)
+      // (gram, df) memoized alongside: three consumers (novelty, the
+      // front-truncation panel, the minhash gate's cap counter) each
+      // re-shuffled the exploded grams for the SAME aggregation before.
+      // NOT fed to the pair mines' df-cap filter: a checkpointed table
+      // on the filter-join's build side replaces the mine's inline
+      // aggregation subplan and flips the g-keyed pair join to a
+      // statically-planned sort-merge — measured 2× slower with 4.7 GB
+      // of sort spill at the 10× probe (r16 §8; the inline form's
+      // runtime-measured stages let AQE keep the fast strategy).
+      val gramDf = hashed.select(col("id"), explode(col("hs0")).as("g"))
+        .groupBy(col("g")).agg(count(lit(1)).as("df"))
+        .localCheckpoint(false)
+      // df cap 256: the quadratic-pair lever (see the operator's doc) —
+      // scale-run measured, uncapped the front grows 127× at 10× data;
+      // mirrored EXACTLY by the HAVING df filter in every consuming
+      // oracle, so the gate still hash-checks the pair set.
+      val pairs = Dedup.ngramJaccardPairsFromHashes(hashed, threshold = 0.2,
+        maxDocFreq = 256).localCheckpoint(false)
+      (hashed, pairs, gramDf)
     }
-    perSession.synchronized {
-      perSession.getOrElseUpdate(dir, {
-        val hashed = Dedup.gramHashes(spread(tbl(s, dir, "documents")),
-          "doc_id", "text", shingleK = 8).localCheckpoint(false)
-        // (gram, df) memoized alongside: three consumers (novelty, the
-        // front-truncation panel, the minhash gate's cap counter) each
-        // re-shuffled the exploded grams for the SAME aggregation before.
-        // NOT fed to the pair mines' df-cap filter: a checkpointed table
-        // on the filter-join's build side replaces the mine's inline
-        // aggregation subplan and flips the g-keyed pair join to a
-        // statically-planned sort-merge — measured 2× slower with 4.7 GB
-        // of sort spill at the 10× probe (r16 §8; the inline form's
-        // runtime-measured stages let AQE keep the fast strategy).
-        val gramDf = hashed.select(col("id"), explode(col("hs0")).as("g"))
-          .groupBy(col("g")).agg(count(lit(1)).as("df"))
-          .localCheckpoint(false)
-        // df cap 256: the quadratic-pair lever (see the operator's doc) —
-        // scale-run measured, uncapped the front grows 127× at 10× data;
-        // mirrored EXACTLY by the HAVING df filter in every consuming
-        // oracle, so the gate still hash-checks the pair set.
-        val pairs = Dedup.ngramJaccardPairsFromHashes(hashed, threshold = 0.2,
-          maxDocFreq = 256).localCheckpoint(false)
-        (hashed, pairs, gramDf)
-      })
-    }
-  }
 
   /** Force-materialize the shared dedup front for `dir` (gram hashes +
     * loose pair mine), returning the two row counts. Probes call this so
@@ -216,35 +191,14 @@ object SparkEntry {
     * edge table once and every analytic reads it (the [[dedupFront]]
     * convention; first consumer pays the build). Values are identical, so
     * every gate's oracle is unchanged. */
-  private val graphEdgeCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.IdentityHashMap[SparkSession,
-        scala.collection.mutable.Map[String, DataFrame]]())
-  private def graphEdgeFront(s: SparkSession, dir: String): DataFrame = {
-    val perSession = graphEdgeCache.synchronized {
-      var m = graphEdgeCache.get(s)
-      if (m == null) {
-        m = scala.collection.mutable.Map.empty
-        graphEdgeCache.put(s, m)
-        s.sparkContext.addSparkListener(
-          new org.apache.spark.scheduler.SparkListener {
-            override def onApplicationEnd(
-                e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-              graphEdgeCache.remove(s)
-          })
-      }
-      m
+  private def graphEdgeFront(s: SparkSession, dir: String): DataFrame =
+    memo(s, s"graph:$dir") {
+      val li = tbl(s, dir, "lineitem")
+        .where(col("l_orderkey") % 5 === 0)
+        .select(col("l_orderkey"), col("l_partkey"))
+      graft.operators.Graph.coOccurrenceEdges(
+        li, "l_partkey", "l_orderkey").localCheckpoint(false)
     }
-    perSession.synchronized {
-      perSession.getOrElseUpdate(dir, {
-        val li = tbl(s, dir, "lineitem")
-          .where(col("l_orderkey") % 5 === 0)
-          .select(col("l_orderkey"), col("l_partkey"))
-        graft.operators.Graph.coOccurrenceEdges(
-          li, "l_partkey", "l_orderkey").localCheckpoint(false)
-      })
-    }
-  }
 
   private def sql(s: SparkSession, dir: String, q: String): DataFrame =
     TableCatalog.sql(s, dir, q)
@@ -264,35 +218,14 @@ object SparkEntry {
   // attribution in BASELINE.md) — the 100 TB posture is the same as the
   // sidecar model cache's: an index is built once and SERVED, not
   // rebuilt per query.
-  private val annLayoutCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.IdentityHashMap[SparkSession,
-        scala.collection.mutable.Map[String, String]]())
   private def annLayout(s: SparkSession, dir: String, tier: String)(
-      build: String => Unit): String = {
-    val perSession = annLayoutCache.synchronized {
-      var m = annLayoutCache.get(s)
-      if (m == null) {
-        m = scala.collection.mutable.Map.empty
-        annLayoutCache.put(s, m)
-        s.sparkContext.addSparkListener(
-          new org.apache.spark.scheduler.SparkListener {
-            override def onApplicationEnd(
-                e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-              annLayoutCache.remove(s)
-          })
-      }
-      m
+      build: String => Unit): String =
+    memo(s, s"layout:$dir#$tier") {
+      val p = java.nio.file.Files
+        .createTempDirectory(s"graft_annfront_${tier}_").toString
+      build(p)
+      p
     }
-    perSession.synchronized {
-      perSession.getOrElseUpdate(s"$dir#$tier", {
-        val p = java.nio.file.Files
-          .createTempDirectory(s"graft_annfront_${tier}_").toString
-        build(p)
-        p
-      })
-    }
-  }
 
   /** Fresh private copy of a base layout for a gate that MUTATES it
     * (append/compact/streaming ingest) — the base stays pristine for the
@@ -300,7 +233,7 @@ object SparkEntry {
   private def copyLayout(base: String): String =
     graft.util.LinkCopy.copyDir(base)
 
-  // Shared TRAINED MODELS (the sibling memo to annLayoutCache): several
+  // Shared TRAINED MODELS (the sibling of annLayout): several
   // distinct layouts over the same corpus train the IDENTICAL quantizer —
   // unit-space IVF centroids are the same model for the SQ8/IVFADC/BQ
   // tiers (training reads only (id, unit vec); payload-independent), and
@@ -309,61 +242,32 @@ object SparkEntry {
   // the model to every sibling build via centroidsIn/codebookIn — the
   // layout builds keep their own assignment + land passes. First consumer
   // pays (first-payer attribution, the dedupFront convention).
-  private val annModelCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.IdentityHashMap[SparkSession,
-        scala.collection.mutable.Map[String, AnyRef]]())
-  private def annModel[T <: AnyRef](s: SparkSession, key: String)(
-      train: => T): T = {
-    val perSession = annModelCache.synchronized {
-      var m = annModelCache.get(s)
-      if (m == null) {
-        m = scala.collection.mutable.Map.empty
-        annModelCache.put(s, m)
-        s.sparkContext.addSparkListener(
-          new org.apache.spark.scheduler.SparkListener {
-            override def onApplicationEnd(
-                e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-              annModelCache.remove(s)
-          })
-      }
-      m
-    }
-    // r17 (ADVICE): per-key memo cells so the session map lock is never
-    // held across a Spark training job — unrelated trainings no longer
-    // serialize, and the latent lock-ordering hazard with annLayout's
-    // per-session lock is gone (the lazy cell synchronizes on itself)
-    final class Cell(f: () => AnyRef) { lazy val value: AnyRef = f() }
-    val cell = perSession.synchronized {
-      perSession.getOrElseUpdate(key, new Cell(() => train))
-    }.asInstanceOf[Cell]
-    cell.value.asInstanceOf[T]
-  }
+
   /** Unit-space IVF centroids over the FULL embeddings corpus — shared by
     * the sq16/ivfpq16 fronts and the BQ gate (all nLists=16, iters=2). */
   private def unitCents16(s: SparkSession, dir: String):
       Seq[(Long, Seq[Double], Double)] =
-    annModel(s, s"$dir#ucents_16x2")(Similarity.trainUnitIvfCentroids(
+    memo(s, s"$dir#ucents_16x2")(Similarity.trainUnitIvfCentroids(
       tbl(s, dir, "embeddings"), "vec_id", "embedding",
       nLists = 16, kMeansIters = 2))
   /** PQ sub-codebooks over the full corpus — shared by the flat-PQ layout
     * ("pq" front) and the IVFADC front (both m=16, ksub=32, iters=2). */
   private def pqCb16(s: SparkSession, dir: String): Seq[Seq[Seq[Double]]] =
-    annModel(s, s"$dir#pqcb_16x32x2")(Similarity.trainPqCodebook(
+    memo(s, s"$dir#pqcb_16x32x2")(Similarity.trainPqCodebook(
       tbl(s, dir, "embeddings"), "vec_id", "embedding",
       m = 16, ksub = 32, kMeansIters = 2))
   /** Unit-space centroids at the at-scale layout policy (nLists ∝ n,
     * iters=1) — shared by the ivfsq/ivfpq batch_scan gates. */
   private def unitCentsScan(s: SparkSession, dir: String, nLists: Int):
       Seq[(Long, Seq[Double], Double)] =
-    annModel(s, s"$dir#ucents_${nLists}x1")(Similarity.trainUnitIvfCentroids(
+    memo(s, s"$dir#ucents_${nLists}x1")(Similarity.trainUnitIvfCentroids(
       tbl(s, dir, "embeddings"), "vec_id", "embedding",
       nLists, kMeansIters = 1))
   /** Unit-space centroids over the 80% maintenance corpus (nLists ∝ n,
     * iters=1) — shared by the ivfpq corpus front and the SQ append gate. */
   private def unitCentsCorpus80(s: SparkSession, dir: String, nLists: Int):
       Seq[(Long, Seq[Double], Double)] =
-    annModel(s, s"$dir#ucents_c80_${nLists}x1")(
+    memo(s, s"$dir#ucents_c80_${nLists}x1")(
       Similarity.trainUnitIvfCentroids(
         tbl(s, dir, "embeddings").where(pmod(col("vec_id"), lit(5)) =!= 0),
         "vec_id", "embedding", nLists, kMeansIters = 1))
@@ -1984,15 +1888,14 @@ object SparkEntry {
     // composed form — char counts shrink, byte-identical to DuckDB's
     // nfc_normalize.
     "text_nfc" -> ((s, dir) => {
-      graft.functions.NfcNormalize.register(s)
       val decomposed = concat(col("text"),
         lit(" cafe\u0301 e\u0301 A\u030A")) // combining acute x2, ring
       tbl(s, dir, "documents")
         .select(col("doc_id"), decomposed.as("dirty"))
         .select(col("doc_id"),
-          expr("nfc_normalize(dirty)").as("clean"),
+          T.nfcNormalize(col("dirty")).as("clean"),
           length(col("dirty")).cast("long").as("n_before"),
-          length(expr("nfc_normalize(dirty)")).cast("long").as("n_after"))
+          length(T.nfcNormalize(col("dirty"))).cast("long").as("n_after"))
         .orderBy(col("doc_id"))
     }),
 
@@ -2719,13 +2622,13 @@ object SparkEntry {
     // and grouped on the dHash in Complete mode — the converged table
     // equals the batch mm_image_dedup, so it shares that oracle.
     "ev_stream_mm_dedup" -> ((s, dir) => {
-      val src = mmStreamSrcCache.computeIfAbsent(dir, _ => {
+      val src = memo.shared(s"mm_png:$dir") {
         val d = java.nio.file.Files.createTempDirectory("graft_evmm_").toString
         graft.operators.Multimodal.pngDupTableFromDocuments(
           s, tbl(s, dir, "documents"), nDistinct = 20)
           .write.mode("overwrite").parquet(d)
         d
-      })
+      }
       val ss = streamSession(s)
       val out = graft.streaming.EventStreams.runToCompletion(
         graft.streaming.EventStreams.streamingPerceptualDedup(ss, src),
@@ -3670,13 +3573,13 @@ object SparkEntry {
       import graft.streaming.EventStreams
       // duplicated copy of the shared staging dir (at-least-once replay) —
       // an input FIXTURE, memoized per sf dir like streamSource itself
-      val src = dupStreamSrcCache.computeIfAbsent(dir, _ => {
+      val src = memo.shared(s"events_dup:$dir") {
         val d = java.nio.file.Files.createTempDirectory("graft_evd_").toString
         val staged = graft.sources.FastParquet.read(s, streamSource(s, dir))
         staged.write.mode("overwrite").parquet(d)
         staged.write.mode("append").parquet(d)
         d
-      })
+      }
       val ss = streamSession(s)
       val out = EventStreams.runToCompletion(
         EventStreams.streamingDedupedTumblingCounts(ss, src),

@@ -675,82 +675,24 @@ final class LshWeightCache(nBits: Int) extends Serializable {
   }
 }
 
+/** Column builders for the sketch expressions. Each builds its Catalyst
+  * expression directly, so it works in any session; SQL callers reach the
+  * same expressions by name through [[graft.GraftExtensions]].
+  */
 object SketchFunctions {
-  import org.apache.spark.sql.SparkSession
+  import org.apache.spark.sql.GraftSqlBridge.{column, expression}
 
-  /** Register the sketch expressions with the session's function registry —
-    * makes them callable from both the Column DSL (via `expr(...)`) and
-    * plans' SQL Query strings. Idempotent. numPerm/seed ride along as
-    * literal arguments so SQL callers control them too.
-    */
-  def registerAll(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig",
-      es => es match {
-        case Seq(h) => MinHashSig(h, 64, 42L)
-        case Seq(h, n) => MinHashSig(h, intLit(n), 42L)
-        case Seq(h, n, s) => MinHashSig(h, intLit(n), longLit(s))
-        case _ => throw new IllegalArgumentException(
-          "minhash_sig(hashes[, numPerm[, seed]])")
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash_sig", es => SimHashSig(es.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", es => CosineSim(es(0), es(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "adc_score", es => AdcScore(es(0), es(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product", es => DotProduct(es(0), es(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sig_match_count", es => SigMatchCount(es(0), es(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lsh_bucket", es => LshBucketExpr(es(0), intLit(es(1))), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "as_double_vec", es => AsDoubleVec(es.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_norm", es => VecNorm(es.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "unit_vec", es => UnitVec(es.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sign_pack", es => SignPack(es.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hamming_dist", es => HammingDist(es(0), es(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pq_nearest_code", es => PqNearestCode(es(0), es(1), es(2)),
-      "built-in")
-  }
+  /** MinHash signature column over a pre-hashed array<bigint> column. */
+  def minhash_sig(hashes: Column, numPerm: Int, seed: Long = 42L): Column =
+    column(MinHashSig(expression(hashes), numPerm, seed))
 
-  /** MinHash signature column over a pre-hashed array<bigint> column name. */
-  def minhash_sig(spark: SparkSession, hashesCol: String, numPerm: Int,
-      seed: Long = 42L): Column = {
-    registerAll(spark)
-    org.apache.spark.sql.functions.expr(
-      s"minhash_sig($hashesCol, $numPerm, ${seed}L)")
-  }
+  /** SimHash column over a pre-hashed array<bigint> column. */
+  def simhash_sig(hashes: Column): Column =
+    column(SimHashSig(expression(hashes)))
 
-  /** SimHash column over a pre-hashed array<bigint> SQL expression. */
   /** Positional match count between two signature columns via the
     * SigMatchCount Catalyst expression — the per-candidate-pair estimated-
     * Jaccard numerator as one primitive pass. */
-  def sig_match_count(spark: SparkSession, a: Column, b: Column): Column = {
-    registerAll(spark)
-    org.apache.spark.sql.functions.call_function("sig_match_count", a, b)
-  }
-
-  def simhash_sig(spark: SparkSession, hashesExpr: String): Column = {
-    registerAll(spark)
-    org.apache.spark.sql.functions.expr(s"simhash_sig($hashesExpr)")
-  }
-
-  private def intLit(e: Expression): Int = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType) => v
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, LongType) => v.toInt
-    case other => throw new IllegalArgumentException(s"expected int literal, got $other")
-  }
-  private def longLit(e: Expression): Long = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType) => v.toLong
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, LongType) => v
-    case other => throw new IllegalArgumentException(s"expected long literal, got $other")
-  }
+  def sig_match_count(a: Column, b: Column): Column =
+    column(SigMatchCount(expression(a), expression(b)))
 }

@@ -39,11 +39,6 @@ object NfcNormalize {
     else UTF8String.fromString(
       java.text.Normalizer.normalize(str, java.text.Normalizer.Form.NFC))
   }
-
-  /** Register `nfc_normalize` on the session (idempotent). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nfc_normalize", es => NfcNormalize(es.head), "built-in")
 }
 
 /** Distinct k-char shingle xxhash64 set of the CANONICAL text, one pass —

@@ -19,6 +19,11 @@ object TextFunctions {
     * stable across whitespace/case noise. */
   def fingerprint(text: Column): Column = md5(canonicalText(text))
 
+  /** Unicode NFC normalization via the [[NfcNormalize]] expression. */
+  def nfcNormalize(text: Column): Column =
+    org.apache.spark.sql.GraftSqlBridge.column(
+      NfcNormalize(org.apache.spark.sql.GraftSqlBridge.expression(text)))
+
   /** Whitespace token count. */
   def tokenCount(text: Column): Column =
     size(regexp_extract_all(text, lit("\\S+"), lit(0)))

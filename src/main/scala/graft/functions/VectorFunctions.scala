@@ -1,13 +1,15 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.functions._
 
 /** Vector primitives over `Array[Float]` embedding columns, built from the
   * higher-order built-ins (`transform`/`zip_with`/`aggregate`) so the hot
   * path is codegen'd — no UDF boxing per element. All arithmetic is promoted
   * to double before accumulation for cross-engine determinism (sequential
-  * fold order is fixed).
+  * fold order is fixed). The `*Fast` forms build their Catalyst expression
+  * directly, so they need no function registration in the session.
   */
 object VectorFunctions {
 
@@ -34,83 +36,54 @@ object VectorFunctions {
   }
 
   /** Cosine via the CosineSim Catalyst expression (single primitive pass per
-    * pair — the form a 100 TB pair join needs). Registers the function on
-    * the session; resolution happens at analysis via call_function.
+    * pair — the form a 100 TB pair join needs).
     */
-  def cosineFast(spark: org.apache.spark.sql.SparkSession)(
-      a: Column, b: Column): Column = {
-    SketchFunctions.registerAll(spark)
-    call_function("cosine_sim", a, b)
-  }
+  def cosineFast(a: Column, b: Column): Column =
+    column(CosineSim(expression(a), expression(b)))
 
   /** Dot product via the DotProduct Catalyst expression (one primitive
     * pass per pair — the inner loop of centroid assignment, exact rerank,
     * and the PQ query-table build; see [[graft.functions.DotProduct]]).
     * Bit-identical to [[dot]] on the equal-length arrays every call site
     * produces. */
-  def dotFast(spark: org.apache.spark.sql.SparkSession)(
-      a: Column, b: Column): Column = {
-    SketchFunctions.registerAll(spark)
-    call_function("dot_product", a, b)
-  }
+  def dotFast(a: Column, b: Column): Column =
+    column(DotProduct(expression(a), expression(b)))
 
   /** ADC score Σ_j table[j][codes[j]] via the AdcScore Catalyst expression
     * (one primitive pass per row — the PQ/IVFADC sweep's hot loop; see
     * [[graft.functions.AdcScore]]). Bit-identical to the composable
     * `aggregate(zip_with(...))` form. */
-  def adcFast(spark: org.apache.spark.sql.SparkSession)(
-      codes: Column, table: Column): Column = {
-    SketchFunctions.registerAll(spark)
-    call_function("adc_score", codes, table)
-  }
+  def adcFast(codes: Column, table: Column): Column =
+    column(AdcScore(expression(codes), expression(table)))
 
   /** Nearest PQ sub-centroid via the PqNearestCode Catalyst expression —
     * the encode/train inner loop (see [[graft.functions.PqNearestCode]]).
     * Bit-identical to the composable argmin fold (strict <,
     * first-in-codebook ties). */
-  def pqCodeFast(spark: org.apache.spark.sql.SparkSession)(
-      sv: Column, j: Column, cb: Column): Column = {
-    SketchFunctions.registerAll(spark)
-    call_function("pq_nearest_code", sv, j, cb)
-  }
+  def pqCodeFast(sv: Column, j: Column, cb: Column): Column =
+    column(PqNearestCode(expression(sv), expression(j), expression(cb)))
 
   /** [[asDouble]] as one primitive pass (pass-through for array<double>);
     * see [[graft.functions.AsDoubleVec]]. */
-  def asDoubleFast(spark: org.apache.spark.sql.SparkSession)(
-      v: Column): Column = {
-    SketchFunctions.registerAll(spark)
-    call_function("as_double_vec", v)
-  }
+  def asDoubleFast(v: Column): Column = column(AsDoubleVec(expression(v)))
 
   /** [[l2Norm]] as one primitive pass; see [[graft.functions.VecNorm]]. */
-  def normFast(spark: org.apache.spark.sql.SparkSession)(v: Column): Column = {
-    SketchFunctions.registerAll(spark)
-    call_function("vec_norm", v)
-  }
+  def normFast(v: Column): Column = column(VecNorm(expression(v)))
 
   /** Unit-normalized double vector in one primitive pass (zero vectors
     * pass through unscaled); see [[graft.functions.UnitVec]]. */
-  def unitFast(spark: org.apache.spark.sql.SparkSession)(v: Column): Column = {
-    SketchFunctions.registerAll(spark)
-    call_function("unit_vec", v)
-  }
+  def unitFast(v: Column): Column = column(UnitVec(expression(v)))
 
   /** Sign-bit binarization into packed longs via the SignPack Catalyst
     * expression (1 bit/dim — the binary-quantization encoder; see
     * [[graft.functions.SignPack]]). */
-  def signPack(spark: org.apache.spark.sql.SparkSession)(v: Column): Column = {
-    SketchFunctions.registerAll(spark)
-    call_function("sign_pack", v)
-  }
+  def signPack(v: Column): Column = column(SignPack(expression(v)))
 
   /** Hamming distance between packed signatures via the HammingDist
     * Catalyst expression (XOR + popcount per word; see
     * [[graft.functions.HammingDist]]). */
-  def hammingDist(spark: org.apache.spark.sql.SparkSession)(
-      a: Column, b: Column): Column = {
-    SketchFunctions.registerAll(spark)
-    call_function("hamming_dist", a, b)
-  }
+  def hammingDist(a: Column, b: Column): Column =
+    column(HammingDist(expression(a), expression(b)))
 
   /** Symmetric int8 quantization scale: max(|x|) / 127 — the per-vector
     * scalar that maps the embedding onto [-127, 127]. Quantization is the
@@ -163,9 +136,6 @@ object VectorFunctions {
     * [[graft.functions.LshBucketExpr]]); this derives the same ±1 weights
     * from the same hash once per executor and runs a multiply-add loop.
     */
-  def lshBucketFast(spark: org.apache.spark.sql.SparkSession)(
-      v: Column, nBits: Int): Column = {
-    SketchFunctions.registerAll(spark)
-    call_function("lsh_bucket", v, lit(nBits))
-  }
+  def lshBucketFast(v: Column, nBits: Int): Column =
+    column(LshBucketExpr(expression(v), nBits))
 }

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, XxHash64}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.GraftSqlBridge.{column, expression}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal, XxHash64}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
 /** Explicit Bloom-filter semi-join reduction: build a Bloom filter over the
@@ -36,37 +37,6 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
   */
 object BloomJoin {
 
-  /** `bloom_filter_agg` / `might_contain` are internal expressions (no
-    * public registry entry); expose them to the SQL parser under graft names
-    * so the scalar-subquery probe shape is expressible. Idempotent.
-    */
-  def registerFunctions(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_agg",
-      es => es match {
-        case Seq(k, n, bits) =>
-          new BloomFilterAggregate(new XxHash64(Seq(k)), n, bits)
-            .toAggregateExpression()
-        case _ => throw new IllegalArgumentException(
-          "graft_bloom_agg(key, estimatedItems, numBits)")
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_might_contain",
-      es => es match {
-        case Seq(bloom, k) => BloomFilterMightContain(bloom, new XxHash64(Seq(k)))
-        case _ => throw new IllegalArgumentException(
-          "graft_might_contain(bloom, key)")
-      },
-      "built-in")
-  }
-
-  // Unique-per-build temp-view names for the scalar subquery (the subquery
-  // resolves against the catalog at analysis time, so the view must outlive
-  // this call; a monotonic suffix keeps repeated calls from aliasing each
-  // other's builds).
-  private val viewSeq = new java.util.concurrent.atomic.AtomicLong(0L)
-
   /** Exact left-semi join of `probe` against `build`, bloom-reduced before
     * the shuffle.
     *
@@ -88,8 +58,6 @@ object BloomJoin {
       s"bloomSemiJoin requires identical key types; got probe $probeKey: " +
         s"${probeType.simpleString} vs build $buildKey: " +
         s"${buildType.simpleString}. Cast both sides to a common type first.")
-    val spark = probe.sparkSession
-    registerFunctions(spark)
     val keys = build.select(col(buildKey).as("k")).where(col("k").isNotNull)
     // Sizing pass only when the caller has no bound — one column-pruned
     // scan of the build side (cheap next to the probe scan it saves).
@@ -99,12 +67,13 @@ object BloomJoin {
     // itself caps at spark.sql.optimizer.runtime.bloomFilter.maxNumBits.
     val numBits = math.max(64L,
       math.ceil(-n * math.log(fpp) / (math.log(2) * math.log(2))).toLong)
-    val viewName = s"graft_bloom_build_${viewSeq.incrementAndGet()}"
-    keys.createOrReplaceTempView(viewName)
-    val pred = expr(
-      s"""graft_might_contain(
-         |  (SELECT graft_bloom_agg(k, ${n}L, ${numBits}L) FROM $viewName),
-         |  `$probeKey`)""".stripMargin)
+    // bloom_filter_agg / might_contain are internal expressions with no
+    // public function, so the predicate is built from them directly
+    val bloom = keys.select(column(new BloomFilterAggregate(
+      new XxHash64(Seq(expression(col("k")))), Literal(n), Literal(numBits))
+      .toAggregateExpression())).scalar()
+    val pred = column(BloomFilterMightContain(expression(bloom),
+      new XxHash64(Seq(expression(col(probeKey))))))
     probe
       .where(col(probeKey).isNotNull && pred)
       .join(build.select(col(buildKey).as(probeKey)),

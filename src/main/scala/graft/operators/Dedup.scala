@@ -81,7 +81,7 @@ object Dedup {
         transform(col("hs0"), h => pmod(h, lit(Prime))).as("hs"))
       .select(col(idCol),
         graft.functions.SketchFunctions
-          .minhash_sig(hashed.sparkSession, "hs", numPerm).as("sig"))
+          .minhash_sig(col("hs"), numPerm).as("sig"))
 
   /** Banded LSH over MinHash signatures → candidate pairs with estimated
     * Jaccard (fraction of agreeing signature positions). `bands × rowsPerBand
@@ -198,7 +198,7 @@ object Dedup {
         // allocated two arrays and paid per-element interpreted lambda
         // eval per candidate PAIR — |pairs|·numPerm on the verify path
         (graft.functions.SketchFunctions.sig_match_count(
-          sigs.sparkSession, col("sig_a"), col("sig_b"))
+          col("sig_a"), col("sig_b"))
           / numPerm.toDouble).as("est_jaccard"))
       .where(col("est_jaccard") >= threshold)
   }
@@ -441,7 +441,7 @@ object Dedup {
     docs.select(col(idCol), tokenHashes(col(textCol)).as("ths"))
       .select(col(idCol),
         graft.functions.SketchFunctions
-          .simhash_sig(docs.sparkSession, "ths").as("sh"))
+          .simhash_sig(col("ths")).as("sh"))
 
   /** SimHash near-dup pairs with Hamming distance ≤ maxHamming, found via
     * chunk blocking: with `n` chunks, distance ≤ n-1 ⇒ at least one chunk is
@@ -1425,10 +1425,9 @@ object Dedup {
       if (hier) Some(Similarity.readHierarchy(spark, ivfPath)) else None
     val assigned = batch
       .select(col(idCol),
-        V.asDoubleFast(batch.sparkSession)(col(vecCol)).as("dv"))
+        V.asDoubleFast(col(vecCol)).as("dv"))
       .select(col(idCol), col("dv"),
-        V.normFast(org.apache.spark.sql.SparkSession.active)(col("dv"))
-          .as("v_norm"))
+        V.normFast(col("dv")).as("v_norm"))
       .select(col(idCol), col("dv"),
         (hierOpt match {
           case Some(h) => Similarity.probeCellsColHier(h, nProbe)
@@ -1450,10 +1449,9 @@ object Dedup {
       .where(Similarity.cellPruneFilter(spark, probes, hier,
         cellIsinCap = 2048))
       .select(col("cell").cast("long").as("cell"),
-        V.asDoubleFast(org.apache.spark.sql.SparkSession.active)(
-          col(vecCol)).as("cv"))
+        V.asDoubleFast(col(vecCol)).as("cv"))
     val dupIds = probes.join(corpus, "cell")
-      .where(V.cosineFast(spark)(col("dv"), col("cv")) >= threshold)
+      .where(V.cosineFast(col("dv"), col("cv")) >= threshold)
       .select(col(idCol)).distinct().withColumn("__d", lit(true))
     assigned.select(col(idCol), element_at(col("cells"), 1).as("cell"))
       .join(dupIds, Seq(idCol), "left")
@@ -1478,7 +1476,7 @@ object Dedup {
     val c = corpus.select(col(labelCol).as("blk"), col(idCol).as("id_c"),
       col(vecCol).as("v_c"))
     val truth = b.join(c, "blk")
-      .where(round(V.cosineFast(batch.sparkSession)(col("v_b"), col("v_c")), 6)
+      .where(round(V.cosineFast(col("v_b"), col("v_c")), 6)
         >= threshold)
       .select(col("id_b"), col("id_c"))
     truth.join(flagged, Seq("id_b"), "left")
@@ -1501,7 +1499,7 @@ object Dedup {
       col(vecCol).as("v_b"))
     l.join(r, "blk").where(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
-        round(V.cosineFast(embeddings.sparkSession)(col("v_a"), col("v_b")), 6).as("cos"))
+        round(V.cosineFast(col("v_a"), col("v_b")), 6).as("cos"))
       .where(col("cos") >= threshold)
   }
 

@@ -183,7 +183,7 @@ object Pca {
       .select(col(idCol), zip_with(col("dv"), meanLit, _ - _).as("cv"))
       .select(col(idCol),
         transform(compLit, comp =>
-          V.dotFast(df.sparkSession)(col("cv"), comp)).as("pca"))
+          V.dotFast(col("cv"), comp)).as("pca"))
   }
 
   /** One-row quality gate, the house metric-oracle split: `d` and the

@@ -26,7 +26,7 @@ object Similarity {
     embeddings.where(col(idCol) =!= queryId)
       .crossJoin(broadcast(query))
       .select(col(idCol),
-        round(V.cosineFast(embeddings.sparkSession)(col(vecCol), col("q_vec")), 6).as("cos"))
+        round(V.cosineFast(col(vecCol), col("q_vec")), 6).as("cos"))
       .orderBy(col("cos").desc, col(idCol).asc)
       .limit(k)
   }
@@ -46,8 +46,7 @@ object Similarity {
   def lshTopK(embeddings: DataFrame, idCol: String, vecCol: String,
       queryId: Long, k: Int, nBits: Int = 8, probeRadius: Int = 0): DataFrame = {
     val bucketed = embeddings.select(col(idCol), col(vecCol),
-      V.lshBucketFast(embeddings.sparkSession)(col(vecCol), nBits)
-        .as("bucket"))
+      V.lshBucketFast(col(vecCol), nBits).as("bucket"))
     val query = bucketed.where(col(idCol) === queryId)
       .select(col(vecCol).as("q_vec"), col("bucket"))
     // all xor masks with ≤ probeRadius bits set, built combinatorially at
@@ -65,7 +64,7 @@ object Similarity {
     bucketed.where(col(idCol) =!= queryId)
       .join(broadcast(probes), "bucket")
       .select(col(idCol),
-        round(V.cosineFast(embeddings.sparkSession)(col(vecCol), col("q_vec")), 6).as("cos"))
+        round(V.cosineFast(col(vecCol), col("q_vec")), 6).as("cos"))
       .orderBy(col("cos").desc, col(idCol).asc)
       .limit(k)
   }
@@ -88,7 +87,6 @@ object Similarity {
   def ivfTopK(embeddings: DataFrame, idCol: String, vecCol: String,
       queryId: Long, k: Int, nLists: Int = 16, nProbe: Int = 4,
       kMeansIters: Int = 0): DataFrame = {
-    val spark = embeddings.sparkSession
     val (withNorm, cents) =
       ivfModel(embeddings, idCol, vecCol, nLists, kMeansIters)
     val assigned = withNorm
@@ -107,7 +105,7 @@ object Similarity {
       .join(broadcast(queryCells), "cell")
       .crossJoin(broadcast(query))
       .select(col(idCol),
-        round(V.cosineFast(spark)(col(vecCol), col("q_vec")), 6).as("cos"))
+        round(V.cosineFast(col(vecCol), col("q_vec")), 6).as("cos"))
       .orderBy(col("cos").desc, col(idCol).asc)
       .limit(k)
   }
@@ -121,8 +119,7 @@ object Similarity {
     // loop here was paying per-element lambda eval + a zipped-array
     // allocation per (row, centroid) — the dominant term of every
     // IVF/IVFADC corpus write's cell assignment
-    val d = V.dotFast(org.apache.spark.sql.SparkSession.active)(
-      vec, c.getField("_2"))
+    val d = V.dotFast(vec, c.getField("_2"))
     val denom = vecNorm * c.getField("_3")
     when(denom === 0.0, lit(-2.0)).otherwise(d / denom)
   }
@@ -374,10 +371,9 @@ object Similarity {
     val payload = payloadCols.map(col)
     val withNormPlan = embeddings
       .select(col(idCol) +: col(vecCol) +: payload :+
-        V.asDoubleFast(org.apache.spark.sql.SparkSession.active)(
-          col(vecCol)).as("dv"): _*)
+        V.asDoubleFast(col(vecCol)).as("dv"): _*)
       .select(col(idCol) +: col(vecCol) +: payload :+ col("dv") :+
-        V.normFast(org.apache.spark.sql.SparkSession.active)(col("dv")).as("v_norm"): _*)
+        V.normFast(col("dv")).as("v_norm"): _*)
     // A caller holding already-trained centroids for THIS (corpus, space,
     // nLists, iters) recipe (the shared-trainer memo — train once, serve
     // every tier's layout build) skips seeding and refinement entirely;
@@ -431,8 +427,7 @@ object Similarity {
       vecCol: String, nLists: Int, kMeansIters: Int):
       Seq[(Long, Seq[Double], Double)] = {
     val unit = embeddings.select(col(idCol),
-      V.unitFast(org.apache.spark.sql.SparkSession.active)(
-        col(vecCol)).as("uv"))
+      V.unitFast(col(vecCol)).as("uv"))
     ivfModel(unit, idCol, "uv", nLists, kMeansIters)._2
   }
 
@@ -547,7 +542,7 @@ object Similarity {
       .where(excludeId.map(col(idCol) =!= _).getOrElse(lit(true)))
       .crossJoin(broadcast(query))
       .select(col(idCol),
-        round(V.cosineFast(spark)(col(vecCol), col("q_vec")), 6).as("cos"))
+        round(V.cosineFast(col(vecCol), col("q_vec")), 6).as("cos"))
       .orderBy(col("cos").desc, col(idCol).asc)
       .limit(k)
   }
@@ -565,12 +560,11 @@ object Similarity {
   def bruteForceBatchTopK(embeddings: DataFrame, idCol: String,
       vecCol: String, queries: DataFrame, qIdCol: String, qVecCol: String,
       k: Int, excludeSelf: Boolean = true): DataFrame = {
-    val spark = embeddings.sparkSession
     val q = queries.select(col(qIdCol).as("q_id"), col(qVecCol).as("q_vec"))
     val cands = embeddings.crossJoin(broadcast(q))
       .where(if (excludeSelf) col(idCol) =!= col("q_id") else lit(true))
       .select(col("q_id"), col(idCol),
-        round(V.cosineFast(spark)(col(vecCol), col("q_vec")), 6).as("cos"))
+        round(V.cosineFast(col(vecCol), col("q_vec")), 6).as("cos"))
     graft.plans.TopK.topKPerKey(cands, Seq("q_id"),
       Seq(col("cos").desc, col(idCol).asc), k)
   }
@@ -636,10 +630,9 @@ object Similarity {
     // first (lambda-referenced expressions re-evaluate per element)
     val qNormed = queries
       .select(col(qIdCol).as("q_id"), col(qVecCol).as("q_vec"),
-        V.asDoubleFast(spark)(col(qVecCol)).as("dv"))
+        V.asDoubleFast(col(qVecCol)).as("dv"))
       .select(col("q_id"), col("q_vec"), col("dv"),
-        V.normFast(org.apache.spark.sql.SparkSession.active)(col("dv"))
-          .as("v_norm"))
+        V.normFast(col("dv")).as("v_norm"))
 
     def one(q: DataFrame): DataFrame = {
       val probes = buildProbes(spark, path, q, Seq("q_vec"), np, regime)
@@ -655,7 +648,7 @@ object Similarity {
           col("q_vec"))), "cell")
         .where(if (excludeSelf) col(idCol) =!= col("q_id") else lit(true))
         .select(col("q_id"), col(idCol),
-          round(V.cosineFast(spark)(col(vecCol), col("q_vec")), 6).as("cos"))
+          round(V.cosineFast(col(vecCol), col("q_vec")), 6).as("cos"))
       graft.plans.TopK.topKPerKey(cands, Seq("q_id"),
         Seq(col("cos").desc, col(idCol).asc), k)
     }
@@ -944,17 +937,16 @@ object Similarity {
     // materialize its ADC table as a column: qtable[j][c] = ⟨q_j, cb_j[c]⟩
     val qUnit = queries
       .select(col(qIdCol).as("q_id"),
-        V.unitFast(org.apache.spark.sql.SparkSession.active)(
-          col(qVecCol)).as("q_dv"))
+        V.unitFast(col(qVecCol)).as("q_dv"))
     val qTabled = qUnit.select(col("q_id"), col("q_dv"),
       transform(sequence(lit(0), lit(m - 1)), j =>
         transform(element_at(cbLit, (j + 1).cast("int")), cv =>
-          V.dotFast(spark)(
+          V.dotFast(
             slice(col("q_dv"), j * lit(dsub) + lit(1), lit(dsub)),
             cv))).as("qtable"))
     // ADC sweep: compressed codes only; m lookups per (code-row, query),
     // through the primitive-pass AdcScore expression (the hot loop)
-    val approx = V.adcFast(spark)(col("codes"), col("qtable"))
+    val approx = V.adcFast(col("codes"), col("qtable"))
     def one(qT: DataFrame): DataFrame = {
       val shortlist = graft.plans.TopK.topKPerKey(
         graft.sources.FastParquet.read(spark, s"$path/codes")
@@ -968,7 +960,7 @@ object Similarity {
         .join(broadcast(shortlist.select(col("q_id"), col("q_dv"),
           col(idCol))), idCol)
         .select(col("q_id"), col(idCol),
-          round(V.dotFast(spark)(col("dv"), col("q_dv")), 6).as("cos"))
+          round(V.dotFast(col("dv"), col("q_dv")), 6).as("cos"))
       graft.plans.TopK.topKPerKey(exact, Seq("q_id"),
         Seq(col("cos").desc, col(idCol).asc), k)
     }
@@ -1065,8 +1057,7 @@ object Similarity {
     val spark = embeddings.sparkSession
     import spark.implicits._
     val dv = embeddings.select(col(idCol), col(labelCol),
-      V.asDoubleFast(org.apache.spark.sql.SparkSession.active)(
-        col(vecCol)).as("dv"))
+      V.asDoubleFast(col(vecCol)).as("dv"))
     val cents = dv
       .select(col(labelCol).cast("long"), col("dv"))
       .as[(Long, Array[Double])]
@@ -1105,15 +1096,14 @@ object Similarity {
       k: Int, nBits: Int = 8): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val bucketed = embeddings.select(col(idCol), col(vecCol),
-      V.lshBucketFast(embeddings.sparkSession)(col(vecCol), nBits)
-        .as("bucket"))
+      V.lshBucketFast(col(vecCol), nBits).as("bucket"))
     val l = bucketed.select(col("bucket"), col(idCol).as("id_a"), col(vecCol).as("v_a"))
     val r = bucketed.select(col("bucket"), col(idCol).as("id_b"), col(vecCol).as("v_b"))
     val w = Window.partitionBy(col("id_a"))
       .orderBy(col("cos").desc, col("id_b").asc)
     l.join(r, "bucket").where(col("id_a") =!= col("id_b"))
       .select(col("id_a"), col("id_b"),
-        round(V.cosineFast(embeddings.sparkSession)(col("v_a"), col("v_b")), 6).as("cos"))
+        round(V.cosineFast(col("v_a"), col("v_b")), 6).as("cos"))
       .withColumn("rk", row_number().over(w))
       .where(col("rk") <= k)
       .drop("rk")
@@ -1156,8 +1146,7 @@ object Similarity {
     // (their dot with anything is 0 — ranked last, deterministically).
     val unitPlan = embeddings
       .select(col(idCol) +: payloadCols.map(col) :+
-        V.unitFast(org.apache.spark.sql.SparkSession.active)(
-          col(vecCol)).as("dv"): _*)
+        V.unitFast(col(vecCol)).as("dv"): _*)
     // Scanned ≥3 times (seeds, per-iteration training, encoding, query row):
     // cut lineage once so the source is read and normalized once.
     val unit = unitPlan.localCheckpoint(false)
@@ -1229,8 +1218,7 @@ object Similarity {
     * sibling ADC loop 2.9× faster as a primitive pass). */
   private def pqCodeCol(codes: Seq[Seq[Seq[Double]]], j: Column,
       sv: Column): Column =
-    V.pqCodeFast(org.apache.spark.sql.SparkSession.active)(
-      sv, j.cast("int"), typedLit(codes))
+    V.pqCodeFast(sv, j.cast("int"), typedLit(codes))
 
   /** Encode every row of a (id, dv) frame to its m PQ codes — map-side; the
     * per-row cost is m·ksub·dsub ≈ ksub·d multiplies, same order as one IVF
@@ -1253,15 +1241,13 @@ object Similarity {
   private def pqScore(corpus: DataFrame, idCol: String,
       table: Seq[Seq[Double]], q: Seq[Double], k: Int,
       rerank: Int): DataFrame = {
-    val approx = V.adcFast(corpus.sparkSession)(col("codes"),
-      typedLit(table))
+    val approx = V.adcFast(col("codes"), typedLit(table))
     corpus
       .select(col(idCol), col("dv"), approx.as("approx"))
       .orderBy(col("approx").desc, col(idCol).asc)
       .limit(math.max(rerank, k))
       .select(col(idCol),
-        round(V.dotFast(corpus.sparkSession)(col("dv"), typedLit(q)), 6)
-          .as("cos"))
+        round(V.dotFast(col("dv"), typedLit(q)), 6).as("cos"))
       .orderBy(col("cos").desc, col(idCol).asc)
       .limit(k)
   }
@@ -1323,7 +1309,7 @@ object Similarity {
     val qn = math.sqrt(qd.map(x => x * x).sum)
     val q: Seq[Double] = (if (qn == 0.0) qd else qd.map(_ / qn)).toSeq
     val table = pqAdcTable(cb, q, dsub, d)
-    val approx = V.adcFast(spark)(col("codes"), typedLit(table))
+    val approx = V.adcFast(col("codes"), typedLit(table))
     // ADC sweep touches ONLY the compressed codes table
     val shortlist = graft.sources.FastParquet.read(spark, s"$path/codes")
       .where(excludeId.map(col(idCol) =!= _).getOrElse(lit(true)))
@@ -1335,7 +1321,7 @@ object Similarity {
     graft.sources.FastParquet.read(spark, s"$path/vectors")
       .join(broadcast(shortlist), idCol)
       .select(col(idCol),
-        round(V.dotFast(spark)(col("dv"), typedLit(q)), 6).as("cos"))
+        round(V.dotFast(col("dv"), typedLit(q)), 6).as("cos"))
       .orderBy(col("cos").desc, col(idCol).asc)
       .limit(k)
   }
@@ -1428,11 +1414,9 @@ object Similarity {
     val payload = payloadCols.map(col)
     val withNorm = batch
       .select(col(idCol) +: col(vecCol) +: payload :+
-        V.asDoubleFast(org.apache.spark.sql.SparkSession.active)(
-          col(vecCol)).as("dv"): _*)
+        V.asDoubleFast(col(vecCol)).as("dv"): _*)
       .select(col(idCol) +: col(vecCol) +: payload :+ col("dv") :+
-        V.normFast(org.apache.spark.sql.SparkSession.active)(col("dv"))
-          .as("v_norm"): _*)
+        V.normFast(col("dv")).as("v_norm"): _*)
     val assigned =
       if (hier) withCellAssignmentHier(withNorm, hierarchyOf(spark, path))
       else withCellAssignment(withNorm, centroidsOf(spark, path))
@@ -1932,11 +1916,9 @@ object Similarity {
     // unit-normalize (the layout quantizes direction) + assign + encode
     val unit = batch
       .select(col(idCol) +: payload :+
-        V.unitFast(org.apache.spark.sql.SparkSession.active)(
-          col(vecCol)).as("dv"): _*)
+        V.unitFast(col(vecCol)).as("dv"): _*)
     val withNorm = unit.select(col(idCol) +: payload :+ col("dv") :+
-      V.normFast(org.apache.spark.sql.SparkSession.active)(col("dv"))
-        .as("v_norm"): _*)
+      V.normFast(col("dv")).as("v_norm"): _*)
     // persisted hierarchy for hier layouts (see ivfAppend's rationale)
     val assigned = (if (hier)
       withCellAssignmentHier(withNorm, hierarchyOf(spark, path))
@@ -1999,17 +1981,16 @@ object Similarity {
     // table — all map-side, staged projections so lambdas see attributes
     val qUnit = queries
       .select(col(qIdCol).as("q_id"),
-        V.unitFast(org.apache.spark.sql.SparkSession.active)(
-          col(qVecCol)).as("dv"))
+        V.unitFast(col(qVecCol)).as("dv"))
     val qNormed = qUnit.select(col("q_id"), col("dv"),
-      V.normFast(org.apache.spark.sql.SparkSession.active)(col("dv")).as("v_norm"))
+      V.normFast(col("dv")).as("v_norm"))
     val qTabled = qNormed.select(col("q_id"), col("dv"), col("v_norm"),
       transform(sequence(lit(0), lit(m - 1)), j =>
         transform(element_at(cbLit, (j + 1).cast("int")), cv =>
-          V.dotFast(spark)(
+          V.dotFast(
             slice(col("dv"), j * lit(dsub) + lit(1), lit(dsub)),
             cv))).as("qtable"))
-    val approx = V.adcFast(spark)(col("codes"), col("qtable"))
+    val approx = V.adcFast(col("codes"), col("qtable"))
     def one(qT: DataFrame): DataFrame = {
       val probes = buildProbes(spark, path, qT, Seq("dv", "qtable"),
         np, regime)
@@ -2031,7 +2012,7 @@ object Similarity {
         .join(broadcast(shortlist.select(col("q_id"), col("q_dv"),
           col(idCol))), idCol)
         .select(col("q_id"), col(idCol),
-          round(V.dotFast(spark)(col("dv"), col("q_dv")), 6).as("cos"))
+          round(V.dotFast(col("dv"), col("q_dv")), 6).as("cos"))
       graft.plans.TopK.topKPerKey(exact, Seq("q_id"),
         Seq(col("cos").desc, col(idCol).asc), k)
     }
@@ -2084,8 +2065,7 @@ object Similarity {
     val payload = payloadCols.map(col)
     val unit = embeddings
       .select(col(idCol) +: payload :+
-        V.unitFast(org.apache.spark.sql.SparkSession.active)(
-          col(vecCol)).as("dv"): _*)
+        V.unitFast(col(vecCol)).as("dv"): _*)
     val (withNorm, cents) = ivfModel(
       unit.select(col(idCol) +: col("dv").as("uv") +: payload: _*),
       idCol, "uv", nLists, kMeansIters, payloadCols, centroidsIn)
@@ -2138,14 +2118,12 @@ object Similarity {
     val payload = payloadCols.map(col)
     val unit = batch
       .select(col(idCol) +: payload :+
-        V.unitFast(org.apache.spark.sql.SparkSession.active)(
-          col(vecCol)).as("uv"): _*)
+        V.unitFast(col(vecCol)).as("uv"): _*)
     val (assigned0, hier) = assignToLayout(unit, idCol, "uv", path,
       payloadCols)
     val assigned = assigned0
       .select(col(idCol) +:
-        V.asDoubleFast(org.apache.spark.sql.SparkSession.active)(col("uv"))
-          .as("dv") +: payload :+ col("super") :+
+        V.asDoubleFast(col("uv")).as("dv") +: payload :+ col("super") :+
         col("cell"): _*)
       .localCheckpoint(false) // feeds both appends
     // two-regime landing (r15): driver-direct under the micro-batch
@@ -2203,11 +2181,10 @@ object Similarity {
     }
     val qUnit = queries
       .select(col(qIdCol).as("q_id"),
-        V.unitFast(org.apache.spark.sql.SparkSession.active)(
-          col(qVecCol)).as("dv"))
+        V.unitFast(col(qVecCol)).as("dv"))
     val qNormed = qUnit.select(col("q_id"), col("dv"),
-      V.normFast(org.apache.spark.sql.SparkSession.active)(col("dv")).as("v_norm"))
-    val approx = col("scale") * V.dotFast(spark)(col("codes"), col("q_dv"))
+      V.normFast(col("dv")).as("v_norm"))
+    val approx = col("scale") * V.dotFast(col("codes"), col("q_dv"))
     def one(qT: DataFrame): DataFrame = {
       val probes = buildProbes(spark, path, qT, Seq("dv"), np, regime)
         .localCheckpoint(false)
@@ -2225,7 +2202,7 @@ object Similarity {
         .join(broadcast(shortlist.select(col("q_id"), col("q_dv"),
           col(idCol))), idCol)
         .select(col("q_id"), col(idCol),
-          round(V.dotFast(spark)(col("dv"), col("q_dv")), 6).as("cos"))
+          round(V.dotFast(col("dv"), col("q_dv")), 6).as("cos"))
       graft.plans.TopK.topKPerKey(exact, Seq("q_id"),
         Seq(col("cos").desc, col(idCol).asc), k)
     }
@@ -2260,8 +2237,7 @@ object Similarity {
     val spark = embeddings.sparkSession
     val unit = embeddings
       .select(col(idCol),
-        V.unitFast(org.apache.spark.sql.SparkSession.active)(
-          col(vecCol)).as("dv"))
+        V.unitFast(col(vecCol)).as("dv"))
     val (withNorm, cents) = ivfModel(
       unit.select(col(idCol), col("dv").as("uv")), idCol, "uv",
       nLists, kMeansIters, Nil, centroidsIn)
@@ -2275,7 +2251,7 @@ object Similarity {
       else out.partitionBy("cell").parquet(s"$path/$sub")
     }
     land(assigned.select(
-      (col(idCol) +: V.signPack(spark)(col("dv")).as("bits") +:
+      (col(idCol) +: V.signPack(col("dv")).as("bits") +:
         (if (hier) Seq(col("super")) else Nil)) :+ col("cell"): _*),
       "codes")
     land(assigned.select(
@@ -2314,14 +2290,12 @@ object Similarity {
     }
     val qUnit = queries
       .select(col(qIdCol).as("q_id"),
-        V.unitFast(org.apache.spark.sql.SparkSession.active)(
-          col(qVecCol)).as("dv"))
+        V.unitFast(col(qVecCol)).as("dv"))
     val qNormed = qUnit
       .select(col("q_id"), col("dv"),
-        V.normFast(org.apache.spark.sql.SparkSession.active)(col("dv"))
-          .as("v_norm"),
-        V.signPack(spark)(col("dv")).as("q_bits"))
-    val ham = V.hammingDist(spark)(col("bits"), col("q_bits"))
+        V.normFast(col("dv")).as("v_norm"),
+        V.signPack(col("dv")).as("q_bits"))
+    val ham = V.hammingDist(col("bits"), col("q_bits"))
     def one(qT: DataFrame): DataFrame = {
       val probes = buildProbes(spark, path, qT, Seq("dv", "q_bits"),
         np, regime)
@@ -2339,7 +2313,7 @@ object Similarity {
         .join(broadcast(shortlist.select(col("q_id"), col("q_dv"),
           col(idCol))), idCol)
         .select(col("q_id"), col(idCol),
-          round(V.dotFast(spark)(col("dv"), col("q_dv")), 6).as("cos"))
+          round(V.dotFast(col("dv"), col("q_dv")), 6).as("cos"))
       graft.plans.TopK.topKPerKey(exact, Seq("q_id"),
         Seq(col("cos").desc, col(idCol).asc), k)
     }
@@ -2366,13 +2340,12 @@ object Similarity {
     val spark = embeddings.sparkSession
     import spark.implicits._
     val bucketed = embeddings.select(col(idCol), col(vecCol),
-      V.lshBucketFast(embeddings.sparkSession)(col(vecCol), nBits)
-        .as("bucket"))
+      V.lshBucketFast(col(vecCol), nBits).as("bucket"))
     val l = bucketed.select(col("bucket"), col(idCol).as("id_a"), col(vecCol).as("v_a"))
     val r = bucketed.select(col("bucket"), col(idCol).as("id_b"), col(vecCol).as("v_b"))
     val cand = l.join(r, "bucket").where(col("id_a") =!= col("id_b"))
       .select(col("id_a"), col("id_b"),
-        round(V.cosineFast(spark)(col("v_a"), col("v_b")), 6).as("cos"))
+        round(V.cosineFast(col("v_a"), col("v_b")), 6).as("cos"))
       .as[(Long, Long, Double)]
     val topK = new TopKNeighbors(k)
     cand.groupByKey(_._1)

@@ -27,7 +27,7 @@ object AdcProbe {
       .localCheckpoint(true)
     val hof = aggregate(zip_with(col("codes"), typedLit(qtable),
       (c, row) => element_at(row, c + 1)), lit(0.0), _ + _)
-    val fast = graft.functions.VectorFunctions.adcFast(spark)(
+    val fast = graft.functions.VectorFunctions.adcFast(
       col("codes"), typedLit(qtable))
     def time(label: String)(f: => Double): Double = {
       val t0 = System.nanoTime()

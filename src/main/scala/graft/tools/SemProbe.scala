@@ -50,7 +50,7 @@ object SemProbe {
       val c = corpus.select(col("label").as("blk"), col("vec_id").as("id_c"),
         col("embedding").as("v_c"))
       val truth = b.join(c, "blk").where(round(
-        graft.functions.VectorFunctions.cosineFast(spark)(
+        graft.functions.VectorFunctions.cosineFast(
           col("v_b"), col("v_c")), 6) >= 0.3)
         .select(col("id_b")).distinct()
       val nT = truth.count()

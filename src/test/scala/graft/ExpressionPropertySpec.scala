@@ -14,9 +14,12 @@ import graft.functions.{VectorFunctions => V}
   * through one Spark job so the trial count stays tractable.
   */
 class ExpressionPropertySpec extends SparkSpec {
-  import spark.implicits._
 
   private val params = SCTest.Parameters.default.withMinSuccessfulTests(15)
+
+  // every check also runs on a fresh session that is not the active one:
+  // the fast columns must not depend on which session is active
+  private lazy val sessions = Seq(spark, spark.newSession())
 
   // element gen with deliberate exact-0 / negative-zero mass
   private val elemGen: Gen[Float] = Gen.frequency(
@@ -48,18 +51,18 @@ class ExpressionPropertySpec extends SparkSpec {
   }
 
   test("dot/norm/unit expressions equal the driver references on random vectors") {
-    val prop = Prop.forAll(pairsGen) { pairs =>
-      val df = pairs.toDF("a", "b")
+    val prop = Prop.forAll(pairsGen) { pairs => sessions.forall { s =>
+      val df = s.createDataFrame(pairs).toDF("a", "b")
       val got = df.select(
-        V.dotFast(spark)(col("a"), col("b")).as("dot"),
-        V.normFast(spark)(col("a")).as("nrm"),
-        V.unitFast(spark)(col("a")).as("unit")).collect()
+        V.dotFast(col("a"), col("b")).as("dot"),
+        V.normFast(col("a")).as("nrm"),
+        V.unitFast(col("a")).as("unit")).collect()
       got.zip(pairs).forall { case (r, (a, b)) =>
         r.getDouble(0) == refDot(a, b) &&
           r.getDouble(1) == refNorm(a) &&
           r.getSeq[Double](2) == refUnit(a)
       }
-    }
+    }}
     val res = SCTest.check(params, prop)
     assert(res.passed, res.status.toString)
   }
@@ -74,12 +77,12 @@ class ExpressionPropertySpec extends SparkSpec {
     }
     val prop = Prop.forAll(pairsGen) { pairs =>
       val nonEmpty = pairs.filter(_._1.nonEmpty)
-      nonEmpty.isEmpty || {
-        val df = nonEmpty.toDF("a", "b")
+      nonEmpty.isEmpty || sessions.forall { s =>
+        val df = s.createDataFrame(nonEmpty).toDF("a", "b")
         val got = df.select(
-          V.signPack(spark)(col("a")).as("pa"),
-          V.hammingDist(spark)(V.signPack(spark)(col("a")),
-            V.signPack(spark)(col("b"))).as("h")).collect()
+          V.signPack(col("a")).as("pa"),
+          V.hammingDist(V.signPack(col("a")),
+            V.signPack(col("b"))).as("h")).collect()
         got.zip(nonEmpty).forall { case (r, (a, b)) =>
           r.getSeq[Long](0) == refPack(a) &&
             r.getInt(1) == refPack(a).zip(refPack(b))
@@ -110,23 +113,25 @@ class ExpressionPropertySpec extends SparkSpec {
             Gen.chooseNum(-2.0, 2.0)))
         } yield (codes.toArray, table.map(_.toSeq))))
     val prop = Prop.forAll(sigGen, adcGen) { (sigs, adcs) =>
-      val sigOk = {
-        val got = sigs.toDF("a", "b").select(
-          graft.functions.SketchFunctions.sig_match_count(spark,
-            col("a"), col("b")).as("m")).collect()
-        got.zip(sigs).forall { case (r, (a, b)) =>
-          r.getInt(0) == a.zip(b).count { case (x, y) => x == y } }
-      }
-      val adcOk = {
-        val got = adcs.toDF("codes", "table").select(
-          V.adcFast(spark)(col("codes"), col("table")).as("s")).collect()
-        got.zip(adcs).forall { case (r, (codes, table)) =>
-          val ref = codes.zipWithIndex.foldLeft(0.0) {
-            case (acc, (c, j)) => acc + table(j)(c) }
-          r.getDouble(0) == ref
+      sessions.forall { s =>
+        val sigOk = {
+          val got = s.createDataFrame(sigs).toDF("a", "b").select(
+            graft.functions.SketchFunctions.sig_match_count(
+              col("a"), col("b")).as("m")).collect()
+          got.zip(sigs).forall { case (r, (a, b)) =>
+            r.getInt(0) == a.zip(b).count { case (x, y) => x == y } }
         }
+        val adcOk = {
+          val got = s.createDataFrame(adcs).toDF("codes", "table").select(
+            V.adcFast(col("codes"), col("table")).as("s")).collect()
+          got.zip(adcs).forall { case (r, (codes, table)) =>
+            val ref = codes.zipWithIndex.foldLeft(0.0) {
+              case (acc, (c, j)) => acc + table(j)(c) }
+            r.getDouble(0) == ref
+          }
+        }
+        sigOk && adcOk
       }
-      sigOk && adcOk
     }
     val res = SCTest.check(params, prop)
     assert(res.passed, res.status.toString)

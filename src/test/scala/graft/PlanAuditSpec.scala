@@ -237,7 +237,7 @@ class PlanAuditSpec extends SparkSpec
       assert(Dedup.simhashTable(docs, "doc_id", "text").collect().length == 50)
       val emb = spark.read.parquet(s"$sf0001/embeddings.parquet").limit(50)
       val cos = emb.select(graft.functions.VectorFunctions
-        .cosineFast(spark)(col("embedding"), col("embedding")).as("c"))
+        .cosineFast(col("embedding"), col("embedding")).as("c"))
       assert(cos.collect().forall(r => math.abs(r.getDouble(0) - 1.0) < 1e-9))
       // AsDoubleVec / VecNorm / UnitVec bit-identical to the composable
       // promote / sqrt-aggregate / when-transform-divide front, over real
@@ -247,12 +247,12 @@ class PlanAuditSpec extends SparkSpec
         .unionByName(emb.limit(1).select(
           transform(col("embedding"), _ => lit(0.0f)).as("embedding")))
       val unitBoth = withZero.select(
-        vf.asDoubleFast(spark)(col("embedding")).as("fastD"),
+        vf.asDoubleFast(col("embedding")).as("fastD"),
         vf.asDouble(col("embedding")).as("hofD"),
-        vf.normFast(spark)(col("embedding")).as("fastN"),
+        vf.normFast(col("embedding")).as("fastN"),
         sqrt(aggregate(vf.asDouble(col("embedding")), lit(0.0),
           (a, x) => a + x * x)).as("hofN"),
-        vf.unitFast(spark)(col("embedding")).as("fastU"))
+        vf.unitFast(col("embedding")).as("fastU"))
         .withColumn("hofU",
           when(col("hofN") === 0.0, col("hofD"))
             .otherwise(transform(col("hofD"), x => x / col("hofN"))))
@@ -267,7 +267,7 @@ class PlanAuditSpec extends SparkSpec
       // must reproduce xxhash64(bit, dim) parity exactly)
       for (nBits <- Seq(4, 8, 16)) {
         val lshBoth = emb.select(
-          graft.functions.VectorFunctions.lshBucketFast(spark)(
+          graft.functions.VectorFunctions.lshBucketFast(
             col("embedding"), nBits).as("fast"),
           graft.functions.VectorFunctions.lshBucket(
             col("embedding"), nBits).as("hof")).collect()
@@ -284,12 +284,12 @@ class PlanAuditSpec extends SparkSpec
           transform(sequence(lit(1), lit(24)),
             i => xxhash64(reverse(col("text")), i)).as("hb"))
         .select(
-          graft.functions.SketchFunctions.minhash_sig(spark, "ha", 32)
+          graft.functions.SketchFunctions.minhash_sig(col("ha"), 32)
             .as("sig_a"),
-          graft.functions.SketchFunctions.minhash_sig(spark, "hb", 32)
+          graft.functions.SketchFunctions.minhash_sig(col("hb"), 32)
             .as("sig_b"))
       val sigBoth = sigDf.select(
-        graft.functions.SketchFunctions.sig_match_count(spark,
+        graft.functions.SketchFunctions.sig_match_count(
           col("sig_a"), col("sig_b")).as("fast"),
         size(filter(zip_with(col("sig_a"), col("sig_b"),
           (x, y) => when(x === y, lit(1)).otherwise(lit(0))), _ === 1))
@@ -301,11 +301,11 @@ class PlanAuditSpec extends SparkSpec
       // float embeddings (promotion path) and double pairs, including the
       // centred-PCA shape ⟨x − mean, c⟩
       val dotBoth = emb.select(
-        graft.functions.VectorFunctions.dotFast(spark)(
+        graft.functions.VectorFunctions.dotFast(
           col("embedding"), col("embedding")).as("fast"),
         graft.functions.VectorFunctions.dot(
           col("embedding"), col("embedding")).as("hof"),
-        graft.functions.VectorFunctions.dotFast(spark)(
+        graft.functions.VectorFunctions.dotFast(
           zip_with(graft.functions.VectorFunctions.asDouble(col("embedding")),
             transform(col("embedding"), x => x.cast("double") / 2.0), _ - _),
           graft.functions.VectorFunctions.asDouble(col("embedding")))
@@ -328,7 +328,7 @@ class PlanAuditSpec extends SparkSpec
           transform(sequence(lit(0), lit(3)), c =>
             (j * 4 + c).cast("double") / 10.0)).as("qtable"))
       val both = codesDf.select(
-        graft.functions.VectorFunctions.adcFast(spark)(
+        graft.functions.VectorFunctions.adcFast(
           col("codes"), col("qtable")).as("fast"),
         aggregate(zip_with(col("codes"), col("qtable"),
           (c, row) => element_at(row, c + 1)), lit(0.0), _ + _).as("hof"))
@@ -364,13 +364,12 @@ class PlanAuditSpec extends SparkSpec
             .otherwise(acc)
         }).getField("code")
       val codesBoth = sliced.select(
-        graft.functions.VectorFunctions.pqCodeFast(spark)(
+        graft.functions.VectorFunctions.pqCodeFast(
           col("sv"), col("j").cast("int"), typedLit(cb2)).as("fast"),
         oldFold.as("fold")).collect()
       assert(codesBoth.nonEmpty && codesBoth.forall(r =>
         r.getInt(0) == r.getInt(1)),
         "pq_nearest_code must equal the argmin fold bit-for-bit")
-      graft.functions.NfcNormalize.register(spark)
       val nfc = docs
         .select(concat(col("text"), lit(" e\u0301")).as("dirty"))
         .select(expr("nfc_normalize(dirty)").as("t"))

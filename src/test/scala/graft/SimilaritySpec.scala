@@ -593,11 +593,11 @@ class SimilaritySpec extends SparkSpec {
     val probe = Seq((Array(1.0f, -2.0f, 0.0f, -0.5f), Array(-1.0f, 2.0f, 3.0f, 0.5f)))
       .toDF("a", "b")
     val r = probe.select(
-      graft.functions.VectorFunctions.signPack(spark)(col("a")).as("pa"),
-      graft.functions.VectorFunctions.signPack(spark)(col("b")).as("pb"),
-      graft.functions.VectorFunctions.hammingDist(spark)(
-        graft.functions.VectorFunctions.signPack(spark)(col("a")),
-        graft.functions.VectorFunctions.signPack(spark)(col("b"))).as("h"))
+      graft.functions.VectorFunctions.signPack(col("a")).as("pa"),
+      graft.functions.VectorFunctions.signPack(col("b")).as("pb"),
+      graft.functions.VectorFunctions.hammingDist(
+        graft.functions.VectorFunctions.signPack(col("a")),
+        graft.functions.VectorFunctions.signPack(col("b"))).as("h"))
       .head()
     // a: signs (+,-,+,-) → bits 0,2 → 0b0101 = 5; b: (-,+,+,+) → 0b1110 = 14
     assert(r.getSeq[Long](0) == Seq(5L), "sign_pack(a)")
