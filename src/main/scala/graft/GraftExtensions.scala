@@ -27,7 +27,17 @@ import graft.plans.{AutoBandedRangeJoin, TopKPerKeyStrategy}
   *    (opt-in per `spark.graft.rangeJoin.binSize`); and
   *  - [[graft.plans.TopKPerKeyStrategy]], planning the [[graft.plans.TopKPerKey]]
   *    logical node as partial+final bounded-heap execs (k rows per key per
-  *    partition reach the shuffle, vs the window form's full-data shuffle).
+  *    partition reach the shuffle, vs the window form's full-data shuffle);
+  *    and
+  *  - [[graft.fs.LocalFs]] as the `file://` FileSystem (and
+  *    [[graft.fs.LocalAfs]] for `FileContext`) on the SparkContext's Hadoop
+  *    configuration, unless the deployment configured its own. Spark ships
+  *    without `libhadoop`, so the stock local FileSystem forks `chmod` for
+  *    every file a lake write creates and `readlink` for every streaming
+  *    checkpoint rename; graft's answers both through `java.nio`. The
+  *    extension runs before Hadoop caches the `file://` instance (that
+  *    happens when the session's shared state is built), so every local
+  *    write of the session goes through it.
   *
   * Injection is configuration, applied uniformly at session build — no
   * ordering hazard between registration and first query. Graft's own
@@ -40,6 +50,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => AutoBandedRangeJoin)
     ext.injectPlannerStrategy(_ => TopKPerKeyStrategy)
     GraftExtensions.functions.foreach(ext.injectFunction)
+    org.apache.spark.sql.GraftSqlBridge.activeContext.foreach(sc =>
+      graft.fs.LocalFs.install(sc.hadoopConfiguration))
   }
 }
 

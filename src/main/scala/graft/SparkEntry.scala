@@ -71,8 +71,6 @@ object SparkEntry {
     // async progress-log writes racing the measured window
     ss.conf.set("spark.sql.streaming.stateStore.maintenanceInterval", "3600s")
     ss.conf.set("spark.sql.streaming.metricsEnabled", "false")
-    sys.env.get("GRAFT_STREAM_STATESTORE").foreach(c =>
-      ss.conf.set("spark.sql.streaming.stateStore.providerClass", c))
     ss
   }
 

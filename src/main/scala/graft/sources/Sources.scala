@@ -66,18 +66,22 @@ object TableCatalog {
     * calls against one sfDir (the 99-query gate) skip ~10 parquet footer
     * reads each; switching dirs re-registers because the views are
     * session-global state pointing at exactly one dir at a time.
+    *
+    * The frames are loaded outside the lock (a first load runs Spark's
+    * schema-inference jobs), and the views and the recorded dir are
+    * published together under it, so one session's loads never block
+    * another session's registration.
     */
   private val registeredDir =
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[SparkSession, String]())
   def registerAll(spark: SparkSession, sfDir: String): Unit =
-    registeredDir.synchronized {
-      if (registeredDir.get(spark) != sfDir) {
-        AllTables.foreach { t =>
-          val p = java.nio.file.Paths.get(sfDir, s"$t.parquet")
-          if (java.nio.file.Files.exists(p))
-            load(spark, sfDir, t).createOrReplaceTempView(t)
-        }
+    if (registeredDir.get(spark) != sfDir) {
+      val views = AllTables.filter(t =>
+        java.nio.file.Files.exists(java.nio.file.Paths.get(sfDir, s"$t.parquet")))
+        .map(t => t -> load(spark, sfDir, t))
+      registeredDir.synchronized {
+        views.foreach { case (t, df) => df.createOrReplaceTempView(t) }
         registeredDir.put(spark, sfDir)
       }
     }

@@ -1,14 +1,16 @@
 package org.apache.spark.sql
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** The one `org.apache.spark.sql`-scoped shim graft needs: building a
   * DataFrame from a raw LogicalPlan (to hand custom logical nodes such as
-  * [[graft.plans.TopKPerKey]] to the planner) and extracting the Catalyst
-  * expression behind a public Column. Both are `private[sql]` in Spark 4's
-  * classic API — the standard extension-library move is a package-scoped
-  * bridge; everything else in graft stays on public surface.
+  * [[graft.plans.TopKPerKey]] to the planner), extracting the Catalyst
+  * expression behind a public Column, and reaching the active SparkContext
+  * from a session extension. All are `private[sql]`/`private[spark]` in
+  * Spark 4's classic API — the standard extension-library move is a
+  * package-scoped bridge; everything else in graft stays on public surface.
   */
 object GraftSqlBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame = {
@@ -27,4 +29,7 @@ object GraftSqlBridge {
 
   /** Wrap a Catalyst expression back into a public Column. */
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
+
+  /** The SparkContext a session is being built on (`private[spark]`). */
+  def activeContext: Option[SparkContext] = SparkContext.getActive
 }

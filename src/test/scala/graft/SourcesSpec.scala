@@ -157,4 +157,51 @@ class SourcesSpec extends SparkSpec {
     assert(back.count() == 200)
     assert(back.except(src).isEmpty && src.except(back).isEmpty)
   }
+
+  test("registerAll holds no lock while another session's tables load") {
+    // a copy of sf0.001 with each table as a directory, so the first load's
+    // donor lookup lists it; the seam parks that listing on a latch
+    val copy = Files.createTempDirectory("graft_regblock_")
+    TableCatalog.AllTables.foreach { t =>
+      val f = java.nio.file.Paths.get(sf0001, s"$t.parquet")
+      if (Files.exists(f)) {
+        val d = Files.createDirectories(copy.resolve(s"$t.parquet"))
+        Files.copy(f, d.resolve("part-0.parquet"))
+      }
+    }
+    val entered = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    FsSeam.install("graft_regblock_", inner =>
+      new org.apache.hadoop.fs.FilterFileSystem(inner) {
+        override def listStatus(p: org.apache.hadoop.fs.Path) = {
+          entered.countDown()
+          release.await()
+          super.listStatus(p)
+        }
+      })
+    val blockedErr = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    val blocked = new Thread(() =>
+      try TableCatalog.registerAll(spark.newSession(), copy.toString)
+      catch { case t: Throwable => blockedErr.set(t) })
+    val other = spark.newSession()
+    val otherDone = new java.util.concurrent.CountDownLatch(1)
+    val runner = new Thread(() => {
+      TableCatalog.registerAll(other, sf0001)
+      otherDone.countDown()
+    })
+    try {
+      blocked.start()
+      assert(entered.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      runner.start()
+      assert(otherDone.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "registerAll waited on another session's table loads")
+      assert(other.table("nation").count() == 25)
+    } finally {
+      release.countDown()
+      blocked.join()
+      runner.join()
+      FsSeam.uninstall()
+    }
+    assert(blockedErr.get == null, String.valueOf(blockedErr.get))
+  }
 }

@@ -21,6 +21,15 @@ quartiles, and how many pairs B won (ties count for neither side). B's gain
 is claimed only when B wins at least nine tenths of the pairs and the
 medians differ by more than A's quartile distance. The raw run results go to
 `--out` as JSON.
+
+Each metric also gets a no-regression verdict against its BENCHMARK.json
+`bound` (a fraction of A's median):
+  regressed   B's median is worse than A's by more than the bound;
+  unresolved  A's quartile distance exceeds the bound times A's median, so
+              the runs spread too widely to tell, unless every B run beats
+              every A run;
+  ok          otherwise.
+The script exits with status 1 when any metric regressed.
 """
 import argparse
 import json
@@ -75,10 +84,20 @@ def quartiles(xs):
     return q1, q2, q3
 
 
+def verdict(xa, xb, qa, qb, sign, bound):
+    """regressed / unresolved / ok for one metric (see the module docstring)."""
+    if sign * (qb[1] - qa[1]) > bound * qa[1]:
+        return "regressed"
+    b_beats_all = all(sign * (x - y) > 0 for x in xa for y in xb)
+    if qa[2] - qa[0] > bound * qa[1] and not b_beats_all:
+        return "unresolved"
+    return "ok"
+
+
 def report(pairs, metrics, workloads):
     out = []
     for wl in workloads:
-        for name, better in metrics:
+        for name, better, bound in metrics:
             a = [p["a"][wl]["metrics"][name]["value"] if p["a"].get(wl) else None for p in pairs]
             b = [p["b"][wl]["metrics"][name]["value"] if p["b"].get(wl) else None for p in pairs]
             both = [(x, y) for x, y in zip(a, b) if x is not None and y is not None]
@@ -94,14 +113,16 @@ def report(pairs, metrics, workloads):
             gain = wins >= 0.9 * len(both) and sign * (qa[1] - qb[1]) > iqr_a
             out.append(dict(workload=wl, metric=name, n=len(both), a_q=qa, b_q=qb, a_iqr=iqr_a,
                             b_wins=wins, b_losses=losses, claim=gain,
-                            change=(qb[1] - qa[1]) / qa[1] if qa[1] else float("nan")))
+                            change=(qb[1] - qa[1]) / qa[1] if qa[1] else float("nan"),
+                            bound=bound, verdict=verdict(xa, xb, qa, qb, sign, bound)))
     print(f"{'workload':<20} {'metric':<8} {'A q1/median/q3':>26} {'B q1/median/q3':>26} "
-          f"{'A iqr':>7} {'change':>7} {'B wins':>7} claim")
+          f"{'A iqr':>7} {'change':>7} {'B wins':>7} claim verdict")
     for r in out:
         fa = "/".join(f"{v:.3f}" for v in r["a_q"])
         fb = "/".join(f"{v:.3f}" for v in r["b_q"])
         print(f"{r['workload']:<20} {r['metric']:<8} {fa:>26} {fb:>26} {r['a_iqr']:>7.3f} "
-              f"{r['change']:>+7.1%} {r['b_wins']:>3}/{r['n']:<3} {'yes' if r['claim'] else 'no'}")
+              f"{r['change']:>+7.1%} {r['b_wins']:>3}/{r['n']:<3} {'yes' if r['claim'] else 'no ':<5} "
+              f"{r['verdict']}")
     for wl in workloads:
         for side in ("a", "b"):
             runs = [p[side].get(wl) for p in pairs]
@@ -135,7 +156,7 @@ def main():
         export(commit, dirs[side])
         print(f"{side.upper()} = {commit} in {dirs[side]}", flush=True)
     with open(os.path.join(dirs["a"], "BENCHMARK.json")) as fh:
-        metrics = [(m["name"], m["better"]) for m in json.load(fh)["end_to_end"]]
+        metrics = [(m["name"], m["better"], m["bound"]) for m in json.load(fh)["end_to_end"]]
 
     for side in sides:  # build + fixtures + first-run effects, discarded
         for wl in workloads:
@@ -157,6 +178,8 @@ def main():
     if a.out:
         with open(a.out, "w") as fh:
             json.dump({"a": sides["a"], "b": sides["b"], "pairs": pairs, "summary": summary}, fh, indent=1)
+    if any(r["verdict"] == "regressed" for r in summary):
+        sys.exit(1)
 
 
 if __name__ == "__main__":
