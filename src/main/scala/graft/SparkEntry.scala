@@ -37,7 +37,7 @@ object SparkEntry {
     * trade) keep the conservative default — at the nLists ∝ n HIER
     * layouts the auto-nProbe floors are 0.55 (ivf/sq8) / 0.50 (bq),
     * measured on BOTH the adversarial permute corpus and the realistic
-    * constant-density corpus (ScaleRecallProbe; BASELINE.md round-11 —
+    * constant-density corpus (BASELINE.md round-11 auto-nProbe floors —
     * the two agree within 0.03, so the ceiling is the synthetic
     * embeddings' lack of cluster structure, not duplicate scatter).
     * Confirmed round 12 from the other side: on a CLUSTERED
@@ -71,6 +71,9 @@ object SparkEntry {
     // async progress-log writes racing the measured window
     ss.conf.set("spark.sql.streaming.stateStore.maintenanceInterval", "3600s")
     ss.conf.set("spark.sql.streaming.metricsEnabled", "false")
+    // streaming queries never run adaptively; with AQE on in the session
+    // Spark only logs a warning per query saying so
+    ss.conf.set("spark.sql.adaptive.enabled", "false")
     ss
   }
 
@@ -207,9 +210,10 @@ object SparkEntry {
   // mutators, and only maintenance gates run them), yet every sim_ann_*
   // gate trained and landed its own copy from scratch — ~2.3-2.4 s per
   // quantized gate of pure setup, the family's dominant fixed cost
-  // (ProfileAppend attribution). Build each distinct (tier, sf) BASE
-  // layout once per session into a stable temp dir, memoized exactly like
-  // the dedup front: read-only gates consume the shared path directly;
+  // (BASELINE.md round-11 quantized-append attribution). Build each
+  // distinct (tier, sf) BASE layout once per session into a stable temp
+  // dir, memoized exactly like the dedup front: read-only gates consume
+  // the shared path directly;
   // maintenance gates take a filesystem COPY (a few MB local copy, ~2
   // orders cheaper than retraining) so their mutations never leak into a
   // sibling's read. First consumer pays the build (first-payer
@@ -1540,7 +1544,7 @@ object SparkEntry {
       val (hashed, pairs, gramDf) = dedupFront(s, dir)
       // splitBucketSize=64: buckets beyond it re-key by a second band —
       // the occupancy guard the 10× probe demanded (in-bucket pair work
-      // grew 100× for 10× docs, 87% from buckets > 64; LshOccupancyProbe).
+      // grew 100× for 10× docs, 87% from buckets > 64; BASELINE.md round 8).
       // High-jaccard truth pairs agree on every band and survive the
       // stricter sub-key (DedupSpec pin), so the recall floor holds.
       // gramDfCap=256 mirrors the front's df cap, so the gate row also
@@ -2156,7 +2160,7 @@ object SparkEntry {
     // Gate: macro-averaged recall vs the per-query exact batch brute force;
     // the exact side's counts and integer-scaled cos-sum recompute in
     // DuckDB. Measured mean recall 0.795/0.845/0.787 at sf0.001/0.01/0.1
-    // (BatchAnnProbe); per-SF floors ~0.1 under.
+    // (BASELINE.md round-9 late additions); per-SF floors ~0.1 under.
     HL("sim_ann_ivf_batch") -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       val path = ivf16Front(s, dir)
@@ -2181,7 +2185,7 @@ object SparkEntry {
     // in the pair sweep). Plan pinned in PlanAuditSpec: label predicate in
     // PushedFilters alongside the probed-cell partition filter. Measured
     // mean recall 0.835/0.795/0.779 at sf0.001/0.01/0.1, zero predicate
-    // leaks (FilteredAnnProbe); per-SF floors ~0.1 under.
+    // leaks (BASELINE.md round-10 filtered ANN); per-SF floors ~0.1 under.
     HL("sim_ann_ivf_filtered") -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       val path = ivf16Front(s, dir)
@@ -2200,9 +2204,10 @@ object SparkEntry {
     // table (the shortlist source), filter applied ahead of the approx
     // sweep, rerank inheriting the filtered shortlist by id. Same gate
     // family/oracle as sim_ann_ivf_filtered. Measured mean recall
-    // 0.940/0.945/0.924 at sf0.001/0.01/0.1, zero leaks (FilteredAnnProbe
-    // — ABOVE the raw-IVF tier's: nProbe=12 vs 8 and the exact rerank
-    // recovers quantization loss); per-SF floors ~0.1 under.
+    // 0.940/0.945/0.924 at sf0.001/0.01/0.1, zero leaks (BASELINE.md
+    // round-10 filtered ANN — ABOVE the raw-IVF tier's: nProbe=12 vs 8
+    // and the exact rerank recovers quantization loss); per-SF floors
+    // ~0.1 under.
     HL("sim_ann_ivfsq_filtered") -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       val path = sq16Front(s, dir)
@@ -2220,8 +2225,7 @@ object SparkEntry {
     // quantized read path (raw IVF / SQ8 / IVFADC): payload in the codes
     // table, predicate ahead of the ADC sweep, rerank inherits the
     // filtered shortlist. Measured mean recall 0.930/0.935/0.870 at
-    // sf0.001/0.01/0.1, zero leaks (FilteredAnnProbe); per-SF floors
-    // ~0.1 under.
+    // sf0.001/0.01/0.1, zero leaks; per-SF floors ~0.1 under.
     HL("sim_ann_ivfpq_filtered") -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       val path = ivfpq16Front(s, dir)
@@ -2240,7 +2244,7 @@ object SparkEntry {
     // sweep pays m table lookups per pair over the compressed codes table,
     // shortlists cut by TopKPerKey, exact re-rank on |Q|·rerank vector
     // rows. Same gate family as sim_ann_ivf_batch; measured mean recall
-    // 0.985/0.965/0.842 at sf0.001/0.01/0.1 (BatchAnnProbe); per-SF
+    // 0.985/0.965/0.842 at sf0.001/0.01/0.1 (BASELINE.md round 9); per-SF
     // floors ~0.1 under.
     HL("sim_ann_pq_batch") -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
@@ -2261,7 +2265,7 @@ object SparkEntry {
     // (the #2-heaviest bench family) cut to nProbe/nLists of the codes
     // table, re-rank reads equally pruned. Same gate family as the other
     // batch ANN entries; measured mean recall 0.925/0.890/0.817 at
-    // sf0.001/0.01/0.1 with nProbe=12 (HierProbe); per-SF floors.
+    // sf0.001/0.01/0.1 with nProbe=12 (BASELINE.md round 8); per-SF floors.
     HL("sim_ann_ivfpq_batch") -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       val path = ivfpq16Front(s, dir)
@@ -2283,7 +2287,7 @@ object SparkEntry {
     // one DotProduct primitive pass per (code-row, query); same probe
     // regimes + rerank as the PQ path. Same gate family; measured mean
     // recall 0.940/0.905/0.944 at sf0.001/0.01/0.1 with nProbe=12
-    // (BatchAnnProbe); per-SF floors.
+    // (BASELINE.md round-9 late additions); per-SF floors.
     HL("sim_ann_ivfsq_batch") -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       val path = sq16Front(s, dir)
@@ -2361,7 +2365,7 @@ object SparkEntry {
     // word), exact rerank. Hamming over d=64 sign bits is coarse (65
     // distinct values), hence the generous rerank. Measured mean recall
     // 0.840/0.805/0.675 at sf0.001/0.01/0.1 with nProbe=12 rerank=128
-    // (BatchAnnProbe); per-SF floors ~0.1 under those.
+    // (BASELINE.md round-9 late additions); per-SF floors ~0.1 under those.
     HL("sim_ann_ivfbq_batch") -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       val path = java.nio.file.Files.createTempDirectory("graft_ivfbq_").toString

@@ -133,7 +133,8 @@ object ProbeCellsModel {
   * `transform` + `array_sort` + `flatten` over centroid-struct literals —
   * runs entirely in interpreted HigherOrderFunctions: per (row, centroid)
   * it allocated a scored struct and paid interpreted lambda eval, which an
-  * isolated probe (AssignProbe, 1M rows × nLists=1024, d=64) measured at
+  * isolated probe (BASELINE.md round 9: 1M rows × nLists=1024, d=64)
+  * measured at
   * ~6.7 µs/row — an order of magnitude over the raw flop cost. This
   * expression sits on every IVF/IVFADC corpus write (cell assignment is
   * `nProbe = 1`) and every literal-regime batch probe. Bit-identity with

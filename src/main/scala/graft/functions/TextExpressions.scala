@@ -49,7 +49,7 @@ object NfcNormalize {
   * CollapseProject inlines the canonicalization REGEX into every
   * `substr(ct, i, k)` lambda call site, so the collapsed plan re-runs
   * `regexp_replace` once per shingle position — measured 5.7× slower at
-  * sf0.1 (ProfileGram: 3.65 s vs 0.64 s for 5 000 docs; 16 s on one core
+  * sf0.1 (3.65 s vs 0.64 s for 5 000 docs; 16 s on one core
   * inside the ppjoin front). The [[MinHashSig]] scaladoc records the same
   * pathology for the signature tier. Here the canonical form is computed
   * ONCE per row with the exact primitives Spark's own functions use —

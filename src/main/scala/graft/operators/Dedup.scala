@@ -148,7 +148,7 @@ object Dedup {
     // it re-key their members by the NEXT band's hash as well (a stricter
     // 2-band key), bounding in-bucket pair expansion by similarity rather
     // than by the positional id-order slice alone. Measured driver
-    // (LshOccupancyProbe, 10× replica corpus): in-bucket pair work grew
+    // (BASELINE.md round 8, 10× replica corpus): in-bucket pair work grew
     // 100× for 10× docs — 631 k → 63.4 M, 87% of it from buckets > 64 —
     // because a rows=2 band key is weak and bucket occupancy scales with
     // replica df. Truly-similar pairs survive the stricter key with
@@ -377,7 +377,7 @@ object Dedup {
   /** Canonical-fingerprint index of an existing corpus — the structure a
     * production pipeline MAINTAINS (append per accepted batch) so daily
     * increments dedup against 100 TB without rescanning it. At scale, write
-    * it bucketed on `fp` ([[graft.sinks.LakeWriter.writeBucketed]]) so the
+    * it bucketed on `fp` ([[graft.operators.Layout.writeBucketed]]) so the
     * per-batch anti-join co-locates without shuffling the index.
     */
   def fingerprintIndex(corpus: DataFrame, textCol: String): DataFrame =
@@ -1532,7 +1532,7 @@ object Dedup {
     * Σ over distinct prefix grams of c·(c−1)/2, where c is the gram's
     * PREFIX occupancy — exactly the candidate join's ordered-pair output
     * bound before the size-compatibility prune (the same Σ c² attribution
-    * the PpjoinExpansion probe measures). One aggregation over the prefix
+    * BASELINE.md round 8 records). One aggregation over the prefix
     * stream; the expensive join never starts.
     */
   private def prefixPairEstimate(prefix: DataFrame): Long =
@@ -1610,7 +1610,7 @@ object Dedup {
     // double ceil from over-pruning an exactly-integer α (7/17·(na+nb)).
     //
     // Scale curve, measured & attributed (10× replica corpus,
-    // PpjoinExpansion probe): candidate density on a template-heavy corpus
+    // BASELINE.md round 8): candidate density on a template-heavy corpus
     // is a CONSTANT FRACTION of all doc pairs (~25% here at both 1× and
     // 10×; top prefix-gram occupancy 2 680 of 50 k docs), so the lossless
     // mine's intrinsic workload is Θ(density·n²) — 317 M pre-filter pairs

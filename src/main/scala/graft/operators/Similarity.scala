@@ -144,7 +144,7 @@ object Similarity {
     * persisted layout via [[autoNProbe]] — the default on every batch
     * reader. A fixed probe count over an nLists ∝ n layout policy means
     * the default recall silently decays as the corpus grows (the round-9
-    * ScaleRecallProbe measured nProbe=12 recall falling 0.79 → 0.37 from
+    * recall probe measured nProbe=12 recall falling 0.79 → 0.37 from
     * the 1× to the 10× layout); the explicit-nProbe override remains for
     * callers that have tuned their own recall/latency point. */
   val AutoProbe: Int = 0
@@ -177,7 +177,7 @@ object Similarity {
     * nProbe=51): BQ recall 0.451 at rerank=128 vs 0.636 at the
     * self-sized 408 — which also closes the 1×/10× default-recall gap
     * (0.538 vs 0.636, within the ±0.1 band alongside ivf 0.875→0.781
-    * and sq8 0.875→0.796; ScaleRecallProbe r10). Explicit values remain
+    * and sq8 0.875→0.796; BASELINE.md round 10). Explicit values remain
     * the tuned override. */
   val AutoRerank: Int = 0
 
@@ -793,7 +793,7 @@ object Similarity {
     * every batch read resolved the regime and every append collected
     * centroids through a fresh parquet read — a footer fetch plus a Spark
     * job per call, the dominant fixed cost of the quantized read path
-    * (ProfileAppend attribution, VERDICT r10 item 5). Cache the collected
+    * (BASELINE.md round-11 quantized-append attribution). Cache the collected
     * values JVM-wide, keyed on the sidecar directories and validated by
     * their file listings (name:length:mtime): one metadata listStatus per
     * call instead of a job; a retrain changes the listing and misses
@@ -1214,7 +1214,7 @@ object Similarity {
     * pass expression — this is the encode/train inner loop, paid ksub·dsub
     * per (row, subspace) on every corpus row; the composable argmin fold
     * it replaces bit-for-bit evaluated the same arithmetic through
-    * interpreted higher-order functions (round-9 AdcProbe measured the
+    * interpreted higher-order functions (BASELINE.md round 9 measured the
     * sibling ADC loop 2.9× faster as a primitive pass). */
   private def pqCodeCol(codes: Seq[Seq[Seq[Double]]], j: Column,
       sv: Column): Column =
@@ -1474,9 +1474,9 @@ object Similarity {
   /** Micro-batch threshold for [[ivfAppend]]'s driver-side write regime —
     * same rationale as the exactly-once ingest's
     * ([[graft.sinks.SnapshotLake.stageDriverSide]]): the distributed
-    * dynamic-partition write pays a fixed ~0.8–2.3 s per batch (globally
-    * serialized ~9 ms per output file — tools/ProfileStageWrite) that
-    * dwarfs micro-batch data; at or under this many rows the append
+    * dynamic-partition write measured 0.512 s against 0.344 s driver-side
+    * for a 100-row append into 16 cells (method in `GraftParquetDirect`);
+    * at or under this many rows the append
     * collects (LIMIT-guarded, memory bounded) and writes one file per
     * touched cell directly. Larger batches take the distributed path
     * unchanged. One shared regime constant across modules. */

@@ -280,40 +280,6 @@ object LakeWriter {
     (before, countParquetFiles(root))
   }
 
-  /** Bucketed catalog table — the co-located-join layout: both sides of a
-    * recurring equi-join written with `bucketBy` on the join key (same
-    * bucket count) join with NO shuffle exchange, the dominant saving for
-    * repeated large-table joins at 100 TB. Bucketing requires a catalog
-    * table (`saveAsTable`); sortBy within buckets removes the sort step of
-    * sort-merge joins too.
-    */
-  def writeBucketed(df: DataFrame, db: String, table: String,
-      bucketCol: String, numBuckets: Int,
-      mode: SaveMode = SaveMode.Overwrite): Unit = {
-    val spark = df.sparkSession
-    spark.sql(s"CREATE DATABASE IF NOT EXISTS `$db`")
-    if (mode == SaveMode.Overwrite) {
-      // A managed-table location can survive a previous session whose
-      // in-memory catalog is gone; CREATE refuses to reuse it. Drop both
-      // the catalog entry and any orphaned location.
-      spark.sql(s"DROP TABLE IF EXISTS `$db`.`$table`")
-      val warehouse = spark.conf.get("spark.sql.warehouse.dir")
-        .stripPrefix("file:")
-      val loc = java.nio.file.Paths.get(warehouse, s"$db.db", table)
-      if (java.nio.file.Files.exists(loc)) {
-        val s = java.nio.file.Files.walk(loc)
-        try s.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => java.nio.file.Files.deleteIfExists(p))
-        finally s.close()
-      }
-    }
-    df.write.format("parquet")
-      .mode(mode)
-      .bucketBy(numBuckets, bucketCol)
-      .sortBy(bucketCol)
-      .saveAsTable(s"`$db`.`$table`")
-  }
-
   /** Register a landed path as a catalog table `{db}.{table}` — the
     * Spark-native analogue of the reference's Glue-catalog registration
     * (`sybaseiq_extractor.py:161-164` `enableUpdateCatalog` +

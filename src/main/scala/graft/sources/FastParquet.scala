@@ -6,7 +6,7 @@ import org.apache.spark.sql.types.StructType
 /** Schema-memoized parquet reads (r16 optimization, guide §1.4/§6 — fixed
   * per-call cost): every `spark.read.parquet(...)` pays a schema-inference
   * pass before the first action — measured ~50-80 ms per call on this
-  * engine's small lake/sidecar tables (SchemaReadProbe: `read` 60 ms vs
+  * engine's small lake/sidecar tables (`read` 60 ms vs
   * 9 ms with an explicit schema), because inference lists the files and
   * reads a parquet footer inside a one-task Spark job. The lake and ANN
   * query paths issue dozens of such reads per query (manifest file lists,

@@ -40,7 +40,7 @@ object TableCatalog {
     // r16: FastParquet memoizes the inferred schema per fixture file —
     // every query re-loads its tables, and each plain spark.read.parquet
     // paid a ~60 ms schema-inference job for an immutable file (guide
-    // §1.4 fixed costs; SchemaReadProbe). First load per path still runs
+    // §1.4 fixed costs). First load per path still runs
     // Spark's own inference, so the resolved schema is bit-identical.
     val path = s"$sfDir/$name.parquet"
     if (name == "events") {

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** Streaming-shaped surface over the `events` table (SURVEY.md §2.7: absent
@@ -53,16 +53,30 @@ object EventStreams {
 
   /** Run a streaming DataFrame to completion against a finite source and
     * return the materialized result (memory sink). Test/driver harness for
-    * the streaming path.
+    * the streaming path. `AvailableNow` processes what the source holds at
+    * start and then ends the query by itself, so `stop()` seldom finds a
+    * live query thread whose jobs it must cancel. The query checkpoints
+    * into a directory of its own, deleted once the query stops; the result
+    * lives in the memory sink.
     */
   def runToCompletion(df: DataFrame, queryName: String,
       mode: OutputMode = OutputMode.Append): DataFrame = {
-    val q: StreamingQuery = df.writeStream
-      .outputMode(mode)
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    val checkpoint = java.nio.file.Files.createTempDirectory("graft_rtc_")
+    try {
+      val q: StreamingQuery = df.writeStream
+        .outputMode(mode)
+        .format("memory")
+        .queryName(queryName)
+        .option("checkpointLocation", checkpoint.toString)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      try q.awaitTermination() finally q.stop()
+    } finally {
+      val w = java.nio.file.Files.walk(checkpoint)
+      try w.sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => java.nio.file.Files.deleteIfExists(p))
+      finally w.close()
+    }
     df.sparkSession.table(queryName)
   }
 

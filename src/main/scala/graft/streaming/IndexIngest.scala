@@ -152,8 +152,8 @@ object IndexIngest {
     * stages its files DRIVER-SIDE ([[graft.sinks.SnapshotLake.stageDriverSide]])
     * instead of through a distributed write — the broadcast-threshold
     * regime idiom applied to writes: the distributed dynamic-partition
-    * stage costs a measured ~0.8-2.3 s of FIXED overhead per batch
-    * (ProfileStageWrite), which dwarfs micro-batch data volumes, while
+    * stage measured 3.653 s per batch against the driver path's 0.486 s
+    * on the 10× ingest (method in `GraftParquetDirect`), while
     * 32 k rows × ~1 KB is a bounded ~32 MB driver transfer. Above the
     * threshold the distributed path runs unchanged, so a 100 TB backfill
     * batch never lands on the driver. One shared regime constant across
@@ -225,8 +225,8 @@ object IndexIngest {
       // files are Hive-partitioned on a COPY of the cell (and super)
       // column, so the layout sync below can publish the committed files
       // by copy+rename instead of re-reading and re-shuffling them through
-      // a second Spark job — the ~77%-of-batch-cost fixed component the
-      // r13 ProfileIngest attribution measured.
+      // a second Spark job — the ~77%-of-batch-cost fixed component of
+      // BASELINE.md's round-13 ingest per-batch attribution.
       // super/cell are DROPPED from file content (r14 ADVICE doc fix: the
       // lake's queryable READ schema therefore no longer includes them —
       // SnapshotLake.read opens manifest leaf files directly, so the
@@ -245,10 +245,9 @@ object IndexIngest {
           .withColumn("__pc_cell", col("cell"))
           .drop("super", "cell")
       // TWO-REGIME staged commit (r15, the p50 residual's fix). The
-      // distributed dynamic-partition write pays a FIXED ~0.8-2.3 s per
-      // batch that no task shape removes (ProfileStageWrite: the per-file
-      // create/close is globally serialized at ~9 ms; one-dir-per-task
-      // only trades it for task-scheduling overhead). Micro-batches —
+      // distributed dynamic-partition write measured 3.653 s per batch
+      // against 0.486 s driver-side on the 10× ingest (method in
+      // `GraftParquetDirect`). Micro-batches —
       // the common streaming case — therefore collect through a
       // LIMIT-guarded probe (memory bounded by the threshold in ALL
       // cases) and stage driver-side via Spark's own parquet write

@@ -40,7 +40,8 @@ object JobProfile {
       var nTasks: Int = 0, var cpuNs: Long = 0L, var spillMem: Long = 0L,
       var spillDisk: Long = 0L, desc: String)
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, J]()
-    val stageToJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val stageToJob =
+      new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Integer]()
     @volatile var capture = false
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
@@ -58,7 +59,7 @@ object JobProfile {
       }
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
         val jid = stageToJob.get(e.stageId)
-        val j = if (jid != null) jobs.get(jid) else null
+        val j = if (jid != null) jobs.get(jid.intValue) else null
         val m = e.taskMetrics
         if (j != null && m != null) j.synchronized {
           j.nTasks += 1

@@ -49,8 +49,7 @@ object ScaleCorpus {
                                   // governed budget knob for the census's
                                   // Σdeg²-bound wedge mine — the ratio
                                   // tracks the census (it runs both), the
-                                  // estimator-only cost shows at 100× in
-                                  // ProbeScale.
+                                  // estimator-only cost shows at 100×.
     "k13_lake_merge",             // lake COW MERGE: commit + stats-pruned
                                   // locate scan + 3-clause rewrite — the
                                   // snapshot-lake family's scale read.
@@ -86,7 +85,7 @@ object ScaleCorpus {
                                   // pipeline actually executes. The
                                   // UNGOVERNED lossless curve (18-27× at
                                   // 10×: intrinsic Θ(density·n²), measured
-                                  // & attributed via PpjoinExpansion — 317 M
+                                  // & attributed — 317 M
                                   // pre-filter pairs, 1.47 B expansion rows
                                   // at 10×) is opt-in via UnlimitedPairs and
                                   // recorded in BASELINE.md; it no longer

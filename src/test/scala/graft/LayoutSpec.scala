@@ -134,6 +134,7 @@ class LayoutSpec extends SparkSpec {
       val joined = Layout.bucketedEquiJoin(spark,
         "graft_bkt_orders", "graft_bkt_li", Seq("o_orderkey"))
       val plan = joined.queryExecution.executedPlan.toString
+      assert(plan.contains("SortMergeJoin"), s"expected a sort-merge join:\n$plan")
       assert(!plan.contains("Exchange"), s"bucketed join must not shuffle:\n$plan")
       assert(!plan.contains("Sort "), s"bucket sort order must be reused:\n$plan")
       assert(joined.count() ==

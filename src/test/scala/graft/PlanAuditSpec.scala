@@ -442,31 +442,6 @@ class PlanAuditSpec extends SparkSpec
     assert(!p.contains("Exchange"), s"quantize must not shuffle:\n${p.take(1200)}")
   }
 
-  test("bucketed tables join without a shuffle exchange") {
-    import graft.sinks.LakeWriter
-    val li = spark.read.parquet(s"$sf0001/lineitem.parquet")
-    val ord = spark.read.parquet(s"$sf0001/orders.parquet")
-    LakeWriter.writeBucketed(li, "graft_lake", "li_bkt", "l_orderkey", 8)
-    LakeWriter.writeBucketed(
-      ord.withColumnRenamed("o_orderkey", "l_orderkey"),
-      "graft_lake", "ord_bkt", "l_orderkey", 8)
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = spark.table("graft_lake.li_bkt")
-        .join(spark.table("graft_lake.ord_bkt"), "l_orderkey")
-      joined.collect()
-      val p = joined.queryExecution.executedPlan.toString
-      assert(p.contains("SortMergeJoin"), p.take(1500))
-      assert(!p.contains("Exchange"),
-        s"bucketed join must not shuffle:\n${p.take(1500)}")
-      assert(joined.count() == li.join(
-        ord, li("l_orderkey") === ord("o_orderkey")).count())
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-    }
-  }
-
   /** Count physical nodes of `name` in a FormattedMode plan, restricted to
     * the FINAL (post-AQE) tree — the formatted string also prints the
     * Initial Plan and per-node details, which would double-count. Tree

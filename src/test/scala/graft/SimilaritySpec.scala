@@ -103,7 +103,7 @@ class SimilaritySpec extends SparkSpec {
         queries, "vec_id", "embedding", 10),
       ann, "vec_id", recallFloor = 0.5)
     assert(gate.select("recall_ok").head().getBoolean(0),
-      "two-level probe recall must clear the floor (measured 0.615 at nProbe=16, HierProbe)")
+      "two-level probe recall must clear the floor (measured 0.615 at nProbe=16)")
     val base = ann.orderBy($"q_id", $"vec_id")
       .as[(Long, Long, Double)].collect().toSeq
     // join-mode probe assignment (forced by a tiny joinThreshold): same
@@ -146,7 +146,7 @@ class SimilaritySpec extends SparkSpec {
         queries, "vec_id", "embedding", 10),
       ann, "vec_id", recallFloor = 0.5)
     assert(gate.select("recall_ok").head().getBoolean(0),
-      "IVFADC recall must clear the floor (measured 0.925, HierProbe)")
+      "IVFADC recall must clear the floor (measured 0.925, BASELINE.md round 8)")
     val rows = ann.as[(Long, Long, Double)].collect()
     assert(rows.forall { case (q, _, _) => q % 25 == 0 })
     assert(rows.groupBy(_._1).forall(_._2.length == 10))
@@ -614,7 +614,7 @@ class SimilaritySpec extends SparkSpec {
         queries, "vec_id", "embedding", 10),
       ann, "vec_id", recallFloor = 0.5)
     assert(gate.select("recall_ok").head().getBoolean(0),
-      "IVF-BQ recall must clear the floor (measured 0.840, BatchAnnProbe)")
+      "IVF-BQ recall must clear the floor (measured 0.840, BASELINE.md round 9)")
     val rows = ann.as[(Long, Long, Double)].collect()
     assert(rows.groupBy(_._1).forall(_._2.length == 10))
     val exactMap = Similarity.bruteForceBatchTopK(emb, "vec_id",
@@ -1003,7 +1003,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("autoNProbe sizes the default probe width to the layout") {
     // the pinned rule: min(max(12, ceil(4 * sqrt(nLists))), ceil(nLists/2))
-    // — fit to the round-9 ScaleRecallProbe curve (BASELINE.md): the 1x
+    // — fit to the round-9 recall curve (BASELINE.md round 10): the 1x
     // layout keeps the measured gate config (8 of 16), the 10x layout gets
     // ~51 of 160 (recall ~0.77 vs 0.365 at the old fixed 12), and the
     // probed FRACTION decays as 4/sqrt(nLists), so per-query work stays
@@ -1021,7 +1021,7 @@ class SimilaritySpec extends SparkSpec {
     // covers 8 rows per probed cell (floored at 64 and 2k), so the
     // covered fraction of the candidate pool stays constant as auto-
     // nProbe widens with the layout (the BQ 10x evidence: recall 0.451
-    // at fixed rerank=128 vs 0.636 self-sized, ScaleRecallProbe)
+    // at fixed rerank=128 vs 0.636 self-sized, BASELINE.md round 10)
     assert(Similarity.autoRerank(8, 10) == 64)
     assert(Similarity.autoRerank(51, 10) == 408)
     assert(Similarity.autoRerank(4, 100) == 200)

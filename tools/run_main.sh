@@ -4,7 +4,8 @@
 # Mirrors build.sbt's fork JVM options (JDK-17 add-opens + UTC + no UI).
 set -euo pipefail
 HEAP="${GRAFT_HEAP:-8g}"
-CLS="/root/repo/target/scala-2.13/classes"
+# classes of the checkout this script lives in (works for any export)
+CLS="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)/target/scala-2.13/classes"
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent java.util.concurrent.atomic \
