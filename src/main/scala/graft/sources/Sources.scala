@@ -37,11 +37,13 @@ object TableCatalog {
     * load under one session policy.
     */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    // r16: FastParquet memoizes the inferred schema per fixture file —
+    // r16: FastParquet memoizes the resolved schema per fixture file —
     // every query re-loads its tables, and each plain spark.read.parquet
     // paid a ~60 ms schema-inference job for an immutable file (guide
-    // §1.4 fixed costs). First load per path still runs
-    // Spark's own inference, so the resolved schema is bit-identical.
+    // §1.4 fixed costs). The first load per path reads the footer on the
+    // driver under this session's conf (so `nanosAsLong` below applies)
+    // and runs no Spark job; FastParquetSpec pins the schema as equal to
+    // Spark's inferred one.
     val path = s"$sfDir/$name.parquet"
     if (name == "events") {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -67,19 +69,23 @@ object TableCatalog {
     * reads each; switching dirs re-registers because the views are
     * session-global state pointing at exactly one dir at a time.
     *
-    * The frames are loaded outside the lock (a first load runs Spark's
-    * schema-inference jobs), and the views and the recorded dir are
-    * published together under it, so one session's loads never block
-    * another session's registration.
+    * The frames are loaded outside the lock (a first load reads footers
+    * and lists files), and the views and the recorded dir are published
+    * together under it, so one session's loads never block another
+    * session's registration. Table existence is checked through the
+    * Hadoop FileSystem of `sfDir`, so a `file:`, `hdfs://` or `s3a://`
+    * dir registers its tables like a plain local path does.
     */
   private val registeredDir =
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[SparkSession, String]())
   def registerAll(spark: SparkSession, sfDir: String): Unit =
     if (registeredDir.get(spark) != sfDir) {
-      val views = AllTables.filter(t =>
-        java.nio.file.Files.exists(java.nio.file.Paths.get(sfDir, s"$t.parquet")))
-        .map(t => t -> load(spark, sfDir, t))
+      val conf = spark.sparkContext.hadoopConfiguration
+      val views = AllTables.filter { t =>
+        val p = new org.apache.hadoop.fs.Path(sfDir, s"$t.parquet")
+        graft.FsSeam.fs(p, conf).exists(p)
+      }.map(t => t -> load(spark, sfDir, t))
       registeredDir.synchronized {
         views.foreach { case (t, df) => df.createOrReplaceTempView(t) }
         registeredDir.put(spark, sfDir)

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.sinks.{CommitStore, PosixLinkCommitStore, SnapshotLake}
 
@@ -200,16 +200,21 @@ object ChangeDataCapture {
   }
 
   /** The streaming entry: drive a changelog stream into the mirror table,
-    * one exactly-once apply per micro-batch.
+    * one exactly-once apply per micro-batch. `trigger` defaults to Spark's
+    * own (a micro-batch as soon as the previous one ends); a caller that
+    * drains a finite source passes `Trigger.AvailableNow()` and awaits
+    * termination.
     */
   def streamChangelogToLake(changes: DataFrame, table: String,
       keys: Seq[String], tsCol: String, tieCol: String, opCol: String,
       payloadCols: Seq[String], checkpointDir: String,
       store: CommitStore = PosixLinkCommitStore,
       tombstoneTable: Option[String] = None,
-      tombstoneRetentionMs: Option[Long] = None): StreamingQuery =
+      tombstoneRetentionMs: Option[Long] = None,
+      trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery =
     changes.writeStream
       .option("checkpointLocation", checkpointDir)
+      .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         applyChangelogBatch(batch.sparkSession, table, batch, keys, tsCol,
           tieCol, opCol, payloadCols,

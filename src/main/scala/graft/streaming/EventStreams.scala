@@ -51,13 +51,19 @@ object EventStreams {
         col("n"), col("sum_value"))
   }
 
+  /** Wait for a query started with `Trigger.AvailableNow` to process what
+    * its source held at start and end by itself. A query that ended is not
+    * stopped: its thread can still be finishing, and `stop()` on a live
+    * thread cancels the query's job group, which logs "Failed to cancel
+    * job group" twice when no job is running. A wait that is interrupted
+    * still stops the query. */
+  def awaitDrained(q: StreamingQuery): Unit =
+    try q.awaitTermination() finally if (q.isActive) q.stop()
+
   /** Run a streaming DataFrame to completion against a finite source and
     * return the materialized result (memory sink). Test/driver harness for
-    * the streaming path. `AvailableNow` processes what the source holds at
-    * start and then ends the query by itself, so `stop()` seldom finds a
-    * live query thread whose jobs it must cancel. The query checkpoints
-    * into a directory of its own, deleted once the query stops; the result
-    * lives in the memory sink.
+    * the streaming path. The query checkpoints into a directory of its
+    * own, deleted once the query ends; the result lives in the memory sink.
     */
   def runToCompletion(df: DataFrame, queryName: String,
       mode: OutputMode = OutputMode.Append): DataFrame = {
@@ -70,7 +76,7 @@ object EventStreams {
         .option("checkpointLocation", checkpoint.toString)
         .trigger(Trigger.AvailableNow())
         .start()
-      try q.awaitTermination() finally q.stop()
+      awaitDrained(q)
     } finally {
       val w = java.nio.file.Files.walk(checkpoint)
       try w.sorted(java.util.Comparator.reverseOrder())

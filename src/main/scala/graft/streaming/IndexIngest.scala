@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.{Dedup, Similarity}
 import graft.sinks.{CommitStore, PosixLinkCommitStore, SnapshotLake}
@@ -58,14 +58,19 @@ object IndexIngest {
   /** Drive an embedding stream into the persisted IVF layout at `path`.
     * `dedupThreshold` = None ingests everything (deterministic);
     * Some(t) drops batch rows with a ≥ t cosine neighbor already indexed.
+    * `trigger` defaults to Spark's own; a caller that drains a finite
+    * source passes `Trigger.AvailableNow()` (which still honours
+    * `maxFilesPerTrigger`) and awaits termination.
     */
   def streamAppendToIndex(embeddings: DataFrame, idCol: String,
       vecCol: String, path: String, checkpointDir: String,
       dedupThreshold: Option[Double] = None,
       nProbe: Int = 2,
-      autoCompactFilesPerCell: Int = DefaultAutoCompactFilesPerCell): StreamingQuery =
+      autoCompactFilesPerCell: Int = DefaultAutoCompactFilesPerCell,
+      trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery =
     embeddings.writeStream
       .option("checkpointLocation", checkpointDir)
+      .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         appendBatch(batch, idCol, vecCol, path, dedupThreshold, nProbe,
           autoCompactFilesPerCell)
@@ -167,9 +172,11 @@ object IndexIngest {
       dedupThreshold: Option[Double] = None, nProbe: Int = 2,
       store: CommitStore = PosixLinkCommitStore,
       autoCompactFilesPerCell: Int = DefaultAutoCompactFilesPerCell,
-      driverStageMaxRows: Int = DefaultDriverStageMaxRows): StreamingQuery =
+      driverStageMaxRows: Int = DefaultDriverStageMaxRows,
+      trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery =
     embeddings.writeStream
       .option("checkpointLocation", checkpointDir)
+      .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         appendBatchExactlyOnce(batch, idCol, vecCol, path, lakeTable,
           batchId, dedupThreshold, nProbe, store, autoCompactFilesPerCell,

@@ -11,7 +11,8 @@ import org.apache.spark.sql.SparkSession
   *
   * Usage: JobProfile <query> [sfDir] [runs]
   * Prints, for the LAST run (warm): one line per job (start offset, wall,
-  * #tasks, callsite) and the inter-job gap total.
+  * #tasks, call site of the SQL execution the job belongs to, else the
+  * job's last stage) and the inter-job gap total.
   *
   * GRAFT_PRERUN=q1,q2,... runs those queries once each (untimed) BEFORE the
   * profiled target — reproduces in-bench JVM state (accumulated cached
@@ -42,14 +43,30 @@ object JobProfile {
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, J]()
     val stageToJob =
       new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Integer]()
+    // SQL execution id → its description (the action's call site unless a
+    // job description is set). AQE query-stage jobs run on a Spark thread
+    // pool, so their own stage name is a CompletableFuture frame; the
+    // execution they belong to names the query that caused them.
+    val execSite = new java.util.concurrent.ConcurrentHashMap[Long, String]()
     @volatile var capture = false
     spark.sparkContext.addSparkListener(new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          execSite.put(s.executionId, s.description)
+        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd =>
+          execSite.remove(s.executionId) // its jobs have all started
+        case _ =>
+      }
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (capture) {
-          val site = e.stageInfos.lastOption.map(_.name).getOrElse(
-            Option(e.properties)
-              .flatMap(p => Option(p.getProperty("callSite.short")))
-              .getOrElse("?"))
+          val props = Option(e.properties)
+          val site = props
+            .flatMap(p => Option(p.getProperty(
+              org.apache.spark.sql.execution.SQLExecution.EXECUTION_ID_KEY)))
+            .flatMap(id => Option(execSite.get(id.toLong)))
+            .orElse(e.stageInfos.lastOption.map(_.name))
+            .orElse(props.flatMap(p => Option(p.getProperty("callSite.short"))))
+            .getOrElse("?")
           jobs.put(e.jobId, J(e.jobId, e.time, desc = site))
           e.stageIds.foreach(sid => stageToJob.put(sid, e.jobId))
         }

@@ -107,31 +107,7 @@ class SourcesSpec extends SparkSpec {
     // NANOS fixture (the previous generation): Spark cannot write
     // TIMESTAMP(NANOS), so build it with parquet-mr directly
     val nanosDir = Files.createTempDirectory("graft_ev_nanos_").toString
-    val schemaStr =
-      """message events {
-        |  required int64 event_id;
-        |  required int64 ts (TIMESTAMP(NANOS,false));
-        |  required int64 user_id;
-        |  required binary event_type (STRING);
-        |  required double value;
-        |  required binary props (STRING);
-        |}""".stripMargin
-    val msgType = org.apache.parquet.schema.MessageTypeParser
-      .parseMessageType(schemaStr)
-    val conf = new org.apache.hadoop.conf.Configuration()
-    org.apache.parquet.hadoop.example.GroupWriteSupport.setSchema(msgType, conf)
-    val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
-      .builder(new org.apache.hadoop.fs.Path(s"$nanosDir/events.parquet"))
-      .withConf(conf).withType(msgType).build()
-    val gf = new org.apache.parquet.example.data.simple.SimpleGroupFactory(msgType)
-    rows.foreach { case (id, ts, uid, et, v, p) =>
-      val nanos = ts.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000000L +
-        ts.getNano
-      writer.write(gf.newGroup()
-        .append("event_id", id).append("ts", nanos).append("user_id", uid)
-        .append("event_type", et).append("value", v).append("props", p))
-    }
-    writer.close()
+    TestFixtures.writeNanosEvents(s"$nanosDir/events.parquet", rows)
 
     for (dir <- Seq(microsDir, nanosDir)) {
       val ev = TableCatalog.load(spark, dir, "events")
@@ -203,5 +179,45 @@ class SourcesSpec extends SparkSpec {
       FsSeam.uninstall()
     }
     assert(blockedErr.get == null, String.valueOf(blockedErr.get))
+  }
+
+  test("registerAll registers every table of a file: URI dir") {
+    val s = spark.newSession()
+    TableCatalog.registerAll(s, s"file:$sf0001")
+    TableCatalog.AllTables.foreach(t =>
+      assert(s.catalog.tableExists(t), s"$t not registered"))
+    assert(s.table("nation").count() == 25)
+    assert(s.table("events").schema("ts").dataType == TimestampNTZType)
+  }
+
+  test("a first registerAll runs no Spark job") {
+    // new donor keys: the first load of each table misses FastParquet's memo
+    val copy = TestFixtures.freshCopy(sf0001)
+    val s = spark.newSession()
+    val sentinel = "graft-regjobs-sentinel"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val desc = Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+        if (desc.contains(sentinel)) sentinelSeen.countDown()
+        else jobs.add(e.stageInfos.lastOption.map(_.name).getOrElse("?"))
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      TableCatalog.registerAll(s, copy)
+      // the bus delivers events in order: once the sentinel job's start
+      // arrives, every job registerAll started has been counted
+      spark.sparkContext.setJobDescription(sentinel)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      assert(sentinelSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(jobs.isEmpty,
+        s"registerAll ran ${jobs.size} Spark job(s): $jobs")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(s.table("region").count() == 5)
   }
 }

@@ -754,4 +754,35 @@ class StreamingSpec extends SparkSpec {
       .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
     assert(streamed == batch)
   }
+
+  test("AvailableNow drains a maxFilesPerTrigger=1 source one file per " +
+      "micro-batch, and the drain stops nothing") {
+    import graft.streaming.IndexIngest
+    import graft.operators.Similarity
+    import graft.sinks.SnapshotLake
+    val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+    val path = Files.createTempDirectory("graft_avn_").toString
+    Similarity.ivfWrite(emb.where(pmod($"vec_id", lit(5)) =!= 0),
+      "vec_id", "embedding", path, nLists = 4, kMeansIters = 1)
+    val lake = Files.createTempDirectory("graft_avnlk_").resolve("ann").toString
+    val src = Files.createTempDirectory("graft_avnsrc_").resolve("b").toString
+    val batch = emb.where(pmod($"vec_id", lit(5)) === 0)
+    (0 until 3).foreach { i =>
+      batch.where(pmod($"vec_id" / 5, lit(3)) === i).coalesce(1)
+        .write.mode(if (i == 0) "overwrite" else "append").parquet(src)
+    }
+    val q = IndexIngest.streamAppendToIndexExactlyOnce(
+      spark.readStream.schema(spark.read.parquet(src).schema)
+        .option("maxFilesPerTrigger", "1").parquet(src),
+      "vec_id", "embedding", path, lake,
+      Files.createTempDirectory("graft_avnck_").toString,
+      trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
+    EventStreams.awaitDrained(q)
+    assert(!q.isActive && q.exception.isEmpty)
+    assert(q.recentProgress.map(_.batchId).toSeq == Seq(0L, 1L, 2L))
+    // batch 2 committed under its own key: a zombie replay of it is a no-op
+    assert((0 to 2).forall(b =>
+      SnapshotLake.dedupVersion(lake, s"ann-ingest-$b").nonEmpty))
+    assert(spark.read.parquet(s"$path/corpus").count() == emb.count())
+  }
 }

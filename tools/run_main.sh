@@ -4,8 +4,11 @@
 # Mirrors build.sbt's fork JVM options (JDK-17 add-opens + UTC + no UI).
 set -euo pipefail
 HEAP="${GRAFT_HEAP:-8g}"
-# classes of the checkout this script lives in (works for any export)
-CLS="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)/target/scala-2.13/classes"
+# classes of the checkout this script lives in (works for any export);
+# its resources too, which `sbt compile` alone does not copy into classes
+# (the snapshot-lake DataSourceRegister service file)
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
+CLS="$ROOT/target/scala-2.13/classes:$ROOT/src/main/resources"
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent java.util.concurrent.atomic \
@@ -14,4 +17,4 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
 done
 exec java -Xmx"$HEAP" $OPENS \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "$CLS:/opt/spark/jars/*" "$@"
+  -cp "$CLS:${SPARK_HOME:-/opt/spark}/jars/*" "$@"
