@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.streaming.Trigger
 import graft.operators.{Dedup, Similarity, Transforms}
 import graft.functions.{TextFunctions => T, VectorFunctions => V}
 import graft.sources.{StrideReader, TableCatalog}
@@ -3377,8 +3376,7 @@ object SparkEntry {
           "value AS v")
       val q = ChangeDataCapture.streamChangelogToLake(ch, t,
         Seq("k"), "ts", "tie", "op", Seq("v"),
-        java.nio.file.Files.createTempDirectory("graft_cdck_").toString,
-        trigger = Trigger.AvailableNow())
+        java.nio.file.Files.createTempDirectory("graft_cdck_").toString)
       graft.streaming.EventStreams.awaitDrained(q)
       graft.sinks.SnapshotLake.read(s, t)
         .select(col("k").as("user_id"), round(col("v"), 2).as("value"),
@@ -3410,8 +3408,7 @@ object SparkEntry {
         ss.readStream.schema(schema).option("maxFilesPerTrigger", "1")
           .parquet(src),
         "vec_id", "embedding", path,
-        java.nio.file.Files.createTempDirectory("graft_evannk_").toString,
-        trigger = Trigger.AvailableNow())
+        java.nio.file.Files.createTempDirectory("graft_evannk_").toString)
       graft.streaming.EventStreams.awaitDrained(q)
       Similarity.ivfBatchTopK(s, path, batch, "vec_id", "embedding",
           1, nProbe = 1, excludeSelf = false)
@@ -3446,8 +3443,7 @@ object SparkEntry {
         ss.readStream.schema(schema).option("maxFilesPerTrigger", "1")
           .parquet(src),
         "vec_id", "embedding", path, lake,
-        java.nio.file.Files.createTempDirectory("graft_evannek_").toString,
-        trigger = Trigger.AvailableNow())
+        java.nio.file.Files.createTempDirectory("graft_evannek_").toString)
       // one file per micro-batch: batches 0, 1 and 2, the last of which
       // the zombie replay below re-runs
       graft.streaming.EventStreams.awaitDrained(q)

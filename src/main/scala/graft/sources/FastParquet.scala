@@ -86,14 +86,14 @@ object FastParquet {
     * cannot be read. */
   private def resolveSchema(spark: SparkSession, paths: Seq[String],
       donor: org.apache.hadoop.fs.FileStatus,
-      conf: org.apache.hadoop.conf.Configuration): StructType =
-    try {
-      val footer = org.apache.spark.sql.execution.datasources.parquet
-        .GraftParquetFooter.schemaOf(spark, donor, conf)
-      spark.read.schema(footer).parquet(paths: _*).schema
-    } catch {
-      case scala.util.control.NonFatal(_) => spark.read.parquet(paths: _*).schema
-    }
+      conf: org.apache.hadoop.conf.Configuration): StructType = {
+    val footer =
+      try Some(org.apache.spark.sql.execution.datasources.parquet
+        .GraftParquetFooter.schemaOf(spark, donor, conf))
+      catch { case _: java.io.IOException => None }
+    footer.fold(spark.read.parquet(paths: _*))(
+      spark.read.schema(_).parquet(paths: _*)).schema
+  }
 
   /** `spark.read.parquet(paths…)` with the resolved schema memoized by
     * donor file. `expectCols`: the caller's known union column set (order

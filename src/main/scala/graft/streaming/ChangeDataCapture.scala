@@ -200,21 +200,19 @@ object ChangeDataCapture {
   }
 
   /** The streaming entry: drive a changelog stream into the mirror table,
-    * one exactly-once apply per micro-batch. `trigger` defaults to Spark's
-    * own (a micro-batch as soon as the previous one ends); a caller that
-    * drains a finite source passes `Trigger.AvailableNow()` and awaits
-    * termination.
+    * one exactly-once apply per micro-batch. The query runs under
+    * `Trigger.AvailableNow`: it drains what the source holds at start and
+    * ends by itself ([[EventStreams.awaitDrained]] waits for that).
     */
   def streamChangelogToLake(changes: DataFrame, table: String,
       keys: Seq[String], tsCol: String, tieCol: String, opCol: String,
       payloadCols: Seq[String], checkpointDir: String,
       store: CommitStore = PosixLinkCommitStore,
       tombstoneTable: Option[String] = None,
-      tombstoneRetentionMs: Option[Long] = None,
-      trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery =
+      tombstoneRetentionMs: Option[Long] = None): StreamingQuery =
     changes.writeStream
       .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
+      .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         applyChangelogBatch(batch.sparkSession, table, batch, keys, tsCol,
           tieCol, opCol, payloadCols,

@@ -58,19 +58,19 @@ object IndexIngest {
   /** Drive an embedding stream into the persisted IVF layout at `path`.
     * `dedupThreshold` = None ingests everything (deterministic);
     * Some(t) drops batch rows with a ≥ t cosine neighbor already indexed.
-    * `trigger` defaults to Spark's own; a caller that drains a finite
-    * source passes `Trigger.AvailableNow()` (which still honours
-    * `maxFilesPerTrigger`) and awaits termination.
+    * The query runs under `Trigger.AvailableNow` (which still honours
+    * `maxFilesPerTrigger`): it drains what the source holds at start and
+    * ends by itself ([[EventStreams.awaitDrained]] waits for that).
     */
   def streamAppendToIndex(embeddings: DataFrame, idCol: String,
       vecCol: String, path: String, checkpointDir: String,
       dedupThreshold: Option[Double] = None,
       nProbe: Int = 2,
-      autoCompactFilesPerCell: Int = DefaultAutoCompactFilesPerCell,
-      trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery =
+      autoCompactFilesPerCell: Int = DefaultAutoCompactFilesPerCell)
+      : StreamingQuery =
     embeddings.writeStream
       .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
+      .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         appendBatch(batch, idCol, vecCol, path, dedupThreshold, nProbe,
           autoCompactFilesPerCell)
@@ -172,11 +172,10 @@ object IndexIngest {
       dedupThreshold: Option[Double] = None, nProbe: Int = 2,
       store: CommitStore = PosixLinkCommitStore,
       autoCompactFilesPerCell: Int = DefaultAutoCompactFilesPerCell,
-      driverStageMaxRows: Int = DefaultDriverStageMaxRows,
-      trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery =
+      driverStageMaxRows: Int = DefaultDriverStageMaxRows): StreamingQuery =
     embeddings.writeStream
       .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
+      .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         appendBatchExactlyOnce(batch, idCol, vecCol, path, lakeTable,
           batchId, dedupThreshold, nProbe, store, autoCompactFilesPerCell,

@@ -775,8 +775,7 @@ class StreamingSpec extends SparkSpec {
       spark.readStream.schema(spark.read.parquet(src).schema)
         .option("maxFilesPerTrigger", "1").parquet(src),
       "vec_id", "embedding", path, lake,
-      Files.createTempDirectory("graft_avnck_").toString,
-      trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      Files.createTempDirectory("graft_avnck_").toString)
     EventStreams.awaitDrained(q)
     assert(!q.isActive && q.exception.isEmpty)
     assert(q.recentProgress.map(_.batchId).toSeq == Seq(0L, 1L, 2L))
