@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.functions.RunConstant
 
 /** The reference's fixed cleaning/enrichment chain, re-expressed as composable
   * `DataFrame => DataFrame` functions (SURVEY.md §2.2). All are pure plan
@@ -52,10 +53,16 @@ object Transforms {
 
   /** P4 — audit-column injection (`sybaseiq_extractor.py:124-125,175-176`):
     * constant UTC load timestamp + execution hash id on every row.
+    *
+    * The load timestamp is a [[graft.functions.RunConstant]], not a
+    * `lit`: a timestamp `Literal` is written into the generated Java source,
+    * so every plan part would compile its map and write stages again. The
+    * landed value, its type and its non-nullability are those of
+    * `lit(loadTs)`.
     */
   def auditColumns(hashId: String, loadTs: java.sql.Timestamp)(
       df: DataFrame): DataFrame =
-    df.withColumn(AuditTsCol, lit(loadTs))
+    df.withColumn(AuditTsCol, RunConstant.of(loadTs))
       .withColumn(AuditHashCol, lit(hashId))
 
   /** P5 — date-part derivation for the partitioned sink

@@ -2,6 +2,7 @@ package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.types.StructType
 import graft.operators.Transforms
 
@@ -283,15 +284,20 @@ object LakeWriter {
   /** Register a landed path as a catalog table `{db}.{table}` — the
     * Spark-native analogue of the reference's Glue-catalog registration
     * (`sybaseiq_extractor.py:161-164` `enableUpdateCatalog` +
-    * `setCatalogInfo`). External datasource table over the written layout;
-    * partitioned layouts get explicit partition columns + RECOVER PARTITIONS
-    * so catalog-driven partition pruning works immediately.
+    * `setCatalogInfo`). External datasource table over the written layout,
+    * dropped and created again on every call, so an append to the path and
+    * an evolved schema both show. A partitioned layout gets explicit
+    * partition columns and its partitions are added to the catalog at once
+    * ([[addLandedPartitions]]), so catalog-driven partition pruning works
+    * immediately. Registration runs no Spark job.
     *
     * The DDL declares `schema`, the landed frame's own schema
     * ([[WriteResult.schema]]), so registration reads nothing back from the
     * lake and a write that landed no rows registers too. The K2
     * `year`/`month`/`day` columns are therefore STRING, as the writer lands
-    * them and as the reference's Glue catalog holds them.
+    * them and as the reference's Glue catalog holds them. The location is
+    * written as an escaped SQL string, so a path holding `'` or `\`
+    * registers.
     */
   def registerInCatalog(spark: SparkSession, db: String, table: String,
       path: String, partitionColumns: Seq[String], schema: StructType): Unit = {
@@ -302,16 +308,64 @@ object LakeWriter {
       .map(f => s"`${f.name}` ${f.dataType.sql}").mkString(", ")
     val partCols = schema.fields.filter(f => partSet(f.name))
       .map(f => s"`${f.name}` ${f.dataType.sql}").mkString(", ")
+    val location = "'" + path.replace("\\", "\\\\").replace("'", "\\'") + "'"
     val ddl =
       if (partitionColumns.isEmpty)
-        s"CREATE TABLE `$db`.`$table` ($dataCols) USING PARQUET LOCATION '$path'"
+        s"CREATE TABLE `$db`.`$table` ($dataCols) USING PARQUET LOCATION $location"
       else
         s"""CREATE TABLE `$db`.`$table` ($dataCols, $partCols)
            |USING PARQUET PARTITIONED BY (${partitionColumns.mkString(", ")})
-           |LOCATION '$path'""".stripMargin
+           |LOCATION $location""".stripMargin
     spark.sql(ddl)
     if (partitionColumns.nonEmpty)
-      spark.sql(s"ALTER TABLE `$db`.`$table` RECOVER PARTITIONS")
+      addLandedPartitions(spark, TableIdentifier(table, Some(db)))
+  }
+
+  /** Add every `col=value` partition directory under the table's location
+    * to the catalog: the specs and locations `ALTER TABLE … RECOVER
+    * PARTITIONS` adds, without its Spark job. RECOVER PARTITIONS
+    * (`RepairTableCommand`) also gathers each partition's file count and
+    * size, in a `parallelize` job once a table has more than
+    * `spark.rdd.parallelListingThreshold` (10) partitions; nothing reads
+    * those statistics. This walks the partition directories level by level
+    * on the driver, keeps the names RECOVER PARTITIONS keeps (a directory
+    * `name=value` whose name resolves to the next partition column; `.x`,
+    * `_SUCCESS` and `_temporary` are skipped as its path filter skips them),
+    * unescapes each value as it does, and adds the specs in one catalog
+    * call. A location that does not exist has no partitions.
+    */
+  private def addLandedPartitions(spark: SparkSession,
+      ident: TableIdentifier): Unit = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    import org.apache.spark.sql.catalyst.catalog.CatalogTablePartition
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName
+    val catalog = spark.sessionState.catalog
+    val meta = catalog.getTableMetadata(ident)
+    val root = new Path(meta.location)
+    val fs = graft.FsSeam.fs(root, spark.sessionState.newHadoopConf())
+    val resolver = spark.sessionState.conf.resolver
+    def listed(st: FileStatus): Boolean = {
+      val n = st.getPath.getName
+      st.isDirectory && !n.startsWith(".") && n != "_SUCCESS" && n != "_temporary"
+    }
+    def scan(dir: Path, spec: Map[String, String],
+        names: Seq[String]): Seq[(Map[String, String], Path)] =
+      if (names.isEmpty) Seq(spec -> dir)
+      else fs.listStatus(dir).toSeq.filter(listed).flatMap { st =>
+        st.getPath.getName.split("=", 2) match {
+          case Array(k, v) if resolver(unescapePathName(k), names.head) =>
+            scan(st.getPath, spec + (names.head -> unescapePathName(v)),
+              names.tail)
+          case _ => Nil
+        }
+      }
+    val parts =
+      if (!fs.exists(root)) Nil
+      else scan(root, Map.empty, meta.partitionColumnNames).map {
+        case (spec, dir) => CatalogTablePartition(spec,
+          meta.storage.copy(locationUri = Some(dir.toUri)))
+      }
+    if (parts.nonEmpty) catalog.createPartitions(ident, parts, ignoreIfExists = true)
   }
 
   /** [[registerInCatalog]] for a path whose schema is not known: the schema

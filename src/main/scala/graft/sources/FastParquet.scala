@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetFooter
 import org.apache.spark.sql.types.StructType
 
 /** Schema-memoized parquet reads (r16 optimization, guide §1.4/§6 — fixed
@@ -31,6 +32,10 @@ import org.apache.spark.sql.types.StructType
   *     VERDICT staleness hazard: an in-place-overwritten donor presents a
   *     new key and re-reads, so immutability is enforced by the key, not
   *     by convention;
+  *   - the key also holds the session flags that shape the converted
+  *     schema ([[GraftParquetFooter.converterFlags]]), so a session whose
+  *     `nanosAsLong` or binary-as-string setting differs from the first
+  *     reader's resolves its own schema (or its own error);
   *   - heterogeneous-schema snapshots (schema evolution) are guarded by
   *     `expectCols`: when the caller knows the expected union column set
   *     (the lake manifest records it) and the cached schema's field set
@@ -88,8 +93,7 @@ object FastParquet {
       donor: org.apache.hadoop.fs.FileStatus,
       conf: org.apache.hadoop.conf.Configuration): StructType = {
     val footer =
-      try Some(org.apache.spark.sql.execution.datasources.parquet
-        .GraftParquetFooter.schemaOf(spark, donor, conf))
+      try Some(GraftParquetFooter.schemaOf(spark, donor, conf))
       catch { case _: java.io.IOException => None }
     footer.fold(spark.read.parquet(paths: _*))(
       spark.read.schema(_).parquet(paths: _*)).schema
@@ -103,7 +107,8 @@ object FastParquet {
       expectCols: Option[Seq[String]] = None): DataFrame = {
     val conf = spark.sparkContext.hadoopConfiguration
     donorOf(paths.head, conf) match {
-      case Some((key, donor)) =>
+      case Some((donorKey, donor)) =>
+        val key = s"$donorKey#${GraftParquetFooter.converterFlags(spark)}"
         var st = cache.get(key)
         if (st == null) {
           st = resolveSchema(spark, paths, donor, conf)

@@ -1,5 +1,6 @@
 package graft.tools
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 
@@ -10,9 +11,12 @@ import org.apache.spark.sql.SparkSession
   * already separates steal from work; this separates work from latency.
   *
   * Usage: JobProfile <query> [sfDir] [runs]
+  * Each run `collect()`s the query, as `Verify` and the benchmarks do
+  * (a `count()` lets the optimizer prune the columns they compute).
   * Prints, for the LAST run (warm): one line per job (start offset, wall,
   * #tasks, call site of the SQL execution the job belongs to, else the
-  * job's last stage) and the inter-job gap total.
+  * job's last stage) and a summary line with the inter-job gap total and
+  * the number of classes Janino compiled during the run (this JVM only).
   *
   * GRAFT_PRERUN=q1,q2,... runs those queries once each (untimed) BEFORE the
   * profiled target — reproduces in-bench JVM state (accumulated cached
@@ -90,7 +94,7 @@ object JobProfile {
     sys.env.get("GRAFT_PRERUN").foreach { pre =>
       pre.split(",").filter(_.nonEmpty).foreach { q =>
         val t0 = System.nanoTime()
-        val n = graft.SparkEntry.queries(q)(spark, sfDir).count()
+        val n = graft.SparkEntry.queries(q)(spark, sfDir).collect().length
         System.err.println(
           f"[prof] prerun $q ${(System.nanoTime() - t0) / 1e9}%8.2fs rows=$n")
       }
@@ -144,9 +148,11 @@ object JobProfile {
       jvmState(s"before run$i")
       sampleHist.clear()
       sampling = capture
+      val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val t0 = System.nanoTime()
-      val n = graft.SparkEntry.queries(name)(spark, sfDir).count()
+      val n = graft.SparkEntry.queries(name)(spark, sfDir).collect().length
       lastWall = (System.nanoTime() - t0) / 1e9
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0
       sampling = false
       System.err.println(f"[prof] $name run$i $lastWall%8.2fs rows=$n")
       jvmState(s"after run$i")
@@ -188,6 +194,7 @@ object JobProfile {
             f"inter-job-gap=${span - covered / 1e3}%.2fs " +
             f"outside-span=${lastWall - span}%.2fs (pre/post driver work) " +
             f"cpu_total=${js.map(_.cpuNs).sum / 1e9}%.2fs " +
+            f"compiled=$compiled " +
             f"spill_total=${js.map(j => j.spillMem + j.spillDisk).sum / 1e6}%.0fMB")
         } else System.err.println("[prof] no jobs captured")
       }

@@ -30,15 +30,27 @@ object GraftParquetFooter {
     val meta = ParquetFooterReader.readFooter(
       HadoopInputFile.fromStatus(file, conf),
       ParquetMetadataConverter.SKIP_ROW_GROUPS)
-    val sql = spark.sessionState.conf
+    val (binaryAsString, int96AsTimestamp, inferNtz, nanosAsLong,
+      unknownAnnotation) = converterFlags(spark)
     val converter = new ParquetToSparkSchemaConverter(
-      assumeBinaryIsString = sql.isParquetBinaryAsString,
-      assumeInt96IsTimestamp = sql.isParquetINT96AsTimestamp,
-      inferTimestampNTZ = sql.parquetInferTimestampNTZEnabled,
-      nanosAsLong = sql.legacyParquetNanosAsLong,
-      respectUnknownTypeAnnotation =
-        sql.parquetReaderRespectUnknownTypeAnnotation)
+      assumeBinaryIsString = binaryAsString,
+      assumeInt96IsTimestamp = int96AsTimestamp,
+      inferTimestampNTZ = inferNtz,
+      nanosAsLong = nanosAsLong,
+      respectUnknownTypeAnnotation = unknownAnnotation)
     ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, meta),
       converter)
+  }
+
+  /** The session flags the inference job passes to the converter:
+    * binary-as-string, INT96-as-timestamp, timestamp_ntz inference,
+    * `nanosAsLong` and unknown-type annotations. They shape the schema, so
+    * a memo of converted schemas is keyed by them too. */
+  def converterFlags(spark: SparkSession)
+      : (Boolean, Boolean, Boolean, Boolean, Boolean) = {
+    val sql = spark.sessionState.conf
+    (sql.isParquetBinaryAsString, sql.isParquetINT96AsTimestamp,
+      sql.parquetInferTimestampNTZEnabled, sql.legacyParquetNanosAsLong,
+      sql.parquetReaderRespectUnknownTypeAnnotation)
   }
 }

@@ -106,6 +106,25 @@ class FastParquetSpec extends SparkSpec {
     assert(ts.dataType == org.apache.spark.sql.types.LongType)
   }
 
+  test("the memo is keyed by the converter flags: a session with another " +
+      "nanosAsLong does not get the first session's schema") {
+    val nanos = java.nio.file.Files.createTempDirectory("graft_fp_flags_")
+      .resolve("events.parquet").toString
+    TestFixtures.writeNanosEvents(nanos,
+      Seq((1L, java.time.LocalDateTime.of(2024, 3, 1, 12, 0, 0, 123456789),
+        7L, "view", 1.5, "{}")))
+    val first = spark.newSession()
+    first.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    assert(FastParquet.read(first, nanos).schema("ts").dataType ==
+      org.apache.spark.sql.types.LongType)
+    val second = spark.newSession()
+    second.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+    // Spark's inference fails on NANOS without nanosAsLong; so must the memo
+    val err = intercept[Exception](FastParquet.read(second, nanos).schema)
+    assert(err.getMessage.contains("PARQUET_TYPE_ILLEGAL"), err.getMessage)
+    assertParity(second, nanos)
+  }
+
   test("Hive-partitioned lake layout: partition columns resolve as inferred") {
     val base = java.nio.file.Files.createTempDirectory("graft_fp_k2_").toString
     val df = spark.read.parquet(s"$sf0001/orders.parquet")

@@ -373,6 +373,49 @@ class RunnerSpec extends SparkSpec {
     assert(spark.table("graft_lake.region_evo").count() == v1.count() * 2)
   }
 
+  test("a lake base holding a quote registers: the part SUCCEEDS once and " +
+      "is SKIPPED on re-run") {
+    val lake = Files.createTempDirectory("graft_o'brien_").toString
+    val runner = new PlanRunner(spark, sf0001, lake, new InMemoryLedger,
+      new BufferNotifier)
+    val plan = PlanCodec.parse(mkPlan(
+      "SELECT * FROM lineitem WHERE l_shipdate >= TIMESTAMP '1995-01-01' AND l_shipdate < TIMESTAMP '1995-02-01'",
+      table = "lineitem_quote", s3Col = "l_shipdate"))
+    val r = runner.runPlan(plan).head
+    assert(r.status == RunStatus.Succeeded, r.error)
+    assert(runner.runPlan(plan).head.status == RunStatus.Skipped)
+    assert(spark.table("graft_lake.graft_lineitem_quote").count() ==
+      r.reconciliation.get.actual)
+  }
+
+  test("the landed audit timestamp is the run's load time and the ledger's " +
+      "schema tree is the one lit(loadTs) gives") {
+    import graft.operators.Transforms
+    import org.apache.spark.sql.functions.lit
+    val ledger = new InMemoryLedger
+    val lake = Files.createTempDirectory("graft_audit_").toString
+    val runner = new PlanRunner(spark, sf0001, lake, ledger, new BufferNotifier)
+    val query = "SELECT * FROM orders WHERE o_orderkey < 100"
+    val before = java.time.Instant.now
+    val r = runner.runPlan(PlanCodec.parse(mkPlan(query,
+      table = "orders_audit", s3Col = "o_orderstatus"))).head
+    val after = java.time.Instant.now
+    assert(r.status == RunStatus.Succeeded, r.error)
+    val landed = spark.read.parquet(r.writeResult.get.path)
+      .select(Transforms.AuditTsCol).distinct().collect()
+      .map(_.getTimestamp(0).toInstant)
+    assert(landed.length == 1)
+    assert(!landed.head.isBefore(
+      before.truncatedTo(java.time.temporal.ChronoUnit.MICROS)) &&
+      !landed.head.isAfter(after), s"${landed.head} not in [$before, $after]")
+    val viaLit = Transforms.trimStringColumns(Transforms.normalizeColumnNames(
+      graft.sources.TableCatalog.sql(spark, sf0001, query))
+      .withColumn(Transforms.AuditTsCol, lit(java.sql.Timestamp.from(before)))
+      .withColumn(Transforms.AuditHashCol, lit("h")))
+    assert(ledger.get(r.spec.executionHashId, "orders_audit")
+      .flatMap(_.schemaTree).contains(viaLit.schema.treeString))
+  }
+
   test("dynamic partition overwrite replaces only incoming partitions") {
     val lake = Files.createTempDirectory("graft_dpo_").toString
     val ledger = new InMemoryLedger

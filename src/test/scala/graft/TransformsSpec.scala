@@ -35,6 +35,34 @@ class TransformsSpec extends SparkSpec {
     assert(row.getAs[String](Transforms.AuditHashCol) == "h1")
   }
 
+  test("the load timestamp stays out of the generated code: two runs " +
+      "share their compiled source") {
+    val df = spark.range(0, 100).selectExpr("id", "CAST(id AS STRING) AS s")
+    def source(ts: String): Seq[String] =
+      Transforms.pipeline("h1", java.sql.Timestamp.valueOf(ts))(df)
+        .queryExecution.debug.codegenToSeq().map(_._2)
+    val a = source("2026-01-01 00:00:00")
+    val b = source("2026-06-30 12:34:56.789")
+    assert(a.nonEmpty)
+    assert(a == b, "generated source differs between two load timestamps")
+  }
+
+  test("the audit timestamp is the load time, with lit's type and " +
+      "nullability (codegen and interpreted)") {
+    val ts = java.sql.Timestamp.valueOf("2026-03-04 05:06:07.123456")
+    for (df <- Seq(Seq((" v ", 1L)).toDF("Bad Name", "N"),
+        spark.range(0, 3).selectExpr("' v ' AS `Bad Name`", "id AS N"))) {
+      val out = Transforms.pipeline("h1", ts)(df)
+      val viaLit = Transforms.trimStringColumns(
+        Transforms.normalizeColumnNames(df)
+          .withColumn(Transforms.AuditTsCol, lit(ts))
+          .withColumn(Transforms.AuditHashCol, lit("h1")))
+      assert(out.schema.treeString == viaLit.schema.treeString)
+      assert(out.select(Transforms.AuditTsCol).distinct().as[java.sql.Timestamp]
+        .collect().toSeq == Seq(ts))
+    }
+  }
+
   test("stride predicates partition the key space completely (S1)") {
     // JDBCRelation.columnPartition semantics: first/last stripes unbounded
     val stripes = StrideReader.stripes("k", 0, 100, 4)
