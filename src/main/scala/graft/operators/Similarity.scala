@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.{VectorFunctions => V}
+import graft.sources.FastParquet
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -184,9 +185,6 @@ object Similarity {
   /** The [[AutoRerank]] sizing rule, pinned in SimilaritySpec. */
   def autoRerank(nProbe: Int, k: Int): Int =
     math.max(math.max(64, 2 * k), 8 * nProbe)
-
-  private def resolveRerank(rerank: Int, np: Int, k: Int): Int =
-    if (rerank == AutoRerank) autoRerank(np, k) else rerank
 
   /** The two-level coarse quantizer: ≈√nLists super-centroids trained
     * driver-side over the CENTROIDS (metadata-sized — O(nLists·√nLists·d)
@@ -459,61 +457,54 @@ object Similarity {
       path: String, nLists: Int = 16, kMeansIters: Int = 0,
       payloadCols: Seq[String] = Nil,
       centroidsIn: Option[Seq[(Long, Seq[Double], Double)]] = None): Unit = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
     requirePayloadDisjoint(payloadCols, idCol, vecCol)
     val (withNorm, cents) =
       ivfModel(embeddings, idCol, vecCol, nLists, kMeansIters, payloadCols,
         centroidsIn)
-    val payload = payloadCols.map(col)
-    if (cents.size <= HierThreshold) {
-      withNorm
-        .select(col(idCol) +: col(vecCol) +: payload :+
-          bestCell(cents).getField("cid").as("cell"): _*)
-        // one output file per cell: the write shuffle clusters by the same
-        // key the reads prune on
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$path/corpus")
-    } else {
-      // At-scale layout (nLists ∝ n): TWO-LEVEL Hive layout
-      // super=<s>/cell=<c>/ plus a super-centroid sidecar. Assignment is
-      // the two-hop O(√nLists·d) argmax; readers prune the super level
-      // with a ≤√nLists-value static filter even when the probed-cell set
-      // is too large to bake into an IN list.
-      withCellAssignment(withNorm, cents)
-        .select(col(idCol) +: col(vecCol) +: payload :+ col("super") :+
-          col("cell"): _*)
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("super", "cell")
-        .parquet(s"$path/corpus")
-    }
-    writeCentroidSidecars(spark, path, cents)
+    // above HierThreshold: TWO-LEVEL super=<s>/cell=<c>/, whose ≤√nLists
+    // supers prune even when the probed cells outgrow an IN list
+    val hier = cents.size > HierThreshold
+    landWrite(withCellAssignment(withNorm, cents).select(
+      layoutCols(idCol, col(vecCol) +: payloadCols.map(col), hier): _*),
+      s"$path/corpus", hier)
+    writeCentroidSidecars(embeddings.sparkSession, path, cents)
+  }
+
+  /** A layout table's columns: id, `cols`, then (two-level: super,) cell. */
+  private def layoutCols(idCol: String, cols: Seq[Column],
+      hier: Boolean): Seq[Column] =
+    (col(idCol) +: cols) ++ (if (hier) Seq(col("super")) else Nil) :+
+      col("cell")
+
+  /** Overwrite-land a cell layout table at `root`, one output file per cell:
+    * the write shuffle clusters by the same key the reads prune on. */
+  private def landWrite(df: DataFrame, root: String, hier: Boolean): Unit = {
+    val out = df.repartition(col("cell")).write.mode("overwrite")
+    if (hier) out.partitionBy("super", "cell").parquet(root)
+    else out.partitionBy("cell").parquet(root)
   }
 
   /** Land the centroid sidecar(s) for a cell layout: a flat `centroids`
     * table below [[HierThreshold]]; centroids + `supercentroids` (the
-    * two-level coarse quantizer) above it. Returns whether the layout is
-    * hierarchical. Shared by [[ivfWrite]] and [[ivfPqWrite]]. */
-  private def writeCentroidSidecars(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      cents: Seq[(Long, Seq[Double], Double)]): Boolean = {
+    * two-level coarse quantizer) above it. Shared by every tier's write. */
+  private def writeCentroidSidecars(spark: SparkSession, path: String,
+      cents: Seq[(Long, Seq[Double], Double)]): Unit = {
     import spark.implicits._
-    if (cents.size <= HierThreshold) {
-      cents.toDF("cell", "c_vec", "c_norm")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-      false
-    } else {
+    if (cents.size <= HierThreshold)
+      landSidecar(cents.toDF("cell", "c_vec", "c_norm"), s"$path/centroids")
+    else {
       val h = buildHierarchy(cents)
       val superOf = h.superOf
-      cents.map(c => (c._1, c._2, c._3, superOf(c._1).toLong))
-        .toDF("cell", "c_vec", "c_norm", "super")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-      h.supers.toDF("super", "s_vec", "s_norm")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$path/supercentroids")
-      true
+      landSidecar(cents.map(c => (c._1, c._2, c._3, superOf(c._1).toLong))
+        .toDF("cell", "c_vec", "c_norm", "super"), s"$path/centroids")
+      landSidecar(h.supers.toDF("super", "s_vec", "s_norm"),
+        s"$path/supercentroids")
     }
   }
+
+  /** Overwrite-land a tiny model sidecar table as one file. */
+  private def landSidecar(df: DataFrame, dir: String): Unit =
+    df.coalesce(1).write.mode("overwrite").parquet(dir)
 
   /** Query a persisted IVF layout: pick the `nProbe` nearest cells from the
     * centroid sidecar (driver-side over ≤ nLists rows — the broadcast-build
@@ -521,7 +512,7 @@ object Similarity {
     * IN (...)` predicate lands as a partition filter, so unprobed cells are
     * never read from storage.
     */
-  def ivfReadTopK(spark: org.apache.spark.sql.SparkSession, path: String,
+  def ivfReadTopK(spark: SparkSession, path: String,
       queryVec: Array[Float], excludeId: Option[Long], k: Int,
       nProbe: Int = AutoProbe, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
@@ -537,7 +528,7 @@ object Similarity {
       (sim, cell)
     }.sortBy { case (sim, cell) => (-sim, cell) }.take(np).map(_._2)
     val query = Seq(Tuple1(queryVec)).toDF("q_vec")
-    graft.sources.FastParquet.read(spark, s"$path/corpus")
+    FastParquet.read(spark, s"$path/corpus")
       .where(col("cell").isin(probeCells.toSeq: _*))
       .where(excludeId.map(col(idCol) =!= _).getOrElse(lit(true)))
       .crossJoin(broadcast(query))
@@ -572,108 +563,255 @@ object Similarity {
   /** Batch k-NN over a PERSISTED IVF layout ([[ivfWrite]]) for a DataFrame
     * of query vectors — the pipeline-scale read API (dedup a batch against
     * an index, retrieval for RAG evals) that the single-vector
-    * [[ivfReadTopK]] cannot serve without a driver loop.
-    *
-    * Plan shape, 100 TB first:
-    *   1. the ≤nLists centroids collect once (broadcast-build idiom) and
-    *      bake into a literal; each query's `nProbe` probe cells are assigned
-    *      PURE MAP-SIDE ([[probeCellsCol]]) and exploded to (q_id, cell);
-    *   2. the union of probed cells (≤ nLists values, driver-bounded)
-    *      lands as a static `cell IN (...)` partition filter on the
-    *      Hive-layout corpus — unprobed cell directories are never read;
-    *   3. the probe rows broadcast-join the pruned corpus on `cell`, so
-    *      each corpus row is scored only against the queries probing its
-    *      cell — cost is Σ_cell |cell| · |queries probing it|, linear in
-    *      |Q| for spread queries, never |corpus| · |Q|;
-    *   4. the per-query k-cut is [[graft.plans.TopKPerKey]] (bounded
-    *      heaps, partial-aggregated), not a window sort.
-    * Query batches beyond `maxBroadcastBytes` are AUTO-chunked (id-hash
-    * split + union — each chunk re-runs the same pruned-scan plan), and
-    * layouts written above [[HierThreshold]] lists route through the
-    * two-level coarse quantizer; above `joinThreshold` lists the centroids
-    * stop being plan literals entirely (broadcast-join assignment).
-    *
-    * `filter` is FILTERED ANN (predicate + vector search): a metadata
-    * predicate over the layout's payload columns ([[ivfWrite]]
-    * `payloadCols`) composed INTO the pruned cell scan — it restricts the
-    * candidate set BEFORE the per-query top-k cut, so the k results are
-    * the best k MATCHING vectors (post-filtering a top-k shortlist would
-    * silently return < k or lose recall). Being a plain column predicate
-    * on parquet data columns, it reaches the scan as a pushed filter
-    * alongside the probed-cell partition filter (pinned in
-    * PlanAuditSpec). `nProbe = AutoProbe` (the default) sizes the probe
-    * width to the layout via [[autoNProbe]].
+    * [[ivfReadTopK]] cannot serve without a driver loop. The flat tier of
+    * [[ivfCodecBatchTopK]] (plan shape, auto-chunking, `filter`): the
+    * probed cells' raw vectors score by exact cosine, no re-rank follows.
+    * `filter` ranges over the layout's payload columns ([[ivfWrite]]
+    * `payloadCols`).
     */
-  def ivfBatchTopK(spark: org.apache.spark.sql.SparkSession, path: String,
+  def ivfBatchTopK(spark: SparkSession, path: String,
       queries: DataFrame, qIdCol: String, qVecCol: String, k: Int,
       nProbe: Int = AutoProbe, excludeSelf: Boolean = true,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      maxBroadcastBytes: Long = 8L << 20,
-      joinThreshold: Int = JoinThreshold,
-      cellIsinCap: Int = 2048,
-      filter: Option[Column] = None): DataFrame = {
-    val nLists = centroidsOf(spark, path).length.toLong
-    // layout flag + centroid/hierarchy literals resolved ONCE per batch
-    // call — auto-chunking re-enters one() per chunk, and re-resolving
-    // there repeated the FS check and the full-centroid collect nChunks
-    // times (ADVICE r8)
-    val regime = resolveProbeRegime(spark, path, nLists, joinThreshold)
-    val np = resolveNProbe(nProbe, nLists)
-    val hier = regimeIsHier(regime)
-    val d: Int = regime match {
-      case FlatRegime(cents) => cents.head._2.length
-      case HierLitRegime(h) => h.supers.head._2.length
-      case JoinRegime(supers) => supers.head._2.length
-    }
+      maxBroadcastBytes: Long = 8L << 20, joinThreshold: Int = JoinThreshold,
+      cellIsinCap: Int = 2048, filter: Option[Column] = None): DataFrame =
+    ivfCodecBatchTopK(spark, path, FlatCodec(vecCol), queries, qIdCol,
+      qVecCol, k, nProbe, AutoRerank, excludeSelf, idCol, maxBroadcastBytes,
+      joinThreshold, cellIsinCap, filter)
 
-    // map-side probe assignment: dv/v_norm materialized as plain attributes
-    // first (lambda-referenced expressions re-evaluate per element)
-    val qNormed = queries
+  // ------------------------------------------------------ IVF codec core
+  /** What one IVF tier does differently in the shared batch read
+    * ([[ivfCodecBatchTopK]]), quantized write ([[ivfCodecWrite]]) and
+    * append ([[ivfCodecAppend]]). The sweep scans `table` — flat `corpus`
+    * (exact, final) or quantized `codes` (re-ranked from `vectors`). A
+    * query carries `dv` (`queryDv` of its vector), `v_norm` and
+    * `queryCols`; probe rows take `probeCols` into the sweep (`dv` as
+    * `q_dv`), where `score` ranks a pair. `withCodes` adds the `codeCols`
+    * landed in `table`; `writeSidecars` lands the tier's model. */
+  private sealed abstract class IvfCodec(val table: String,
+      val probeCols: Seq[String], val codeCols: Seq[String],
+      val ascending: Boolean = false, val reranked: Boolean = true) {
+    def queryDv(q: Column): Column = V.unitFast(q)
+    def queryCols: Seq[Column] = Nil
+    def score: Column
+    def probeRowBytes(d: Long): Long
+    def withCodes(df: DataFrame): DataFrame = df
+    def writeSidecars(spark: SparkSession, path: String): Unit = ()
+  }
+
+  private case class FlatCodec(vecCol: String) extends IvfCodec("corpus",
+      Seq("q_vec"), Seq(vecCol), reranked = false) {
+    override def queryDv(q: Column) = V.asDoubleFast(q)
+    override def queryCols = Seq(col("q_vec"))
+    def score = round(V.cosineFast(col(vecCol), col("q_vec")), 6)
+    def probeRowBytes(d: Long) = d * 4 + 64
+  }
+
+  /** Per-vector symmetric int8 codes plus one double scale; the score is
+    * the int8 asymmetric distance `scale · ⟨codes, q⟩`. */
+  private case object Sq8Codec
+      extends IvfCodec("codes", Seq("dv"), Seq("codes", "scale")) {
+    def score = col("scale") * V.dotFast(col("codes"), col("q_dv"))
+    def probeRowBytes(d: Long) = d * 8 + 48
+    // scale materialized as a plain attribute FIRST: quantizeInt8's lambda
+    // references it per element, and a non-attribute expression there
+    // re-evaluates per element (O(d²) per row)
+    override def withCodes(df: DataFrame) = df
+      .withColumn("scale", V.int8Scale(col("dv")))
+      .withColumn("codes", V.quantizeInt8(col("dv"), col("scale")))
+  }
+
+  /** m sub-quantizer codes against the layout's codebook; each query
+    * builds its m×ksub ADC table once, map-side (the [[pqBatchTopK]]
+    * trade), so a sweep pair costs m lookups. */
+  private case class PqCodec(meta: (Int, Int, Int, Int),
+      cb: Seq[Seq[Seq[Double]]])
+      extends IvfCodec("codes", Seq("dv", "qtable"), Seq("codes")) {
+    private val (m, ksub, dsub, _) = meta
+    override def queryCols = Seq(transform(sequence(lit(0), lit(m - 1)), j =>
+      transform(element_at(typedLit(cb), (j + 1).cast("int")), cv =>
+        V.dotFast(slice(col("dv"), j * lit(dsub) + lit(1), lit(dsub)), cv)))
+      .as("qtable"))
+    def score = V.adcFast(col("codes"), col("qtable"))
+    def probeRowBytes(d: Long) = m.toLong * ksub * 8 + d * 8 + 48
+    override def withCodes(df: DataFrame) =
+      df.withColumn("codes", pqCodesCol(cb, m, dsub))
+    override def writeSidecars(spark: SparkSession, path: String) =
+      writePqSidecars(spark, path, meta, cb)
+  }
+
+  /** ⌈d/64⌉ packed sign-bit words; the score is Hamming distance, fewer
+    * differing sign bits ≈ higher cosine on unit vectors. */
+  private case object BqCodec extends IvfCodec("codes", Seq("dv", "q_bits"),
+      Seq("bits"), ascending = true) {
+    override def queryCols = Seq(V.signPack(col("dv")).as("q_bits"))
+    def score = V.hammingDist(col("bits"), col("q_bits"))
+    def probeRowBytes(d: Long) = d * 8 + d / 8 + 48
+    override def withCodes(df: DataFrame) =
+      df.withColumn("bits", V.signPack(col("dv")))
+  }
+
+  /** The batch k-NN plan of every IVF tier over its persisted layout:
+    *   1. the layout's [[ProbeRegime]] resolves ONCE per call; each
+    *      query's `nProbe` cells ([[autoNProbe]] by default) are assigned
+    *      PURE MAP-SIDE ([[buildProbes]]) and exploded to (q_id, cell);
+    *   2. the probed-cell union (≤ nLists values) becomes a static
+    *      partition filter ([[cellPruneFilter]]): unprobed cells are never
+    *      read;
+    *   3. `filter` (FILTERED ANN over the payload columns) restricts the
+    *      pruned scan BEFORE any top-k cut, so the k results are the best
+    *      k MATCHING vectors; it reaches the parquet scan as a pushed
+    *      filter (pinned in PlanAuditSpec);
+    *   4. the probe rows broadcast-join the scan on `cell`: cost is
+    *      Σ_cell |cell| · |queries probing it|, never |corpus| · |Q|;
+    *   5. [[graft.plans.TopKPerKey]] cuts each query on (score, id) to k,
+    *      or on quantized tiers to a `rerank` shortlist whose exact
+    *      cosines come from the equally pruned `vectors`, then to k.
+    * Batches beyond `maxBroadcastBytes` are AUTO-chunked (id-hash split +
+    * union of the same plan per chunk).
+    */
+  private def ivfCodecBatchTopK(spark: SparkSession, path: String,
+      codec: IvfCodec, queries: DataFrame, qIdCol: String, qVecCol: String,
+      k: Int, nProbe: Int, rerank: Int, excludeSelf: Boolean, idCol: String,
+      maxBroadcastBytes: Long, joinThreshold: Int, cellIsinCap: Int,
+      filter: Option[Column]): DataFrame = {
+    val regime = resolveProbeRegime(spark, path, joinThreshold)
+    val np = resolveNProbe(nProbe, regime.nLists)
+    // per-query sweep cut: the final k, or the shortlist re-ranked to k
+    val cut = if (!codec.reranked) k
+      else if (rerank == AutoRerank) autoRerank(np, k) else rerank
+    require(cut >= k, s"rerank ($cut) must cover k ($k)")
+    // staged: the probe expressions and codec lambdas read dv as an attribute
+    val qPrepared = queries
       .select(col(qIdCol).as("q_id"), col(qVecCol).as("q_vec"),
-        V.asDoubleFast(col(qVecCol)).as("dv"))
-      .select(col("q_id"), col("q_vec"), col("dv"),
-        V.normFast(col("dv")).as("v_norm"))
+        codec.queryDv(col(qVecCol)).as("dv"))
+      .select(col("q_id") +: col("dv") +: V.normFast(col("dv")).as("v_norm") +:
+        codec.queryCols: _*)
+    val scored = if (codec.reranked) "approx" else "cos"
 
     def one(q: DataFrame): DataFrame = {
-      val probes = buildProbes(spark, path, q, Seq("q_vec"), np, regime)
-        // referenced by the prune collect AND the cell join: one compute
+      val probes = buildProbes(spark, path, q, codec.probeCols, np, regime)
+        // read by the prune collect AND the cell join: computed once
         .localCheckpoint(false)
-      val corpus = graft.sources.FastParquet.read(spark, s"$path/corpus")
-        .where(cellPruneFilter(spark, probes, hier, cellIsinCap))
-        // metadata predicate BEFORE candidate scoring: restricts the
-        // candidate set the top-k cut sees, and pushes to the parquet scan
-        .where(filter.getOrElse(lit(true)))
-      val cands = corpus
-        .join(broadcast(probes.select(col("cell"), col("q_id"),
-          col("q_vec"))), "cell")
+      val prune = cellPruneFilter(spark, probes, regime.hier, cellIsinCap)
+      val sweep = FastParquet.read(spark, s"$path/${codec.table}")
+        .where(prune).where(filter.getOrElse(lit(true)))
+        .join(broadcast(probes.select(col("cell") +: col("q_id") +:
+          codec.probeCols.map(c =>
+            if (c == "dv") col(c).as("q_dv") else col(c)): _*)), "cell")
         .where(if (excludeSelf) col(idCol) =!= col("q_id") else lit(true))
-        .select(col("q_id"), col(idCol),
-          round(V.cosineFast(col(vecCol), col("q_vec")), 6).as("cos"))
-      graft.plans.TopK.topKPerKey(cands, Seq("q_id"),
-        Seq(col("cos").desc, col(idCol).asc), k)
+        .select(col("q_id") +:
+          (if (codec.reranked) Seq(col("q_dv")) else Nil) :+ col(idCol) :+
+          codec.score.as(scored): _*)
+      val top = graft.plans.TopK.topKPerKey(sweep, Seq("q_id"),
+        Seq(if (codec.ascending) col(scored).asc else col(scored).desc,
+          col(idCol).asc), cut)
+      if (!codec.reranked) top
+      else graft.plans.TopK.topKPerKey(
+        FastParquet.read(spark, s"$path/vectors").where(prune)
+          .join(broadcast(top.select(col("q_id"), col("q_dv"), col(idCol))),
+            idCol)
+          .select(col("q_id"), col(idCol),
+            round(V.dotFast(col("dv"), col("q_dv")), 6).as("cos")),
+        Seq("q_id"), Seq(col("cos").desc, col(idCol).asc), k)
     }
 
-    // Auto-chunking (no hand-chunking contract on the caller): the probe
-    // frame broadcasts nProbe rows of (q_id, q_vec, cell) per query; when
-    // the estimate exceeds the broadcast budget, split the NORMALIZED and
-    // checkpointed query frame by id hash and union the per-chunk results
-    // (each q_id lives wholly in one chunk, so the union IS the unchunked
-    // result; chunks filter materialized rows — the query source is never
-    // re-scanned per chunk).
+    // Auto-chunking over the broadcast probe rows (and re-ranked tiers'
+    // shortlist rows, which carry q_dv): chunks filter the PREPARED,
+    // checkpointed queries by id hash, so each q_id lives wholly in one
+    // chunk and the union IS the unchunked result.
     val nQ = queries.count()
-    val estBytes = nQ * np * (d.toLong * 4 + 64)
+    val d = regime.d.toLong
+    val estBytes = nQ * (np * codec.probeRowBytes(d) +
+      (if (codec.reranked) cut.toLong * (d * 8 + 32) else 0L))
     if (estBytes > maxBroadcastBytes && nQ > 1) {
       val nChunks = math.min(nQ,
         (estBytes + maxBroadcastBytes - 1) / maxBroadcastBytes).toInt
-      val qc = qNormed.localCheckpoint(false)
+      val qc = qPrepared.localCheckpoint(false)
       (0 until nChunks).map { i =>
         one(qc.where(pmod(xxhash64(col("q_id")), lit(nChunks)) === i))
       }.reduce(_ unionByName _)
-    } else one(qNormed)
+    } else one(qPrepared)
   }
 
+  /** The write of every quantized tier over its unit corpus (`idCol`,
+    * payload…, `dv`; cosine is scale-invariant, so assigning unit vectors
+    * ≡ assigning raw ones): train the cells, assign, checkpoint (both
+    * tables read it), then land `codes` (codes + payload: what the sweep
+    * and a filtered read scan), `vectors` (payload-free, for the re-rank)
+    * and the sidecars, two-level above [[HierThreshold]]. */
+  private def ivfCodecWrite(unit: DataFrame, idCol: String, path: String,
+      nLists: Int, kMeansIters: Int, payloadCols: Seq[String],
+      centroidsIn: Option[Seq[(Long, Seq[Double], Double)]],
+      codec: IvfCodec): Unit = {
+    val payload = payloadCols.map(col)
+    val (withNorm, cents) = ivfModel(
+      unit.select(col(idCol) +: col("dv").as("uv") +: payload: _*),
+      idCol, "uv", nLists, kMeansIters, payloadCols, centroidsIn)
+    val hier = cents.size > HierThreshold
+    val assigned = withCellAssignment(withNorm, cents)
+      .select(col(idCol) +: col("dv") +: payload :+ col("super") :+
+        col("cell"): _*)
+      .localCheckpoint(false)
+    landWrite(codec.withCodes(assigned).select(layoutCols(idCol,
+      codec.codeCols.map(col) ++ payload, hier): _*), s"$path/codes", hier)
+    landWrite(assigned.select(layoutCols(idCol, Seq(col("dv")), hier): _*),
+      s"$path/vectors", hier)
+    codec.writeSidecars(unit.sparkSession, path)
+    writeCentroidSidecars(unit.sparkSession, path, cents)
+  }
+
+  /** The append of every quantized tier: no retrain — assign against the
+    * PERSISTED layout ([[assignToLayout]]), encode with its model, land
+    * through [[landAppend]]. VECTORS land FIRST: a crash between the two
+    * appends then leaves only rerank-invisible orphans (an id absent from
+    * codes never shortlists); the reverse order would let a crashed append
+    * shortlist ids the rerank join silently drops. */
+  private def ivfCodecAppend(batch: DataFrame, idCol: String,
+      vecCol: String, path: String, codec: IvfCodec): Unit = {
+    val payloadCols = appendPayloadCols(batch, path, idCol, codec)
+    val payload = payloadCols.map(col)
+    val (assigned0, hier) = assignToLayout(batch.select(col(idCol) +:
+      payload :+ V.unitFast(col(vecCol)).as("uv"): _*), idCol, "uv", path,
+      payloadCols)
+    val assigned = assigned0
+      .select(col(idCol) +: V.asDoubleFast(col("uv")).as("dv") +: payload :+
+        col("super") :+ col("cell"): _*)
+      .localCheckpoint(false) // feeds both appends
+    landAppend(assigned.select(layoutCols(idCol, Seq(col("dv")), hier): _*),
+      s"$path/vectors", hier)
+    landAppend(codec.withCodes(assigned).select(layoutCols(idCol,
+      codec.codeCols.map(col) ++ payload, hier): _*), s"$path/codes", hier)
+  }
+
+  /** What [[buildProbes]] needs of a layout, plus its list count,
+    * dimension and level — resolved ONCE per batch call and shared across
+    * auto-chunks (the layout flag is an FS check, and the literal regimes
+    * collect centroids). */
+  private sealed abstract class ProbeRegime(val nLists: Long, val d: Int,
+      val hier: Boolean)
+  private case class FlatRegime(cents: Seq[(Long, Seq[Double], Double)])
+      extends ProbeRegime(cents.size, cents.head._2.length, false)
+  private case class HierLitRegime(h: IvfHierarchy, n: Long)
+      extends ProbeRegime(n, h.supers.head._2.length, true)
+  private case class JoinRegime(supers: Seq[(Long, Seq[Double], Double)],
+      n: Long) extends ProbeRegime(n, supers.head._2.length, true)
+
+  /** A two-level layout COUNTS its `centroids` sidecar, so the join regime
+    * never collects the nLists × d vectors it exists to keep off the
+    * driver; a flat layout counts the centroids it loads anyway. */
+  private def resolveProbeRegime(spark: SparkSession, path: String,
+      joinThreshold: Int): ProbeRegime =
+    if (!layoutIsHier(spark, path)) FlatRegime(centroidsOf(spark, path))
+    else {
+      val nLists = centroidCountOf(spark, path)
+      if (nLists <= joinThreshold)
+        HierLitRegime(hierarchyOf(spark, path), nLists)
+      else JoinRegime(superCentroidsOf(spark, path), nLists)
+    }
+
   /** Probe-cell assignment for a batch query frame against a persisted
-    * cell layout — shared by [[ivfBatchTopK]] and [[ivfPqBatchTopK]].
+    * cell layout — the probe step of [[ivfCodecBatchTopK]].
     * `qNormed` must carry plain attributes `q_id`, `dv`, `v_norm` plus
     * `payloadCols`; returns (q_id, payload…, super, cell) probe rows, up
     * to `nProbe` per query. Three regimes:
@@ -688,40 +826,20 @@ object Similarity {
     *    (bounded heaps). Identical output to the hier literal path: same
     *    supers, same children, same (sim desc, cell asc) cut.
     */
-  /** Driver-side constants [[buildProbes]] needs — resolved ONCE per batch
-    * call and shared across auto-chunks: the layout flag is an FS
-    * existence check and the flat/hier regimes collect centroid literals
-    * (all nLists rows for hier) — per-CHUNK resolution repeated those
-    * collects nChunks times per batch query (ADVICE r8). */
-  private sealed trait ProbeRegime
-  private case class FlatRegime(
-      cents: Seq[(Long, Seq[Double], Double)]) extends ProbeRegime
-  private case class HierLitRegime(h: IvfHierarchy) extends ProbeRegime
-  private case class JoinRegime(
-      supers: Seq[(Long, Seq[Double], Double)]) extends ProbeRegime
-
-  private def resolveProbeRegime(spark: org.apache.spark.sql.SparkSession,
-      path: String, nLists: Long, joinThreshold: Int): ProbeRegime = {
-    if (!layoutIsHier(spark, path))
-      FlatRegime(centroidsOf(spark, path))
-    else if (nLists <= joinThreshold) HierLitRegime(hierarchyOf(spark, path))
-    else JoinRegime(superCentroidsOf(spark, path))
-  }
-
-  private def buildProbes(spark: org.apache.spark.sql.SparkSession,
-      path: String, qNormed: DataFrame, payloadCols: Seq[String],
-      nProbe: Int, regime: ProbeRegime): DataFrame = {
+  private def buildProbes(spark: SparkSession, path: String,
+      qNormed: DataFrame, payloadCols: Seq[String], nProbe: Int,
+      regime: ProbeRegime): DataFrame = {
     val payload = payloadCols.map(col)
     regime match {
     case FlatRegime(cents) =>
       qNormed.select(col("q_id") +: payload :+ lit(0L).as("super") :+
         explode(probeCellsCol(cents, nProbe)).as("cell"): _*)
-    case HierLitRegime(h) =>
+    case HierLitRegime(h, _) =>
       qNormed.select(col("q_id") +: payload :+
         explode(probeCellsColHier(h, nProbe)).as("cell"): _*)
         .withColumn("super", superOfCol(h))
-    case JoinRegime(supers) =>
-      val centTbl = graft.sources.FastParquet.read(spark, s"$path/centroids")
+    case JoinRegime(supers, _) =>
+      val centTbl = FastParquet.read(spark, s"$path/centroids")
       val sp = superProbeFor(nProbe, supers.size)
       val scoredSupers = transform(typedLit(supers), c =>
         struct((-simTo(col("dv"), col("v_norm"), c)).as("neg"),
@@ -742,14 +860,6 @@ object Similarity {
     }
   }
 
-  /** Whether the resolved regime reads a two-level layout — drives
-    * [[cellPruneFilter]]'s shape and the corpus scan's partition columns
-    * in both batch readers. */
-  private def regimeIsHier(regime: ProbeRegime): Boolean = regime match {
-    case FlatRegime(_) => false
-    case _ => true
-  }
-
   /** Static partition pruning for a cell-layout scan from a probe frame:
     * the probed-cell union is bounded by nLists, so the collect is the
     * broadcast-build idiom, not a data-path collect. In the two-level
@@ -757,8 +867,7 @@ object Similarity {
     * cell-level IN list only while it stays literal-sized — beyond the cap
     * the super filter plus the broadcast cell-join carry the pruning (an
     * unbounded IN list would itself be the scale bug). */
-  private[operators] def cellPruneFilter(
-      spark: org.apache.spark.sql.SparkSession,
+  private[operators] def cellPruneFilter(spark: SparkSession,
       probes: DataFrame, hier: Boolean, cellIsinCap: Int): Column = {
     import spark.implicits._
     val probed = probes.select(col("super"), col("cell")).distinct()
@@ -780,7 +889,7 @@ object Similarity {
     * driver-local existence check on a remote URI silently reports false,
     * downgrading every reader to the flat path and corrupting appends. */
   private[operators] def layoutIsHier(
-      spark: org.apache.spark.sql.SparkSession, path: String): Boolean = {
+      spark: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(s"$path/supercentroids")
     p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
   }
@@ -808,16 +917,16 @@ object Similarity {
   private val SidecarCacheMax = 64
   private val sidecarCache =
     java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[String, (String, AnyRef)](
+      new java.util.LinkedHashMap[String, (String, Any)](
         16, 0.75f, true) {
         override def removeEldestEntry(
-            e: java.util.Map.Entry[String, (String, AnyRef)]): Boolean =
+            e: java.util.Map.Entry[String, (String, Any)]): Boolean =
           size() > SidecarCacheMax
       })
 
-  private def cachedSidecar[T <: AnyRef](
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      subs: Seq[String])(load: => T): T = {
+  /** `kind` tells apart values of different types from the same sidecars. */
+  private def cachedSidecar[T](spark: SparkSession, path: String,
+      subs: Seq[String], kind: String = "")(load: => T): T = {
     val conf = spark.sessionState.newHadoopConf()
     // Stamp = per-file name:length:mtime PLUS the sidecar directory's own
     // mtime (a retrain's overwrite recreates the directory, so the dir
@@ -837,7 +946,7 @@ object Similarity {
       }.sorted.mkString(",")
     }.mkString(";")
     val key = new org.apache.hadoop.fs.Path(path).toString + "#" +
-      subs.mkString("+")
+      subs.mkString("+") + kind
     val cur = sidecarCache.get(key)
     if (cur != null && cur._1 == stamp) cur._2.asInstanceOf[T]
     else {
@@ -848,30 +957,36 @@ object Similarity {
   }
 
   /** (cell, c_vec, c_norm) sorted by cell — the flat-layout model state. */
-  private[operators] def centroidsOf(
-      spark: org.apache.spark.sql.SparkSession, path: String):
+  private[operators] def centroidsOf(spark: SparkSession, path: String):
       Seq[(Long, Seq[Double], Double)] =
     cachedSidecar(spark, path, Seq("centroids")) {
-      import spark.implicits._
-      graft.sources.FastParquet.read(spark, s"$path/centroids")
-        .select(col("cell"), col("c_vec"), col("c_norm"))
-        .as[(Long, Seq[Double], Double)].collect().toSeq.sortBy(_._1)
+      readCentroids(spark, s"$path/centroids", "cell", "c_vec", "c_norm")
+    }
+
+  /** A centroid sidecar's (id, vec, norm) rows, sorted by id. */
+  private def readCentroids(spark: SparkSession, dir: String,
+      cols: String*): Seq[(Long, Seq[Double], Double)] = {
+    import spark.implicits._
+    FastParquet.read(spark, dir).select(cols.map(col): _*)
+      .as[(Long, Seq[Double], Double)].collect().toSeq.sortBy(_._1)
+  }
+
+  /** Row count of the `centroids` sidecar — its vectors are never read. */
+  private def centroidCountOf(spark: SparkSession, path: String): Long =
+    cachedSidecar(spark, path, Seq("centroids"), ":count") {
+      FastParquet.read(spark, s"$path/centroids").count()
     }
 
   /** (super, s_vec, s_norm) sorted by super — the join-regime top level. */
-  private[operators] def superCentroidsOf(
-      spark: org.apache.spark.sql.SparkSession, path: String):
+  private[operators] def superCentroidsOf(spark: SparkSession, path: String):
       Seq[(Long, Seq[Double], Double)] =
     cachedSidecar(spark, path, Seq("supercentroids")) {
-      import spark.implicits._
-      graft.sources.FastParquet.read(spark, s"$path/supercentroids")
-        .select(col("super"), col("s_vec"), col("s_norm"))
-        .as[(Long, Seq[Double], Double)].collect().toSeq.sortBy(_._1)
+      readCentroids(spark, s"$path/supercentroids", "super", "s_vec", "s_norm")
     }
 
   /** The two-level hierarchy, cached over BOTH sidecar tables' stamps. */
-  private[operators] def hierarchyOf(
-      spark: org.apache.spark.sql.SparkSession, path: String): IvfHierarchy =
+  private[operators] def hierarchyOf(spark: SparkSession,
+      path: String): IvfHierarchy =
     cachedSidecar(spark, path, Seq("supercentroids", "centroids")) {
       readHierarchy(spark, path)
     }
@@ -879,15 +994,14 @@ object Similarity {
   /** PQ meta (m, ksub, dsub, d) plus the ASSEMBLED codebook
     * cb(j)(code) = subvector — one cached load instead of the meta +
     * codebook read-and-regroup that every PQ read/append repeated. */
-  private[operators] def pqModelOf(
-      spark: org.apache.spark.sql.SparkSession, path: String):
+  private[operators] def pqModelOf(spark: SparkSession, path: String):
       ((Int, Int, Int, Int), Seq[Seq[Seq[Double]]]) =
     cachedSidecar(spark, path, Seq("meta", "codebook")) {
       import spark.implicits._
-      val Seq(meta) = graft.sources.FastParquet.read(spark, s"$path/meta")
+      val Seq(meta) = FastParquet.read(spark, s"$path/meta")
         .as[(Int, Int, Int, Int)].collect().toSeq
       val (m, ksub, _, _) = meta
-      val cbRows = graft.sources.FastParquet.read(spark, s"$path/codebook")
+      val cbRows = FastParquet.read(spark, s"$path/codebook")
         .as[(Int, Int, Seq[Double])].collect()
       val cb: Seq[Seq[Seq[Double]]] = (0 until m).map { j =>
         val byCode = cbRows.filter(_._1 == j).map(r => r._2 -> r._3).toMap
@@ -898,13 +1012,11 @@ object Similarity {
 
   /** Reconstruct the write-time [[IvfHierarchy]] from the two sidecar
     * tables (bounded collects — ≤ nLists + √nLists rows). */
-  private[operators] def readHierarchy(spark: org.apache.spark.sql.SparkSession,
+  private[operators] def readHierarchy(spark: SparkSession,
       path: String): IvfHierarchy = {
     import spark.implicits._
-    val supers = graft.sources.FastParquet.read(spark, s"$path/supercentroids")
-      .select(col("super"), col("s_vec"), col("s_norm"))
-      .as[(Long, Seq[Double], Double)].collect().toSeq.sortBy(_._1)
-    val childRows = graft.sources.FastParquet.read(spark, s"$path/centroids")
+    val supers = superCentroidsOf(spark, path)
+    val childRows = FastParquet.read(spark, s"$path/centroids")
       .select(col("super"), col("cell"), col("c_vec"), col("c_norm"))
       .as[(Long, Long, Seq[Double], Double)].collect()
       .groupBy(_._1)
@@ -924,7 +1036,7 @@ object Similarity {
     * only the |Q|·rerank shortlisted vector rows are fetched (broadcast
     * join) for the exact re-rank.
     */
-  def pqBatchTopK(spark: org.apache.spark.sql.SparkSession, path: String,
+  def pqBatchTopK(spark: SparkSession, path: String,
       queries: DataFrame, qIdCol: String, qVecCol: String, k: Int,
       rerank: Int = 64, excludeSelf: Boolean = true,
       idCol: String = "vec_id",
@@ -949,14 +1061,14 @@ object Similarity {
     val approx = V.adcFast(col("codes"), col("qtable"))
     def one(qT: DataFrame): DataFrame = {
       val shortlist = graft.plans.TopK.topKPerKey(
-        graft.sources.FastParquet.read(spark, s"$path/codes")
+        FastParquet.read(spark, s"$path/codes")
           .crossJoin(broadcast(qT))
           .where(if (excludeSelf) col(idCol) =!= col("q_id") else lit(true))
           .select(col("q_id"), col("q_dv"), col(idCol), approx.as("approx")),
         Seq("q_id"), Seq(col("approx").desc, col(idCol).asc),
         math.max(rerank, k))
       // exact re-rank reads just the |Q|·rerank shortlisted vector rows
-      val exact = graft.sources.FastParquet.read(spark, s"$path/vectors")
+      val exact = FastParquet.read(spark, s"$path/vectors")
         .join(broadcast(shortlist.select(col("q_id"), col("q_dv"),
           col(idCol))), idCol)
         .select(col("q_id"), col(idCol),
@@ -1109,25 +1221,6 @@ object Similarity {
       .drop("rk")
   }
 
-  /** Product-quantization ANN (Jégou, Douze, Schmid — "Product Quantization
-    * for Nearest Neighbor Search", TPAMI 2011): vectors are unit-normalized
-    * (cosine ≡ dot), split into `m` subspaces, and each subspace is vector-
-    * quantized against its own `ksub`-entry codebook, so a d-float embedding
-    * compresses to `m` small ints. A query is answered by ADC (asymmetric
-    * distance computation): build the m×ksub table of ⟨query-slice,
-    * sub-centroid⟩ dots ONCE on the driver (the broadcast-build idiom — the
-    * table is tiny), score every code word by `m` table lookups, keep the
-    * top `rerank` candidates, and re-rank only those with the exact dot.
-    *
-    * Scale shape: codebook training shuffles O(m·ksub·d/m) = O(ksub·d)
-    * doubles per Lloyd iteration (VecMean partial agg — the corpus never
-    * moves); encoding and ADC scoring are pure map-side codegen'd
-    * higher-order functions; candidate selection is TakeOrderedAndProject
-    * (top-rerank, not a global sort). At 100 TB the win is the scan: a
-    * persisted code table is ~(4·d)/m the size of the raw vectors (32× at
-    * d=64, m=8), so the full-corpus ADC sweep reads 1/32 the bytes and the
-    * exact vectors are fetched for `rerank` rows only.
-    */
   /** Shared PQ model build: the unit-normalized corpus (`idCol`, `dv`) and
     * the trained sub-codebooks cb(j)(code) — see [[pqTopK]] for the design
     * narrative. Deterministic end to end (hash-ordered seeds, strict-<
@@ -1144,9 +1237,7 @@ object Similarity {
     // Unit-normalize so the sub-codebooks quantize direction, not magnitude,
     // and the final re-rank is a plain dot. Zero vectors pass through as-is
     // (their dot with anything is 0 — ranked last, deterministically).
-    val unitPlan = embeddings
-      .select(col(idCol) +: payloadCols.map(col) :+
-        V.unitFast(col(vecCol)).as("dv"): _*)
+    val unitPlan = unitCorpus(embeddings, idCol, vecCol, payloadCols)
     // Scanned ≥3 times (seeds, per-iteration training, encoding, query row):
     // cut lineage once so the source is read and normalized once.
     val unit = unitPlan.localCheckpoint(false)
@@ -1252,6 +1343,25 @@ object Similarity {
       .limit(k)
   }
 
+  /** Product-quantization ANN (Jégou, Douze, Schmid — "Product Quantization
+    * for Nearest Neighbor Search", TPAMI 2011): vectors are unit-normalized
+    * (cosine ≡ dot), split into `m` subspaces, and each subspace is vector-
+    * quantized against its own `ksub`-entry codebook, so a d-float embedding
+    * compresses to `m` small ints. A query is answered by ADC (asymmetric
+    * distance computation): build the m×ksub table of ⟨query-slice,
+    * sub-centroid⟩ dots ONCE on the driver (the broadcast-build idiom — the
+    * table is tiny), score every code word by `m` table lookups, keep the
+    * top `rerank` candidates, and re-rank only those with the exact dot.
+    *
+    * Scale shape: codebook training shuffles O(m·ksub·d/m) = O(ksub·d)
+    * doubles per Lloyd iteration (VecMean partial agg — the corpus never
+    * moves); encoding and ADC scoring are pure map-side codegen'd
+    * higher-order functions; candidate selection is TakeOrderedAndProject
+    * (top-rerank, not a global sort). At 100 TB the win is the scan: a
+    * persisted code table is ~(4·d)/m the size of the raw vectors (32× at
+    * d=64, m=8), so the full-corpus ADC sweep reads 1/32 the bytes and the
+    * exact vectors are fetched for `rerank` rows only.
+    */
   def pqTopK(embeddings: DataFrame, idCol: String, vecCol: String,
       queryId: Long, k: Int, m: Int = 8, ksub: Int = 16,
       kMeansIters: Int = 1, rerank: Int = 64): DataFrame = {
@@ -1278,7 +1388,6 @@ object Similarity {
       kMeansIters: Int = 2,
       codebookIn: Option[Seq[Seq[Seq[Double]]]] = None): Unit = {
     val spark = embeddings.sparkSession
-    import spark.implicits._
     val (unit, cb, dsub, d) =
       pqModel(embeddings, idCol, vecCol, m, ksub, kMeansIters, Nil,
         codebookIn)
@@ -1286,12 +1395,18 @@ object Similarity {
       .write.mode("overwrite").parquet(s"$path/codes")
     unit.select(col(idCol), col("dv"))
       .write.mode("overwrite").parquet(s"$path/vectors")
-    cb.zipWithIndex.flatMap { case (codes, j) =>
+    writePqSidecars(spark, path, (m, ksub, dsub, d), cb)
+  }
+
+  /** The PQ model sidecars: the one-row (m, ksub, dsub, d) meta and the
+    * codebook as (j, code, c_vec) rows — what [[pqModelOf]] reads back. */
+  private def writePqSidecars(spark: SparkSession, path: String,
+      meta: (Int, Int, Int, Int), cb: Seq[Seq[Seq[Double]]]): Unit = {
+    import spark.implicits._
+    landSidecar(cb.zipWithIndex.flatMap { case (codes, j) =>
       codes.zipWithIndex.map { case (v, c) => (j, c, v) }
-    }.toDF("j", "code", "c_vec")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/codebook")
-    Seq((m, ksub, dsub, d)).toDF("m", "ksub", "dsub", "d")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    }.toDF("j", "code", "c_vec"), s"$path/codebook")
+    landSidecar(Seq(meta).toDF("m", "ksub", "dsub", "d"), s"$path/meta")
   }
 
   /** Query a persisted PQ layout: rebuild the ADC table from the codebook
@@ -1299,7 +1414,7 @@ object Similarity {
     * table, then fetch ONLY the shortlisted ids from the vector table for
     * the exact re-rank.
     */
-  def pqReadTopK(spark: org.apache.spark.sql.SparkSession, path: String,
+  def pqReadTopK(spark: SparkSession, path: String,
       queryVec: Array[Float], excludeId: Option[Long], k: Int,
       rerank: Int = 64, idCol: String = "vec_id"): DataFrame = {
     import spark.implicits._
@@ -1311,14 +1426,14 @@ object Similarity {
     val table = pqAdcTable(cb, q, dsub, d)
     val approx = V.adcFast(col("codes"), typedLit(table))
     // ADC sweep touches ONLY the compressed codes table
-    val shortlist = graft.sources.FastParquet.read(spark, s"$path/codes")
+    val shortlist = FastParquet.read(spark, s"$path/codes")
       .where(excludeId.map(col(idCol) =!= _).getOrElse(lit(true)))
       .select(col(idCol), approx.as("approx"))
       .orderBy(col("approx").desc, col(idCol).asc)
       .limit(math.max(rerank, k))
       .select(col(idCol))
     // exact re-rank reads just the shortlisted vector rows (broadcast semi)
-    graft.sources.FastParquet.read(spark, s"$path/vectors")
+    FastParquet.read(spark, s"$path/vectors")
       .join(broadcast(shortlist), idCol)
       .select(col(idCol),
         round(V.dotFast(col("dv"), typedLit(q)), 6).as("cos"))
@@ -1333,71 +1448,26 @@ object Similarity {
     * family); here the codes land partitioned by IVF cell, so a batch
     * reads only its probed cells' codes — nProbe/nLists of the table —
     * and the exact re-rank fetches shortlist rows from an equally pruned
-    * vectors table.
-    *
-    * One unit-normalized corpus pass feeds BOTH quantizers (cosine is
-    * scale-invariant, so cell-assigning the unit vectors ≡ assigning the
-    * raw ones); cells use the shared [[ivfModel]] (hash-ordered seeds +
-    * Lloyd) and go two-level above [[HierThreshold]] exactly like
-    * [[ivfWrite]].
+    * vectors table ([[ivfCodecWrite]]).
     */
   def ivfPqWrite(embeddings: DataFrame, idCol: String, vecCol: String,
       path: String, nLists: Int = 16, m: Int = 16, ksub: Int = 32,
       kMeansIters: Int = 2, payloadCols: Seq[String] = Nil,
       centroidsIn: Option[Seq[(Long, Seq[Double], Double)]] = None,
       codebookIn: Option[Seq[Seq[Seq[Double]]]] = None): Unit = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
     requirePayloadDisjoint(payloadCols, idCol, vecCol)
-    val payload = payloadCols.map(col)
+    // one checkpointed unit-normalized pass feeds the codebook training
+    // and the cell assignment
     val (unit, cb, dsub, d) = pqModel(embeddings, idCol, vecCol, m, ksub,
       kMeansIters, payloadCols, codebookIn)
-    val (withNorm, cents) = ivfModel(
-      unit.select(col(idCol) +: col("dv").as("uv") +: payload: _*),
-      idCol, "uv", nLists, kMeansIters, payloadCols, centroidsIn)
-    val hier = cents.size > HierThreshold
-    val assigned = withCellAssignment(withNorm, cents)
-      .select(col(idCol) +: col("dv") +: payload :+ col("super") :+
-        col("cell"): _*)
-      .localCheckpoint(false) // feeds both the codes and the vectors write
-    def land(df: DataFrame, sub: String): Unit = {
-      val out = df.repartition(col("cell")).write.mode("overwrite")
-      if (hier) out.partitionBy("super", "cell").parquet(s"$path/$sub")
-      else out.partitionBy("cell").parquet(s"$path/$sub")
-    }
-    // payload rides in the CODES table — the shortlist source a filtered
-    // read restricts (same contract as ivfSqWrite); vectors stay lean
-    land(assigned.select(
-      (col(idCol) +: pqCodesCol(cb, m, dsub).as("codes") +: payload ++:
-        (if (hier) Seq(col("super")) else Nil)) :+ col("cell"): _*), "codes")
-    land(assigned.select(
-      (col(idCol) +: col("dv") +:
-        (if (hier) Seq(col("super")) else Nil)) :+ col("cell"): _*),
-      "vectors")
-    cb.zipWithIndex.flatMap { case (codes, j) =>
-      codes.zipWithIndex.map { case (v, c) => (j, c, v) }
-    }.toDF("j", "code", "c_vec")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/codebook")
-    Seq((m, ksub, dsub, d)).toDF("m", "ksub", "dsub", "d")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    writeCentroidSidecars(spark, path, cents)
+    ivfCodecWrite(unit, idCol, path, nLists, kMeansIters, payloadCols,
+      centroidsIn, PqCodec((m, ksub, dsub, d), cb))
   }
 
-  /** Append a batch to a persisted IVF layout ([[ivfWrite]]) WITHOUT
-    * retraining — the nightly-ingest maintenance story for a 100 TB index.
-    * Each batch row is assigned to its nearest EXISTING cell (sidecar
-    * centroids; the two-level path above [[HierThreshold]]) and appended
-    * as new files inside that cell's partition directory, so every reader
-    * ([[ivfReadTopK]], [[ivfBatchTopK]], the incremental dedup paths) sees
-    * the union transparently and partition pruning is unchanged. Cost:
-    * O(|batch|·assign) + a |batch|-sized partitioned append — the corpus
-    * never rewrites. Centroids drift as the distribution shifts; re-train
-    * ([[ivfWrite]]) when recall degrades — the standard IVF maintenance
-    * trade (what Faiss `IndexIVF.add` does).
-    */
   /** Cell-assign a batch against a persisted layout's SIDECAR centroids —
-    * the shared front of [[ivfAppend]] and the exactly-once streaming
-    * ingest ([[graft.streaming.IndexIngest]]). Returns the batch rows with
+    * the shared front of every append ([[ivfAppend]], [[ivfCodecAppend]])
+    * and of the exactly-once streaming ingest
+    * ([[graft.streaming.IndexIngest]]). Returns the batch rows with
     * `super`/`cell` columns (super = 0 on flat layouts) plus the layout's
     * hier flag. Hier layouts assign against the PERSISTED sidecar
     * hierarchy, never a rebuilt one: a rebuild from differently ordered
@@ -1409,7 +1479,6 @@ object Similarity {
       vecCol: String, path: String,
       payloadCols: Seq[String] = Nil): (DataFrame, Boolean) = {
     val spark = batch.sparkSession
-    import spark.implicits._
     val hier = layoutIsHier(spark, path)
     val payload = payloadCols.map(col)
     val withNorm = batch
@@ -1424,13 +1493,6 @@ object Similarity {
       col("super") :+ col("cell"): _*), hier)
   }
 
-  /** The payload attribute names a persisted cell layout carries: corpus
-    * data columns beyond the id/vector/partition core. One footer-only
-    * schema read. */
-  /** Payload attribute names of a quantized layout's CODES table —
-    * data columns beyond the id/code/partition core (`fixed` names the
-    * tier's own code columns). The filtered-ANN shortlist scans codes,
-    * so THIS is the schema appends must preserve. */
   /** Internal column names the quantized layouts own. A payload column
     * shadowing one of these (e.g. a user attribute literally named
     * `scale` on an SQ8 layout) would collide with the layout's own
@@ -1459,17 +1521,30 @@ object Similarity {
         s"id/vector columns — rename them before landing the layout")
   }
 
-  private[operators] def codesPayloadCols(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String, idCol: String, fixed: Set[String]): Seq[String] =
-    graft.sources.FastParquet.read(spark, s"$path/codes").schema.fieldNames.toSeq
-      .filterNot((fixed ++ Set(idCol, "super", "cell")).contains)
+  /** Payload columns of a layout's sweep table (`corpus` or `codes`): the
+    * data columns beyond id, codes and partitions — what filtered reads
+    * scan, so what appends must preserve. One footer-only schema read. */
+  private def payloadColsOf(spark: SparkSession, path: String, idCol: String,
+      codec: IvfCodec): Seq[String] =
+    FastParquet.read(spark, s"$path/${codec.table}").schema.fieldNames.toSeq
+      .filterNot((codec.codeCols ++ Seq(idCol, "super", "cell")).contains)
 
-  private[graft] def layoutPayloadCols(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String, idCol: String, vecCol: String): Seq[String] =
-    graft.sources.FastParquet.read(spark, s"$path/corpus").schema.fieldNames.toSeq
-      .filterNot(Set(idCol, vecCol, "super", "cell"))
+  private[graft] def layoutPayloadCols(spark: SparkSession, path: String,
+      idCol: String, vecCol: String): Seq[String] =
+    payloadColsOf(spark, path, idCol, FlatCodec(vecCol))
+
+  /** The payload columns an append batch must carry: without them its rows
+    * read back NULL metadata that every filtered read silently skips. */
+  private def appendPayloadCols(batch: DataFrame, path: String,
+      idCol: String, codec: IvfCodec): Seq[String] = {
+    val payload = payloadColsOf(batch.sparkSession, path, idCol, codec)
+    val missing = payload.filterNot(batch.columns.contains)
+    require(missing.isEmpty,
+      s"append batch is missing the layout's payload column(s) " +
+        s"${missing.mkString(", ")} — filtered reads would silently " +
+        s"skip the appended rows")
+    payload
+  }
 
   /** Micro-batch threshold for [[ivfAppend]]'s driver-side write regime —
     * same rationale as the exactly-once ingest's
@@ -1484,26 +1559,27 @@ object Similarity {
     org.apache.spark.sql.execution.datasources.parquet.GraftParquetDirect
       .DriverStageMaxRows
 
+  /** Append a batch to a persisted IVF layout ([[ivfWrite]]) WITHOUT
+    * retraining — the nightly-ingest maintenance story for a 100 TB index.
+    * Each batch row is assigned to its nearest EXISTING cell (sidecar
+    * centroids; the two-level path above [[HierThreshold]]) and appended
+    * as new files inside that cell's partition directory, so every reader
+    * ([[ivfReadTopK]], [[ivfBatchTopK]], the incremental dedup paths) sees
+    * the union transparently and partition pruning is unchanged. Cost:
+    * O(|batch|·assign) + a |batch|-sized partitioned append — the corpus
+    * never rewrites. Centroids drift as the distribution shifts; re-train
+    * ([[ivfWrite]]) when recall degrades — the standard IVF maintenance
+    * trade (what Faiss `IndexIVF.add` does).
+    */
   def ivfAppend(batch: DataFrame, idCol: String, vecCol: String,
       path: String,
       driverStageMaxRows: Int = AppendDriverStageMaxRows): Unit = {
-    val spark = batch.sparkSession
-    // appends must carry the layout's payload columns (ivfWrite
-    // payloadCols): a payload-less append would land rows whose metadata
-    // reads back NULL, and every filtered-ANN predicate would silently
-    // exclude them — fail loud at the write instead
-    val payload = layoutPayloadCols(spark, path, idCol, vecCol)
-    val missing = payload.filterNot(batch.columns.contains)
-    require(missing.isEmpty,
-      s"append batch is missing the layout's payload column(s) " +
-        s"${missing.mkString(", ")} — filtered reads would silently " +
-        s"skip the appended rows")
+    val payload = appendPayloadCols(batch, path, idCol, FlatCodec(vecCol))
     val (assigned, hier) = assignToLayout(batch, idCol, vecCol, path,
       payload)
-    val projected = assigned.select(
-      (col(idCol) +: col(vecCol) +: payload.map(col) ++:
-        (if (hier) Seq(col("super")) else Nil)) :+ col("cell"): _*)
-    landAppend(projected, s"$path/corpus", hier, driverStageMaxRows)
+    landAppend(assigned.select(
+      layoutCols(idCol, col(vecCol) +: payload.map(col), hier): _*),
+      s"$path/corpus", hier, driverStageMaxRows)
   }
 
   /** Land an append frame (partition columns super?/cell LAST) into a
@@ -1548,7 +1624,7 @@ object Similarity {
     * duplicate rows, never tear a file.
     */
   private def appendRowsDriverSide(
-      spark: org.apache.spark.sql.SparkSession, root: String,
+      spark: SparkSession, root: String,
       schema: org.apache.spark.sql.types.StructType,
       rows: Array[org.apache.spark.sql.catalyst.InternalRow],
       partCols: Seq[String]): Unit = {
@@ -1598,37 +1674,6 @@ object Similarity {
     ()
   }
 
-  /** Compact the small files that repeated [[ivfAppend]] batches leave in
-    * a persisted cell layout: each nightly append lands ≥1 file per
-    * touched cell, so after N ingests a cell dir holds N small files and
-    * the probed-cell read pays N footer opens per cell. Detects cells
-    * whose file COUNT exceeds `maxFilesPerCell`, reads ONLY those cells
-    * (partition-pruned scan), and rewrites each as one file — untouched
-    * cells are never read or rewritten, so the cost is O(fragmented
-    * cells), not O(table). Returns the number of compacted cells. The
-    * layout counterpart of the snapshot lake's bin-packing
-    * auto-compaction.
-    *
-    * Commit protocol (ADVICE r8 — the old dynamic-partition-overwrite
-    * deleted each live cell dir before its replacement files moved in,
-    * so a crash mid-commit could LOSE a cell and a concurrent reader saw
-    * an empty or half-written cell): the rewrite is STAGED to a
-    * dot-prefixed dir inside the layout (invisible to parquet partition
-    * discovery), fully materialized, then swapped per cell with two
-    * atomic renames (live→trash, staged→live). Nothing is deleted before
-    * its replacement is durable; a crash leaves every cell either old or
-    * new, plus at worst a stale staging dir the next compact overwrites.
-    * Remaining contract: rename atomicity is per-FS (HDFS/POSIX yes;
-    * object stores need their atomic-rename layer), the one-rename gap
-    * means a concurrent READER can transiently miss one cell's files
-    * mid-swap, and compaction still requires NO CONCURRENT WRITER on the
-    * compacted cells (an append landing between the snapshot scan and
-    * the swap would be dropped with the old files) — serialize appends
-    * and compaction, as [[graft.streaming.IndexIngest]] does by running
-    * both inside the single-writer foreachBatch loop. A crash BETWEEN a
-    * cell's two renames parks its only copies in the trash dir; the next
-    * compact restores them from trash before anything destructive runs.
-    */
   /** Recursive cell-dir walker over a Hive layout (cell= leaves, super=
     * intermediates) — shared by compaction, recovery, and the streaming
     * sync publish so a layout-naming change lands in ONE place. */
@@ -1665,7 +1710,7 @@ object Similarity {
     * land them twice once recovery restores the originals). One
     * fs.exists when there is nothing to recover.
     */
-  def ivfCompactRecover(spark: org.apache.spark.sql.SparkSession,
+  def ivfCompactRecover(spark: SparkSession,
       path: String, sub: String = "corpus"): Unit = {
     val root = new org.apache.hadoop.fs.Path(s"$path/$sub")
     val conf = spark.sessionState.newHadoopConf()
@@ -1756,7 +1801,7 @@ object Similarity {
     *
     * @return number of trashed cells restored (the rest were published
     *         and dropped) */
-  def migrateLegacyTrash(spark: org.apache.spark.sql.SparkSession,
+  def migrateLegacyTrash(spark: SparkSession,
       path: String, sub: String = "corpus"): Int = {
     val root = new org.apache.hadoop.fs.Path(s"$path/$sub")
     val conf = spark.sessionState.newHadoopConf()
@@ -1798,7 +1843,38 @@ object Similarity {
     restored
   }
 
-  def ivfCompact(spark: org.apache.spark.sql.SparkSession, path: String,
+  /** Compact the small files that repeated [[ivfAppend]] batches leave in
+    * a persisted cell layout: each nightly append lands ≥1 file per
+    * touched cell, so after N ingests a cell dir holds N small files and
+    * the probed-cell read pays N footer opens per cell. Detects cells
+    * whose file COUNT exceeds `maxFilesPerCell`, reads ONLY those cells
+    * (partition-pruned scan), and rewrites each as one file — untouched
+    * cells are never read or rewritten, so the cost is O(fragmented
+    * cells), not O(table). Returns the number of compacted cells. The
+    * layout counterpart of the snapshot lake's bin-packing
+    * auto-compaction.
+    *
+    * Commit protocol (ADVICE r8 — the old dynamic-partition-overwrite
+    * deleted each live cell dir before its replacement files moved in,
+    * so a crash mid-commit could LOSE a cell and a concurrent reader saw
+    * an empty or half-written cell): the rewrite is STAGED to a
+    * dot-prefixed dir inside the layout (invisible to parquet partition
+    * discovery), fully materialized, then swapped per cell with two
+    * atomic renames (live→trash, staged→live). Nothing is deleted before
+    * its replacement is durable; a crash leaves every cell either old or
+    * new, plus at worst a stale staging dir the next compact overwrites.
+    * Remaining contract: rename atomicity is per-FS (HDFS/POSIX yes;
+    * object stores need their atomic-rename layer), the one-rename gap
+    * means a concurrent READER can transiently miss one cell's files
+    * mid-swap, and compaction still requires NO CONCURRENT WRITER on the
+    * compacted cells (an append landing between the snapshot scan and
+    * the swap would be dropped with the old files) — serialize appends
+    * and compaction, as [[graft.streaming.IndexIngest]] does by running
+    * both inside the single-writer foreachBatch loop. A crash BETWEEN a
+    * cell's two renames parks its only copies in the trash dir; the next
+    * compact restores them from trash before anything destructive runs.
+    */
+  def ivfCompact(spark: SparkSession, path: String,
       sub: String = "corpus", maxFilesPerCell: Int = 4,
       onlyCells: Option[Set[Long]] = None): Int = {
     val hier = layoutIsHier(spark, path)
@@ -1833,7 +1909,7 @@ object Similarity {
     // stage: one file per fragmented cell, written to the (reader-
     // invisible) staging dir — the source files stay untouched, so the
     // plan never reads a path it is replacing and no lineage cut is needed
-    val rows = graft.sources.FastParquet.read(spark, root.toString)
+    val rows = FastParquet.read(spark, root.toString)
       .where(col("cell").isin(fragmented.map(_._1): _*))
       .repartition(col("cell"))
     val w = rows.write.mode("overwrite")
@@ -1893,147 +1969,30 @@ object Similarity {
     fragmented.size
   }
 
-  /** [[ivfAppend]] for the IVFADC layout ([[ivfPqWrite]]): encode the
-    * batch with the PERSISTED codebook, assign cells from the persisted
-    * centroids, and append to both the codes and vectors tables. No
-    * retrain — same maintenance contract as [[ivfAppend]]. */
+  /** [[ivfAppend]] for the IVFADC layout ([[ivfPqWrite]]): encode with the
+    * PERSISTED codebook and centroids, append codes and vectors
+    * ([[ivfCodecAppend]]). No retrain — the [[ivfAppend]] contract. */
   def ivfPqAppend(batch: DataFrame, idCol: String, vecCol: String,
-      path: String): Unit = {
-    val spark = batch.sparkSession
-    import spark.implicits._
-    val hier = layoutIsHier(spark, path)
-    val ((m, ksub, dsub, _), cb) = pqModelOf(spark, path)
-    // payload layouts: the codes table is the filtered-ANN shortlist
-    // source — an append missing its payload columns would land rows
-    // every filtered read silently skips (same loud contract as ivfAppend)
-    val payloadCols = codesPayloadCols(spark, path, idCol,
-      fixed = Set("codes"))
-    val missingP = payloadCols.filterNot(batch.columns.contains)
-    require(missingP.isEmpty,
-      s"append batch is missing the layout's payload column(s) " +
-        s"${missingP.mkString(", ")}")
-    val payload = payloadCols.map(col)
-    // unit-normalize (the layout quantizes direction) + assign + encode
-    val unit = batch
-      .select(col(idCol) +: payload :+
-        V.unitFast(col(vecCol)).as("dv"): _*)
-    val withNorm = unit.select(col(idCol) +: payload :+ col("dv") :+
-      V.normFast(col("dv")).as("v_norm"): _*)
-    // persisted hierarchy for hier layouts (see ivfAppend's rationale)
-    val assigned = (if (hier)
-      withCellAssignmentHier(withNorm, hierarchyOf(spark, path))
-    else withCellAssignment(withNorm, centroidsOf(spark, path)))
-      .select(col(idCol) +: col("dv") +: payload :+ col("super") :+
-        col("cell"): _*)
-      .localCheckpoint(false)
-    // two-regime landing (r15): driver-direct under the micro-batch
-    // threshold, distributed above — see [[landAppend]]
-    def land(df: DataFrame, sub: String): Unit =
-      landAppend(df, s"$path/$sub", hier)
-    // VECTORS land FIRST: a crash between the two appends then leaves only
-    // rerank-invisible orphans (the approx sweep reads codes alone, so an
-    // id absent from codes never shortlists). The reverse order would let
-    // a crashed append shortlist ids the rerank join silently drops —
-    // results would shrink without an error. Same contract as ivfSqAppend.
-    land(assigned.select(
-      (col(idCol) +: col("dv") +:
-        (if (hier) Seq(col("super")) else Nil)) :+ col("cell"): _*),
-      "vectors")
-    land(assigned.select(
-      (col(idCol) +: pqCodesCol(cb, m, dsub).as("codes") +: payload ++:
-        (if (hier) Seq(col("super")) else Nil)) :+ col("cell"): _*), "codes")
-  }
+      path: String): Unit =
+    ivfCodecAppend(batch, idCol, vecCol, path,
+      PqCodec.tupled(pqModelOf(batch.sparkSession, path)))
 
-  /** Batch k-NN over a persisted IVFADC layout ([[ivfPqWrite]]): per-query
-    * ADC tables built map-side on the query frame (the [[pqBatchTopK]]
-    * trade), probe cells assigned via the shared [[buildProbes]] regimes
-    * (flat / two-level literal / broadcast-join), the ADC sweep joins ONLY
-    * the probed cells' codes (static super/cell partition pruning +
-    * broadcast cell-join), shortlists cut per query by TopKPerKey, and the
-    * exact re-rank reads the shortlisted rows from the equally pruned
-    * vectors table. Cost per query: nProbe·|cell| m-lookup scores instead
-    * of |corpus| — the IVFADC contract. `filter` is the filtered-ANN
-    * predicate over the codes table's payload columns ([[ivfPqWrite]]
-    * `payloadCols`), applied BEFORE the ADC shortlist cut — the same
-    * filter-before-top-k contract as [[ivfBatchTopK]]/[[ivfSqBatchTopK]].
+  /** Batch k-NN over a persisted IVFADC layout ([[ivfPqWrite]]): the PQ
+    * tier of [[ivfCodecBatchTopK]]. Per-query ADC tables ride the probe
+    * rows, so the sweep over ONLY the probed cells' codes costs m lookups
+    * per pair — nProbe·|cell| scores per query instead of |corpus|, the
+    * IVFADC contract. `filter` ranges over the codes table's payload
+    * columns ([[ivfPqWrite]] `payloadCols`).
     */
-  def ivfPqBatchTopK(spark: org.apache.spark.sql.SparkSession, path: String,
+  def ivfPqBatchTopK(spark: SparkSession, path: String,
       queries: DataFrame, qIdCol: String, qVecCol: String, k: Int,
       nProbe: Int = AutoProbe, rerank: Int = AutoRerank,
-      excludeSelf: Boolean = true,
-      idCol: String = "vec_id",
-      maxBroadcastBytes: Long = 8L << 20,
-      joinThreshold: Int = JoinThreshold,
-      cellIsinCap: Int = 2048,
-      filter: Option[Column] = None): DataFrame = {
-    import spark.implicits._
-    val ((m, ksub, dsub, d), cb) = pqModelOf(spark, path)
-    val nLists = centroidsOf(spark, path).length.toLong
-    // regime resolved once per batch call, shared across auto-chunks
-    // (ADVICE r8 — see ivfBatchTopK)
-    val regime = resolveProbeRegime(spark, path, nLists, joinThreshold)
-    val np = resolveNProbe(nProbe, nLists)
-    val rr = resolveRerank(rerank, np, k)
-    require(rr >= k, s"rerank ($rr) must cover k ($k)")
-    val hier = regimeIsHier(regime)
-    val cbLit = typedLit(cb)
-    // unit query + v_norm (1, or 0 for the zero vector) + per-query ADC
-    // table — all map-side, staged projections so lambdas see attributes
-    val qUnit = queries
-      .select(col(qIdCol).as("q_id"),
-        V.unitFast(col(qVecCol)).as("dv"))
-    val qNormed = qUnit.select(col("q_id"), col("dv"),
-      V.normFast(col("dv")).as("v_norm"))
-    val qTabled = qNormed.select(col("q_id"), col("dv"), col("v_norm"),
-      transform(sequence(lit(0), lit(m - 1)), j =>
-        transform(element_at(cbLit, (j + 1).cast("int")), cv =>
-          V.dotFast(
-            slice(col("dv"), j * lit(dsub) + lit(1), lit(dsub)),
-            cv))).as("qtable"))
-    val approx = V.adcFast(col("codes"), col("qtable"))
-    def one(qT: DataFrame): DataFrame = {
-      val probes = buildProbes(spark, path, qT, Seq("dv", "qtable"),
-        np, regime)
-        // referenced by the prune collect AND the cell join (where the
-        // join regime would otherwise re-run its shuffle + TopKPerKey and
-        // re-derive every query's ADC table): one compute
-        .localCheckpoint(false)
-      val prune = cellPruneFilter(spark, probes, hier, cellIsinCap)
-      val shortlist = graft.plans.TopK.topKPerKey(
-        graft.sources.FastParquet.read(spark, s"$path/codes").where(prune)
-          .where(filter.getOrElse(lit(true)))
-          .join(broadcast(probes.select(col("cell"), col("q_id"),
-            col("dv").as("q_dv"), col("qtable"))), "cell")
-          .where(if (excludeSelf) col(idCol) =!= col("q_id") else lit(true))
-          .select(col("q_id"), col("q_dv"), col(idCol), approx.as("approx")),
-        Seq("q_id"), Seq(col("approx").desc, col(idCol).asc),
-        math.max(rr, k))
-      val exact = graft.sources.FastParquet.read(spark, s"$path/vectors").where(prune)
-        .join(broadcast(shortlist.select(col("q_id"), col("q_dv"),
-          col(idCol))), idCol)
-        .select(col("q_id"), col(idCol),
-          round(V.dotFast(col("dv"), col("q_dv")), 6).as("cos"))
-      graft.plans.TopK.topKPerKey(exact, Seq("q_id"),
-        Seq(col("cos").desc, col(idCol).asc), k)
-    }
-    // auto-chunking: the probe broadcast replicates each query's ADC table
-    // nProbe times and the rerank shortlist carries q_dv per row — both
-    // multipliers belong in the estimate (the round-8 review caught them
-    // missing: a budget-sized batch actually broadcast ~7× the budget).
-    // Chunks filter the CHECKPOINTED qtable frame: query source scanned
-    // and ADC tables computed once, not once per chunk.
-    val nQ = queries.count()
-    val estBytes = nQ * (np.toLong * (m.toLong * ksub * 8 +
-      d.toLong * 8 + 48) + math.max(rr, k).toLong * (d.toLong * 8 + 32))
-    if (estBytes > maxBroadcastBytes && nQ > 1) {
-      val nChunks = math.min(nQ,
-        (estBytes + maxBroadcastBytes - 1) / maxBroadcastBytes).toInt
-      val qc = qTabled.localCheckpoint(false)
-      (0 until nChunks).map { i =>
-        one(qc.where(pmod(xxhash64(col("q_id")), lit(nChunks)) === i))
-      }.reduce(_ unionByName _)
-    } else one(qTabled)
-  }
+      excludeSelf: Boolean = true, idCol: String = "vec_id",
+      maxBroadcastBytes: Long = 8L << 20, joinThreshold: Int = JoinThreshold,
+      cellIsinCap: Int = 2048, filter: Option[Column] = None): DataFrame =
+    ivfCodecBatchTopK(spark, path, PqCodec.tupled(pqModelOf(spark, path)),
+      queries, qIdCol, qVecCol, k, nProbe, rerank, excludeSelf, idCol,
+      maxBroadcastBytes, joinThreshold, cellIsinCap, filter)
 
   /** IVF-SQ8 layout — the scalar-quantization middle point of the ANN
     * accuracy/memory family (what Faiss ships as
@@ -2046,180 +2005,46 @@ object Similarity {
     * bit-packing (the int32 column's values fit a byte) instead of m
     * sub-codes — 4× under raw floats, far more accurate than PQ's m-way
     * blocking; vs raw: the approx sweep reads a quarter of the bytes.
-    * Same layout conventions as [[ivfWrite]]/[[ivfPqWrite]]: codes +
-    * vectors subdirs partitioned by (super,) cell, centroid sidecars,
-    * two-level above [[HierThreshold]].
-    *
-    * `payloadCols` lands filterable metadata INSIDE the codes table (the
-    * table the approx sweep scans), so a filtered read restricts the
-    * SHORTLIST source — the same filter-before-top-k contract as
-    * [[ivfBatchTopK]]; the rerank inherits the filtered shortlist by id,
-    * so the vectors table stays payload-free (no double storage).
+    * The layout is [[ivfCodecWrite]]'s.
     */
   def ivfSqWrite(embeddings: DataFrame, idCol: String, vecCol: String,
       path: String, nLists: Int = 16, kMeansIters: Int = 1,
       payloadCols: Seq[String] = Nil,
       centroidsIn: Option[Seq[(Long, Seq[Double], Double)]] = None): Unit = {
-    val spark = embeddings.sparkSession
     requirePayloadDisjoint(payloadCols, idCol, vecCol)
-    val payload = payloadCols.map(col)
-    val unit = embeddings
-      .select(col(idCol) +: payload :+
-        V.unitFast(col(vecCol)).as("dv"): _*)
-    val (withNorm, cents) = ivfModel(
-      unit.select(col(idCol) +: col("dv").as("uv") +: payload: _*),
-      idCol, "uv", nLists, kMeansIters, payloadCols, centroidsIn)
-    val hier = cents.size > HierThreshold
-    val assigned = withCellAssignment(withNorm, cents)
-      .select(col(idCol) +: col("dv") +: payload :+ col("super") :+
-        col("cell"): _*)
-      .localCheckpoint(false) // feeds both the codes and the vectors write
-    def land(df: DataFrame, sub: String): Unit = {
-      val out = df.repartition(col("cell")).write.mode("overwrite")
-      if (hier) out.partitionBy("super", "cell").parquet(s"$path/$sub")
-      else out.partitionBy("cell").parquet(s"$path/$sub")
-    }
-    // scale materialized as a plain attribute FIRST: quantizeInt8's lambda
-    // references it per element, and a non-attribute expression there
-    // re-evaluates per element (O(d²) per row)
-    land(assigned
-      .withColumn("scale", V.int8Scale(col("dv")))
-      .select(
-        (col(idCol) +: V.quantizeInt8(col("dv"), col("scale")).as("codes") +:
-          col("scale") +: payload ++:
-          (if (hier) Seq(col("super")) else Nil)) :+ col("cell"): _*),
-      "codes")
-    land(assigned.select(
-      (col(idCol) +: col("dv") +:
-        (if (hier) Seq(col("super")) else Nil)) :+ col("cell"): _*),
-      "vectors")
-    writeCentroidSidecars(spark, path, cents)
+    ivfCodecWrite(unitCorpus(embeddings, idCol, vecCol, payloadCols), idCol,
+      path, nLists, kMeansIters, payloadCols, centroidsIn, Sq8Codec)
   }
 
-  /** Append a batch to a persisted [[ivfSqWrite]] layout WITHOUT retrain —
-    * the SQ sibling of [[ivfAppend]]/[[ivfPqAppend]], and the simplest of
-    * the family: the scalar quantizer has NO trained state (the scale is
-    * per-vector), so an append is assign-against-sidecar-centroids +
-    * quantize + append into both the codes and vectors cell partitions.
-    * Compaction is layout-generic — run [[ivfCompact]] over the `codes`
-    * and `vectors` subdirs exactly as the IVFADC maintenance gate does.
+  /** (id, payload…, dv = unit vector): what the quantized tiers encode. */
+  private def unitCorpus(embeddings: DataFrame, idCol: String,
+      vecCol: String, payloadCols: Seq[String]): DataFrame =
+    embeddings.select(col(idCol) +: payloadCols.map(col) :+
+      V.unitFast(col(vecCol)).as("dv"): _*)
+
+  /** Append a batch to a persisted [[ivfSqWrite]] layout WITHOUT retrain
+    * ([[ivfCodecAppend]]): the scalar quantizer has NO trained state (the
+    * scale is per-vector). Compaction is layout-generic — run
+    * [[ivfCompact]] over the `codes` and `vectors` subdirs.
     */
   def ivfSqAppend(batch: DataFrame, idCol: String, vecCol: String,
-      path: String): Unit = {
-    val spark = batch.sparkSession
-    // same payload contract as ivfAppend/ivfPqAppend: the codes table is
-    // the filtered-ANN shortlist source, appends must carry its metadata
-    val payloadCols = codesPayloadCols(spark, path, idCol,
-      fixed = Set("codes", "scale"))
-    val missingP = payloadCols.filterNot(batch.columns.contains)
-    require(missingP.isEmpty,
-      s"append batch is missing the layout's payload column(s) " +
-        s"${missingP.mkString(", ")}")
-    val payload = payloadCols.map(col)
-    val unit = batch
-      .select(col(idCol) +: payload :+
-        V.unitFast(col(vecCol)).as("uv"): _*)
-    val (assigned0, hier) = assignToLayout(unit, idCol, "uv", path,
-      payloadCols)
-    val assigned = assigned0
-      .select(col(idCol) +:
-        V.asDoubleFast(col("uv")).as("dv") +: payload :+ col("super") :+
-        col("cell"): _*)
-      .localCheckpoint(false) // feeds both appends
-    // two-regime landing (r15): driver-direct under the micro-batch
-    // threshold, distributed above — see [[landAppend]]
-    def land(df: DataFrame, sub: String): Unit =
-      landAppend(df, s"$path/$sub", hier)
-    // VECTORS land FIRST: a crash between the two appends then leaves only
-    // rerank-invisible orphans (the approx sweep reads codes alone, so an
-    // id absent from codes never shortlists); the reverse order could
-    // shortlist ids the rerank join silently drops. Same contract as
-    // ivfPqAppend.
-    land(assigned.select(
-      (col(idCol) +: col("dv") +:
-        (if (hier) Seq(col("super")) else Nil)) :+ col("cell"): _*),
-      "vectors")
-    land(assigned
-      .withColumn("scale", V.int8Scale(col("dv")))
-      .select(
-        (col(idCol) +: V.quantizeInt8(col("dv"), col("scale")).as("codes") +:
-          col("scale") +: payload ++:
-          (if (hier) Seq(col("super")) else Nil)) :+ col("cell"): _*),
-      "codes")
-  }
+      path: String): Unit =
+    ivfCodecAppend(batch, idCol, vecCol, path, Sq8Codec)
 
-  /** Batch k-NN over a persisted [[ivfSqWrite]] layout: cell-pruned scan
-    * of the int8 codes table, approx score `scale · ⟨codes, q⟩` (one
-    * [[graft.functions.DotProduct]] primitive pass per (code-row, query) —
-    * the int8 asymmetric distance), TopKPerKey shortlist, exact re-rank
-    * over the equally pruned vectors table. Same probe regimes,
-    * auto-chunking, and plan shape as [[ivfBatchTopK]]/[[ivfPqBatchTopK]];
-    * `filter` is the filtered-ANN predicate over the codes table's
-    * payload columns ([[ivfSqWrite]] `payloadCols`), applied BEFORE the
-    * shortlist cut.
+  /** Batch k-NN over a persisted [[ivfSqWrite]] layout: the SQ8 tier of
+    * [[ivfCodecBatchTopK]], one [[graft.functions.DotProduct]] primitive
+    * pass per (code row, query). `filter` ranges over the codes table's
+    * payload columns ([[ivfSqWrite]] `payloadCols`).
     */
-  def ivfSqBatchTopK(spark: org.apache.spark.sql.SparkSession, path: String,
+  def ivfSqBatchTopK(spark: SparkSession, path: String,
       queries: DataFrame, qIdCol: String, qVecCol: String, k: Int,
       nProbe: Int = AutoProbe, rerank: Int = AutoRerank,
-      excludeSelf: Boolean = true,
-      idCol: String = "vec_id",
-      maxBroadcastBytes: Long = 8L << 20,
-      joinThreshold: Int = JoinThreshold,
-      cellIsinCap: Int = 2048,
-      filter: Option[Column] = None): DataFrame = {
-    val nLists = centroidsOf(spark, path).length.toLong
-    // regime resolved once per batch call, shared across auto-chunks
-    val regime = resolveProbeRegime(spark, path, nLists, joinThreshold)
-    val np = resolveNProbe(nProbe, nLists)
-    val rr = resolveRerank(rerank, np, k)
-    require(rr >= k, s"rerank ($rr) must cover k ($k)")
-    val hier = regimeIsHier(regime)
-    val d: Int = regime match {
-      case FlatRegime(cents) => cents.head._2.length
-      case HierLitRegime(h) => h.supers.head._2.length
-      case JoinRegime(supers) => supers.head._2.length
-    }
-    val qUnit = queries
-      .select(col(qIdCol).as("q_id"),
-        V.unitFast(col(qVecCol)).as("dv"))
-    val qNormed = qUnit.select(col("q_id"), col("dv"),
-      V.normFast(col("dv")).as("v_norm"))
-    val approx = col("scale") * V.dotFast(col("codes"), col("q_dv"))
-    def one(qT: DataFrame): DataFrame = {
-      val probes = buildProbes(spark, path, qT, Seq("dv"), np, regime)
-        .localCheckpoint(false)
-      val prune = cellPruneFilter(spark, probes, hier, cellIsinCap)
-      val shortlist = graft.plans.TopK.topKPerKey(
-        graft.sources.FastParquet.read(spark, s"$path/codes").where(prune)
-          .where(filter.getOrElse(lit(true)))
-          .join(broadcast(probes.select(col("cell"), col("q_id"),
-            col("dv").as("q_dv"))), "cell")
-          .where(if (excludeSelf) col(idCol) =!= col("q_id") else lit(true))
-          .select(col("q_id"), col("q_dv"), col(idCol), approx.as("approx")),
-        Seq("q_id"), Seq(col("approx").desc, col(idCol).asc),
-        math.max(rr, k))
-      val exact = graft.sources.FastParquet.read(spark, s"$path/vectors").where(prune)
-        .join(broadcast(shortlist.select(col("q_id"), col("q_dv"),
-          col(idCol))), idCol)
-        .select(col("q_id"), col(idCol),
-          round(V.dotFast(col("dv"), col("q_dv")), 6).as("cos"))
-      graft.plans.TopK.topKPerKey(exact, Seq("q_id"),
-        Seq(col("cos").desc, col(idCol).asc), k)
-    }
-    // auto-chunking: probes carry the query vector (d doubles, nProbe
-    // rows per query) and the rerank shortlist carries q_dv per row
-    val nQ = queries.count()
-    val estBytes = nQ * (np.toLong * (d.toLong * 8 + 48) +
-      math.max(rr, k).toLong * (d.toLong * 8 + 32))
-    if (estBytes > maxBroadcastBytes && nQ > 1) {
-      val nChunks = math.min(nQ,
-        (estBytes + maxBroadcastBytes - 1) / maxBroadcastBytes).toInt
-      val qc = qNormed.localCheckpoint(false)
-      (0 until nChunks).map { i =>
-        one(qc.where(pmod(xxhash64(col("q_id")), lit(nChunks)) === i))
-      }.reduce(_ unionByName _)
-    } else one(qNormed)
-  }
+      excludeSelf: Boolean = true, idCol: String = "vec_id",
+      maxBroadcastBytes: Long = 8L << 20, joinThreshold: Int = JoinThreshold,
+      cellIsinCap: Int = 2048, filter: Option[Column] = None): DataFrame =
+    ivfCodecBatchTopK(spark, path, Sq8Codec, queries, qIdCol, qVecCol, k,
+      nProbe, rerank, excludeSelf, idCol, maxBroadcastBytes, joinThreshold,
+      cellIsinCap, filter)
 
   /** IVF-BQ layout — the binary-quantization floor of the ANN memory
     * spectrum (raw → SQ8 → PQ → 1 bit/dim; what Faiss ships as
@@ -2228,107 +2053,29 @@ object Similarity {
     * codes an oracle recomputes exactly) under the shared IVF cell
     * layout. The approx sweep is Hamming distance (one XOR + POPCNT per
     * word, [[graft.functions.HammingDist]]); candidate SELECTION is
-    * approximate, reported cosines are exact via the rerank. Same layout
-    * conventions and sidecars as the siblings.
+    * approximate, reported cosines are exact via the rerank
+    * ([[ivfCodecWrite]]).
     */
   def ivfBqWrite(embeddings: DataFrame, idCol: String, vecCol: String,
       path: String, nLists: Int = 16, kMeansIters: Int = 1,
-      centroidsIn: Option[Seq[(Long, Seq[Double], Double)]] = None): Unit = {
-    val spark = embeddings.sparkSession
-    val unit = embeddings
-      .select(col(idCol),
-        V.unitFast(col(vecCol)).as("dv"))
-    val (withNorm, cents) = ivfModel(
-      unit.select(col(idCol), col("dv").as("uv")), idCol, "uv",
-      nLists, kMeansIters, Nil, centroidsIn)
-    val hier = cents.size > HierThreshold
-    val assigned = withCellAssignment(withNorm, cents)
-      .select(col(idCol), col("dv"), col("super"), col("cell"))
-      .localCheckpoint(false) // feeds both the codes and the vectors write
-    def land(df: DataFrame, sub: String): Unit = {
-      val out = df.repartition(col("cell")).write.mode("overwrite")
-      if (hier) out.partitionBy("super", "cell").parquet(s"$path/$sub")
-      else out.partitionBy("cell").parquet(s"$path/$sub")
-    }
-    land(assigned.select(
-      (col(idCol) +: V.signPack(col("dv")).as("bits") +:
-        (if (hier) Seq(col("super")) else Nil)) :+ col("cell"): _*),
-      "codes")
-    land(assigned.select(
-      (col(idCol) +: col("dv") +:
-        (if (hier) Seq(col("super")) else Nil)) :+ col("cell"): _*),
-      "vectors")
-    writeCentroidSidecars(spark, path, cents)
-  }
+      centroidsIn: Option[Seq[(Long, Seq[Double], Double)]] = None): Unit =
+    ivfCodecWrite(unitCorpus(embeddings, idCol, vecCol, Nil), idCol, path,
+      nLists, kMeansIters, Nil, centroidsIn, BqCodec)
 
-  /** Batch k-NN over a persisted [[ivfBqWrite]] layout: cell-pruned scan
-    * of the packed-bits table, Hamming shortlist (asc, id asc — fewer
-    * differing sign bits ≈ higher cosine on unit vectors), exact re-rank
-    * from the equally pruned vectors table. Same probe regimes and
-    * auto-chunking as the siblings. Hamming over sign bits is coarser
-    * than SQ8/PQ scores (d+1 distinct values), so prefer a generous
-    * `rerank`; the recall gate measures the default.
+  /** Batch k-NN over a persisted [[ivfBqWrite]] layout: the BQ tier of
+    * [[ivfCodecBatchTopK]]. Hamming over sign bits is coarser than SQ8/PQ
+    * scores (d+1 distinct values), so prefer a generous `rerank`; the
+    * recall gate measures the default.
     */
-  def ivfBqBatchTopK(spark: org.apache.spark.sql.SparkSession, path: String,
+  def ivfBqBatchTopK(spark: SparkSession, path: String,
       queries: DataFrame, qIdCol: String, qVecCol: String, k: Int,
       nProbe: Int = AutoProbe, rerank: Int = AutoRerank,
-      excludeSelf: Boolean = true,
-      idCol: String = "vec_id",
-      maxBroadcastBytes: Long = 8L << 20,
-      joinThreshold: Int = JoinThreshold,
-      cellIsinCap: Int = 2048): DataFrame = {
-    val nLists = centroidsOf(spark, path).length.toLong
-    val regime = resolveProbeRegime(spark, path, nLists, joinThreshold)
-    val np = resolveNProbe(nProbe, nLists)
-    val rr = resolveRerank(rerank, np, k)
-    require(rr >= k, s"rerank ($rr) must cover k ($k)")
-    val hier = regimeIsHier(regime)
-    val d: Int = regime match {
-      case FlatRegime(cents) => cents.head._2.length
-      case HierLitRegime(h) => h.supers.head._2.length
-      case JoinRegime(supers) => supers.head._2.length
-    }
-    val qUnit = queries
-      .select(col(qIdCol).as("q_id"),
-        V.unitFast(col(qVecCol)).as("dv"))
-    val qNormed = qUnit
-      .select(col("q_id"), col("dv"),
-        V.normFast(col("dv")).as("v_norm"),
-        V.signPack(col("dv")).as("q_bits"))
-    val ham = V.hammingDist(col("bits"), col("q_bits"))
-    def one(qT: DataFrame): DataFrame = {
-      val probes = buildProbes(spark, path, qT, Seq("dv", "q_bits"),
-        np, regime)
-        .localCheckpoint(false)
-      val prune = cellPruneFilter(spark, probes, hier, cellIsinCap)
-      val shortlist = graft.plans.TopK.topKPerKey(
-        graft.sources.FastParquet.read(spark, s"$path/codes").where(prune)
-          .join(broadcast(probes.select(col("cell"), col("q_id"),
-            col("dv").as("q_dv"), col("q_bits"))), "cell")
-          .where(if (excludeSelf) col(idCol) =!= col("q_id") else lit(true))
-          .select(col("q_id"), col("q_dv"), col(idCol), ham.as("ham")),
-        Seq("q_id"), Seq(col("ham").asc, col(idCol).asc),
-        math.max(rr, k))
-      val exact = graft.sources.FastParquet.read(spark, s"$path/vectors").where(prune)
-        .join(broadcast(shortlist.select(col("q_id"), col("q_dv"),
-          col(idCol))), idCol)
-        .select(col("q_id"), col(idCol),
-          round(V.dotFast(col("dv"), col("q_dv")), 6).as("cos"))
-      graft.plans.TopK.topKPerKey(exact, Seq("q_id"),
-        Seq(col("cos").desc, col(idCol).asc), k)
-    }
-    val nQ = queries.count()
-    val estBytes = nQ * (np.toLong * (d.toLong * 8 + d / 8 + 48) +
-      math.max(rr, k).toLong * (d.toLong * 8 + 32))
-    if (estBytes > maxBroadcastBytes && nQ > 1) {
-      val nChunks = math.min(nQ,
-        (estBytes + maxBroadcastBytes - 1) / maxBroadcastBytes).toInt
-      val qc = qNormed.localCheckpoint(false)
-      (0 until nChunks).map { i =>
-        one(qc.where(pmod(xxhash64(col("q_id")), lit(nChunks)) === i))
-      }.reduce(_ unionByName _)
-    } else one(qNormed)
-  }
+      excludeSelf: Boolean = true, idCol: String = "vec_id",
+      maxBroadcastBytes: Long = 8L << 20, joinThreshold: Int = JoinThreshold,
+      cellIsinCap: Int = 2048): DataFrame =
+    ivfCodecBatchTopK(spark, path, BqCodec, queries, qIdCol, qVecCol, k,
+      nProbe, rerank, excludeSelf, idCol, maxBroadcastBytes, joinThreshold,
+      cellIsinCap, None)
 
   /** [[allPairsTopK]] with a typed bounded-heap Aggregator instead of a
     * window sort: the per-group state is O(k) through partial aggregation,

@@ -124,20 +124,68 @@ class SimilaritySpec extends SparkSpec {
   test("flat-layout batch ANN auto-chunking also matches unchunked") {
     val path = java.nio.file.Files.createTempDirectory("graft_ivfc_").toString
     Similarity.ivfWrite(emb, "vec_id", "embedding", path,
-      nLists = 16, kMeansIters = 1)
+      nLists = 16, kMeansIters = 1, payloadCols = Seq("label"))
     val queries = emb.where(pmod($"vec_id", lit(25)) === 0)
-    def run(budget: Long) =
+    def run(budget: Long, filter: Option[org.apache.spark.sql.Column] = None) =
       Similarity.ivfBatchTopK(spark, path, queries, "vec_id", "embedding",
-        10, nProbe = 8, maxBroadcastBytes = budget)
+        10, nProbe = 8, maxBroadcastBytes = budget, filter = filter)
         .orderBy($"q_id", $"vec_id").as[(Long, Long, Double)].collect().toSeq
     assert(run(1024) == run(Long.MaxValue))
+    // a filtered read restricts every chunk's scan the same way
+    val filtered = run(Long.MaxValue, Some($"label" <= 3))
+    assert(filtered.nonEmpty)
+    assert(run(1024, Some($"label" <= 3)) == filtered)
+  }
+
+  test("join-regime batch read counts the centroid sidecar instead of " +
+      "collecting its vectors, and still equals the literal read") {
+    val path = java.nio.file.Files.createTempDirectory("graft_ivfjc_").toString
+    Similarity.ivfWrite(emb, "vec_id", "embedding", path,
+      nLists = 100, kMeansIters = 1)
+    val queries = emb.where(pmod($"vec_id", lit(25)) === 0)
+    def run(jt: Int) = Similarity.ivfBatchTopK(spark, path, queries,
+      "vec_id", "embedding", 10, nProbe = 16, joinThreshold = jt)
+      .orderBy($"q_id", $"vec_id").as[(Long, Long, Double)].collect().toSeq
+    // every action's output columns, recorded while only the join-regime
+    // read runs against the fresh layout (nothing of it cached yet)
+    val outputs =
+      new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
+    val qel = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit =
+        outputs.add(qe.analyzed.output.map(_.name))
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(qel)
+    val joinMode = try {
+      val r = run(1)
+      // the listener fires asynchronously and in order: wait for a marker
+      // action submitted after the read
+      spark.range(1).toDF("listener_marker").collect()
+      import scala.jdk.CollectionConverters._
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!outputs.asScala.exists(_.contains("listener_marker")) &&
+        System.nanoTime() < deadline) Thread.sleep(50)
+      assert(outputs.asScala.exists(_.contains("listener_marker")))
+      r
+    } finally spark.listenerManager.unregister(qel)
+    import scala.jdk.CollectionConverters._
+    val collected = outputs.asScala.filter(_.contains("c_vec")).toSeq
+    assert(collected.isEmpty,
+      s"join regime collected centroid vectors: $collected")
+    assert(joinMode.nonEmpty)
+    assert(joinMode == run(4096), "join-mode read must equal the literal path")
   }
 
   test("IVFADC: recall clears the floor, shortlist cosines are exact, and " +
       "the hier + chunked reads match their baselines") {
     val path = java.nio.file.Files.createTempDirectory("graft_ivfpq_").toString
     Similarity.ivfPqWrite(emb, "vec_id", "embedding", path,
-      nLists = 16, m = 16, ksub = 32, kMeansIters = 2)
+      nLists = 16, m = 16, ksub = 32, kMeansIters = 2,
+      payloadCols = Seq("label"))
     val queries = emb.where(pmod($"vec_id", lit(25)) === 0)
     val ann = Similarity.ivfPqBatchTopK(spark, path, queries,
       "vec_id", "embedding", 10, nProbe = 12, rerank = 64)
@@ -165,6 +213,14 @@ class SimilaritySpec extends SparkSpec {
       maxBroadcastBytes = 8192)
       .orderBy($"q_id", $"vec_id").as[(Long, Long, Double)].collect().toSeq
     assert(chunked == base, "chunked IVFADC must equal unchunked")
+    def runF(budget: Long) = Similarity.ivfPqBatchTopK(spark, path, queries,
+      "vec_id", "embedding", 10, nProbe = 12, rerank = 64,
+      maxBroadcastBytes = budget, filter = Some($"label" <= 3))
+      .orderBy($"q_id", $"vec_id").as[(Long, Long, Double)].collect().toSeq
+    val filtered = runF(Long.MaxValue)
+    assert(filtered.nonEmpty)
+    assert(runF(8192) == filtered,
+      "chunked filtered IVFADC must equal unchunked")
     // two-level layout (nLists > HierThreshold): join-mode probe ≡ literal
     val ph = java.nio.file.Files.createTempDirectory("graft_ivfpqh_").toString
     Similarity.ivfPqWrite(emb, "vec_id", "embedding", ph,
@@ -182,7 +238,7 @@ class SimilaritySpec extends SparkSpec {
       "chunked ≡ unchunked, hier join-mode ≡ literal") {
     val path = java.nio.file.Files.createTempDirectory("graft_ivfsq_").toString
     Similarity.ivfSqWrite(emb, "vec_id", "embedding", path,
-      nLists = 16, kMeansIters = 2)
+      nLists = 16, kMeansIters = 2, payloadCols = Seq("label"))
     // layout shape: int codes bounded to [-127, 127] with a double scale
     val codes = spark.read.parquet(s"$path/codes")
     val shape = codes.select(
@@ -214,6 +270,14 @@ class SimilaritySpec extends SparkSpec {
       maxBroadcastBytes = 8192)
       .orderBy($"q_id", $"vec_id").as[(Long, Long, Double)].collect().toSeq
     assert(chunked == base, "chunked IVF-SQ8 must equal unchunked")
+    def runF(budget: Long) = Similarity.ivfSqBatchTopK(spark, path, queries,
+      "vec_id", "embedding", 10, nProbe = 12, rerank = 64,
+      maxBroadcastBytes = budget, filter = Some($"label" <= 3))
+      .orderBy($"q_id", $"vec_id").as[(Long, Long, Double)].collect().toSeq
+    val filtered = runF(Long.MaxValue)
+    assert(filtered.nonEmpty)
+    assert(runF(8192) == filtered,
+      "chunked filtered IVF-SQ8 must equal unchunked")
     val ph = java.nio.file.Files.createTempDirectory("graft_ivfsqh_").toString
     Similarity.ivfSqWrite(emb, "vec_id", "embedding", ph,
       nLists = 100, kMeansIters = 1)
@@ -629,6 +693,28 @@ class SimilaritySpec extends SparkSpec {
       maxBroadcastBytes = 8192)
       .orderBy($"q_id", $"vec_id").as[(Long, Long, Double)].collect().toSeq
     assert(chunked == base, "chunked IVF-BQ must equal unchunked")
+    // two-level layout (nLists > HierThreshold): literal ≡ join-mode ≡
+    // chunked, and the recall floor holds
+    val ph = java.nio.file.Files.createTempDirectory("graft_ivfbqh_").toString
+    Similarity.ivfBqWrite(emb, "vec_id", "embedding", ph,
+      nLists = 100, kMeansIters = 1)
+    assert(new java.io.File(s"$ph/supercentroids").exists())
+    def runH(jt: Int, budget: Long) = Similarity.ivfBqBatchTopK(spark, ph,
+      queries, "vec_id", "embedding", 10, nProbe = 16, rerank = 128,
+      joinThreshold = jt, maxBroadcastBytes = budget)
+    val annH = runH(4096, 8L << 20)
+    assert(Similarity.annBatchQualityMetrics(
+      Similarity.bruteForceBatchTopK(emb, "vec_id", "embedding",
+        queries, "vec_id", "embedding", 10),
+      annH, "vec_id", recallFloor = 0.5).select("recall_ok").head()
+      .getBoolean(0), "two-level IVF-BQ recall must clear the floor")
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy($"q_id", $"vec_id").as[(Long, Long, Double)].collect().toSeq
+    val baseH = sorted(annH)
+    assert(sorted(runH(1, 8L << 20)) == baseH,
+      "join-mode IVF-BQ read must equal the literal two-level path")
+    assert(sorted(runH(4096, 8192)) == baseH,
+      "chunked two-level IVF-BQ must equal unchunked")
   }
 
   test("ivfSqAppend: both tables see the union; appended vectors " +
