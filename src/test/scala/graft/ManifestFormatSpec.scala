@@ -283,4 +283,64 @@ class ManifestFormatSpec extends SparkSpec {
     assert(spark.read.parquet(s"$tDriver/$one").columns.sorted.toSeq ==
       cols, "staged file content must exclude the partition alias column")
   }
+
+  test("golden sidecars (stats, bloom, NDV, and suffixed bloom/NDV " +
+      "retrofits) written by an earlier release parse to the same " +
+      "per-file entries") {
+    val t = GoldenSidecars.materialize()
+    val want = Files.readString(GoldenSidecars.resource("expected.txt"))
+    assert(GoldenSidecars.render(spark, t) == want)
+  }
+}
+
+/** A lake whose `_manifests` directory was committed as test resources:
+  * one manifest `v0` over three data files, the commit sidecars `s0` (stats
+  * on `id`, `z`), `b0` (bloom on `id`) and `n0` (NDV on `k`), and the
+  * suffixed retrofit sidecars `b0-…` / `n0-…` on `s`. The data files
+  * themselves are absent; every reader used here opens sidecars only.
+  * `expected.txt` is [[render]] of that directory as first written.
+  */
+object GoldenSidecars {
+  private val store = PosixLinkCommitStore
+
+  def resource(name: String): java.nio.file.Path =
+    Paths.get(getClass.getResource(s"/golden-sidecars/$name").toURI)
+
+  /** Copy the golden `_manifests` into a fresh table, then add one
+    * single-file manifest `v<i+1>` per data file of `v0`, so that each
+    * whole-snapshot metadata answer at `v<i+1>` is file i's own entry. */
+  def materialize(): String = {
+    val t = Files.createTempDirectory("graft_golden_").resolve("t")
+    val mdir = Files.createDirectories(t.resolve("_manifests"))
+    val src = Files.list(resource("_manifests"))
+    try src.forEach(p => Files.copy(p, mdir.resolve(p.getFileName)))
+    finally src.close()
+    SnapshotLake.manifestFiles(t.toString, 0L, store).zipWithIndex
+      .foreach { case (f, i) =>
+        Files.writeString(mdir.resolve(f"v${i + 1}%011d.json"),
+          s"""{"version":${i + 1},"n":1,"files":[\n"$f"\n]}""")
+      }
+    t.toString
+  }
+
+  /** One line per (kind, column, file): stats [min, max] and the NDV
+    * estimate through the single-file snapshots, bloom entries through
+    * the per-file bloom map at `v0`. */
+  def render(spark: org.apache.spark.sql.SparkSession, t: String): String = {
+    val files = SnapshotLake.manifestFiles(t, 0L, store)
+    val perFile = files.zipWithIndex.flatMap { case (f, i) =>
+      val v = Some(i + 1L)
+      Seq("id", "z").map(c =>
+        s"stats $c $f ${SnapshotLake.minMaxFromStats(t, c, v, store)}") ++
+        Seq("k", "s").map(c => s"ndv $c $f " +
+          SnapshotLake.approxDistinctFromSketches(spark, t, c, v, store))
+    }
+    val blooms = Seq("id", "s").flatMap { c =>
+      SnapshotLake.sidecarBlooms(t, 0L, c, store).toSeq.sortBy(_._1).map {
+        case (f, (dt, m, k, bits)) => s"bloom $c $f $dt $m $k " +
+          java.util.Base64.getEncoder.encodeToString(bits.toByteArray)
+      }
+    }
+    (perFile ++ blooms).mkString("", "\n", "\n")
+  }
 }

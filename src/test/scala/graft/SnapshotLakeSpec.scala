@@ -1136,6 +1136,58 @@ abstract class SnapshotLakeBehavior(storeName: String, store: CommitStore)
     assert(residual.isEmpty, s"bloom sidecars not reclaimed: $residual")
     assert(SnapshotLake.read(spark, t, store = store).count() == 1)
   }
+
+  test(s"[$storeName] within one version a retrofit sidecar overrides the " +
+      "commit sidecar for the same file (bloom and NDV)") {
+    val t = freshTable()
+    SnapshotLake.commitAppend(
+      (1 to 40).map(i => (i.toLong, s"s${i % 3}", i % 20))
+        .toDF("id", "s", "k").coalesce(1),
+      t, store, bloomCols = Seq("id"), ndvCols = Seq("k", "s"))
+    val f = SnapshotLake.manifestFiles(t, 0L, store).head
+    val mdir = java.nio.file.Paths.get(t, "_manifests")
+    // plain name order would read "-retrofit" BEFORE the commit sidecar
+    // ('-' < '.'); the rule is version, then retrofit, then name
+    def retrofit(kind: String, header: String, fields: String): Unit =
+      assert(store.putIfAbsent(mdir, s"${kind}00000000000-retrofit.json",
+        s"$header\n\"$f\\t$fields\"\n]}"))
+    // bloom: the retrofit entry is a 64-bit filter with bit 0 set
+    assert(SnapshotLake.sidecarBlooms(t, 0L, "id", store)(f)._2 == 8192)
+    retrofit("b", "{\"blooms\":[", "id\\tbigint\\t64\\t3\\tAQ==")
+    val (dt, m, k, bits) = SnapshotLake.sidecarBlooms(t, 0L, "id", store)(f)
+    assert((dt, m, k, bits.stream().toArray.toSeq) ==
+      ("bigint", 64, 3, Seq(0)))
+    // NDV: the retrofit gives column k the sketch of column s (3 values)
+    def ndv(c: String) =
+      SnapshotLake.approxDistinctFromSketches(spark, t, c, None, store)
+    assert(ndv("k").contains(20L) && ndv("s").contains(3L))
+    val sHex = "\\\\ts\\\\t([0-9A-F]+)".r
+      .findFirstMatchIn(store.get(mdir, "n00000000000.json")).get.group(1)
+    retrofit("n", "{\"ndv\":0,\"rows\":[", s"k\\t$sHex")
+    assert(ndv("k").contains(3L))
+  }
+
+  test(s"[$storeName] vacuum reclaims the stats sidecars and both kinds " +
+      "of NDV sidecar (commit and retrofit) of dropped versions") {
+    val t = freshTable()
+    SnapshotLake.commitAppend(Seq((1L, "a", 1)).toDF("id", "s", "k"), t,
+      store, statsCols = Seq("id"), ndvCols = Seq("k"))
+    assert(SnapshotLake.buildNdvIndex(spark, t, Seq("s"), store = store)
+      == 1)
+    SnapshotLake.commitOverwrite(Seq((2L, "b", 2)).toDF("id", "s", "k"), t,
+      store, statsCols = Seq("id"), ndvCols = Seq("k"))
+    val mdir = java.nio.file.Paths.get(t, "_manifests")
+    def sidecarsOf(v: Long): Set[String] = store.list(mdir).filter(n =>
+      Set('s', 'b', 'n')(n.head) && n.startsWith(f"${n.head}$v%011d")).toSet
+    assert(sidecarsOf(0L).map(_.take(13)) ==
+      Set("s00000000000.", "n00000000000.", "n00000000000-"))
+    SnapshotLake.vacuum(t, retainVersions = 1, minAgeMs = -60000L,
+      store = store)
+    assert(sidecarsOf(0L).isEmpty, s"not reclaimed: ${sidecarsOf(0L)}")
+    assert(sidecarsOf(1L) == Set("s00000000001.json", "n00000000001.json"))
+    assert(SnapshotLake.minMaxFromStats(t, "id", None, store)
+      .contains((2.0, 2.0)))
+  }
 }
 
 class SnapshotLakePosixSpec
