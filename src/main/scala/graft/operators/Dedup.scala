@@ -286,39 +286,6 @@ object Dedup {
       .getOrElse(capLadder.last)
   }
 
-  /** GOVERNED LSH pair mine: [[minhashLshPairsFromSigs]] with the bucket
-    * cap self-sized by [[chooseBucketCap]] against
-    * `expansionBudgetPerDoc · |docs|`. Returns (pairs, chosenCap). The
-    * default budget of 2048 expansions/doc matches
-    * [[containmentPairsGoverned]]'s unit (pre-verification expansions —
-    * a candidate pair here still passes the signature-join verify);
-    * PPJoin's 64/doc counts post-prefix candidates, a smaller unit.
-    * Measured: at sf0.1 a 64/doc budget forced the ladder floor (cap 32)
-    * and clipped 1246 posting ids, flipping the precision floor — 2048
-    * keeps the driver corpora at cap 1024 (no behavior change) while
-    * still bounding a mega-cluster corpus.
-    */
-  def minhashLshPairsGoverned(sigs: DataFrame, idCol: String,
-      numPerm: Int, bands: Int, threshold: Double,
-      expansionBudgetPerDoc: Long = 2048,
-      capLadder: Seq[Int] = Seq(1024, 512, 256, 128, 64, 32),
-      splitBucketSize: Int = 0): (DataFrame, Int) = {
-    val banded = bandKeys(sigs, idCol, numPerm, bands)
-    val bucketsAll = lshAllBuckets(banded, idCol).localCheckpoint(false)
-    // final buckets built once for the chooser AND the mine (see the
-    // sharing note in minhashQualityMetricsFromParts)
-    val finalBuckets = {
-      val f = lshFinalBucketsFrom(banded, bucketsAll, idCol, bands,
-        splitBucketSize)
-      if (splitBucketSize > 0) f.localCheckpoint(false) else f
-    }
-    val chosen = chooseBucketCap(
-      finalBuckets.select(size(col("all_ids")).cast("long").as("f")),
-      expansionBudgetPerDoc * sigs.count(), capLadder)
-    (minhashLshPairsFromFinal(sigs, finalBuckets, idCol, numPerm,
-      threshold, chosen), chosen)
-  }
-
   /** One-row truncation panel for the LSH candidate stage (VERDICT r10
     * item 3 — the silent recall/boundedness trades, surfaced as gate
     * metrics): how many pre-split buckets the big-bucket split re-keyed,
@@ -513,22 +480,6 @@ object Dedup {
     simhashPairsFromBuckets(sh,
       simhashBuckets(simhashChunked(sh, idCol, maxHamming), idCol),
       idCol, maxHamming, maxBucketSize)
-
-  /** GOVERNED SimHash pair mine: the chunk-bucket posting cap self-sized
-    * by [[chooseBucketCap]] against `expansionBudgetPerDoc · |docs|`
-    * (VERDICT r12 item 7). Returns (pairs, chosenCap). */
-  def simhashPairsGoverned(sh: DataFrame, idCol: String,
-      maxHamming: Int = 3, expansionBudgetPerDoc: Long = 2048,
-      capLadder: Seq[Int] = Seq(1024, 512, 256, 128, 64, 32)):
-      (DataFrame, Int) = {
-    val bucketsAll = simhashBuckets(
-      simhashChunked(sh, idCol, maxHamming), idCol).localCheckpoint(false)
-    val chosen = chooseBucketCap(
-      bucketsAll.select(size(col("all_ids")).cast("long").as("f")),
-      expansionBudgetPerDoc * sh.count(), capLadder)
-    (simhashPairsFromBuckets(sh, bucketsAll, idCol, maxHamming, chosen),
-      chosen)
-  }
 
   /** [[simhashPairsFromTable]] over prebuilt (checkpointed) buckets, so a
     * caller also computing the truncation panel pays the bucket groupBy

@@ -47,11 +47,6 @@ object IncrementalJoin {
 
   private def tag(vF: Long, vD: Long) = s"$TagPrefix$vF-$vD"
 
-  /** The (fact, dim) versions already folded into `viewTable`. */
-  def lastFolded(viewTable: String,
-      store: CommitStore = PosixLinkCommitStore): Option[(Long, Long)] =
-    foldHistory(viewTable, store).headOption
-
   /** All folded (fact, dim) version pairs on the view, newest first — the
     * crash-repair path needs the fold BEFORE head to recompute the orphan
     * overwrite that a crash between the two commits skipped. */

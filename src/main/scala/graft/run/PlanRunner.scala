@@ -162,13 +162,15 @@ final class PlanRunner(
       RunReport(spec, RunStatus.Succeeded, Some(rec), Some(wr), None)
     } catch {
       case e: Exception =>
+        // the class name too: a message-less exception (an NPE) would
+        // otherwise record a null message, which the ledger drops
+        val error = e.toString
         ledger.put(LedgerEntry(hashId, spec.SourceTable, RunStatus.Failed,
           expectedRows = spec.ExpectedAmountOfRecords, startTs = Some(startTs),
-          endTs = Some(Instant.now.toString),
-          errorMessage = Some(e.getMessage)))
+          endTs = Some(Instant.now.toString), errorMessage = Some(error)))
         notifier.notify(s"Extraction of ${spec.SourceTable} FAILED",
-          String.valueOf(e.getMessage))
-        RunReport(spec, RunStatus.Failed, None, None, Some(String.valueOf(e.getMessage)))
+          s"plan=$hashId table=${spec.SourceTable} error=$error")
+        RunReport(spec, RunStatus.Failed, None, None, Some(error))
     }
   }
 }

@@ -2,7 +2,7 @@ package graft.sinks
 
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, hex, hll_sketch_agg, hll_sketch_estimate, hll_union_agg, input_file_name, lit, max, min, not, unhex}
 
 /** Manifest-based snapshot versioning for a plain-parquet lake table — the
@@ -52,20 +52,23 @@ object SnapshotLake {
   // self-contained checkpoint sidecar: the full (path, rows) entry list of
   // one version — chain-cut target for delta-manifest resolution (r15)
   private def checkpointName(v: Long): String = f"c$v%011d.json"
-  private def statsName(v: Long): String = f"s$v%011d.json"
-  private def ndvName(v: Long, suffix: String = ""): String =
-    f"n$v%011d$suffix.json"
-  // commit-written bloom sidecar; buildBloomIndex appends a suffixed name so
-  // a later index build never collides with (or needs to mutate) an existing
-  // sidecar — readers union every published bloom sidecar at-or-before v
-  private def bloomName(v: Long, suffix: String = ""): String =
-    f"b$v%011d$suffix.json"
 
   /** Committed versions, ascending; empty for a nonexistent table. */
   def versions(table: String, store: CommitStore = PosixLinkCommitStore): Seq[Long] =
     store.list(manifestDir(table))
       .filter(n => n.startsWith("v") && n.endsWith(".json"))
       .map(n => n.substring(1, n.length - 5).toLong).sorted
+
+  /** `version`, or the latest when None; fails on a table with no commits
+    * or a version outside the committed set. */
+  private[graft] def resolveVersion(table: String, version: Option[Long],
+      store: CommitStore): Long = {
+    val vs = versions(table, store)
+    require(vs.nonEmpty, s"no committed snapshots at $table")
+    val v = version.getOrElse(vs.max)
+    require(vs.contains(v), s"version $v not in committed set $vs")
+    v
+  }
 
   // ─────────────────── manifest format v2 (r15) ───────────────────
   //
@@ -98,6 +101,33 @@ object SnapshotLake {
   // MANDATORY chain-cut checkpoints before dropping manifests a retained
   // chain passes through. Legacy cumulative manifests parse as FULL form
   // with no row counts — both formats stay readable forever.
+  //
+  // ─────────────────────── per-file sidecars ───────────────────────
+  //
+  // Three advisory sidecar kinds sit beside the manifests, one line per
+  // (file, column), written in the same quoted, escaped line form:
+  //
+  //  STATS  s<version>.json  {"stats":7,"rows":[
+  //    "data/u/p.parquet\tid\t1.0\t20.0"        relpath, col, min, max
+  //  BLOOM  b<version>.json  {"blooms":[
+  //    "data/u/p.parquet\tid\tbigint\t8192\t5\tAAAE…"
+  //                                  relpath, col, type, m, k, base64(bits)
+  //  NDV    n<version>.json  {"ndv":7,"rows":[
+  //    "data/u/p.parquet\tk\t0201070C…"         relpath, col, hex(HLL)
+  //
+  // Lines are joined by ",\n" and closed by "\n]}"; min/max are in the
+  // cast-to-double space. A commit publishes its kinds for the files it
+  // staged, after its manifest wins the version. A RETROFIT
+  // ([[buildBloomIndex]], [[buildNdvIndex]]) publishes
+  // `<kind><version>-<8 hex>.json` for the live files of that version
+  // that lack an entry. A read at version v merges every sidecar of the
+  // kind numbered at or before v, in (version, commit before retrofit,
+  // name) order, and the last entry for a (file, column) wins. Plain name
+  // order would be wrong: it sorts `b7-….json` before `b7.json` ('-' <
+  // '.'). A sidecar whose manifest vacuum already deleted is still read:
+  // it describes immutable files, and the read only looks up live ones.
+  // [[vacuum]] deletes every sidecar numbered below the oldest version it
+  // retains.
 
   /** Base file count above which append/rewrite commits switch from the
     * self-contained FULL manifest to the DELTA form. Below it the full
@@ -159,6 +189,113 @@ object SnapshotLake {
     else (l.substring(0, t),
       scala.util.Try(l.substring(t + 1).trim.toLong).toOption)
   }
+
+  /** One per-file sidecar kind (format above): its name prefix and
+    * header, the arity and decoder of the fields after `relpath \t
+    * column`, and the builder of lines for staged files (session, table,
+    * staged paths, columns). */
+  private final class Sidecar[E](val prefix: Char, val header: Long => String,
+      val arity: Int, val decode: Array[String] => E,
+      val build: (SparkSession, String, Seq[String], Seq[String]) => Seq[String]) {
+    def name(v: Long, suffix: String = ""): String =
+      f"$prefix$v%011d$suffix.json"
+    /** (version, isRetrofit) when `n` names a sidecar of this kind. */
+    def parse(n: String): Option[(Long, Boolean)] =
+      if (n.length >= 17 && n.charAt(0) == prefix && n.endsWith(".json") &&
+        n.substring(1, 12).forall(_.isDigit))
+        Some((n.substring(1, 12).toLong, n.length > 17))
+      else None
+  }
+
+  private val Stats = new Sidecar[(Double, Double)]('s',
+    v => s"""{"stats":$v,"rows":[""", 2,
+    f => (f(0).toDouble, f(1).toDouble), fileStatsLines)
+
+  private def bloomKind(m: Int, k: Int) =
+    new Sidecar[(String, Int, Int, java.util.BitSet)]('b',
+      _ => "{\"blooms\":[", 4,
+      f => (f(0), f(1).toInt, f(2).toInt, java.util.BitSet.valueOf(
+        java.util.Base64.getDecoder.decode(f(3)))),
+      bloomSidecarLines(_, _, _, _, m, k))
+
+  private val Bloom = bloomKind(8192, 5)
+
+  private val Ndv = new Sidecar[String]('n',
+    v => s"""{"ndv":$v,"rows":[""", 1, _(0), ndvSidecarLines)
+
+  private val Sidecars: Seq[Sidecar[_]] = Seq(Stats, Bloom, Ndv)
+
+  /** Per-file entries for `column` from every `kind` sidecar at or before
+    * version `v`, merged in the read order above. A file with no entry is
+    * never pruned and gets no metadata answer; a line that does not
+    * decode is skipped the same way. */
+  private def readSidecars[E](kind: Sidecar[E], table: String, v: Long,
+      column: String, store: CommitStore): Map[String, E] = {
+    val names = store.list(manifestDir(table))
+      .flatMap(n => kind.parse(n).collect {
+        case (sv, retrofit) if sv <= v => (sv, retrofit, n)
+      }).sorted.map(_._3)
+    // parallel reads, order kept (MetadataScaleProbe r14: at 10³ retained
+    // sidecars a sequential get() loop dominated planning)
+    parFiles(names) { n =>
+      store.get(manifestDir(table), n).linesIterator.drop(1)
+        .map(cleanLine(_).split('\t'))
+        .filter(f => f.length == kind.arity + 2 && f(1) == column)
+        .flatMap(f =>
+          try Some(f(0) -> kind.decode(f.drop(2)))
+          catch { case _: IllegalArgumentException => None })
+        .toSeq
+    }.flatten.toMap
+  }
+
+  /** Publish `lines` as `kind`'s sidecar of version `v`, a retrofit when
+    * `suffix` is set: one conditional PUT, so a name is never rewritten. */
+  private def publishSidecar(table: String, kind: Sidecar[_], v: Long,
+      lines: Seq[String], store: CommitStore, suffix: String = ""): Boolean =
+    store.putIfAbsent(manifestDir(table), kind.name(v, suffix),
+      jsonBody(kind.header(v), lines))
+
+  /** Build and publish version `v`'s sidecars over the files it staged,
+    * one `(kind, columns)` pair per kind. Runs after the manifest won `v`,
+    * so a sidecar never describes a losing writer's files under the
+    * winner's version. ADVISORY both ways (r13 review): a crash here
+    * leaves a snapshot that simply doesn't skip, and an exception must not
+    * propagate either — the commit IS durable, and a caller that saw it
+    * fail would retry and append twice. */
+  private def publishCommitSidecars(spark: SparkSession, table: String,
+      v: Long, staged: Seq[String], store: CommitStore,
+      kinds: (Sidecar[_], Seq[String])*): Unit =
+    try kinds.foreach { case (kind, cols) =>
+      if (cols.nonEmpty)
+        publishSidecar(table, kind, v, kind.build(spark, table, staged, cols),
+          store)
+    } catch { case scala.util.control.NonFatal(e) =>
+      System.err.println(s"[lake] advisory sidecar publish failed for " +
+        s"$table v$v (snapshot IS committed; reads just don't skip): $e")
+    }
+
+  /** Retrofit `kind` for the live files of `version` (default latest)
+    * that lack an entry for each of `columns`: one build over just those
+    * files, published as a suffixed sidecar of that version. Already
+    * covered files are never re-read, so a second call writes nothing.
+    * Returns the number of lines published. */
+  private def retrofit[E](spark: SparkSession, table: String,
+      kind: Sidecar[E], columns: Seq[String], version: Option[Long],
+      store: CommitStore): Int = {
+    val v = resolveVersion(table, version, store)
+    val files = readManifest(table, v, store)
+    val lines = columns.flatMap { c =>
+      val missing = files.filterNot(readSidecars(kind, table, v, c, store).keySet)
+      if (missing.isEmpty) Nil else kind.build(spark, table, missing, Seq(c))
+    }
+    if (lines.nonEmpty)
+      publishSidecar(table, kind, v, lines, store,
+        "-" + java.util.UUID.randomUUID.toString.take(8))
+    lines.size
+  }
+
+  /** Table-relative path of a data file from its `input_file_name()`. */
+  private def relPath(uri: String): String = "data/" + uri.split("/data/").last
 
   private def parseFullBody(txt: String): Seq[(String, Option[Long])] =
     txt.linesIterator.drop(1).map(cleanLine).filter(_.nonEmpty)
@@ -280,11 +417,16 @@ object SnapshotLake {
       entries: Seq[(String, Option[Long])], store: CommitStore,
       dedup: Option[String] = None,
       cols: Option[Seq[String]] = None): Boolean = {
-    val body = entries.map(e => "\"" + escapeLine(fmtEntry(e)) + "\"")
-      .mkString(headerPrefix(v, dedup, cols) +
-        s""""n":${entries.size},"files":[""" + "\n", ",\n", "\n]}")
-    store.putIfAbsent(manifestDir(table), manifestName(v), body)
+    store.putIfAbsent(manifestDir(table), manifestName(v), jsonBody(
+      headerPrefix(v, dedup, cols) + s""""n":${entries.size},"files":[""",
+      entries.map(fmtEntry)))
   }
+
+  /** `header`, then `lines` quoted and escaped one per line, then `]}` —
+    * the body of full manifests, checkpoints and sidecars. */
+  private def jsonBody(header: String, lines: Seq[String]): String =
+    lines.map(l => "\"" + escapeLine(l) + "\"")
+      .mkString(header + "\n", ",\n", "\n]}")
 
   private def writeDeltaManifestAtomic(table: String, v: Long, base: Long,
       depth: Long, n: Long, removes: Seq[String],
@@ -309,9 +451,8 @@ object SnapshotLake {
 
   private def checkpointBody(v: Long,
       entries: Seq[(String, Option[Long])]): String =
-    entries.map(e => "\"" + escapeLine(fmtEntry(e)) + "\"")
-      .mkString(s"""{"checkpoint":$v,"n":${entries.size},"files":[""" +
-        "\n", ",\n", "\n]}")
+    jsonBody(s"""{"checkpoint":$v,"n":${entries.size},"files":[""",
+      entries.map(fmtEntry))
 
   /** Publish (idempotently — the slot is a conditional PUT) version `v`'s
     * self-contained checkpoint sidecar. */
@@ -392,28 +533,37 @@ object SnapshotLake {
     (v, true)
   }
 
-  /** Rewrite-of-`base` publication at exactly `base + 1` (the compaction /
-    * COW / MERGE single-slot CAS — no internal retry): full vs delta form
-    * by base size, like [[publishManifest]]. `removes` must be ⊆ the
-    * base's paths. */
-  private def writeRewriteManifestAtomic(table: String, base: Long,
+  /** Stage `df` and publish it as a rewrite of `base` at exactly
+    * `base + 1` (the compaction / COW / MERGE single-slot CAS — no internal
+    * retry): full vs delta form by base size, like [[publishManifest]].
+    * `removes` must be ⊆ the base's paths. Returns the new version, or
+    * None when the CAS is lost (the staged files await vacuum). */
+  private def commitRewrite(spark: SparkSession, table: String, base: Long,
       baseEntries: Seq[(String, Option[Long])], removes: Set[String],
-      adds: Seq[(String, Option[Long])], store: CommitStore,
-      dedup: Option[String], cols: Option[Seq[String]]): Boolean = {
+      df: DataFrame, store: CommitStore, dedup: String,
+      cols: Option[Seq[String]]): Option[Long] = {
+    val adds = stagedEntries(spark, table, stage(df, table))
     val ok =
       if (baseEntries.size < DeltaManifestThreshold)
         writeFullManifestAtomic(table, base + 1,
-          baseEntries.filterNot(e => removes(e._1)) ++ adds, store, dedup,
-          cols)
+          baseEntries.filterNot(e => removes(e._1)) ++ adds, store,
+          Some(dedup), cols)
       else
         writeDeltaManifestAtomic(table, base + 1, base,
           headerLong(headerLineOf(table, base, store), "depth")
             .getOrElse(0L) + 1,
           baseEntries.size.toLong - removes.size + adds.size,
-          removes.toSeq.sorted, adds, store, dedup, cols)
+          removes.toSeq.sorted, adds, store, Some(dedup), cols)
     if (ok) maybeCheckpoint(table, base + 1, store)
-    ok
+    if (ok) Some(base + 1) else None
   }
+
+  /** Schema-merging read of table-relative `files`: a rewrite must carry
+    * the union schema of an evolved snapshot (r13 review). */
+  private def readMerged(spark: SparkSession, table: String,
+      files: Seq[String]): DataFrame =
+    spark.read.option("mergeSchema", "true")
+      .parquet(files.map(f => s"$table/$f"): _*)
 
   /** Row-count entries for freshly staged files, read from the parquet
     * footers the write just produced (page-cache-hot; bounded-parallel).
@@ -421,18 +571,26 @@ object SnapshotLake {
     * falls back to walking just that file. */
   private def stagedEntries(spark: SparkSession, table: String,
       staged: Seq[String]): Seq[(String, Option[Long])] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import scala.jdk.CollectionConverters._
     val conf = spark.sessionState.newHadoopConf()
     parFiles(staged) { f =>
-      f -> (try {
-        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(s"$table/$f"), conf))
-        try Some(reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum)
-        finally reader.close()
-      } catch { case scala.util.control.NonFatal(_) => None })
+      f -> (try Some(footerRows(conf, table, f))
+        catch { case scala.util.control.NonFatal(_) => None })
     }
+  }
+
+  /** Row count of data file `f` from its parquet footer. */
+  private def footerRows(conf: org.apache.hadoop.conf.Configuration,
+      table: String, f: String): Long =
+    footer(conf, table, f).getBlocks.asScala.map(_.getRowCount).sum
+
+  private def footer(conf: org.apache.hadoop.conf.Configuration,
+      table: String,
+      f: String): org.apache.parquet.hadoop.metadata.ParquetMetadata = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(s"$table/$f"), conf))
+    try reader.getFooter finally reader.close()
   }
 
   /** Column NAMES of the union schema committed at version `v`, when the
@@ -453,10 +611,8 @@ object SnapshotLake {
     */
   def dedupVersion(table: String, dedupKey: String,
       store: CommitStore = PosixLinkCommitStore): Option[Long] =
-    versions(table, store).reverseIterator.find { v =>
-      store.get(manifestDir(table), manifestName(v))
-        .linesIterator.next().contains(s""""dedup":"$dedupKey"""")
-    }
+    versions(table, store).reverseIterator.find(v =>
+      headerLineOf(table, v, store).contains(s""""dedup":"$dedupKey""""))
 
   /** The dedup/idempotency tag recorded on version `v`'s manifest, if
     * any — public so delta-driven maintainers
@@ -464,29 +620,21 @@ object SnapshotLake {
     * mark from the commit they wrote, with no extra state store. */
   def commitTag(table: String, v: Long,
       store: CommitStore = PosixLinkCommitStore): Option[String] =
-    """"dedup":"([^"]*)"""".r
-      .findFirstMatchIn(store.get(manifestDir(table), manifestName(v))
-        .linesIterator.next())
+    """"dedup":"([^"]*)"""".r.findFirstMatchIn(headerLineOf(table, v, store))
       .map(_.group(1))
 
   /** Version `v`'s data files as table-relative paths — the public face of
     * the manifest for integrations that resolve their own scan (the
     * [[graft.sources.SnapshotLakeSource]] DataSource V2 connector). */
   def manifestFiles(table: String, v: Long,
-      store: CommitStore = PosixLinkCommitStore): Seq[String] = {
-    val vs = versions(table, store)
-    require(vs.contains(v), s"version $v not in committed set $vs at $table")
-    readManifest(table, v, store)
-  }
+      store: CommitStore = PosixLinkCommitStore): Seq[String] =
+    readManifest(table, resolveVersion(table, Some(v), store), store)
 
   /** Wall-clock commit time of version `v` (absent only on manifests
     * written before timestamps were recorded). */
   def commitTimestamp(table: String, v: Long,
       store: CommitStore = PosixLinkCommitStore): Option[Long] =
-    """"ts":(\d+)""".r
-      .findFirstMatchIn(store.get(manifestDir(table), manifestName(v))
-        .linesIterator.next())
-      .map(_.group(1).toLong)
+    headerLong(headerLineOf(table, v, store), "ts")
 
   /** AS OF TIMESTAMP read: the newest version committed at or before
     * `tsMillis`. Version order is authoritative — the scan takes the max
@@ -524,8 +672,7 @@ object SnapshotLake {
     val vs = versions(table, store)
     require(vs.contains(toVersion),
       s"version $toVersion not in committed set $vs at $table")
-    val base = expectedBase.getOrElse(vs.max)
-    require(vs.contains(base), s"version $base not in committed set $vs")
+    val base = resolveVersion(table, expectedBase, store)
     // always FULL form: a restore's file set is an OLD version's — writing
     // it self-contained keeps the restored head independent of the
     // restored-from chain (vacuum may drop toVersion's manifest later)
@@ -772,45 +919,13 @@ object SnapshotLake {
     if (!won) return v // a same-key winner's version: OUR staged files are
     // orphaned — publishing sidecars describing them under the winner's
     // version would be wrong (and was never done pre-refactor)
-    // Sidecars publish AFTER the manifest wins its version, so a sidecar
-    // can never describe a losing writer's files under the winner's
-    // version. They are ADVISORY both ways (r13 review): a crash in this
-    // window leaves a snapshot that simply doesn't skip, and an EXCEPTION
-    // here must not propagate either — the commit IS durable, and a
-    // caller that saw it as failed would retry and double-append.
-    try {
-      if (statsCols.nonEmpty) {
-        val lines = fileStatsLines(df.sparkSession, table, staged, statsCols)
-        publishJsonSidecar(table, statsName(v),
-          s"""{"stats":$v,"rows":[""", lines, store)
-      }
-      // NDV sidecar: per-file HLL sketches (Spark's DataSketches binary,
-      // mergeable). O(files) sidecar lines answer approx-count-distinct at
-      // ANY later point without a scan: union-of-sketches over file
-      // subsets is exact sketch algebra (the property min/max lack).
-      if (ndvCols.nonEmpty) {
-        val lines = ndvSidecarLines(df.sparkSession, table, staged, ndvCols)
-        publishJsonSidecar(table, ndvName(v),
-          s"""{"ndv":$v,"rows":[""", lines, store)
-      }
-      if (bloomCols.nonEmpty) {
-        val lines = bloomSidecarLines(df.sparkSession, table, staged,
-          bloomCols, 8192, 5)
-        publishBloomSidecar(table, bloomName(v), lines, store)
-      }
-    } catch { case scala.util.control.NonFatal(e) =>
-      System.err.println(s"[lake] advisory sidecar publish failed for " +
-        s"$table v$v (snapshot IS committed; reads just don't skip): $e")
-    }
+    publishCommitSidecars(df.sparkSession, table, v, staged, store,
+      Stats -> statsCols, Ndv -> ndvCols, Bloom -> bloomCols)
     v
   }
 
-  /** Per-file min/max of `cols` over freshly staged files: one scan grouped
-    * by input_file_name, collected driver-side (bounded by files-per-commit
-    * × cols — the broadcast-build idiom, not a data-path collect). Values
-    * are stored as doubles; all-null files record no entry (never pruned).
-    */
-  /** Per-file [min,max] sidecar lines. Fast path: parquet FOOTER metadata —
+  /** Per-file [min,max] sidecar lines (doubles; an all-null file records
+    * no entry, so it is never pruned). Fast path: parquet FOOTER metadata —
     * the stats are already in every file the write just produced, so
     * re-scanning the data to recompute them (a full read-back of the
     * commit) is pure waste; a footer read is O(files), not O(rows), which
@@ -822,14 +937,9 @@ object SnapshotLake {
   private def fileStatsLines(spark: SparkSession, table: String,
       staged: Seq[String], cols: Seq[String]): Seq[String] =
     footerStatsLines(spark, table, staged, cols).getOrElse {
-      val sdf = spark.read.parquet(staged.map(f => s"$table/$f"): _*)
-      val aggs = cols.flatMap(c => Seq(
+      perFileAggs(spark, table, staged, cols.flatMap(c => Seq(
         min(col(c)).cast("double").as(s"mn_$c"),
-        max(col(c)).cast("double").as(s"mx_$c")))
-      val rows = sdf.groupBy(input_file_name().as("__f"))
-        .agg(aggs.head, aggs.tail: _*).collect()
-      rows.toSeq.flatMap { r =>
-        val rel = "data/" + r.getString(0).split("/data/").last
+        max(col(c)).cast("double").as(s"mx_$c")))).flatMap { case (rel, r) =>
         cols.zipWithIndex.flatMap { case (c, i) =>
           val mn = r.get(1 + 2 * i); val mx = r.get(2 + 2 * i)
           if (mn == null || mx == null) None
@@ -838,23 +948,25 @@ object SnapshotLake {
       }
     }
 
+  /** One scan of `staged` grouped by file, `aggs` per file, collected
+    * driver-side (bounded by files × aggs — the broadcast-build idiom, not
+    * a data-path collect); each row keyed by its table-relative path. */
+  private def perFileAggs(spark: SparkSession, table: String,
+      staged: Seq[String], aggs: Seq[Column]): Seq[(String, Row)] =
+    spark.read.parquet(staged.map(f => s"$table/$f"): _*)
+      .groupBy(input_file_name().as("__f")).agg(aggs.head, aggs.tail: _*)
+      .collect().toSeq.map(r => relPath(r.getString(0)) -> r)
+
   private def footerStatsLines(spark: SparkSession, table: String,
       staged: Seq[String], cols: Seq[String]): Option[Seq[String]] = try {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import scala.jdk.CollectionConverters._
     val conf = spark.sessionState.newHadoopConf()
     // bounded-parallel footer reads ([[parFiles]]): commit-time cost stays
     // flat as numFiles grows; any per-file failure propagates out of the
     // pool un-wrapped and lands in the catch-all → Spark-aggregate fallback
     Some(parFiles(staged) { f =>
-      val in = HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(s"$table/$f"), conf)
-      val reader = ParquetFileReader.open(in)
-      val (blocks, schema) = try {
-        (reader.getFooter.getBlocks.asScala,
-          reader.getFooter.getFileMetaData.getSchema)
-      } finally reader.close()
+      val ft = footer(conf, table, f)
+      val (blocks, schema) =
+        (ft.getBlocks.asScala, ft.getFileMetaData.getSchema)
       cols.flatMap { c =>
         // only PLAIN numeric primitives: an annotated INT64 (timestamp
         // micros, decimal) has footer stats in different UNITS than the
@@ -895,35 +1007,6 @@ object SnapshotLake {
     }.flatten)
   } catch { case _: Exception => None }
 
-  /** Per-file [min,max] of `column` (cast-to-double space) merged from
-    * every published stats sidecar at or before version `v` — a file's
-    * stats are recorded by the commit that staged it, so the union covers
-    * the whole manifest. A missing entry means "no stats: never prune".
-    */
-  private def sidecarStats(table: String, v: Long, column: String,
-      store: CommitStore): Map[String, (Double, Double)] = {
-    val vs = versions(table, store)
-    val published = store.list(manifestDir(table)).toSet
-    // parallel sidecar reads (MetadataScaleProbe r14): planning cost at
-    // 10³ retained sidecars was dominated by the sequential get() loop.
-    // parFiles preserves input order, so the toMap merge (later versions
-    // win on a shared path) is unchanged.
-    parFiles(vs.filter(sv => sv <= v && published.contains(statsName(sv)))
-        .map(_.toString)) { sv =>
-      store.get(manifestDir(table), statsName(sv.toLong)).linesIterator
-        .drop(1)
-        .map(l => unescapeLine(
-          l.trim.stripSuffix(",").stripPrefix("\"").stripSuffix("\"")))
-        .filter(l => l.nonEmpty && l != "]}")
-        .flatMap(_.split('\t') match {
-          case Array(p, c, mn, mx) if c == column =>
-            try Some(p -> (mn.toDouble, mx.toDouble))
-            catch { case _: NumberFormatException => None }
-          case _ => None
-        }).toSeq
-    }.flatten.toMap
-  }
-
   /** Data-skipping range read: `read(version).where(lo <= column <= hi)`
     * with files whose sidecar [min,max] misses [lo, hi] never opened — the
     * manifest-level analogue of parquet row-group pruning, and the payoff
@@ -940,14 +1023,8 @@ object SnapshotLake {
   def readRange(spark: SparkSession, table: String, column: String,
       lo: Double, hi: Double, version: Option[Long] = None,
       store: CommitStore = PosixLinkCommitStore): DataFrame = {
-    val vs = versions(table, store)
-    require(vs.nonEmpty, s"no committed snapshots at $table")
-    val v = version.getOrElse(vs.max)
-    require(vs.contains(v), s"version $v not in committed set $vs")
+    val v = resolveVersion(table, version, store)
     val files = readManifest(table, v, store)
-    val stats = sidecarStats(table, v, column, store)
-    val kept = files.filter(f =>
-      stats.get(f).forall { case (mn, mx) => mx >= lo && mn <= hi })
     // compare in the same cast-to-double space the sidecar stats live in —
     // a no-op for double columns (SimplifyCasts), the epoch-seconds
     // convention for timestamps
@@ -955,10 +1032,19 @@ object SnapshotLake {
       col(column).cast("double") <= hi
     if (files.isEmpty) // delete-all / empty-overwrite snapshot: still a table
       emptyFrame(spark, table, v, store)
-    else if (kept.isEmpty) // schema from any manifest file; zero rows by range
+    else readKept(spark, table, v, files,
+      pruneByWindows(table, v, files, Seq((column, lo, hi)), store), pred,
+      store)
+  }
+
+  /** `kept` ⊆ snapshot v's non-empty `files`, filtered by `pred`; with
+    * nothing kept, the schema of any manifest file and zero rows. */
+  private def readKept(spark: SparkSession, table: String, v: Long,
+      files: Seq[String], kept: Seq[String], pred: Column,
+      store: CommitStore): DataFrame =
+    if (kept.isEmpty)
       spark.read.parquet(s"$table/${files.head}").where(pred && lit(false))
     else fastReadFiles(spark, table, v, kept, store).where(pred)
-  }
 
   /** OPTIMIZE analogue: rewrite the LATEST snapshot's row set as
     * `targetFiles` well-sized files and commit it as a new version whose
@@ -980,23 +1066,35 @@ object SnapshotLake {
     */
   def compact(spark: SparkSession, table: String, targetFiles: Int = 1,
       store: CommitStore = PosixLinkCommitStore,
-      expectedBase: Option[Long] = None): Option[Long] = {
-    val vs = versions(table, store)
-    require(vs.nonEmpty, s"no committed snapshots at $table")
-    // expectedBase pins the snapshot the caller audited; default latest
-    val base = expectedBase.getOrElse(vs.max)
-    require(vs.contains(base), s"version $base not in committed set $vs")
+      expectedBase: Option[Long] = None): Option[Long] =
+    rewriteSnapshot(spark, table, store, expectedBase, "compact", Nil)(
+      _.coalesce(math.max(targetFiles, 1)))
+
+  /** Rewrite the whole snapshot `expectedBase` (default latest: the
+    * snapshot the caller audited) as `layout` of it, and publish it FULL —
+    * the output IS the whole snapshot — at exactly `base + 1`, with stats
+    * sidecars on `statsCols`. None when the CAS is lost to a concurrent
+    * commit (the staged files await vacuum). */
+  private def rewriteSnapshot(spark: SparkSession, table: String,
+      store: CommitStore, expectedBase: Option[Long], tag: String,
+      statsCols: Seq[String])(layout: DataFrame => DataFrame): Option[Long] = {
+    val base = resolveVersion(table, expectedBase, store)
     // mergeSchema: a REWRITE must see the union schema of a schema-evolved
     // snapshot (commitAppendEvolve) — a single-footer inference could pick
     // a pre-evolution file and permanently drop the evolved columns from
     // the rewritten head (r13 review)
     val df = read(spark, table, Some(base), store, mergeSchema = true)
-    val staged = stage(df.coalesce(math.max(targetFiles, 1)), table)
-    // FULL form: a compaction's output IS the whole snapshot
+    val staged = stage(layout(df), table)
     if (writeFullManifestAtomic(table, base + 1,
-      stagedEntries(spark, table, staged), store,
-      Some(s"compact-of-v$base"), Some(df.columns.toSeq))) Some(base + 1)
-    else None // lost the CAS to a concurrent commit: staged files await vacuum
+        stagedEntries(spark, table, staged), store,
+        Some(s"$tag-of-v$base"), Some(df.columns.toSeq))) {
+      // an exception here must not propagate: a caller that saw it would
+      // retry against the advanced head and misread the CAS-lost None as
+      // contention (r13 ADVICE)
+      publishCommitSidecars(spark, table, base + 1, staged, store,
+        Stats -> statsCols)
+      Some(base + 1)
+    } else None
   }
 
   /** Bin-packing auto-compaction policy — the OPTIMIZE a nightly ingest
@@ -1020,10 +1118,7 @@ object SnapshotLake {
       expectedBase: Option[Long] = None): Option[Long] = {
     require(smallBytes > 0 && targetBytes > 0 && minSmallFiles > 0,
       "thresholds must be positive")
-    val vs = versions(table, store)
-    require(vs.nonEmpty, s"no committed snapshots at $table")
-    val base = expectedBase.getOrElse(vs.max)
-    require(vs.contains(base), s"version $base not in committed set $vs")
+    val base = resolveVersion(table, expectedBase, store)
     val baseEntries = manifestEntries(table, base, store)
     val sized = baseEntries.map(e => e -> Files.size(Paths.get(table, e._1)))
     val (small, big) = sized.partition(_._2 < smallBytes)
@@ -1031,18 +1126,14 @@ object SnapshotLake {
     val nOut = math.max(1,
       math.ceil(small.map(_._2).sum.toDouble / targetBytes).toInt)
     // mergeSchema: same evolved-snapshot rewrite contract as [[compact]]
-    val df = spark.read.option("mergeSchema", "true")
-      .parquet(small.map(f => s"$table/${f._1._1}"): _*)
-    val staged = stage(df.coalesce(nOut), table)
+    val df = readMerged(spark, table, small.map(_._1._1))
     // partial rewrite: the small-file union may miss columns living only in
     // carried-by-reference big files — propagate the base's recorded set.
     // Delta form above the threshold: removes = the rewritten small files,
     // adds = the packed outputs (big files carried by reference implicitly)
-    if (writeRewriteManifestAtomic(table, base, baseEntries,
-      small.map(_._1._1).toSet, stagedEntries(spark, table, staged), store,
-      Some(s"autocompact-of-v$base"), manifestCols(table, base, store)))
-      Some(base + 1)
-    else None
+    commitRewrite(spark, table, base, baseEntries, small.map(_._1._1).toSet,
+      df.coalesce(nOut), store, s"autocompact-of-v$base",
+      manifestCols(table, base, store))
   }
 
   /** OPTIMIZE … ZORDER BY: rewrite the audited snapshot z-clustered on
@@ -1058,37 +1149,9 @@ object SnapshotLake {
   def optimizeZOrder(spark: SparkSession, table: String, zCols: Seq[String],
       bits: Int = 8, numFiles: Int = 16,
       store: CommitStore = PosixLinkCommitStore,
-      expectedBase: Option[Long] = None): Option[Long] = {
-    val vs = versions(table, store)
-    require(vs.nonEmpty, s"no committed snapshots at $table")
-    val base = expectedBase.getOrElse(vs.max)
-    require(vs.contains(base), s"version $base not in committed set $vs")
-    // mergeSchema: same evolved-snapshot rewrite contract as [[compact]]
-    val df = read(spark, table, Some(base), store, mergeSchema = true)
-    val staged = stage(
-      graft.operators.Layout.zCluster(df, zCols, bits, numFiles), table)
-    // FULL form: the clustered rewrite IS the whole snapshot
-    if (writeFullManifestAtomic(table, base + 1,
-        stagedEntries(spark, table, staged), store,
-        Some(s"zorder-of-v$base"), Some(df.columns.toSeq))) {
-      val v = base + 1
-      // stats publish AFTER the manifest wins, same ADVISORY contract as
-      // the commit path (r13 ADVICE): the optimize IS durably committed the
-      // moment the CAS wins, so an IO failure here must not propagate — a
-      // caller that saw a failure would retry against the already-advanced
-      // head and misread the CAS-lost None as contention (or publish a
-      // spurious extra version). The snapshot just doesn't skip.
-      try {
-        val lines = fileStatsLines(spark, table, staged, zCols)
-        publishJsonSidecar(table, statsName(v),
-          s"""{"stats":$v,"rows":[""", lines, store)
-      } catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[lake] advisory zorder stats publish failed " +
-          s"for $table v$v (snapshot IS committed; reads just don't skip): $e")
-      }
-      Some(v)
-    } else None
-  }
+      expectedBase: Option[Long] = None): Option[Long] =
+    rewriteSnapshot(spark, table, store, expectedBase, "zorder", zCols)(
+      graft.operators.Layout.zCluster(_, zCols, bits, numFiles))
 
   /** Copy-on-write row-level DELETE: rewrite ONLY the files that contain a
     * matching row, commit a new manifest of (untouched files + rewrites) —
@@ -1120,12 +1183,8 @@ object SnapshotLake {
       set: Map[String, Column], store: CommitStore = PosixLinkCommitStore,
       expectedBase: Option[Long] = None): Option[Long] =
     rewriteWhere(spark, table, predicate,
-      upd => {
-        val changed = set.foldLeft(upd) { case (d, (c, e)) =>
-          d.withColumn(c, e)
-        }
-        changed
-      }, "update", store, expectedBase)
+      upd => set.foldLeft(upd) { case (d, (c, e)) => d.withColumn(c, e) },
+      "update", store, expectedBase)
 
   /** Necessary [lo, hi] windows implied by `predicate`'s top-level
     * conjuncts: comparisons of a plain column attribute against a numeric
@@ -1139,25 +1198,7 @@ object SnapshotLake {
   private[graft] def predicateBounds(
       predicate: Column): Seq[(String, Double, Double)] = {
     import org.apache.spark.sql.catalyst.expressions._
-    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
     import org.apache.spark.sql.types.NumericType
-    // The Column→Expression converter yields UNRESOLVED trees for
-    // builder-made columns ('<=' is an UnresolvedFunction, not
-    // LessThanOrEqual), and typed comparison nodes for columns lifted off
-    // an analyzed frame — normalize both shapes to (op, lhs, rhs).
-    def cmp(e: Expression): Option[(String, Expression, Expression)] =
-      e match {
-        case EqualTo(a, b) => Some(("=", a, b))
-        case GreaterThan(a, b) => Some((">", a, b))
-        case GreaterThanOrEqual(a, b) => Some((">=", a, b))
-        case LessThan(a, b) => Some(("<", a, b))
-        case LessThanOrEqual(a, b) => Some(("<=", a, b))
-        case f: UnresolvedFunction if f.arguments.length == 2 &&
-          Set("=", "==", "<", "<=", ">", ">=")(f.nameParts.last) =>
-          Some((if (f.nameParts.last == "==") "=" else f.nameParts.last,
-            f.arguments(0), f.arguments(1)))
-        case _ => None
-      }
     def num(e: Expression): Option[Double] = e match {
       case Literal(v, _: NumericType) => v match {
         case d: org.apache.spark.sql.types.Decimal => Some(d.toDouble)
@@ -1168,7 +1209,7 @@ object SnapshotLake {
     }
     val inf = Double.PositiveInfinity
     predConjuncts(org.apache.spark.sql.GraftSqlBridge.expression(predicate))
-      .flatMap(cmp).flatMap {
+      .flatMap(PredCmp.unapply).flatMap {
         case ("=", a, b) =>
           predAttr(a).zip(num(b)).map { case (c, v) => (c, v, v) } ++
             predAttr(b).zip(num(a)).map { case (c, v) => (c, v, v) }
@@ -1191,13 +1232,19 @@ object SnapshotLake {
     */
   private[graft] def pruneByStats(table: String, v: Long,
       files: Seq[String], predicate: Column,
+      store: CommitStore): Seq[String] =
+    pruneByWindows(table, v, files, predicateBounds(predicate), store)
+
+  /** Drop every file whose recorded [min,max] misses one of the
+    * (column, lo, hi) `windows`; unstatted files survive. */
+  private def pruneByWindows(table: String, v: Long, files: Seq[String],
+      windows: Seq[(String, Double, Double)],
       store: CommitStore): Seq[String] = {
-    val windows = predicateBounds(predicate)
     // one sidecar pass per DISTINCT column — a range conjunct emits two
-    // windows on the same column, and each sidecarStats call re-reads
-    // every retained sidecar file
+    // windows on the same column, and each pass re-reads every retained
+    // sidecar file
     val statsByCol = windows.map(_._1).distinct
-      .map(c => c -> sidecarStats(table, v, c, store)).toMap
+      .map(c => c -> readSidecars(Stats, table, v, c, store)).toMap
     val prunedOut = windows
       .foldLeft(Set.empty[String]) { case (acc, (c, lo, hi)) =>
         val stats = statsByCol(c)
@@ -1248,28 +1295,13 @@ object SnapshotLake {
         .groupBy(col("__f")).agg(collect_set(col("__p")).as("__ps"))
         .collect() // bounded: files × (≤ m set-bit ints)
       rows.toSeq.map { r =>
-        val rel = "data/" + r.getString(0).split("/data/").last
         val bits = new java.util.BitSet(m)
         r.getSeq[Int](1).foreach(bits.set)
         val b64 = java.util.Base64.getEncoder.encodeToString(bits.toByteArray)
-        s"$rel\t$c\t$dt\t$m\t$k\t$b64"
+        s"${relPath(r.getString(0))}\t$c\t$dt\t$m\t$k\t$b64"
       }
     }
   }
-
-  /** Shared JSON sidecar publisher (r13 review — the quote-wrap +
-    * mkString + putIfAbsent block was hand-rolled four times and had
-    * started to drift): `header` is the opening fragment before the first
-    * line, e.g. `{"stats":7,"rows":[`. */
-  private def publishJsonSidecar(table: String, name: String,
-      header: String, lines: Seq[String], store: CommitStore): Boolean =
-    store.putIfAbsent(manifestDir(table), name,
-      lines.map(l => "\"" + escapeLine(l) + "\"")
-        .mkString(header + "\n", ",\n", "\n]}"))
-
-  private def publishBloomSidecar(table: String, name: String,
-      lines: Seq[String], store: CommitStore): Boolean =
-    publishJsonSidecar(table, name, "{\"blooms\":[", lines, store)
 
   /** Build a bloom index over the files of snapshot `version` (default
     * latest) that don't already carry one for each of `columns`, publishing
@@ -1282,24 +1314,8 @@ object SnapshotLake {
   def buildBloomIndex(spark: SparkSession, table: String,
       columns: Seq[String], version: Option[Long] = None,
       bits: Int = 8192, hashes: Int = 5,
-      store: CommitStore = PosixLinkCommitStore): Int = {
-    val vs = versions(table, store)
-    require(vs.nonEmpty, s"no committed snapshots at $table")
-    val v = version.getOrElse(vs.max)
-    require(vs.contains(v), s"version $v not in committed set $vs")
-    val files = readManifest(table, v, store)
-    val lines = columns.flatMap { c =>
-      val have = sidecarBlooms(table, v, c, store).keySet
-      val missing = files.filterNot(have)
-      if (missing.isEmpty) Nil
-      else bloomSidecarLines(spark, table, missing, Seq(c), bits, hashes)
-    }
-    if (lines.nonEmpty) {
-      val suffix = "-" + java.util.UUID.randomUUID.toString.take(8)
-      publishBloomSidecar(table, bloomName(v, suffix), lines, store)
-    }
-    lines.size
-  }
+      store: CommitStore = PosixLinkCommitStore): Int =
+    retrofit(spark, table, bloomKind(bits, hashes), columns, version, store)
 
   /** Per-file blooms for `column` merged from every bloom sidecar published
     * at or before version `v` (a file's bloom is recorded by the commit
@@ -1307,32 +1323,8 @@ object SnapshotLake {
     * on re-index. A missing entry means "no bloom: never prune".
     */
   private[graft] def sidecarBlooms(table: String, v: Long, column: String,
-      store: CommitStore): Map[String, (String, Int, Int, java.util.BitSet)] = {
-    // same explicit sort key as [[sidecarSketches]] (r13 review): plain
-    // lexicographic order puts a retrofit b<v>-<uuid>.json BEFORE its
-    // version's commit sidecar b<v>.json ('-' < '.'), inverting the
-    // documented later-sidecars-win rule
-    val names = store.list(manifestDir(table))
-      .filter(n => n.startsWith("b") && n.endsWith(".json") &&
-        n.length >= 12 && n.substring(1, 12).forall(_.isDigit) &&
-        n.substring(1, 12).toLong <= v)
-      .sortBy(n => (n.substring(1, 12).toLong,
-        n.length > "b00000000000.json".length, n))
-    names.flatMap { n =>
-      store.get(manifestDir(table), n).linesIterator.drop(1)
-        .map(l => unescapeLine(
-          l.trim.stripSuffix(",").stripPrefix("\"").stripSuffix("\"")))
-        .filter(l => l.nonEmpty && l != "]}")
-        .flatMap(_.split('\t') match {
-          case Array(p, c, dt, m, kk, b64) if c == column =>
-            try Some(p -> (dt, m.toInt, kk.toInt,
-              java.util.BitSet.valueOf(
-                java.util.Base64.getDecoder.decode(b64))))
-            catch { case _: IllegalArgumentException => None }
-          case _ => None
-        })
-    }.toMap
-  }
+      store: CommitStore): Map[String, (String, Int, Int, java.util.BitSet)] =
+    readSidecars(Bloom, table, v, column, store)
 
   /** Equality constraints in `predicate`'s top-level conjuncts:
     * (column, literal values) pairs where the predicate requires the column
@@ -1361,6 +1353,28 @@ object SnapshotLake {
     case other => Seq(other)
   }
 
+  /** A comparison normalized to (op, lhs, rhs), `==` read as `=`: the
+    * Column→Expression converter yields UNRESOLVED trees for builder-made
+    * columns ('<=' is an UnresolvedFunction, not LessThanOrEqual), and
+    * typed comparison nodes for columns lifted off an analyzed frame. */
+  private object PredCmp {
+    import org.apache.spark.sql.catalyst.expressions._
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
+    def unapply(e: Expression): Option[(String, Expression, Expression)] =
+      e match {
+        case EqualTo(a, b) => Some(("=", a, b))
+        case GreaterThan(a, b) => Some((">", a, b))
+        case GreaterThanOrEqual(a, b) => Some((">=", a, b))
+        case LessThan(a, b) => Some(("<", a, b))
+        case LessThanOrEqual(a, b) => Some(("<=", a, b))
+        case f: UnresolvedFunction if f.arguments.length == 2 &&
+          Set("=", "==", "<", "<=", ">", ">=")(f.nameParts.last) =>
+          Some((if (f.nameParts.last == "==") "=" else f.nameParts.last,
+            f.arguments(0), f.arguments(1)))
+        case _ => None
+      }
+  }
+
   private def predAttr(
       e: org.apache.spark.sql.catalyst.expressions.Expression):
       Option[String] = e match {
@@ -1374,7 +1388,7 @@ object SnapshotLake {
   private[graft] def equalityProbes(
       predicate: Column): Seq[(String, Seq[Column])] = {
     import org.apache.spark.sql.catalyst.expressions._
-    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
     // wrap the literal EXPRESSION back into a Column (its value is the
     // Catalyst-internal representation — UTF8String for strings — so
     // re-lifting through lit() would mangle it)
@@ -1385,12 +1399,7 @@ object SnapshotLake {
     }
     predConjuncts(org.apache.spark.sql.GraftSqlBridge.expression(predicate))
       .flatMap {
-        case EqualTo(a, b) =>
-          predAttr(a).zip(litCol(b)).map { case (c, v0) => (c, Seq(v0)) } ++
-            predAttr(b).zip(litCol(a)).map { case (c, v0) => (c, Seq(v0)) }
-        case f: UnresolvedFunction if f.arguments.length == 2 &&
-          Set("=", "==")(f.nameParts.last) =>
-          val Seq(a, b) = f.arguments
+        case PredCmp("=", a, b) =>
           predAttr(a).zip(litCol(b)).map { case (c, v0) => (c, Seq(v0)) } ++
             predAttr(b).zip(litCol(a)).map { case (c, v0) => (c, Seq(v0)) }
         case In(a, list) if list.nonEmpty =>
@@ -1502,10 +1511,7 @@ object SnapshotLake {
       predicate: Column, transformMatches: DataFrame => DataFrame,
       op: String, store: CommitStore,
       expectedBase: Option[Long]): Option[Long] = {
-    val vs = versions(table, store)
-    require(vs.nonEmpty, s"no committed snapshots at $table")
-    val base = expectedBase.getOrElse(vs.max)
-    require(vs.contains(base), s"version $base not in committed set $vs")
+    val base = resolveVersion(table, expectedBase, store)
     val baseEntries = manifestEntries(table, base, store)
     val files = baseEntries.map(_._1)
     if (files.isEmpty) return Some(base) // empty snapshot: nothing to touch
@@ -1522,34 +1528,27 @@ object SnapshotLake {
     // mergeSchema on BOTH scans: the predicate may reference an evolved
     // column absent from some candidate footers, and the rewrite must
     // carry the union schema of the touched files (r13 review)
-    val snap = spark.read.option("mergeSchema", "true")
-      .parquet(candidates.map(f => s"$table/$f"): _*)
     // one projection-only scan finds the touched files (bounded collect:
     // file names, not rows)
-    val touched = snap.where(predicate)
+    val touched = readMerged(spark, table, candidates).where(predicate)
       .select(input_file_name().as("__f")).distinct()
-      .collect().map(r => "data/" + r.getString(0).split("/data/").last).toSet
+      .collect().map(r => relPath(r.getString(0))).toSet
     if (touched.isEmpty) return Some(base) // nothing matches: no-op version
-    val touchedPaths = touched.toSeq.sorted.map(f => s"$table/$f")
-    val touchedDf = spark.read.option("mergeSchema", "true")
-      .parquet(touchedPaths: _*)
+    val touchedDf = readMerged(spark, table, touched.toSeq.sorted)
     val kept = touchedDf.where(!coalesce(predicate, lit(false)))
     val rewritten = op match {
       case "delete" => kept
       case _ => kept.unionByName(
         transformMatches(touchedDf.where(coalesce(predicate, lit(false)))))
     }
-    val staged = stage(
-      rewritten.coalesce(math.max(touched.size, 1)), table)
     // partial rewrite (untouched files carried by reference): extend the
     // base's recorded union with any column the rewrite introduced
     // (updateWhere `set` on a new name); a legacy base stays unrecorded
     val cols = manifestCols(table, base, store)
       .map(pc => pc ++ rewritten.columns.filterNot(pc.toSet))
-    if (writeRewriteManifestAtomic(table, base, baseEntries, touched,
-      stagedEntries(spark, table, staged), store,
-      Some(s"$op-of-v$base"), cols)) Some(base + 1)
-    else None
+    commitRewrite(spark, table, base, baseEntries, touched,
+      rewritten.coalesce(math.max(touched.size, 1)), store,
+      s"$op-of-v$base", cols)
   }
 
   /** Source-column accessor for [[merge]] expressions: inside
@@ -1609,10 +1608,7 @@ object SnapshotLake {
     // its first run committed instead of re-applying the changes
     dedupKey.flatMap(k => dedupVersion(table, k, store)).foreach { v =>
       return Some(v) }
-    val vs = versions(table, store)
-    require(vs.nonEmpty, s"no committed snapshots at $table")
-    val base = expectedBase.getOrElse(vs.max)
-    require(vs.contains(base), s"version $base not in committed set $vs")
+    val base = resolveVersion(table, expectedBase, store)
     val baseEntries = manifestEntries(table, base, store)
     val files = baseEntries.map(_._1)
     require(on.forall(source.columns.contains),
@@ -1638,12 +1634,10 @@ object SnapshotLake {
           s"column; missing ${targetCols.filterNot(source.columns.contains)}")
     }
 
-    def commitAt(removes: Set[String], adds: Seq[(String, Option[Long])],
+    def commitAt(removes: Set[String], df: DataFrame,
         cols: Option[Seq[String]]): Option[Long] =
-      if (writeRewriteManifestAtomic(table, base, baseEntries, removes, adds,
-        store, Some(dedupKey.getOrElse(s"merge-of-v$base")), cols))
-        Some(base + 1)
-      else None
+      commitRewrite(spark, table, base, baseEntries, removes, df, store,
+        dedupKey.getOrElse(s"merge-of-v$base"), cols)
 
     val sourceIsEmpty = source.isEmpty // batch-sized probe, reused below
 
@@ -1652,9 +1646,7 @@ object SnapshotLake {
         read(spark, table, Some(base), store).columns.toSeq)
       validateTarget(targetCols)
       if (!insertNotMatched || sourceIsEmpty) return Some(base)
-      return commitAt(Set.empty,
-        stagedEntries(spark, table,
-          stage(source.select(targetCols.map(col): _*), table)),
+      return commitAt(Set.empty, source.select(targetCols.map(col): _*),
         Some(targetCols))
     }
     if (sourceIsEmpty) return Some(base) // nothing to match, nothing to
@@ -1682,9 +1674,7 @@ object SnapshotLake {
       case Some(p) => pruneByStats(table, base, files, p, store)
       case None => files
     }
-    def candScan() =
-      spark.read.option("mergeSchema", "true")
-        .parquet(candidates.map(f => s"$table/$f"): _*)
+    def candScan() = readMerged(spark, table, candidates)
     // Target schema: FIRST preference is the union-schema column set the
     // committing writer recorded on the base manifest ([[manifestCols]]) —
     // an O(1) header read that opens no footer, so it is correct even when
@@ -1699,9 +1689,7 @@ object SnapshotLake {
     // time is the fix, the fallback only remains for pre-cols manifests).
     val recordedCols = manifestCols(table, base, store)
     val targetCols = recordedCols.getOrElse(
-      (if (candidates.nonEmpty)
-        spark.read.option("mergeSchema", "true")
-          .parquet(candidates.map(f => s"$table/$f"): _*)
+      (if (candidates.nonEmpty) candScan()
       else spark.read.parquet(s"$table/${files.head}"))
         .columns.toSeq)
     validateTarget(targetCols)
@@ -1719,16 +1707,14 @@ object SnapshotLake {
         .select(on.map(col) :+ input_file_name().as("__f"): _*)
         .join(source.select(on.map(col): _*), on, "left_semi")
         .select(col("__f")).distinct()
-        .collect().map(r => "data/" + r.getString(0).split("/data/").last)
-        .toSet
+        .collect().map(r => relPath(r.getString(0))).toSet
 
     val srcPref = source.select(source.columns.map(c =>
       col(c).as(s"__src_$c")) :+ lit(true).as("__src__matched"): _*)
     val rewrittenTouched: Option[DataFrame] =
       if (touched.isEmpty) None
       else {
-        val t = spark.read.option("mergeSchema", "true")
-          .parquet(touched.toSeq.sorted.map(f => s"$table/$f"): _*)
+        val t = readMerged(spark, table, touched.toSeq.sorted)
         val joinCond = on.map(k => col(k) === col(s"__src_$k"))
           .reduce(_ && _)
         val joined = t.join(srcPref, joinCond, "left")
@@ -1758,13 +1744,12 @@ object SnapshotLake {
         Some(base) // every source row already present, nothing rewritten:
       // no-op rather than committing an empty staged file
       case Some(newData) =>
-        val staged = stage(
-          newData.coalesce(math.max(touched.size, 1) + 1), table)
         // merge never adds columns (rewrites and inserts both select
         // targetCols), so the base's recorded union carries forward; a
         // legacy base stays unrecorded rather than risking an understated
         // candidate-only union
-        commitAt(touched, stagedEntries(spark, table, staged), recordedCols)
+        commitAt(touched, newData.coalesce(math.max(touched.size, 1) + 1),
+          recordedCols)
     }
   }
 
@@ -1791,23 +1776,12 @@ object SnapshotLake {
   def countRows(spark: SparkSession, table: String,
       version: Option[Long] = None,
       store: CommitStore = PosixLinkCommitStore): Long = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import scala.jdk.CollectionConverters._
-    val vs = versions(table, store)
-    require(vs.nonEmpty, s"no committed snapshots at $table")
-    val v = version.getOrElse(vs.max)
-    require(vs.contains(v), s"version $v not in committed set $vs")
+    val v = resolveVersion(table, version, store)
     val entries = manifestEntries(table, v, store)
     val (counted, uncounted) = entries.partition(_._2.isDefined)
     val conf = spark.sessionState.newHadoopConf()
     counted.iterator.map(_._2.get).sum +
-      parFiles(uncounted.map(_._1)) { f =>
-        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(s"$table/$f"), conf))
-        try reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-        finally reader.close()
-      }.sum
+      parFiles(uncounted.map(_._1))(footerRows(conf, table, _)).sum
   }
 
   /** Retrofit per-file ROW COUNTS for a snapshot committed before counts
@@ -1821,27 +1795,13 @@ object SnapshotLake {
   def buildRowCountIndex(spark: SparkSession, table: String,
       version: Option[Long] = None,
       store: CommitStore = PosixLinkCommitStore): Int = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import scala.jdk.CollectionConverters._
-    val vs = versions(table, store)
-    require(vs.nonEmpty, s"no committed snapshots at $table")
-    val v = version.getOrElse(vs.max)
-    require(vs.contains(v), s"version $v not in committed set $vs")
+    val v = resolveVersion(table, version, store)
     val entries = manifestEntries(table, v, store)
     val missing = entries.count(_._2.isEmpty)
     if (missing == 0) return 0
     val conf = spark.sessionState.newHadoopConf()
-    val filled = parFiles(entries.map(e => fmtEntry(e))) { line =>
-      parseEntryLine(line) match {
-        case (f, Some(r)) => (f, Some(r))
-        case (f, None) =>
-          val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(s"$table/$f"), conf))
-          try (f, Some(reader.getFooter.getBlocks.asScala
-            .map(_.getRowCount).sum))
-          finally reader.close()
-      }
+    val filled = parFiles(entries) { case (f, rows) =>
+      (f, rows.orElse(Some(footerRows(conf, table, f))))
     }
     // an earlier (count-less) checkpoint must not shadow the counted one.
     // Checkpoints are derived state under the single-maintenance-writer
@@ -1866,56 +1826,26 @@ object SnapshotLake {
     * fallback semantics (e.g. [[footerStatsLines]]'s catch-all) are
     * unchanged.
     */
-  private def parFiles[A](files: Seq[String])(f: String => A): Seq[A] =
+  private def parFiles[A, B](files: Seq[A])(f: A => B): Seq[B] =
     graft.util.Par.map(files, 64)(f)
 
   /** Per-file HLL sketch lines "relpath\tcol\thex(sketch)" — one scan
     * of the freshly staged files grouped by input_file_name (the
     * fileStatsLines fallback shape); lgK 12 ≈ ±1.6% standard error.
+    * Spark's DataSketches binaries are mergeable: O(files) sidecar lines
+    * answer approx-count-distinct at ANY later point without a scan, since
+    * a union of sketches over a file subset is exact sketch algebra (the
+    * property min/max lack).
     */
   private def ndvSidecarLines(spark: SparkSession, table: String,
-      staged: Seq[String], cols: Seq[String]): Seq[String] = {
-    val sdf = spark.read.parquet(staged.map(f => s"$table/$f"): _*)
-    val aggs = cols.map(c =>
-      hex(hll_sketch_agg(col(c), 12)).as(s"sk_$c"))
-    val rows = sdf.groupBy(input_file_name().as("__f"))
-      .agg(aggs.head, aggs.tail: _*).collect()
-    rows.toSeq.flatMap { r =>
-      val rel = "data/" + r.getString(0).split("/data/").last
-      cols.zipWithIndex.flatMap { case (c, i) =>
-        Option(r.getString(1 + i)).map(hx => s"$rel\t$c\t$hx")
+      staged: Seq[String], cols: Seq[String]): Seq[String] =
+    perFileAggs(spark, table, staged,
+      cols.map(c => hex(hll_sketch_agg(col(c), 12)).as(s"sk_$c")))
+      .flatMap { case (rel, r) =>
+        cols.zipWithIndex.flatMap { case (c, i) =>
+          Option(r.getString(1 + i)).map(hx => s"$rel\t$c\t$hx")
+        }
       }
-    }
-  }
-
-  private def sidecarSketches(table: String, v: Long, column: String,
-      store: CommitStore): Map[String, String] = {
-    // commit-time sidecars AND suffixed retrofit sidecars
-    // ([[buildNdvIndex]]). Last-writer-wins needs an explicit sort key:
-    // lexicographic name order would put a retrofit n<v>-<uuid>.json BEFORE
-    // its version's commit sidecar n<v>.json ('-' < '.'), inverting the
-    // invariant — so order by (version, isRetrofit, name): within a
-    // version, a retrofit re-index overrides the commit sidecar, and
-    // multiple retrofits of one version tie-break deterministically by
-    // name (they cover disjoint files by construction — each sketches only
-    // the files it was pointed at — so the tie-break is belt-and-braces).
-    store.list(manifestDir(table))
-      .filter(n => n.startsWith("n") && n.endsWith(".json") &&
-        n.length >= 12 && n.substring(1, 12).forall(_.isDigit) &&
-        n.substring(1, 12).toLong <= v)
-      .sortBy(n => (n.substring(1, 12).toLong,
-        n.length > "n00000000000.json".length, n))
-      .flatMap { name =>
-        store.get(manifestDir(table), name).linesIterator.drop(1)
-          .map(l => unescapeLine(
-          l.trim.stripSuffix(",").stripPrefix("\"").stripSuffix("\"")))
-          .filter(l => l.nonEmpty && l != "]}")
-          .flatMap(_.split('\t') match {
-            case Array(p, c, hexSketch) if c == column => Some(p -> hexSketch)
-            case _ => None
-          })
-      }.toMap
-  }
 
   /** Approximate COUNT(DISTINCT column) from the NDV sketch sidecars —
     * exact sketch algebra over O(files) metadata: the per-file HLL
@@ -1930,22 +1860,26 @@ object SnapshotLake {
     */
   def approxDistinctFromSketches(spark: SparkSession, table: String,
       column: String, version: Option[Long] = None,
-      store: CommitStore = PosixLinkCommitStore): Option[Long] = {
-    val vs = versions(table, store)
-    require(vs.nonEmpty, s"no committed snapshots at $table")
-    val v = version.getOrElse(vs.max)
-    require(vs.contains(v), s"version $v not in committed set $vs")
-    val files = readManifest(table, v, store)
-    val sketches = sidecarSketches(table, v, column, store)
-    if (files.isEmpty || !files.forall(sketches.contains)) None
-    else {
+      store: CommitStore = PosixLinkCommitStore): Option[Long] =
+    coveredEntries(Ndv, table, column, version, store).map { sketches =>
       import spark.implicits._
-      val est = files.map(sketches).toDF("hex")
+      sketches.toDF("hex")
         .agg(hll_sketch_estimate(hll_union_agg(unhex(col("hex"))))
           .as("est"))
         .collect()(0).getLong(0)
-      Some(est)
     }
+
+  /** `kind`'s entry for `column` of every live file of `version`, or None
+    * when the snapshot is empty or any file lacks one. */
+  private def coveredEntries[E](kind: Sidecar[E], table: String,
+      column: String, version: Option[Long],
+      store: CommitStore): Option[Seq[E]] = {
+    val v = resolveVersion(table, version, store)
+    val files = readManifest(table, v, store)
+    val entries = readSidecars(kind, table, v, column, store)
+    if (files.nonEmpty && files.forall(entries.contains))
+      Some(files.map(entries))
+    else None
   }
 
   /** Metadata-only MIN/MAX over the commit stats sidecars — the range twin
@@ -1960,18 +1894,9 @@ object SnapshotLake {
     */
   def minMaxFromStats(table: String, column: String,
       version: Option[Long] = None,
-      store: CommitStore = PosixLinkCommitStore): Option[(Double, Double)] = {
-    val vs = versions(table, store)
-    require(vs.nonEmpty, s"no committed snapshots at $table")
-    val v = version.getOrElse(vs.max)
-    require(vs.contains(v), s"version $v not in committed set $vs")
-    val files = readManifest(table, v, store)
-    val stats = sidecarStats(table, v, column, store)
-    if (files.nonEmpty && files.forall(stats.contains)) {
-      val s = files.map(stats)
-      Some((s.map(_._1).min, s.map(_._2).max))
-    } else None
-  }
+      store: CommitStore = PosixLinkCommitStore): Option[(Double, Double)] =
+    coveredEntries(Stats, table, column, version, store)
+      .map(s => (s.map(_._1).min, s.map(_._2).max))
 
   /** Retrofit NDV sketches for files committed without `ndvCols` — the
     * [[buildBloomIndex]] pattern: compute sketches for ONLY the live files
@@ -1982,25 +1907,8 @@ object SnapshotLake {
     */
   def buildNdvIndex(spark: SparkSession, table: String,
       columns: Seq[String], version: Option[Long] = None,
-      store: CommitStore = PosixLinkCommitStore): Int = {
-    val vs = versions(table, store)
-    require(vs.nonEmpty, s"no committed snapshots at $table")
-    val v = version.getOrElse(vs.max)
-    require(vs.contains(v), s"version $v not in committed set $vs")
-    val files = readManifest(table, v, store)
-    val lines = columns.flatMap { c =>
-      val have = sidecarSketches(table, v, c, store).keySet
-      val missing = files.filterNot(have)
-      if (missing.isEmpty) Nil
-      else ndvSidecarLines(spark, table, missing, Seq(c))
-    }
-    if (lines.nonEmpty) {
-      val suffix = "-" + java.util.UUID.randomUUID.toString.take(8)
-      publishJsonSidecar(table, ndvName(v, suffix),
-        s"""{"ndv":$v,"rows":[""", lines, store)
-    }
-    lines.size
-  }
+      store: CommitStore = PosixLinkCommitStore): Int =
+    retrofit(spark, table, Ndv, columns, version, store)
 
   /** Metadata-only table profile — `ANALYZE TABLE` answered from the
     * lake's own sidecars: exact row count from parquet footers
@@ -2028,19 +1936,13 @@ object SnapshotLake {
   def readWhere(spark: SparkSession, table: String, predicate: Column,
       version: Option[Long] = None,
       store: CommitStore = PosixLinkCommitStore): DataFrame = {
-    val vs = versions(table, store)
-    require(vs.nonEmpty, s"no committed snapshots at $table")
-    val v = version.getOrElse(vs.max)
-    require(vs.contains(v), s"version $v not in committed set $vs")
+    val v = resolveVersion(table, version, store)
     val files = readManifest(table, v, store)
     if (files.isEmpty) return emptyFrame(spark, table, v, store)
       .where(predicate)
-    val kept = pruneByBlooms(spark, table, v,
-      pruneByStats(table, v, files, predicate, store), predicate, store)
-    if (kept.isEmpty) // schema from any manifest file; zero rows possible
-      spark.read.parquet(s"$table/${files.head}")
-        .where(predicate && lit(false))
-    else fastReadFiles(spark, table, v, kept, store).where(predicate)
+    readKept(spark, table, v, files, pruneByBlooms(spark, table, v,
+      pruneByStats(table, v, files, predicate, store), predicate, store),
+      predicate, store)
   }
 
   /** Memoized-inference read of a snapshot's file subset (r16, guide §1.4):
@@ -2071,15 +1973,10 @@ object SnapshotLake {
       version: Option[Long] = None,
       store: CommitStore = PosixLinkCommitStore,
       mergeSchema: Boolean = false): DataFrame = {
-    val vs = versions(table, store)
-    require(vs.nonEmpty, s"no committed snapshots at $table")
-    val v = version.getOrElse(vs.max)
-    require(vs.contains(v), s"version $v not in committed set $vs")
+    val v = resolveVersion(table, version, store)
     val files = readManifest(table, v, store)
     if (files.isEmpty) emptyFrame(spark, table, v, store)
-    else if (mergeSchema)
-      spark.read.option("mergeSchema", "true")
-        .parquet(files.map(f => s"$table/$f"): _*)
+    else if (mergeSchema) readMerged(spark, table, files)
     // r16: snapshot data files are immutable and the manifest records the
     // committed union column set, so the inference of a donor-led file
     // list is memoizable (guide §1.4 — each plain read paid a ~60 ms
@@ -2342,21 +2239,17 @@ object SnapshotLake {
     dropped.foreach { v =>
       store.delete(manifestDir(table), manifestName(v))
       store.delete(manifestDir(table), checkpointName(v)) // now chain-dead
-      store.delete(manifestDir(table), statsName(v)) // advisory sidecar
-      store.delete(manifestDir(table), ndvName(v)) // advisory sidecar
     }
-    if (dropped.nonEmpty) {
-      // bloom sidecars of dropped versions, including buildBloomIndex's
-      // suffixed ones; like stats, advisory — a still-live file whose bloom
-      // rode a dropped version's sidecar just stops skipping, never breaks
-      val gone = dropped.toSet
-      store.list(manifestDir(table))
-        .filter(n => (n.startsWith("b") || n.startsWith("n")) &&
-          n.endsWith(".json") &&
-          n.length >= 12 && n.substring(1, 12).forall(_.isDigit) &&
-          gone.contains(n.substring(1, 12).toLong))
-        .foreach(store.delete(manifestDir(table), _))
-    }
+    // sidecars of every kind below the oldest retained version, retrofits
+    // included — also those an earlier vacuum, killed between its deletes,
+    // left behind. Advisory: a still-live file whose entry rode a dropped
+    // version's sidecar just stops skipping, never breaks. A commit racing
+    // this vacuum publishes above every listed version, so it is never hit.
+    val floor = vs.filterNot(dropped.toSet).headOption
+      .getOrElse(vs.lastOption.fold(0L)(_ + 1))
+    store.list(manifestDir(table))
+      .filter(n => Sidecars.exists(_.parse(n).exists(_._1 < floor)))
+      .foreach(store.delete(manifestDir(table), _))
     // Live-set union across retained manifests: the shared resolution
     // cache makes this O(F + Σ retained deltas) — each retained version
     // resolves against its predecessor's cached entries instead of

@@ -15,7 +15,7 @@ import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
 import org.apache.spark.sql.sources.{DataSourceRegister, InsertableRelation}
 import org.apache.spark.sql.types.{DoubleType, FloatType, IntegerType, LongType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import graft.sinks.SnapshotLake
+import graft.sinks.{PosixLinkCommitStore, SnapshotLake}
 
 /** DataSource V2 connector for the snapshot lake — the fourth custom
   * Catalyst tier (after expressions, the optimizer rule, and the planner
@@ -76,18 +76,16 @@ class SnapshotLakeSource extends TableProvider with DataSourceRegister {
     val tsOpt = longOpt("timestampAsOf")
     require(vOpt.isEmpty || tsOpt.isEmpty,
       "versionAsOf and timestampAsOf are mutually exclusive")
-    val vs = SnapshotLake.versions(table)
-    require(vs.nonEmpty, s"no committed snapshots at $table")
-    // shared resolution with SnapshotLake.readAsOf (versionAt) so the SQL
-    // and DataFrame surfaces cannot drift. Note: Spark calls inferSchema
-    // and getTable as two separate provider calls, so an UNPINNED load
-    // racing a concurrent commit may infer its schema from version N and
-    // scan N+1 — the scan itself still reads exactly one manifest
-    // (snapshot-consistent); pin versionAsOf for fully stable resolution.
-    val v = vOpt.getOrElse(tsOpt match {
-      case None => vs.max
-      case Some(ts) => SnapshotLake.versionAt(table, ts)
-    })
+    // shared resolution with SnapshotLake.read / readAsOf (versionAt) so
+    // the SQL and DataFrame surfaces cannot drift. Note: Spark calls
+    // inferSchema and getTable as two separate provider calls, so an
+    // UNPINNED load racing a concurrent commit may infer its schema from
+    // version N and scan N+1 — the scan itself still reads exactly one
+    // manifest (snapshot-consistent); pin versionAsOf for fully stable
+    // resolution.
+    val v = tsOpt.fold(
+      SnapshotLake.resolveVersion(table, vOpt, PosixLinkCommitStore))(
+      SnapshotLake.versionAt(table, _))
     val files = SnapshotLake.manifestFiles(table, v)
     require(files.nonEmpty,
       s"snapshot v$v at $table has no data files (connector reads need " +

@@ -302,13 +302,18 @@ class CrashMatrixSpec extends SparkSpec {
     import spark.implicits._
     val golden = Files.createTempDirectory("graft_cm_vac_").resolve("t")
     val store = PosixLinkCommitStore
+    // each version carries a stats sidecar, so kills also land between a
+    // manifest's delete and its sidecar's
     (0 until 4).foreach { i =>
       SnapshotLake.commitAppend(
         spark.range(i * 10, i * 10 + 10).toDF("id"), golden.toString,
-        store = store)
+        store = store, statsCols = Seq("id"))
     }
     val latestIds = SnapshotLake.read(spark, golden.toString, None, store)
       .select($"id").as[Long].collect().sorted.toSeq
+    def droppedSidecars(t: JPath): Seq[String] = store.list(
+      t.resolve("_manifests")).filter(n => n.startsWith("s") &&
+      n.substring(1, 12).toLong < SnapshotLake.versions(t.toString).min)
     val m = {
       val work = Files.createTempDirectory("graft_cm_vacdry_").resolve("t")
       copyDir(golden, work)
@@ -340,6 +345,11 @@ class CrashMatrixSpec extends SparkSpec {
       assert(SnapshotLake.read(spark, work.toString, None, store)
         .select($"id").as[Long].collect().sorted.toSeq == latestIds,
         s"kill@$k: latest snapshot corrupted by vacuum recovery")
+      assert(droppedSidecars(work).isEmpty,
+        s"kill@$k: sidecars of dropped versions left: ${droppedSidecars(work)}")
+      assert(SnapshotLake.readRange(spark, work.toString, "id", 15, 35,
+        store = store).select($"id").as[Long].collect().sorted.toSeq ==
+        (15L to 35L), s"kill@$k: stats-pruned read after recovery")
     }
   }
 

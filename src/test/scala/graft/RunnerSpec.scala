@@ -180,6 +180,47 @@ class RunnerSpec extends SparkSpec {
     assert(runner.runPlan(plan).head.status == RunStatus.Failed)
   }
 
+  test("a failed part whose exception has no message records the " +
+      "exception class, and its notification names the plan and table") {
+    val notifier = new BufferNotifier
+    val lake = Files.createTempDirectory("graft_test_lake_").toString
+    val ledgerPath = Files.createTempDirectory("graft_test_ledger_")
+      .resolve("ledger.jsonl")
+    // the source read fails before any row is read, with a bare NPE
+    val failing = new graft.sources.CredentialsProvider {
+      def resolve(ref: Option[String]): graft.sources.JdbcCredentials =
+        throw new NullPointerException()
+    }
+    val runner = new PlanRunner(spark, sf0001, lake,
+      new FileLedger(ledgerPath), notifier, credentials = failing)
+    val plan = PlanCodec.parse(
+      s"""{"SourceName":"graft","SourceDatabase":"d","SourceSchema":"s",
+         |"SourceTable":"t_npe","Active":true,"MigrationPart":1,
+         |"JDBCConnectionString":"jdbc:h2:mem:graft_npe",
+         |"Query":"SELECT 1"}""".stripMargin)
+    val r = runner.runPlan(plan).head
+    assert(r.status == RunStatus.Failed)
+    assert(r.error.exists(_.contains("java.lang.NullPointerException")),
+      r.error)
+    val hash = plan.activeSpecs.head.executionHashId
+    // the ledger line reads back from disk with the error recorded
+    val entry = new FileLedger(ledgerPath).get(hash, "t_npe").get
+    assert(entry.status == RunStatus.Failed)
+    assert(entry.errorMessage.exists(
+      _.contains("java.lang.NullPointerException")), entry)
+    val (subject, body) = notifier.messages.last
+    assert(subject == "Extraction of t_npe FAILED")
+    assert(body.contains(hash) && body.contains("t_npe") &&
+      body.contains("java.lang.NullPointerException"), body)
+    // a ledger line written before the fix (a null message) still parses
+    Files.writeString(ledgerPath,
+      """{"executionHashId":"h0","sourceTable":"t0","status":"FAILED",""" +
+        """"errorMessage":null}""" + "\n",
+      java.nio.file.StandardOpenOption.APPEND)
+    val old = new FileLedger(ledgerPath).get("h0", "t0").get
+    assert(old.status == RunStatus.Failed && old.errorMessage.isEmpty)
+  }
+
   test("reconciliation: match, mismatch-warning, and no-expectation (A3)") {
     assert(Reconciliation(Some(5), 5).subject("t", RunStatus.Succeeded)
       == "Extraction of t SUCCEEDED")
