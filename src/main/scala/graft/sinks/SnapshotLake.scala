@@ -2,7 +2,7 @@ package graft.sinks
 
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, hex, hll_sketch_agg, hll_sketch_estimate, hll_union_agg, input_file_name, lit, max, min, not, unhex}
 
 /** Manifest-based snapshot versioning for a plain-parquet lake table — the
@@ -62,7 +62,7 @@ object SnapshotLake {
   /** `version`, or the latest when None; fails on a table with no commits
     * or a version outside the committed set. */
   private[graft] def resolveVersion(table: String, version: Option[Long],
-      store: CommitStore): Long = {
+      store: CommitStore = PosixLinkCommitStore): Long = {
     val vs = versions(table, store)
     require(vs.nonEmpty, s"no committed snapshots at $table")
     val v = version.getOrElse(vs.max)
@@ -254,6 +254,14 @@ object SnapshotLake {
       lines: Seq[String], store: CommitStore, suffix: String = ""): Boolean =
     store.putIfAbsent(manifestDir(table), kind.name(v, suffix),
       jsonBody(kind.header(v), lines))
+
+  /** Publish `lines` as the commit sidecar of the kind named by `prefix`
+    * (`s`, `b` or `n`) at version `v`: how a tool that synthesizes a lake
+    * writes sidecars without restating their format. */
+  private[graft] def publishSidecarLines(table: String, prefix: Char,
+      v: Long, lines: Seq[String], store: CommitStore): Boolean =
+    publishSidecar(table, Sidecars.find(_.prefix == prefix).get, v, lines,
+      store)
 
   /** Build and publish version `v`'s sidecars over the files it staged,
     * one `(kind, columns)` pair per kind. Runs after the manifest won `v`,
@@ -510,15 +518,9 @@ object SnapshotLake {
         val cols = colsFromHeader(h)
           .map(pc => pc ++ dataCols.filterNot(pc.toSet))
         lazy val baseEntries = manifestEntries(table, baseV, store)
-        val baseN = headerLong(h, "n").getOrElse(baseEntries.size.toLong)
-        done =
-          if (baseN < DeltaManifestThreshold)
-            writeFullManifestAtomic(table, v, baseEntries ++ entries, store,
-              dedup, cols)
-          else
-            writeDeltaManifestAtomic(table, v, baseV,
-              headerLong(h, "depth").getOrElse(0L) + 1,
-              baseN + entries.size, Nil, entries, store, dedup, cols)
+        done = writeOnBase(table, v, baseV, h,
+          headerLong(h, "n").getOrElse(baseEntries.size.toLong), baseEntries,
+          Set.empty, entries, store, dedup, cols)
       }
       // losing the version race to a concurrent attempt of the SAME dedup
       // key (two zombie retries) must converge on its version, not publish
@@ -533,27 +535,35 @@ object SnapshotLake {
     (v, true)
   }
 
+  /** Write version `v` as version `base` (header line `h`, `baseN`
+    * entries `baseEntries`) minus `removes` plus `adds`: FULL while the
+    * base holds fewer than [[DeltaManifestThreshold]] entries, else a DELTA
+    * one link deeper than the base. `removes` must be ⊆ the base's paths. */
+  private def writeOnBase(table: String, v: Long, base: Long, h: => String,
+      baseN: Long, baseEntries: => Seq[(String, Option[Long])],
+      removes: Set[String], adds: Seq[(String, Option[Long])],
+      store: CommitStore, dedup: Option[String],
+      cols: Option[Seq[String]]): Boolean =
+    if (baseN < DeltaManifestThreshold)
+      writeFullManifestAtomic(table, v,
+        baseEntries.filterNot(e => removes(e._1)) ++ adds, store, dedup, cols)
+    else writeDeltaManifestAtomic(table, v, base,
+      headerLong(h, "depth").getOrElse(0L) + 1,
+      baseN - removes.size + adds.size, removes.toSeq.sorted, adds, store,
+      dedup, cols)
+
   /** Stage `df` and publish it as a rewrite of `base` at exactly
     * `base + 1` (the compaction / COW / MERGE single-slot CAS — no internal
-    * retry): full vs delta form by base size, like [[publishManifest]].
-    * `removes` must be ⊆ the base's paths. Returns the new version, or
+    * retry), full or delta by [[writeOnBase]]. Returns the new version, or
     * None when the CAS is lost (the staged files await vacuum). */
   private def commitRewrite(spark: SparkSession, table: String, base: Long,
       baseEntries: Seq[(String, Option[Long])], removes: Set[String],
       df: DataFrame, store: CommitStore, dedup: String,
       cols: Option[Seq[String]]): Option[Long] = {
     val adds = stagedEntries(spark, table, stage(df, table))
-    val ok =
-      if (baseEntries.size < DeltaManifestThreshold)
-        writeFullManifestAtomic(table, base + 1,
-          baseEntries.filterNot(e => removes(e._1)) ++ adds, store,
-          Some(dedup), cols)
-      else
-        writeDeltaManifestAtomic(table, base + 1, base,
-          headerLong(headerLineOf(table, base, store), "depth")
-            .getOrElse(0L) + 1,
-          baseEntries.size.toLong - removes.size + adds.size,
-          removes.toSeq.sorted, adds, store, Some(dedup), cols)
+    val ok = writeOnBase(table, base + 1, base,
+      headerLineOf(table, base, store), baseEntries.size, baseEntries,
+      removes, adds, store, Some(dedup), cols)
     if (ok) maybeCheckpoint(table, base + 1, store)
     if (ok) Some(base + 1) else None
   }
@@ -669,9 +679,7 @@ object SnapshotLake {
   def restore(table: String, toVersion: Long,
       store: CommitStore = PosixLinkCommitStore,
       expectedBase: Option[Long] = None): Option[Long] = {
-    val vs = versions(table, store)
-    require(vs.contains(toVersion),
-      s"version $toVersion not in committed set $vs at $table")
+    resolveVersion(table, Some(toVersion), store)
     val base = resolveVersion(table, expectedBase, store)
     // always FULL form: a restore's file set is an OLD version's — writing
     // it self-contained keeps the restored head independent of the
@@ -739,12 +747,15 @@ object SnapshotLake {
         finally ConcurrentWritersConf.exit(df.sparkSession)
       } else w.partitionBy(partitionCols: _*).parquet(dataDir.toString)
     }
-    val s = Files.walk(dataDir)
-    try s.iterator().asScala
-      .filter(_.toString.endsWith(".parquet"))
+    walk(dataDir).filter(_.toString.endsWith(".parquet"))
       .map(p => Paths.get(table).relativize(p).toString.replace('\\', '/'))
-      .toSeq.sorted
-    finally s.close()
+      .sorted
+  }
+
+  /** Every path under `dir` (itself included), parents before children. */
+  private def walk(dir: Path): List[Path] = {
+    val s = Files.walk(dir)
+    try s.iterator().asScala.toList finally s.close()
   }
 
   /** Ref-counted flip of `spark.sql.maxConcurrentOutputFileWriters` for
@@ -936,26 +947,29 @@ object SnapshotLake {
     */
   private def fileStatsLines(spark: SparkSession, table: String,
       staged: Seq[String], cols: Seq[String]): Seq[String] =
-    footerStatsLines(spark, table, staged, cols).getOrElse {
-      perFileAggs(spark, table, staged, cols.flatMap(c => Seq(
-        min(col(c)).cast("double").as(s"mn_$c"),
-        max(col(c)).cast("double").as(s"mx_$c")))).flatMap { case (rel, r) =>
-        cols.zipWithIndex.flatMap { case (c, i) =>
-          val mn = r.get(1 + 2 * i); val mx = r.get(2 + 2 * i)
-          if (mn == null || mx == null) None
-          else Some(s"$rel\t$c\t$mn\t$mx")
-        }
-      }
-    }
+    footerStatsLines(spark, table, staged, cols).getOrElse(
+      perFileLines(spark, table, staged, cols,
+        c => Seq(min(c).cast("double"), max(c).cast("double"))))
 
-  /** One scan of `staged` grouped by file, `aggs` per file, collected
-    * driver-side (bounded by files × aggs — the broadcast-build idiom, not
-    * a data-path collect); each row keyed by its table-relative path. */
-  private def perFileAggs(spark: SparkSession, table: String,
-      staged: Seq[String], aggs: Seq[Column]): Seq[(String, Row)] =
+  /** Sidecar lines `relpath \t column \t a1 \t … \t an` from one scan of
+    * `staged` grouped by file, with the n aggregates `aggs(column)` of each
+    * of `cols`, collected driver-side (bounded by files × aggs — the
+    * broadcast-build idiom, not a data-path collect). A (file, column)
+    * with a null aggregate records no line. */
+  private def perFileLines(spark: SparkSession, table: String,
+      staged: Seq[String], cols: Seq[String],
+      aggs: Column => Seq[Column]): Seq[String] = {
+    val all = cols.flatMap(c => aggs(col(c)))
     spark.read.parquet(staged.map(f => s"$table/$f"): _*)
-      .groupBy(input_file_name().as("__f")).agg(aggs.head, aggs.tail: _*)
-      .collect().toSeq.map(r => relPath(r.getString(0)) -> r)
+      .groupBy(input_file_name().as("__f")).agg(all.head, all.tail: _*)
+      .collect().toSeq.flatMap { r =>
+        cols.zip((1 to all.size).map(r.get).grouped(all.size / cols.size))
+          .flatMap { case (c, a) =>
+            if (a.contains(null)) None
+            else Some((relPath(r.getString(0)) +: c +: a).mkString("\t"))
+          }
+      }
+  }
 
   private def footerStatsLines(spark: SparkSession, table: String,
       staged: Seq[String], cols: Seq[String]): Option[Seq[String]] = try {
@@ -1024,27 +1038,28 @@ object SnapshotLake {
       lo: Double, hi: Double, version: Option[Long] = None,
       store: CommitStore = PosixLinkCommitStore): DataFrame = {
     val v = resolveVersion(table, version, store)
-    val files = readManifest(table, v, store)
     // compare in the same cast-to-double space the sidecar stats live in —
     // a no-op for double columns (SimplifyCasts), the epoch-seconds
     // convention for timestamps
     val pred = col(column).cast("double") >= lo &&
       col(column).cast("double") <= hi
-    if (files.isEmpty) // delete-all / empty-overwrite snapshot: still a table
-      emptyFrame(spark, table, v, store)
-    else readKept(spark, table, v, files,
-      pruneByWindows(table, v, files, Seq((column, lo, hi)), store), pred,
-      store)
+    readPruned(spark, table, v, readManifest(table, v, store), pred, store)(
+      pruneByWindows(table, v, _, Seq((column, lo, hi)), store))
   }
 
-  /** `kept` ⊆ snapshot v's non-empty `files`, filtered by `pred`; with
-    * nothing kept, the schema of any manifest file and zero rows. */
-  private def readKept(spark: SparkSession, table: String, v: Long,
-      files: Seq[String], kept: Seq[String], pred: Column,
-      store: CommitStore): DataFrame =
-    if (kept.isEmpty)
+  /** Snapshot `v`'s `files` filtered by `pred`, opening only the files
+    * `prune` keeps. A delete-all / empty-overwrite snapshot is still a
+    * table ([[emptyFrame]]); with nothing kept, the schema of any manifest
+    * file and zero rows. */
+  private def readPruned(spark: SparkSession, table: String, v: Long,
+      files: Seq[String], pred: Column, store: CommitStore)(
+      prune: Seq[String] => Seq[String]): DataFrame = {
+    lazy val kept = prune(files)
+    if (files.isEmpty) emptyFrame(spark, table, v, store).where(pred)
+    else if (kept.isEmpty)
       spark.read.parquet(s"$table/${files.head}").where(pred && lit(false))
     else fastReadFiles(spark, table, v, kept, store).where(pred)
+  }
 
   /** OPTIMIZE analogue: rewrite the LATEST snapshot's row set as
     * `targetFiles` well-sized files and commit it as a new version whose
@@ -1209,17 +1224,14 @@ object SnapshotLake {
     }
     val inf = Double.PositiveInfinity
     predConjuncts(org.apache.spark.sql.GraftSqlBridge.expression(predicate))
-      .flatMap(PredCmp.unapply).flatMap {
-        case ("=", a, b) =>
-          predAttr(a).zip(num(b)).map { case (c, v) => (c, v, v) } ++
-            predAttr(b).zip(num(a)).map { case (c, v) => (c, v, v) }
-        case (">" | ">=", a, b) =>
-          predAttr(a).zip(num(b)).map { case (c, v) => (c, v, inf) } ++
-            predAttr(b).zip(num(a)).map { case (c, v) => (c, -inf, v) }
-        case ("<" | "<=", a, b) =>
-          predAttr(a).zip(num(b)).map { case (c, v) => (c, -inf, v) } ++
-            predAttr(b).zip(num(a)).map { case (c, v) => (c, v, inf) }
-        case _ => Nil
+      .flatMap(PredCmp.unapply).flatMap { case (op, a, b) =>
+        // (column, literal, literal on the left) for either operand order
+        (predAttr(a).zip(num(b)).map((_, false)) ++
+          predAttr(b).zip(num(a)).map((_, true))).map { case ((c, v), flip) =>
+          if (op == "=") (c, v, v)
+          else if (op.startsWith(">") != flip) (c, v, inf) // column ≥ v
+          else (c, -inf, v) // column ≤ v
+        }
       }
   }
 
@@ -1326,14 +1338,6 @@ object SnapshotLake {
       store: CommitStore): Map[String, (String, Int, Int, java.util.BitSet)] =
     readSidecars(Bloom, table, v, column, store)
 
-  /** Equality constraints in `predicate`'s top-level conjuncts:
-    * (column, literal values) pairs where the predicate requires the column
-    * to equal ONE OF the values (a bare `=` yields one value; `IN` yields
-    * its list). Each is a NECESSARY condition, so a file whose bloom
-    * refutes every value for some conjunct cannot contain a matching row.
-    * Anything else (Or/Not/expressions over the column) yields nothing —
-    * callers fall back to scanning.
-    */
   /** Top-level AND-conjuncts of a Column's Catalyst expression, and the
     * bare-attribute extractor — shared by stats pruning
     * ([[predicateBounds]]) and bloom pruning ([[equalityProbes]]) so the
@@ -1385,6 +1389,14 @@ object SnapshotLake {
     case _ => None
   }
 
+  /** Equality constraints in `predicate`'s top-level conjuncts:
+    * (column, literal values) pairs where the predicate requires the column
+    * to equal ONE OF the values (a bare `=` yields one value; `IN` yields
+    * its list). Each is a NECESSARY condition, so a file whose bloom
+    * refutes every value for some conjunct cannot contain a matching row.
+    * Anything else (Or/Not/expressions over the column) yields nothing —
+    * callers fall back to scanning.
+    */
   private[graft] def equalityProbes(
       predicate: Column): Seq[(String, Seq[Column])] = {
     import org.apache.spark.sql.catalyst.expressions._
@@ -1397,23 +1409,19 @@ object SnapshotLake {
       case l: Literal => Some(org.apache.spark.sql.GraftSqlBridge.column(l))
       case _ => None
     }
+    // `a` must equal one of `list`: every branch must be a literal, or the
+    // constraint is not fully probeable
+    def oneOf(a: Expression, list: Seq[Expression]): Seq[(String, Seq[Column])] = {
+      val vals = list.flatMap(litCol)
+      if (vals.length == list.length) predAttr(a).map(c => (c, vals)).toSeq
+      else Nil
+    }
     predConjuncts(org.apache.spark.sql.GraftSqlBridge.expression(predicate))
       .flatMap {
-        case PredCmp("=", a, b) =>
-          predAttr(a).zip(litCol(b)).map { case (c, v0) => (c, Seq(v0)) } ++
-            predAttr(b).zip(litCol(a)).map { case (c, v0) => (c, Seq(v0)) }
-        case In(a, list) if list.nonEmpty =>
-          val vals = list.flatMap(litCol)
-          // every branch must be a literal, or the IN is not fully probeable
-          if (vals.length == list.length)
-            predAttr(a).map(c => (c, vals)).toSeq
-          else Nil
+        case PredCmp("=", a, b) => oneOf(a, Seq(b)) ++ oneOf(b, Seq(a))
+        case In(a, list) if list.nonEmpty => oneOf(a, list)
         case f: UnresolvedFunction if f.nameParts.last.equalsIgnoreCase("in") &&
-          f.arguments.length >= 2 =>
-          val vals = f.arguments.tail.flatMap(litCol)
-          if (vals.length == f.arguments.length - 1)
-            predAttr(f.arguments.head).map(c => (c, vals)).toSeq
-          else Nil
+          f.arguments.length >= 2 => oneOf(f.arguments.head, f.arguments.tail)
         case _ => Nil
       }
   }
@@ -1753,14 +1761,6 @@ object SnapshotLake {
     }
   }
 
-  /** Stats-pruned filtered read: `read(version).where(predicate)` with
-    * files the sidecar stats refute never opened — the general-predicate
-    * sibling of [[readRange]]. Any conjunction containing single-column
-    * numeric range comparisons prunes ([[predicateBounds]]); predicates it
-    * can't decompose just fall back to reading everything, and the
-    * predicate is applied either way, so the result is EXACTLY the
-    * unpruned read's.
-    */
   /** Metadata-only COUNT(*): the snapshot's row count summed from the
     * PER-FILE COUNTS the committing writer recorded in the manifest
     * entries (read at commit time from the freshly staged footers — r15,
@@ -1829,9 +1829,9 @@ object SnapshotLake {
   private def parFiles[A, B](files: Seq[A])(f: A => B): Seq[B] =
     graft.util.Par.map(files, 64)(f)
 
-  /** Per-file HLL sketch lines "relpath\tcol\thex(sketch)" — one scan
-    * of the freshly staged files grouped by input_file_name (the
-    * fileStatsLines fallback shape); lgK 12 ≈ ±1.6% standard error.
+  /** Per-file HLL sketch lines "relpath\tcol\thex(sketch)" — one
+    * [[perFileLines]] scan of the freshly staged files; lgK 12 ≈ ±1.6%
+    * standard error.
     * Spark's DataSketches binaries are mergeable: O(files) sidecar lines
     * answer approx-count-distinct at ANY later point without a scan, since
     * a union of sketches over a file subset is exact sketch algebra (the
@@ -1839,13 +1839,8 @@ object SnapshotLake {
     */
   private def ndvSidecarLines(spark: SparkSession, table: String,
       staged: Seq[String], cols: Seq[String]): Seq[String] =
-    perFileAggs(spark, table, staged,
-      cols.map(c => hex(hll_sketch_agg(col(c), 12)).as(s"sk_$c")))
-      .flatMap { case (rel, r) =>
-        cols.zipWithIndex.flatMap { case (c, i) =>
-          Option(r.getString(1 + i)).map(hx => s"$rel\t$c\t$hx")
-        }
-      }
+    perFileLines(spark, table, staged, cols,
+      c => Seq(hex(hll_sketch_agg(c, 12))))
 
   /** Approximate COUNT(DISTINCT column) from the NDV sketch sidecars —
     * exact sketch algebra over O(files) metadata: the per-file HLL
@@ -1933,16 +1928,22 @@ object SnapshotLake {
     rows.toDF("column", "min_value", "max_value", "ndv_est", "n_rows")
   }
 
+  /** Stats-pruned filtered read: `read(version).where(predicate)` with
+    * files the sidecar stats (or, for equality conjuncts, the bloom
+    * sidecars) refute never opened — the general-predicate sibling of
+    * [[readRange]]. Any conjunction containing single-column
+    * numeric range comparisons prunes ([[predicateBounds]]); predicates it
+    * can't decompose just fall back to reading everything, and the
+    * predicate is applied either way, so the result is EXACTLY the
+    * unpruned read's.
+    */
   def readWhere(spark: SparkSession, table: String, predicate: Column,
       version: Option[Long] = None,
       store: CommitStore = PosixLinkCommitStore): DataFrame = {
     val v = resolveVersion(table, version, store)
-    val files = readManifest(table, v, store)
-    if (files.isEmpty) return emptyFrame(spark, table, v, store)
-      .where(predicate)
-    readKept(spark, table, v, files, pruneByBlooms(spark, table, v,
-      pruneByStats(table, v, files, predicate, store), predicate, store),
-      predicate, store)
+    readPruned(spark, table, v, readManifest(table, v, store), predicate,
+      store)(fs => pruneByBlooms(spark, table, v,
+        pruneByStats(table, v, fs, predicate, store), predicate, store))
   }
 
   /** Memoized-inference read of a snapshot's file subset (r16, guide §1.4):
@@ -2022,9 +2023,7 @@ object SnapshotLake {
   def changesBetween(spark: SparkSession, table: String, from: Long, to: Long,
       store: CommitStore = PosixLinkCommitStore): DataFrame = {
     require(from <= to, s"from=$from must be <= to=$to")
-    val vs = versions(table, store)
-    require(vs.contains(from) && vs.contains(to),
-      s"versions [$from, $to] not both in committed set $vs")
+    Seq(from, to).foreach(v => resolveVersion(table, Some(v), store))
     val base = readManifest(table, from, store).toSet
     val delta = readManifest(table, to, store).filterNot(base)
     if (delta.isEmpty)
@@ -2035,16 +2034,6 @@ object SnapshotLake {
     else fastReadFiles(spark, table, to, delta, store)
   }
 
-  /** Delete data files referenced by NO manifest (crashed/lost commits).
-    * Optionally drop manifests older than `retainVersions` first, making
-    * their exclusively-owned files reclaimable. Returns deleted file count.
-    *
-    * `minAgeMs` protects IN-FLIGHT commits: a writer between stage() and
-    * publish has unreferenced files that are not dead — only files older
-    * than the threshold are reclaimed (the Delta/Iceberg retention rule).
-    * The 1 h default assumes no commit stages longer than that; pass 0 only
-    * when no writer can be running.
-    */
   // ───────────────────── schema evolution (union-by-name) ─────────────────
 
   /** The table's merged (union-by-name) schema at a version: parquet FOOTER
@@ -2102,10 +2091,8 @@ object SnapshotLake {
       .map(_.stripPrefix(pre).stripSuffix(".json").toLong)
       .maxOption
       .map { seq =>
-        val v = """"version":(\d+)""".r
-          .findFirstMatchIn(store.get(manifestDir(table), s"$pre$seq.json"))
-          .map(_.group(1).toLong)
-          .getOrElse(throw new IllegalStateException(
+        val v = headerLong(store.get(manifestDir(table), s"$pre$seq.json"),
+          "version").getOrElse(throw new IllegalStateException(
             s"corrupt branch ref $name@$seq at $table"))
         (seq, v)
       }
@@ -2185,7 +2172,17 @@ object SnapshotLake {
     v
   }
 
-  /** Concurrency contract (r13 review): vacuum races CONSUMERS safely
+  /** Delete data files referenced by NO manifest (crashed/lost commits).
+    * Optionally drop manifests older than `retainVersions` first, making
+    * their exclusively-owned files reclaimable. Returns deleted file count.
+    *
+    * `minAgeMs` protects IN-FLIGHT commits: a writer between stage() and
+    * publish has unreferenced files that are not dead — only files older
+    * than the threshold are reclaimed (the Delta/Iceberg retention rule).
+    * The 1 h default assumes no commit stages longer than that; pass 0 only
+    * when no writer can be running.
+    *
+    * Concurrency contract (r13 review): vacuum races CONSUMERS safely
     * (readers of retained versions; `minAgeMs` shields freshly staged
     * files of in-flight commits), but NOT a concurrent [[restore]] /
     * [[commitTag]]-to-an-old-version: a restore re-references a dropped
@@ -2282,10 +2279,8 @@ object SnapshotLake {
     val dataRoot = Paths.get(table, "data")
     if (!Files.exists(dataRoot)) return 0L
     val cutoff = System.currentTimeMillis() - minAgeMs
-    val s = Files.walk(dataRoot)
-    val all = try s.iterator().asScala
-      .filter(p => p.toString.endsWith(".parquet")).toSeq finally s.close()
-    val dead = all.filterNot(p =>
+    val dead = walk(dataRoot).filter(_.toString.endsWith(".parquet"))
+      .filterNot(p =>
       live.contains(Paths.get(table).relativize(p).toString))
       .filter(p => Files.getLastModifiedTime(p).toMillis < cutoff)
     dead.foreach(p => Files.deleteIfExists(p))
@@ -2296,15 +2291,9 @@ object SnapshotLake {
     try d.iterator().asScala.filter(Files.isDirectory(_))
       .filter(dir => Files.getLastModifiedTime(dir).toMillis < cutoff)
       .foreach { dir =>
-        val c = Files.walk(dir)
-        val hasLive = try c.iterator().asScala.exists(p =>
-          p.toString.endsWith(".parquet")) finally c.close()
-        if (!hasLive) {
-          val w = Files.walk(dir)
-          try w.sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => Files.deleteIfExists(p))
-          finally w.close()
-        }
+        val all = walk(dir)
+        if (!all.exists(_.toString.endsWith(".parquet")))
+          all.reverse.foreach(Files.deleteIfExists(_))
       }
     finally d.close()
     dead.size.toLong

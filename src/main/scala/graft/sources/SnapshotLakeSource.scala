@@ -15,7 +15,7 @@ import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
 import org.apache.spark.sql.sources.{DataSourceRegister, InsertableRelation}
 import org.apache.spark.sql.types.{DoubleType, FloatType, IntegerType, LongType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import graft.sinks.{PosixLinkCommitStore, SnapshotLake}
+import graft.sinks.SnapshotLake
 
 /** DataSource V2 connector for the snapshot lake — the fourth custom
   * Catalyst tier (after expressions, the optimizer rule, and the planner
@@ -83,8 +83,7 @@ class SnapshotLakeSource extends TableProvider with DataSourceRegister {
     // version N and scan N+1 — the scan itself still reads exactly one
     // manifest (snapshot-consistent); pin versionAsOf for fully stable
     // resolution.
-    val v = tsOpt.fold(
-      SnapshotLake.resolveVersion(table, vOpt, PosixLinkCommitStore))(
+    val v = tsOpt.fold(SnapshotLake.resolveVersion(table, vOpt))(
       SnapshotLake.versionAt(table, _))
     val files = SnapshotLake.manifestFiles(table, v)
     require(files.nonEmpty,

@@ -83,8 +83,10 @@ object MetadataScaleProbe {
       // ---- synthesize: data files (hard links) + manifests in the
       // WRITER'S OWN v2 format (r15): full form for v0, delta form above,
       // a self-contained checkpoint sidecar every 64th chain link — the
-      // exact shapes SnapshotLake.publishManifest produces at this scale —
-      // plus stats + bloom sidecars in the documented line format. Every
+      // exact shapes SnapshotLake.publishManifest produces at this scale,
+      // as the format comment at the top of SnapshotLake states them —
+      // plus stats + bloom sidecars written through the lake's own
+      // sidecar writer (SnapshotLake.publishSidecarLines). Every
       // entry carries its row count (the seed is a 1-row file), so
       // countRows exercises the O(manifest) fast path, as a v2-written
       // table would.
@@ -128,21 +130,16 @@ object MetadataScaleProbe {
           }
           // stats: each file idx k owns the disjoint x-range [k, k+0.4] —
           // a [0, 0.01·nFiles] range query keeps ~1% of files
-          val statsLines = fresh.zipWithIndex.map { case (f, i) =>
-            val k = v * perVersion + i
-            "\"" + s"$f\tx\t$k.0\t$k.4" + "\""
-          }
-          store.putIfAbsent(mdir, f"s$v%011d.json",
-            statsLines.mkString(s"""{"stats":$v,"rows":[""" + "\n",
-              ",\n", "\n]}"))
+          SnapshotLake.publishSidecarLines(table, 's', v,
+            fresh.zipWithIndex.map { case (f, i) =>
+              val k = v * perVersion + i
+              s"$f\tx\t$k.0\t$k.4"
+            }, store)
           // bloom: one-byte bitset (bit 0 only) per file on id — a probe
           // for a nonzero literal refutes nearly every file, so the timing
           // covers full sidecar load + per-file k-position tests
-          val bloomLines = fresh.map { f =>
-            "\"" + s"$f\tid\tbigint\t8192\t5\tAQ==" + "\""
-          }
-          store.putIfAbsent(mdir, f"b$v%011d.json",
-            bloomLines.mkString("{\"blooms\":[\n", ",\n", "\n]}"))
+          SnapshotLake.publishSidecarLines(table, 'b', v,
+            fresh.map(f => s"$f\tid\tbigint\t8192\t5\tAQ=="), store)
         }
         bytes
       }

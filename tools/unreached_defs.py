@@ -15,14 +15,14 @@ extend `App`.
 
 Run from the repository root:
 
-    python3 tools/unreached_defs.py           # one line per unreached def
-    python3 tools/unreached_defs.py --count   # totals only
+    python3 tools/unreached_defs.py
+
+It prints one line per unreached definition, then a totals line.
 
 The output is a candidate list for deletion, not a verdict: a name shared
 by two definitions hides both, and a test-only definition may be a spec
 oracle (a reference answer for another path) that should stay.
 """
-import argparse
 import collections
 import os
 import re
@@ -98,9 +98,6 @@ def is_entry_point(lines, i):
 
 
 def main():
-    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("--count", action="store_true", help="print totals only")
-    args = ap.parse_args()
     if not os.path.isdir("src/main/scala"):
         sys.exit("run from the repository root")
     main_counts = token_counts(MAIN, (".scala", ".java", ".py",
@@ -109,9 +106,8 @@ def main():
     unreached = [(p, n, k, name, test_counts[name] > 0)
                  for p, n, k, name, own in definitions()
                  if main_counts[name] - own <= 0]
-    if not args.count:
-        for p, n, k, name, tested in unreached:
-            print(f"{p}:{n}  {k} {name}" + ("  [test-only]" if tested else ""))
+    for p, n, k, name, tested in unreached:
+        print(f"{p}:{n}  {k} {name}" + ("  [test-only]" if tested else ""))
     tested = sum(1 for u in unreached if u[4])
     print(f"{len(unreached)} unreached ({tested} test-only, "
           f"{len(unreached) - tested} with no caller at all)")
