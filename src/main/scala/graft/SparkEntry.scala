@@ -491,17 +491,18 @@ object SparkEntry {
         .orderBy(col("l_orderkey"), col("l_linenumber"))
     }),
 
-    // K2 — date-partitioned sink round-trip: write year/month layout (day
-    // kept as a data column), read it back (partition-pruning layout proof).
-    // repartition on the partition keys first so each task writes only its
-    // own partitions — one file per partition instead of tasks × partitions
-    // small files (the thing that kills partitioned writes at scale).
+    // K2 — date-partitioned sink round-trip: land lineitem through the
+    // runner's own write path (LakeWriter.writeCounted, date column →
+    // year/month/day layout clustered by a REBALANCE), read it back through
+    // the partition layout (unpadded values round-trip through directory
+    // names).
     "k2_partitioned_roundtrip" -> ((s, dir) => {
       val out = java.nio.file.Files.createTempDirectory("graft_k2_").toString
-      Transforms.datePartColumns("l_shipdate")(tbl(s, dir, "lineitem"))
-        .repartition(col("year"), col("month"))
-        .write.mode("overwrite").partitionBy("year", "month").parquet(out)
-      s.read.parquet(out)
+      val src = tbl(s, dir, "lineitem").select(
+        col("l_orderkey"), col("l_linenumber"), col("l_shipdate"))
+      graft.sinks.LakeWriter.writeCounted(src, out, "graft/main/lineitem",
+        Some("l_shipdate"), graft.sinks.WriteMode.Append)
+      s.read.parquet(s"$out/graft/main/lineitem")
         .select(col("l_orderkey"), col("l_linenumber"),
           col("year").cast("string").as("year"),
           col("month").cast("string").as("month"),
@@ -511,15 +512,16 @@ object SparkEntry {
 
     // K1 — unpartitioned sink with X2 size-tiered coalesce
     // (`sybaseiq_extractor.py:156-164` layout, `:128-137` tiering): write
-    // through the real LakeWriter K1 branch, read the landed files back.
-    // Round-trip equality proves the tiered rewrite moved every row.
+    // through the runner's write path (LakeWriter.writeCounted, K1 branch),
+    // read the landed files back. Round-trip equality proves the tiered
+    // rewrite moved every row.
     "k1_unpartitioned_roundtrip" -> ((s, dir) => {
       val out = java.nio.file.Files.createTempDirectory("graft_k1_").toString
       val src = tbl(s, dir, "orders").select(
         col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
         col("o_totalprice"))
-      graft.sinks.LakeWriter.write(src, out, "graft/main/orders",
-        s3PartitionColumn = None, rowCount = src.count())
+      graft.sinks.LakeWriter.writeCounted(src, out, "graft/main/orders",
+        None, graft.sinks.WriteMode.Append)
       s.read.parquet(s"$out/graft/main/orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
           round(col("o_totalprice"), 2).as("o_totalprice"))
@@ -528,15 +530,16 @@ object SparkEntry {
 
     // K3 — single-column partitioned sink (non-date S3 partition column →
     // Hive layout on that column, `sybaseiq_extractor.py:245-250`): write
-    // through the LakeWriter K3 branch, read back through the partition
-    // layout (values round-trip through directory names).
+    // through the runner's write path (LakeWriter.writeCounted, K3 branch),
+    // read back through the partition layout (values round-trip through
+    // directory names).
     "k3_column_partition_roundtrip" -> ((s, dir) => {
       val out = java.nio.file.Files.createTempDirectory("graft_k3_").toString
       val src = tbl(s, dir, "orders").select(
         col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
         col("o_orderstatus"))
-      graft.sinks.LakeWriter.write(src, out, "graft/main/orders",
-        s3PartitionColumn = Some("o_orderstatus"), rowCount = src.count())
+      graft.sinks.LakeWriter.writeCounted(src, out, "graft/main/orders",
+        Some("o_orderstatus"), graft.sinks.WriteMode.Append)
       s.read.parquet(s"$out/graft/main/orders")
         .select(col("o_orderkey"), col("o_custkey"),
           round(col("o_totalprice"), 2).as("o_totalprice"),
@@ -2775,23 +2778,26 @@ object SparkEntry {
         .orderBy(col("win_start"), col("event_type"))
     }),
 
-    // K7 (extension) — latest-wins upsert: base load then a versioned
-    // update batch through LakeWriter.upsertLatestWins (MERGE analogue on
-    // partitioned parquet); the read-back state must equal the SQL CASE
-    // oracle. Dynamic overwrite touches only partitions in the incoming.
+    // K7 (extension) — latest-wins upsert: a base load then a versioned
+    // update batch, each applied as a changelog batch through
+    // ChangeDataCapture.applyChangelogBatch — SnapshotLake.merge guarded by
+    // the incoming-wins-ties rule; the read-back state must equal the SQL
+    // CASE oracle.
     "k7_upsert_roundtrip" -> ((s, dir) => {
-      val lake = java.nio.file.Files.createTempDirectory("graft_ups_").toString
+      val lake = java.nio.file.Files.createTempDirectory("graft_ups_")
+        .resolve("orders").toString
       val orders = tbl(s, dir, "orders")
-      val base = orders.select(col("o_orderkey"), col("o_orderstatus"),
-        col("o_totalprice"), lit(1L).as("version"))
-      graft.sinks.LakeWriter.upsertLatestWins(base, lake, "t/main/orders",
-        Seq("o_orderkey"), "version", Some("o_orderstatus"))
-      val incoming = orders.where(pmod(col("o_orderkey"), lit(3)) === 0)
+      def upsert(batch: DataFrame): Unit =
+        graft.streaming.ChangeDataCapture.applyChangelogBatch(s, lake,
+          batch.withColumn("tie", lit(0L)).withColumn("op", lit("U")),
+          Seq("o_orderkey"), "version", "tie", "op",
+          Seq("o_orderstatus", "o_totalprice"))
+      upsert(orders.select(col("o_orderkey"), col("o_orderstatus"),
+        col("o_totalprice"), lit(1L).as("version")))
+      upsert(orders.where(pmod(col("o_orderkey"), lit(3)) === 0)
         .select(col("o_orderkey"), col("o_orderstatus"),
-          (col("o_totalprice") * 2).as("o_totalprice"), lit(2L).as("version"))
-      graft.sinks.LakeWriter.upsertLatestWins(incoming, lake, "t/main/orders",
-        Seq("o_orderkey"), "version", Some("o_orderstatus"))
-      s.read.parquet(s"$lake/t/main/orders")
+          (col("o_totalprice") * 2).as("o_totalprice"), lit(2L).as("version")))
+      graft.sinks.SnapshotLake.read(s, lake)
         .select(col("o_orderkey"), col("version"),
           round(col("o_totalprice"), 2).as("o_totalprice"))
         .orderBy(col("o_orderkey"))

@@ -29,8 +29,7 @@ case class MinHashSig(child: Expression, numPerm: Int, seed: Long)
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  // deterministic (a, b) pairs, interleaved — same recipe as
-  // Dedup.permConstants
+  // deterministic (a, b) pairs, interleaved (see MinHashSig.abFlat)
   private lazy val ab: Array[Long] = MinHashSig.abFlat(numPerm, seed)
 
   override def nullSafeEval(input: Any): Any =
@@ -49,6 +48,8 @@ case class MinHashSig(child: Expression, numPerm: Int, seed: Long)
 object MinHashSig {
   val Prime: Long = 2147483647L
 
+  /** Deterministic (a, b) permutation constants, seeded — identical on
+    * every executor and across runs — flattened as a0, b0, a1, b1, … */
   def abFlat(numPerm: Int, seed: Long): Array[Long] = {
     val r = new scala.util.Random(seed)
     val out = new Array[Long](numPerm * 2)

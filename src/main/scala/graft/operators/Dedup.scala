@@ -18,14 +18,6 @@ object Dedup {
 
   val Prime: Long = 2147483647L // 2^31-1, Mersenne — MinHash modulus
 
-  /** Deterministic (a, b) permutation constants, seeded — identical on every
-    * executor and across runs. */
-  def permConstants(numPerm: Int, seed: Long = 42L): Seq[(Long, Long)] = {
-    val r = new scala.util.Random(seed)
-    Seq.fill(numPerm)((1L + r.nextInt(Int.MaxValue - 1).toLong,
-      r.nextInt(Int.MaxValue).toLong))
-  }
-
   /** Exact dedup: one representative row (min id) per distinct text.
     * Hash-groupBy — partial map-side aggregation + one shuffle on the text
     * key; at 100 TB swap the raw text key for `fingerprint(text)` (md5) to
@@ -526,7 +518,7 @@ object Dedup {
     // evaluates the gram pipeline once per join branch and once per sizes
     // branch. The [[gramHashes]]+FromHashes split is for callers that
     // checkpoint the hashed frame and reuse it across operators
-    // ([[minhashQualityMetrics]]).
+    // ([[minhashQualityMetricsFromParts]]).
     val canon = docs.select(col(idCol).as("id"),
       T.canonicalText(col(textCol)).as("ct"))
     val sh = canon
@@ -836,28 +828,12 @@ object Dedup {
     * precision = |lsh ∩ exact(≥looseThreshold)| / |lsh|  (an LSH pair is
     * "fine" if its true Jaccard clears the loose floor — band collisions
     * legitimately surface pairs slightly under the target threshold).
-    */
-  def minhashQualityMetrics(docs: DataFrame, idCol: String, textCol: String,
-      shingleK: Int = 8, numPerm: Int = 64, bands: Int = 16,
-      threshold: Double = 0.5, looseThreshold: Double = 0.2,
-      recallFloor: Double = 0.7, precisionFloor: Double = 0.8): DataFrame = {
-    // One shared gram-hash frame feeds both the exact baseline and the
-    // signatures (the regexp/shingle pass is the dominant map-side cost —
-    // computing it per branch doubled it); both pair sets are checkpointed
-    // because each is consumed by two metric joins.
-    val hashed = gramHashes(docs, idCol, textCol, shingleK)
-      .localCheckpoint(false)
-    val truth = ngramJaccardPairsFromHashes(hashed, looseThreshold)
-      .localCheckpoint(false)
-    minhashQualityMetricsFromParts(hashed, truth, idCol, numPerm, bands,
-      threshold, recallFloor, precisionFloor,
-      looseThreshold = looseThreshold)
-  }
-
-  /** [[minhashQualityMetrics]] over a pre-built (checkpointed) gram-hash
-    * frame and pre-mined truth pairs (exact Jaccard, already ≥ the loose
-    * threshold). The form the pipeline runs when the gram table and pair
-    * mine are materialized once and shared across dedup operators.
+    *
+    * Runs over a pre-built (checkpointed) gram-hash frame
+    * ([[gramHashes]]) and pre-mined truth pairs (exact Jaccard, already ≥
+    * the loose threshold, [[ngramJaccardPairsFromHashes]]): the gram table
+    * and pair mine are materialized once and shared across dedup
+    * operators.
     */
   def minhashQualityMetricsFromParts(hashed: DataFrame, truth: DataFrame,
       idCol: String, numPerm: Int, bands: Int, threshold: Double,
@@ -950,28 +926,13 @@ object Dedup {
   }
 
   /** One-row quality gate for SimHash near-dup mining: near-identical pairs
-    * (exact n-gram Jaccard ≥ exactThreshold — few token edits apart) must be
-    * recovered at ≥ recallFloor by the Hamming-≤maxHamming SimHash pass.
-    * Same oracle split as [[minhashQualityMetrics]]: the exact count is
-    * SQL-recomputable, the recall property is pinned as a boolean.
+    * (`truth`: exact n-gram Jaccard already filtered ≥ the exact threshold
+    * — few token edits apart) must be recovered at ≥ recallFloor by the
+    * Hamming-≤maxHamming SimHash pass. Same oracle split as
+    * [[minhashQualityMetricsFromParts]]: the exact count is
+    * SQL-recomputable, the recall property is pinned as a boolean. Taking
+    * the truth pre-mined lets one pair mine serve every dedup operator.
     */
-  def simhashQualityMetrics(docs: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3, shingleK: Int = 8, exactThreshold: Double = 0.8,
-      recallFloor: Double = 0.6): DataFrame = {
-    // Checkpoint both mining pipelines: embedding them raw in the metric
-    // join defeats the gram self-join's ReusedExchange (measured 5× slower).
-    // The truth side goes through a checkpointed gram-hash frame so the
-    // shingle pipeline runs once, not once per join/sizes branch.
-    val exact = ngramJaccardPairsFromHashes(
-      gramHashes(docs, idCol, textCol, shingleK).localCheckpoint(false),
-      exactThreshold)
-    simhashQualityMetricsFromTruth(docs, exact, idCol, textCol, maxHamming,
-      recallFloor)
-  }
-
-  /** [[simhashQualityMetrics]] over pre-mined truth pairs (exact Jaccard
-    * already filtered ≥ the exact threshold) — for callers sharing one pair
-    * mine across dedup operators. */
   def simhashQualityMetricsFromTruth(docs: DataFrame, truth: DataFrame,
       idCol: String, textCol: String, maxHamming: Int,
       recallFloor: Double, maxBucketSize: Int = GovernedCap): DataFrame = {

@@ -1,7 +1,7 @@
 package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.functions.{col, count, lit}
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.types.StructType
 import graft.operators.Transforms
@@ -13,6 +13,10 @@ import graft.operators.Transforms
   * the Glue catalog (`sybaseiq_extractor.py:156-164,239-255`). Spark-native:
   * Hive-style `partitionBy` Parquet layout, which gives Catalyst static and
   * dynamic partition pruning at read time with no extra index.
+  *
+  * This layer is that sink and nothing more: an append write plus catalog
+  * registration. Row-level change (MERGE, latest-wins upsert, CDC apply)
+  * and compaction belong to [[SnapshotLake]] alone.
   */
 object WriteMode extends Enumeration {
   /** Append — the reference's only enabled mode (`MaxRetries: 0` +
@@ -25,17 +29,6 @@ object WriteMode extends Enumeration {
   val Append, OverwritePartitions = Value
 }
 
-/** Table format for the lake layout, orthogonal to [[WriteMode]]. The north
-  * star names "Parquet/Delta"; Delta adds ACID commits + compaction on the
-  * append path. Delta requires its runtime jars + session extension — absent
-  * in this sandbox (offline resolver), so the Delta path is implemented but
-  * availability-gated: [[LakeWriter.deltaAvailable]] reports the classpath
-  * probe and DeltaSinkSpec skips itself when the jars are missing.
-  */
-object LakeFormat extends Enumeration {
-  val Parquet, Delta = Value
-}
-
 /** What one write landed: its path and layout, the Parquet file count under
   * the path, and the row count and schema of the landed frame (partition
   * columns included). */
@@ -43,27 +36,6 @@ final case class WriteResult(path: String, partitionColumns: Seq[String],
     files: Long, rows: Long, schema: StructType)
 
 object LakeWriter {
-
-  /** Cluster `df` on the partition columns ahead of a partitioned write:
-    * AQE REBALANCE when available (well-sized files + automatic skew
-    * split), hash repartition otherwise (the hint is a silent no-op
-    * without AQE, which would reintroduce tasks × partitions files).
-    */
-  private def clusterForWrite(df: DataFrame,
-      partCols: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    if (partCols.isEmpty) df
-    else if (df.sparkSession.sessionState.conf.adaptiveExecutionEnabled)
-      df.hint("rebalance", partCols.map(col): _*)
-    else df.repartition(partCols.map(col): _*)
-  }
-
-  /** Classpath probe for the Delta datasource (io.delta:delta-spark). */
-  lazy val deltaAvailable: Boolean =
-    try {
-      Class.forName("org.apache.spark.sql.delta.sources.DeltaDataSource")
-      true
-    } catch { case _: Throwable => false }
 
   /** Write `df` to `basePath/lakePathSuffix`, choosing the layout exactly as
     * the reference does (`sybaseiq_extractor.py:168-171,239-250`):
@@ -78,13 +50,7 @@ object LakeWriter {
     */
   def write(df: DataFrame, basePath: String, pathSuffix: String,
       s3PartitionColumn: Option[String], rowCount: Long,
-      mode: WriteMode.Value = WriteMode.Append,
-      format: LakeFormat.Value = LakeFormat.Parquet): WriteResult = {
-    if (format == LakeFormat.Delta && !deltaAvailable)
-      throw new IllegalStateException(
-        "LakeFormat.Delta requested but the Delta datasource is not on the " +
-          "classpath (io.delta:delta-spark jars + " +
-          "io.delta.sql.DeltaSparkSessionExtension required)")
+      mode: WriteMode.Value = WriteMode.Append): WriteResult = {
     val path = s"$basePath/$pathSuffix"
     val (out0, partCols) = s3PartitionColumn match {
       case Some(c) if Transforms.isDateLike(df, c) =>
@@ -104,10 +70,13 @@ object LakeWriter {
     // Plain hash repartition is the no-AQE fallback (the hint would be
     // silently ignored there, reintroducing the pathology).
     val landed = Observation()
-    val out = clusterForWrite(
-      out0.observe(landed, count(lit(1)).as("rows")), partCols)
-    val writer = out.write.format(
-      if (format == LakeFormat.Delta) "delta" else "parquet")
+    val observed = out0.observe(landed, count(lit(1)).as("rows"))
+    val out =
+      if (partCols.isEmpty) observed
+      else if (df.sparkSession.sessionState.conf.adaptiveExecutionEnabled)
+        observed.hint("rebalance", partCols.map(col): _*)
+      else observed.repartition(partCols.map(col): _*)
+    val writer = out.write
     val configured = mode match {
       case WriteMode.Append => writer.mode(SaveMode.Append)
       case WriteMode.OverwritePartitions =>
@@ -116,7 +85,7 @@ object LakeWriter {
     }
     val withParts =
       if (partCols.nonEmpty) configured.partitionBy(partCols: _*) else configured
-    withParts.save(path)
+    withParts.parquet(path)
     val files = countParquetFiles(java.nio.file.Paths.get(path))
     WriteResult(path, partCols, files, observedRows(landed), out0.schema)
   }
@@ -146,139 +115,6 @@ object LakeWriter {
     import scala.concurrent.duration._
     val row = Await.result(o.future, 5.minutes)
     if (row.length == 0) 0L else row.getLong(0)
-  }
-
-  /** Latest-wins upsert — the MERGE analogue on plain partitioned Parquet
-    * (with [[LakeFormat.Delta]] available this is a real `MERGE INTO`; this
-    * path is the format-agnostic fallback). Affected partitions are read
-    * back, merged (per-key latest by `versionCol`, incoming wins ties) and
-    * rewritten via dynamic partition overwrite; untouched partitions are
-    * never opened.
-    *
-    * "Affected" = partitions the incoming batch lands in, plus — when
-    * `keysMayChangePartition` (default) — partitions still holding an older
-    * version of an incoming key, found by a key semi-join over the existing
-    * table (a full scan; set the flag false when the partition value is
-    * derived from an immutable key attribute to keep the cost
-    * O(incoming partitions)). Caveat, inherent to overwrite-based merge: a
-    * partition whose LAST row moves away produces no output row for that
-    * partition, so dynamic overwrite cannot clear it — fully-emptied
-    * partitions need the Delta path (real deletes).
-    */
-  def upsertLatestWins(incoming: DataFrame, basePath: String,
-      pathSuffix: String, keyCols: Seq[String], versionCol: String,
-      s3PartitionColumn: Option[String] = None,
-      keysMayChangePartition: Boolean = true): WriteResult = {
-    import org.apache.spark.sql.functions.{broadcast, col, lit, row_number}
-    import org.apache.spark.sql.expressions.Window
-    val spark = incoming.sparkSession
-    val path = s"$basePath/$pathSuffix"
-    val (incPrepped, partCols) = s3PartitionColumn match {
-      case Some(c) if Transforms.isDateLike(incoming, c) =>
-        (Transforms.datePartColumns(c)(incoming), Seq("year", "month", "day"))
-      case Some(c) => (incoming, Seq(c))
-      case None => (incoming, Nil)
-    }
-    val exists = java.nio.file.Files.exists(java.nio.file.Paths.get(path))
-    val merged =
-      if (!exists) incPrepped.withColumn("__src", lit(1))
-      else {
-        val existing = spark.read.parquet(path)
-          .select(incPrepped.columns.toIndexedSeq.map(col): _*)
-        // Touch partitions the incoming batch lands in, plus (when keys can
-        // move) partitions still holding an older version of an incoming
-        // key — otherwise the old row survives in its old partition and
-        // read-back returns two versions of the key.
-        val affected =
-          if (partCols.isEmpty) existing
-          else {
-            val incParts = incPrepped.select(partCols.map(col): _*).distinct()
-            val parts =
-              if (!keysMayChangePartition) incParts
-              else incParts.union(
-                existing.join(
-                  broadcast(incPrepped.select(keyCols.map(col): _*).distinct()),
-                  keyCols, "left_semi")
-                  .select(partCols.map(col): _*)).distinct()
-            existing.join(broadcast(parts), partCols, "left_semi")
-          }
-        affected.withColumn("__src", lit(0))
-          .unionByName(incPrepped.withColumn("__src", lit(1)))
-      }
-    val w = Window.partitionBy(keyCols.map(col): _*)
-      .orderBy(col(versionCol).desc, col("__src").desc)
-    // Eager localCheckpoint breaks lineage from `path` so the dynamic
-    // overwrite of the same location is legal; production-at-scale swaps a
-    // staging dir or uses the Delta path instead of materializing.
-    val latest = merged.withColumn("__rn", row_number().over(w))
-      .where(col("__rn") === 1).drop("__rn", "__src")
-      .localCheckpoint()
-    // cluster by partition columns: see the write() rationale — the merge
-    // window shuffles by KEY, so without this every task holds every live
-    // partition and the overwrite lands tasks × partitions files
-    val landed = Observation()
-    val clustered = clusterForWrite(
-      latest.observe(landed, count(lit(1)).as("rows")), partCols)
-    val writer = clustered.write.format("parquet").mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-    (if (partCols.nonEmpty) writer.partitionBy(partCols: _*) else writer)
-      .save(path)
-    WriteResult(path, partCols, countParquetFiles(java.nio.file.Paths.get(path)),
-      observedRows(landed), latest.schema)
-  }
-
-  /** Small-file compaction (the OPTIMIZE analogue for plain parquet): an
-    * append-mode streaming tail or many small upserts fragment a partition
-    * into files far below the row-group sweet spot; a periodic compaction
-    * rewrites each affected leaf directory into its size-tiered file count
-    * via a staging-dir rewrite: the replacement files are fully written
-    * before the originals are removed, bounding the inconsistency window to
-    * the delete+rename of one leaf (true atomic swap needs a table format —
-    * that is the [[LakeFormat.Delta]] path; schedule plain-parquet
-    * compaction when the partition is not being read). Returns
-    * (filesBefore, filesAfter). At 100 TB compaction is per-partition
-    * parallel and only rewrites leaves whose file count exceeds the target.
-    */
-  def compact(spark: org.apache.spark.sql.SparkSession, path: String,
-      maxRowsPerFile: Long = 10000000L): (Long, Long) = {
-    import java.nio.file.{Files, Paths, Path, StandardCopyOption}
-    import scala.jdk.CollectionConverters._
-    def parquetLeaves(root: Path): Seq[Path] = {
-      val s = Files.walk(root)
-      try s.iterator().asScala.filter(p => p.toString.endsWith(".parquet"))
-        .map(_.getParent).toSet.toSeq
-      finally s.close()
-    }
-    val root = Paths.get(path)
-    val before = countParquetFiles(root)
-    def listDir(dir: Path): Seq[Path] = {
-      val s = Files.list(dir)
-      try s.iterator().asScala.toSeq finally s.close()
-    }
-    parquetLeaves(root).foreach { leaf =>
-      val files = listDir(leaf).filter(_.toString.endsWith(".parquet"))
-      val df = spark.read.parquet(files.map(_.toString): _*)
-      val rows = df.count()
-      // rows-per-file target, capped by the X2 size tier (the tier is a
-      // huge-table upper bound; a 6-row leaf should become 1 file, not 8)
-      val target = math.min(Transforms.coalesceTier(rows).toLong,
-        math.max(1L, (rows + maxRowsPerFile - 1) / maxRowsPerFile)).toInt
-      if (files.size > target) {
-        val staging = leaf.resolveSibling(leaf.getFileName.toString + "._compact")
-        df.coalesce(target)
-          .write.mode(SaveMode.Overwrite).parquet(staging.toString)
-        files.foreach(Files.delete)
-        listDir(staging)
-          .filter(p => p.toString.endsWith(".parquet") || p.getFileName.toString == "_SUCCESS")
-          .foreach(p => Files.move(p, leaf.resolve(p.getFileName),
-            StandardCopyOption.REPLACE_EXISTING))
-        val rest = Files.walk(staging)
-        try rest.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.deleteIfExists(p))
-        finally rest.close()
-      }
-    }
-    (before, countParquetFiles(root))
   }
 
   /** Register a landed path as a catalog table `{db}.{table}` — the

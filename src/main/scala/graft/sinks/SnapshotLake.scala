@@ -8,9 +8,10 @@ import org.apache.spark.sql.functions.{coalesce, col, hex, hll_sketch_agg, hll_s
 /** Manifest-based snapshot versioning for a plain-parquet lake table — the
   * format-agnostic core of what a table format (Delta/Iceberg) provides:
   * atomic commits, snapshot-isolated reads, time travel, optimistic
-  * concurrency. The Delta path proper is availability-gated
-  * ([[LakeWriter.deltaAvailable]]); this gives the append-mode lake an ACID
-  * story with no extra jars.
+  * concurrency — with no extra jars. It is the engine's one owner of
+  * row-level change ([[merge]], which the CDC latest-wins apply runs on)
+  * and of compaction ([[compact]], [[autoCompact]]); [[LakeWriter]] only
+  * appends.
   *
   * Layout:
   * {{{
@@ -35,8 +36,8 @@ import org.apache.spark.sql.functions.{coalesce, col, hex, hll_sketch_agg, hll_s
   *
   * Scale: the manifest holds file PATHS (one line per file, not per row);
   * at 100 TB the file count is what matters — keep file sizes at the
-  * row-group sweet spot ([[LakeWriter.compact]]) so manifests stay in the
-  * thousands of entries.
+  * row-group sweet spot ([[compact]], [[autoCompact]]) so manifests stay
+  * in the thousands of entries.
   */
 object SnapshotLake {
 

@@ -45,7 +45,7 @@ import graft.sinks.{CommitStore, PosixLinkCommitStore, SnapshotLake}
   *    snapshot lake's batchId-keyed idempotent commit (the book of
   *    record), and the cell layout is maintained FROM committed lake
   *    versions by an idempotent sync — EXACTLY-ONCE across any crash
-  *    point (see [[syncLayoutFromLake]]).
+  *    point (see [[syncLayoutFromLakeDetailed]]).
   */
 object IndexIngest {
 
@@ -140,12 +140,12 @@ object IndexIngest {
     * land in a snapshot-lake table via [[SnapshotLake.commitAppendIdempotent]]
     * keyed on the batchId — a replayed batch commits NOTHING — and the
     * queryable cell layout at `path` is then synced from committed lake
-    * versions by [[syncLayoutFromLake]], itself idempotent per version. A
-    * crash at ANY point (before the lake commit, between commit and sync,
-    * mid-sync, between sync and the checkpoint advance) therefore cannot
-    * duplicate an index entry: the replay either re-runs a no-op commit,
-    * or re-runs a sync whose per-cell publishes are exist-checked renames
-    * of deterministic file names.
+    * versions by [[syncLayoutFromLakeDetailed]], itself idempotent per
+    * version. A crash at ANY point (before the lake commit, between commit
+    * and sync, mid-sync, between sync and the checkpoint advance) therefore
+    * cannot duplicate an index entry: the replay either re-runs a no-op
+    * commit, or re-runs a sync whose per-cell publishes are exist-checked
+    * renames of deterministic file names.
     *
     * The optional `dedupThreshold` gate composes unchanged (it only
     * filters the rows offered to the commit; idempotency keys on the
@@ -289,8 +289,7 @@ object IndexIngest {
     }
     val (synced, touchedCells) =
       syncLayoutFromLakeDetailed(spark, path, lakeTable, store)
-    // AFTER the sync completes (the ordering contract in
-    // [[syncLayoutFromLake]]'s doc): a compact that erases published
+    // AFTER the sync completes: a compact that erases published
     // ingest-v*.parquet files is safe here because the version markers —
     // not the files — carry the synced-set state, so a replayed sync
     // skips compacted versions instead of re-publishing them. Gated on
@@ -351,8 +350,8 @@ object IndexIngest {
     * long-running stream otherwise grows O(batches) marker files with no
     * reclamation path). The safety rule is exact: a marker for version v
     * is load-bearing precisely as long as v can still appear in
-    * [[SnapshotLake.versions]] — a replayed [[syncLayoutFromLake]] only
-    * iterates versions the lake still lists. Once `SnapshotLake.vacuum`
+    * [[SnapshotLake.versions]] — a replayed [[syncLayoutFromLakeDetailed]]
+    * only iterates versions the lake still lists. Once `SnapshotLake.vacuum`
     * has dropped v's manifest, no replay can ever consult v's marker
     * again, so it is dead state; markers for every RETAINED version are
     * kept untouched. Markers strictly older than the oldest retained
@@ -430,13 +429,11 @@ object IndexIngest {
     "(?:.*/)?__pc_super=([^/]+)/__pc_cell=([^/]+)/[^/]+\\.parquet".r
   private val FlatCellRe = "(?:.*/)?__pc_cell=([^/]+)/[^/]+\\.parquet".r
 
-  def syncLayoutFromLake(spark: SparkSession, path: String,
-      lakeTable: String, store: CommitStore = PosixLinkCommitStore): Int =
-    syncLayoutFromLakeDetailed(spark, path, lakeTable, store)._1
-
-  /** [[syncLayoutFromLake]] plus the set of CELL IDS the sync published
-    * into — the exactly-once loop feeds them to the targeted
-    * auto-compaction sweep (only touched cells can newly fragment). */
+  /** Sync the cell layout at `path` from the committed versions of
+    * `lakeTable`, each version at most once. Returns the number of versions
+    * synced and the set of CELL IDS the sync published into — the
+    * exactly-once loop feeds them to the targeted auto-compaction sweep
+    * (only touched cells can newly fragment). */
   private[graft] def syncLayoutFromLakeDetailed(spark: SparkSession,
       path: String, lakeTable: String,
       store: CommitStore = PosixLinkCommitStore): (Int, Set[Long]) = {
