@@ -1,109 +1,28 @@
 package graft
 
-import org.apache.spark.sql.functions._
-import graft.sinks.LakeWriter
+import java.nio.file.Files
+import graft.sinks.{PosixLinkCommitStore, SnapshotLake}
+import graft.streaming.ChangeDataCapture
 
-/** Latest-wins upsert into the partitioned lake: per-key latest row wins,
-  * new keys insert, untouched partitions are not rewritten.
+/** Latest-wins upsert through ChangeDataCapture + SnapshotLake.merge:
+  * an incoming row whose version equals the stored row's replaces it.
   */
 class UpsertSpec extends SparkSpec {
   import spark.implicits._
 
-  private def lakeDir() =
-    java.nio.file.Files.createTempDirectory("graft_upsert_").toString
-
-  test("upsert updates, inserts, and leaves other keys intact") {
-    val lake = lakeDir()
-    val init = (1L to 10L).map(i => (i, s"p${i % 2}", 1L, s"v1-$i"))
-      .toDF("id", "part", "version", "payload")
-    LakeWriter.upsertLatestWins(init, lake, "t/main/kv",
-      Seq("id"), "version", Some("part"))
-    val inc = (5L to 12L).map(i => (i, s"p${i % 2}", 2L, s"v2-$i"))
-      .toDF("id", "part", "version", "payload")
-    LakeWriter.upsertLatestWins(inc, lake, "t/main/kv",
-      Seq("id"), "version", Some("part"))
-    val out = spark.read.parquet(s"$lake/t/main/kv")
-      .select($"id", $"version", $"payload")
-      .as[(Long, Long, String)].collect()
-      .map { case (i, v, p) => i -> ((v, p)) }.toMap
-    assert(out.size == 12)
-    (1L to 4L).foreach(i => assert(out(i) == ((1L, s"v1-$i")), s"id=$i"))
-    (5L to 12L).foreach(i => assert(out(i) == ((2L, s"v2-$i")), s"id=$i"))
-  }
+  private val store = PosixLinkCommitStore
 
   test("incoming wins version ties") {
-    val lake = lakeDir()
-    val init = Seq((1L, "a", 5L, "old")).toDF("id", "part", "version", "payload")
-    LakeWriter.upsertLatestWins(init, lake, "t/main/tie",
-      Seq("id"), "version", Some("part"))
-    val inc = Seq((1L, "a", 5L, "new")).toDF("id", "part", "version", "payload")
-    LakeWriter.upsertLatestWins(inc, lake, "t/main/tie",
-      Seq("id"), "version", Some("part"))
-    val out = spark.read.parquet(s"$lake/t/main/tie")
-      .select($"payload").as[String].collect()
-    assert(out.toSeq == Seq("new"))
-  }
-
-  test("partitions untouched by the incoming batch are not rewritten") {
-    val lake = lakeDir()
-    val init = Seq((1L, "cold", 1L, "x"), (2L, "hot", 1L, "y"))
-      .toDF("id", "part", "version", "payload")
-    LakeWriter.upsertLatestWins(init, lake, "t/main/parts",
-      Seq("id"), "version", Some("part"))
-    val coldDir = new java.io.File(s"$lake/t/main/parts/part=cold")
-    val before = coldDir.listFiles().map(f => f.getName -> f.lastModified).toMap
-    Thread.sleep(1100)
-    val inc = Seq((2L, "hot", 2L, "y2")).toDF("id", "part", "version", "payload")
-    LakeWriter.upsertLatestWins(inc, lake, "t/main/parts",
-      Seq("id"), "version", Some("part"))
-    val after = coldDir.listFiles().map(f => f.getName -> f.lastModified).toMap
-    assert(after == before, "cold partition files must be untouched")
-    val hot = spark.read.parquet(s"$lake/t/main/parts")
-      .where($"id" === 2L).select($"payload").as[String].collect()
-    assert(hot.toSeq == Seq("y2"))
-  }
-
-  test("a key moving partitions leaves exactly one (new) version behind") {
-    val lake = lakeDir()
-    val init = Seq((1L, "a", 1L, "one-in-a"), (2L, "a", 1L, "stays-in-a"))
-      .toDF("id", "part", "version", "payload")
-    LakeWriter.upsertLatestWins(init, lake, "t/main/move",
-      Seq("id"), "version", Some("part"))
-    // key 1 moves partition a -> b; its old row in a must disappear
-    val inc = Seq((1L, "b", 2L, "one-in-b")).toDF("id", "part", "version", "payload")
-    LakeWriter.upsertLatestWins(inc, lake, "t/main/move",
-      Seq("id"), "version", Some("part"))
-    val out = spark.read.parquet(s"$lake/t/main/move")
-      .select($"id", $"part", $"payload").as[(Long, String, String)]
-      .collect().sorted
-    assert(out.toSeq == Seq((1L, "b", "one-in-b"), (2L, "a", "stays-in-a")),
-      s"got ${out.toSeq}")
-  }
-
-  test("compaction collapses fragmented partitions and preserves data") {
-    val lake = lakeDir()
-    val path = s"$lake/t/main/frag"
-    // fragment: 12 single-row appends into 2 partitions
-    (1L to 12L).foreach { i =>
-      Seq((i, s"p${i % 2}", s"row-$i")).toDF("id", "part", "payload")
-        .repartition(1).write.mode("append").partitionBy("part").parquet(path)
-    }
-    val pre = spark.read.parquet(path).select($"id").as[Long].collect().toSet
-    val (before, after) = LakeWriter.compact(spark, path)
-    assert(before == 12L && after == 2L,
-      s"expected compaction: before=$before after=$after")
-    val post = spark.read.parquet(path).select($"id").as[Long].collect().toSet
-    assert(post == pre)
-  }
-
-  test("unpartitioned upsert merges whole table") {
-    val lake = lakeDir()
-    val init = Seq((1L, 1L, "a"), (2L, 1L, "b")).toDF("id", "version", "payload")
-    LakeWriter.upsertLatestWins(init, lake, "t/main/flat", Seq("id"), "version")
-    val inc = Seq((2L, 2L, "b2"), (3L, 1L, "c")).toDF("id", "version", "payload")
-    LakeWriter.upsertLatestWins(inc, lake, "t/main/flat", Seq("id"), "version")
-    val out = spark.read.parquet(s"$lake/t/main/flat")
-      .select($"id", $"payload").as[(Long, String)].collect().toMap
-    assert(out == Map(1L -> "a", 2L -> "b2", 3L -> "c"))
+    val t = Files.createTempDirectory("graft_upsert_").resolve("tie").toString
+    def apply(batch: String, op: String, payload: String): Unit =
+      ChangeDataCapture.applyChangelogBatch(spark, t,
+        Seq((1L, 5L, 1L, op, payload)).toDF("id", "version", "tie", "op", "payload"),
+        Seq("id"), "version", "tie", "op", Seq("payload"),
+        dedupPrefix = Some(batch), store = store)
+    apply("b0", "I", "old")
+    apply("b1", "U", "new")
+    val out = SnapshotLake.read(spark, t, None, store)
+      .select($"id", $"version", $"payload").as[(Long, Long, String)].collect()
+    assert(out.toSeq == Seq((1L, 5L, "new")), s"got ${out.toSeq}")
   }
 }
