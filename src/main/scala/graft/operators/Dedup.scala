@@ -1302,70 +1302,42 @@ object Dedup {
 
   /** Incremental semantic dedup of a NEW batch against a persisted corpus
     * index ([[Similarity.ivfWrite]]'s cell-partitioned layout): batch rows
-    * are assigned to their `nProbe` nearest centroids map-side (multi-probe
-    * — cell boundaries are arbitrary, so a row near a boundary checks the
+    * probe their `nProbe` nearest cells map-side through the batch
+    * readers' regime ([[Similarity.probeLayout]] — multi-probe: cell
+    * boundaries are arbitrary, so a row near a boundary checks the
     * neighboring cell too, recovering most of the pairs single-cell
     * assignment misses), ONLY the touched cell partitions of the corpus
-    * are read (partition pruning — the reason the layout exists), and a
-    * per-cell join flags every batch row with a corpus neighbor at
-    * `threshold` cosine. This is the nightly-ingest shape: the 100 TB
-    * corpus never rescans — each batch reads |touched cells| / nLists of
-    * it, and `nProbe` dials recall against read amplification (the probe
-    * join fans each batch row out nProbe ways; the corpus side is
-    * unchanged).
+    * are read (the readers' static partition pruning — the reason the
+    * layout exists), and a per-cell join flags every batch row with a
+    * corpus neighbor at `threshold` cosine. This is the nightly-ingest
+    * shape: the 100 TB corpus never rescans — each batch reads |touched
+    * cells| / nLists of it, and `nProbe` dials recall against read
+    * amplification (the probe join fans each batch row out nProbe ways;
+    * the corpus side is unchanged).
     *
     * @return one row per batch doc: (idCol, cell, dup); `cell` is the
-    *         primary (nearest) assignment
+    *         primary (first-probe) cell
     */
   def semanticDedupIncremental(batch: DataFrame, ivfPath: String,
       idCol: String, vecCol: String, threshold: Double,
       nProbe: Int = 2): DataFrame = {
     require(nProbe >= 1, "nProbe must be at least 1")
-    val spark = batch.sparkSession
-    val cents = spark.read.parquet(s"$ivfPath/centroids").collect().toSeq
-      .map { r =>
-        val v = r.getSeq[Double](1)
-        (r.getLong(0), v, r.getDouble(2))
-      }.sortBy(_._1)
-    val hier = cents.size > Similarity.HierThreshold
-    // nLists ∝ n layouts: two-level probe, O(√nLists·d) per row — against
-    // the PERSISTED sidecar hierarchy, never a rebuilt one (a rebuild from
-    // differently ordered centroids can flip a near-equidistant centroid's
-    // super and probe the wrong cells; same fix as the append path,
-    // round-8 review)
-    val hierOpt =
-      if (hier) Some(Similarity.readHierarchy(spark, ivfPath)) else None
-    val assigned = batch
-      .select(col(idCol),
-        V.asDoubleFast(col(vecCol)).as("dv"))
-      .select(col(idCol), col("dv"),
-        V.normFast(col("dv")).as("v_norm"))
-      .select(col(idCol), col("dv"),
-        (hierOpt match {
-          case Some(h) => Similarity.probeCellsColHier(h, nProbe)
-          case None => Similarity.probeCellsCol(cents, nProbe)
-        }).as("cells"))
-      .localCheckpoint(false)
-    val probes = assigned
-      .select(col(idCol), col("dv"), explode(col("cells")).as("cell"))
-      .withColumn("super", hierOpt match {
-        case Some(h) => Similarity.superOfCol(h)
-        case None => lit(0L)
-      })
-    // corpus scan pruned through the SHARED reader filter (ADVICE r8: the
-    // old uncapped col("cell").isin(cells) recreated the unbounded-IN-list
-    // scale problem on nLists ∝ n layouts — cellPruneFilter applies the
-    // ≤√nLists super filter always and the cell IN list only while it
-    // stays literal-sized)
-    val corpus = spark.read.parquet(s"$ivfPath/corpus")
-      .where(Similarity.cellPruneFilter(spark, probes, hier,
-        cellIsinCap = 2048))
+    val (probed, hier) = Similarity.probeLayout(
+      batch.select(col(idCol).as("q_id"), col(vecCol)), vecCol, Seq(vecCol),
+      ivfPath, nProbe)
+    // read by the prune collect, the corpus join and the primary cell
+    val probes = probed.localCheckpoint(false)
+    val corpus = Similarity.probedCells(batch.sparkSession, ivfPath,
+      "corpus", probes, hier)
       .select(col("cell").cast("long").as("cell"),
         V.asDoubleFast(col(vecCol)).as("cv"))
-    val dupIds = probes.join(corpus, "cell")
+    val dupIds = probes
+      .select(col("q_id"), col("cell"), V.asDoubleFast(col(vecCol)).as("dv"))
+      .join(corpus, "cell")
       .where(V.cosineFast(col("dv"), col("cv")) >= threshold)
-      .select(col(idCol)).distinct().withColumn("__d", lit(true))
-    assigned.select(col(idCol), element_at(col("cells"), 1).as("cell"))
+      .select(col("q_id").as(idCol)).distinct().withColumn("__d", lit(true))
+    probes.where(col("rank") === 0)
+      .select(col("q_id").as(idCol), col("cell"))
       .join(dupIds, Seq(idCol), "left")
       .withColumn("dup", coalesce(col("__d"), lit(false)))
       .drop("__d")

@@ -114,7 +114,7 @@ object Similarity {
   /** Cosine of a (dv, norm) row against one centroid struct `(_1 id, _2 vec,
     * _3 norm)`; -2 sentinel for zero norms keeps the argmax total.
     */
-  private[operators] def simTo(vec: Column, vecNorm: Column, c: Column): Column = {
+  private def simTo(vec: Column, vecNorm: Column, c: Column): Column = {
     // DotProduct primitive: the argmax wrappers (transform/array_sort/
     // aggregate) are interpreted HigherOrderFunctions, so the O(d) inner
     // loop here was paying per-element lambda eval + a zipped-array
@@ -132,7 +132,7 @@ object Similarity {
     * nLists ∝ n (the round-7 scale probe measured 36× at 10× from exactly
     * this term). Below the threshold the flat argmax is cheaper than two
     * hops. */
-  private[operators] val HierThreshold = 64
+  private val HierThreshold = 64
 
   /** nLists above which centroids stop being expression literals entirely:
     * probe assignment switches to a broadcast JOIN against the centroid
@@ -164,9 +164,6 @@ object Similarity {
     math.min(
       math.max(12, math.ceil(4.0 * math.sqrt(nLists.toDouble)).toInt),
       math.max(1, ((nLists + 1) / 2).toInt))
-
-  private def resolveNProbe(nProbe: Int, nLists: Long): Int =
-    if (nProbe == AutoProbe) autoNProbe(nLists) else nProbe
 
   /** Sentinel rerank value asking a quantized reader ([[ivfSqBatchTopK]]/
     * [[ivfBqBatchTopK]]/[[ivfPqBatchTopK]]) to size its exact-rerank
@@ -257,13 +254,13 @@ object Similarity {
       occupied.map(s => grouped(s).map(_._1).sortBy(_._1)))
   }
 
-  /** Per-row nearest-centroid argmax over an arbitrary centroid-struct
-    * array column (strict >, so ties keep the earlier centroid in array
-    * order — deterministic). Expects plain attributes `dv`/`v_norm` on the
-    * input row: lambda-referenced expressions re-evaluate per element, so
-    * they must be materialized in their own projection first. */
-  private[operators] def bestCellOver(cellsArr: Column): Column =
-    aggregate(cellsArr,
+  /** Per-row nearest-centroid argmax over the centroid literal `cents`
+    * (strict >, so ties keep the earlier centroid in array order —
+    * deterministic). Expects plain attributes `dv`/`v_norm` on the input
+    * row: lambda-referenced expressions re-evaluate per element, so they
+    * must be materialized in their own projection first. */
+  private def bestCell(cents: Seq[(Long, Seq[Double], Double)]): Column =
+    aggregate(typedLit(cents),
       struct(lit(-3.0).as("sim"), lit(Long.MaxValue).as("cid")),
       (acc, c) => {
         val s = simTo(col("dv"), col("v_norm"), c)
@@ -271,9 +268,6 @@ object Similarity {
           struct(s.as("sim"), c.getField("_1").as("cid")))
           .otherwise(acc)
       })
-
-  private[operators] def bestCell(cents: Seq[(Long, Seq[Double], Double)]): Column =
-    bestCellOver(typedLit(cents))
 
   /** Append `super` and `cell` assignment columns to a frame carrying
     * plain `dv`/`v_norm` attributes. Flat argmax below [[HierThreshold]]
@@ -291,24 +285,16 @@ object Similarity {
     if (cents.size <= HierThreshold)
       df.withColumn("super", lit(0L))
         .withColumn("cell", bestCell(cents).getField("cid"))
-    else withCellAssignmentHier(df, buildHierarchy(cents))
+    else {
+      val h = buildHierarchy(cents)
+      df.withColumn("cell", element_at(probeCellsColHier(h, 1), 1))
+        .withColumn("super", superOfCol(h))
+    }
 
-  /** [[withCellAssignment]] against a PREBUILT hierarchy — the append
-    * path passes the persisted sidecar hierarchy ([[readHierarchy]])
-    * rather than rebuilding one: a rebuilt hierarchy from differently
-    * ordered centroids can flip a near-equidistant centroid's super
-    * (float summation order in the driver Lloyd step), landing appended
-    * rows under a super the sidecar disagrees with — which the readers'
-    * super-level pruning would then silently skip. */
-  private[operators] def withCellAssignmentHier(df: DataFrame,
-      h: IvfHierarchy): DataFrame =
-    df.withColumn("cell", element_at(probeCellsColHier(h, 1), 1))
-      .withColumn("super", superOfCol(h))
-
-  /** Column mapping a row's `cell` to its persisted super id — the ONE
-    * copy of the hierarchy's super lookup (assignment, probe building,
-    * and the incremental-dedup path all attach it). */
-  private[operators] def superOfCol(h: IvfHierarchy): Column =
+  /** Column mapping a row's `cell` to its super id — the ONE copy of the
+    * hierarchy's super lookup (in-memory assignment and probe building
+    * both attach it). */
+  private def superOfCol(h: IvfHierarchy): Column =
     element_at(typedLit(h.superOf.map { case (c, s) =>
       c -> s.toLong }), col("cell"))
 
@@ -441,10 +427,11 @@ object Similarity {
   /** Materialize the IVF layout the at-scale story needs: the corpus landed
     * PARTITIONED BY CELL (Hive layout — `cell=<id>/` directories) plus a
     * tiny centroid sidecar table. Train once, write once; every subsequent
-    * query is [[ivfReadTopK]] touching only `nProbe` cell partitions, which
-    * the scan prunes at planning time (pinned in PlanAuditSpec). At 100 TB
-    * this is the difference between scanning the corpus per query and
-    * reading nProbe/nLists of it.
+    * read ([[ivfBatchTopK]], or [[ivfReadTopK]] for one vector) probes
+    * through [[ivfCodecBatchTopK]] and touches only the probed cell
+    * partitions, which the scan prunes at planning time (pinned in
+    * PlanAuditSpec). At 100 TB this is the difference between scanning the
+    * corpus per query and reading nProbe/nLists of it.
     *
     * `payloadCols` lands filterable metadata attributes (lang, quality,
     * license…) INSIDE the cell layout as plain parquet data columns — the
@@ -506,36 +493,33 @@ object Similarity {
   private def landSidecar(df: DataFrame, dir: String): Unit =
     df.coalesce(1).write.mode("overwrite").parquet(dir)
 
-  /** Query a persisted IVF layout: pick the `nProbe` nearest cells from the
-    * centroid sidecar (driver-side over ≤ nLists rows — the broadcast-build
-    * idiom), then scan ONLY those cell partitions of the corpus. The `cell
-    * IN (...)` predicate lands as a partition filter, so unprobed cells are
-    * never read from storage.
+  /** Query a persisted IVF layout with ONE vector: a one-row
+    * [[ivfBatchTopK]] (the query's `q_id` is `excludeId`, which
+    * `excludeSelf` then drops), so the single read probes through the same
+    * regime as the batch one — a two-level layout above [[JoinThreshold]]
+    * lists collects no centroid vector — and scans ONLY the probed cell
+    * partitions (a static partition filter). `(idCol, cos)` rows, ordered
+    * by (cos desc, id asc).
     */
   def ivfReadTopK(spark: SparkSession, path: String,
       queryVec: Array[Float], excludeId: Option[Long], k: Int,
       nProbe: Int = AutoProbe, idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
+      vecCol: String = "embedding"): DataFrame =
+    oneRowRead(spark, queryVec, excludeId, idCol)((q, excl) =>
+      ivfBatchTopK(spark, path, q, "q_id", "q_vec", k, nProbe, excl, idCol,
+        vecCol))
+
+  /** A single-vector read as a one-row batch read: `excludeId` rides as the
+    * row's `q_id` with `excludeSelf` set; the batch result's `(idCol, cos)`
+    * come back ordered by (cos desc, id asc). */
+  private def oneRowRead(spark: SparkSession, queryVec: Array[Float],
+      excludeId: Option[Long], idCol: String)(
+      batch: (DataFrame, Boolean) => DataFrame): DataFrame = {
     import spark.implicits._
-    val qv = queryVec.map(_.toDouble)
-    val qNorm = math.sqrt(qv.map(x => x * x).sum)
-    val cents = centroidsOf(spark, path)
-    val np = resolveNProbe(nProbe, cents.length.toLong)
-    val probeCells = cents.map { case (cell, cv, cn) =>
-      val denom = qNorm * cn
-      val sim = if (denom == 0.0) -2.0
-        else qv.zip(cv).map { case (a, b) => a * b }.sum / denom
-      (sim, cell)
-    }.sortBy { case (sim, cell) => (-sim, cell) }.take(np).map(_._2)
-    val query = Seq(Tuple1(queryVec)).toDF("q_vec")
-    FastParquet.read(spark, s"$path/corpus")
-      .where(col("cell").isin(probeCells.toSeq: _*))
-      .where(excludeId.map(col(idCol) =!= _).getOrElse(lit(true)))
-      .crossJoin(broadcast(query))
-      .select(col(idCol),
-        round(V.cosineFast(col(vecCol), col("q_vec")), 6).as("cos"))
+    batch(Seq((excludeId.getOrElse(0L), queryVec)).toDF("q_id", "q_vec"),
+      excludeId.isDefined)
+      .select(col(idCol), col("cos"))
       .orderBy(col("cos").desc, col(idCol).asc)
-      .limit(k)
   }
 
   /** Exact batch top-k: the brute-force baseline for a DATAFRAME of query
@@ -676,7 +660,7 @@ object Similarity {
       maxBroadcastBytes: Long, joinThreshold: Int, cellIsinCap: Int,
       filter: Option[Column]): DataFrame = {
     val regime = resolveProbeRegime(spark, path, joinThreshold)
-    val np = resolveNProbe(nProbe, regime.nLists)
+    val np = if (nProbe == AutoProbe) autoNProbe(regime.nLists) else nProbe
     // per-query sweep cut: the final k, or the shortlist re-ranked to k
     val cut = if (!codec.reranked) k
       else if (rerank == AutoRerank) autoRerank(np, k) else rerank
@@ -811,10 +795,11 @@ object Similarity {
     }
 
   /** Probe-cell assignment for a batch query frame against a persisted
-    * cell layout — the probe step of [[ivfCodecBatchTopK]].
-    * `qNormed` must carry plain attributes `q_id`, `dv`, `v_norm` plus
-    * `payloadCols`; returns (q_id, payload…, super, cell) probe rows, up
-    * to `nProbe` per query. Three regimes:
+    * cell layout — the probe step of [[ivfCodecBatchTopK]] and of
+    * [[probeLayout]]. `qNormed` must carry plain attributes `q_id`, `dv`,
+    * `v_norm` plus `payloadCols`; returns (q_id, payload…, super, cell,
+    * rank) probe rows, up to `nProbe` per input row, `rank` 0 for its
+    * first probe cell under (sim desc, cell asc). Three regimes:
     *  - flat (no supercentroids sidecar): full-centroid literal argsort —
     *    O(nLists·d) per query, right below [[HierThreshold]];
     *  - hier (≤ joinThreshold lists): two-level literal (top supers, then
@@ -822,9 +807,11 @@ object Similarity {
     *  - join (> joinThreshold lists): only the √nLists SUPER-centroids are
     *    a literal; children arrive by broadcast-JOINING the centroid
     *    sidecar on `super` (480 k centroids at a 100× corpus cannot be an
-    *    expression literal), with the per-query nProbe cut via TopKPerKey
-    *    (bounded heaps). Identical output to the hier literal path: same
-    *    supers, same children, same (sim desc, cell asc) cut.
+    *    expression literal), with the per-row nProbe cut via TopKPerKey
+    *    (bounded heaps) keyed on a row id, so rows sharing a `q_id` keep
+    *    their own probes as in the literal regimes. Identical output to
+    *    the hier literal path: same supers, same children, same
+    *    (sim desc, cell asc) cut.
     */
   private def buildProbes(spark: SparkSession, path: String,
       qNormed: DataFrame, payloadCols: Seq[String], nProbe: Int,
@@ -833,10 +820,10 @@ object Similarity {
     regime match {
     case FlatRegime(cents) =>
       qNormed.select(col("q_id") +: payload :+ lit(0L).as("super") :+
-        explode(probeCellsCol(cents, nProbe)).as("cell"): _*)
+        posexplode(probeCellsCol(cents, nProbe)).as(Seq("rank", "cell")): _*)
     case HierLitRegime(h, _) =>
       qNormed.select(col("q_id") +: payload :+
-        explode(probeCellsColHier(h, nProbe)).as("cell"): _*)
+        posexplode(probeCellsColHier(h, nProbe)).as(Seq("rank", "cell")): _*)
         .withColumn("super", superOfCol(h))
     case JoinRegime(supers, _) =>
       val centTbl = FastParquet.read(spark, s"$path/centroids")
@@ -844,20 +831,41 @@ object Similarity {
       val scoredSupers = transform(typedLit(supers), c =>
         struct((-simTo(col("dv"), col("v_norm"), c)).as("neg"),
           c.getField("_1").as("cid")))
-      val qSup = qNormed.select(col("q_id") +: payload :+ col("dv") :+
-        col("v_norm") :+
-        explode(slice(transform(array_sort(scoredSupers),
-          s => s.getField("cid")), 1, sp)).as("super"): _*)
+      val qSup = qNormed.withColumn("__row", monotonically_increasing_id())
+        .select(col("__row") +: col("q_id") +: payload :+ col("dv") :+
+          col("v_norm") :+
+          explode(slice(transform(array_sort(scoredSupers),
+            s => s.getField("cid")), 1, sp)).as("super"): _*)
       val cand = qSup.join(broadcast(centTbl.select(col("super"),
           col("cell"), col("c_vec"), col("c_norm"))), "super")
-        .select(col("q_id") +: payload :+ col("super") :+ col("cell") :+
-          simTo(col("dv"), col("v_norm"),
+        .select(col("__row") +: col("q_id") +: payload :+ col("super") :+
+          col("cell") :+ simTo(col("dv"), col("v_norm"),
             struct(col("cell").as("_1"), col("c_vec").as("_2"),
               col("c_norm").as("_3"))).as("c_sim"): _*)
-      graft.plans.TopK.topKPerKey(cand, Seq("q_id"),
-        Seq(col("c_sim").desc, col("cell").asc), nProbe)
-        .select(col("q_id") +: payload :+ col("super") :+ col("cell"): _*)
+      val order = Seq(col("c_sim").desc, col("cell").asc)
+      graft.plans.TopK.topKPerKey(cand, Seq("__row"), order, nProbe)
+        .select(col("q_id") +: payload :+ col("super") :+ col("cell") :+
+          (row_number().over(org.apache.spark.sql.expressions.Window
+            .partitionBy("__row").orderBy(order: _*)) - 1).as("rank"): _*)
     }
+  }
+
+  /** The probe front of every persisted-layout append and incremental
+    * dedup: the batch readers' regime and [[buildProbes]], so above
+    * `joinThreshold` lists no centroid vector is collected. `rows` carries
+    * `q_id`, the vector `vecCol` and `payloadCols`; returns the probe rows
+    * and the layout's two-level flag. */
+  private[graft] def probeLayout(rows: DataFrame, vecCol: String,
+      payloadCols: Seq[String], path: String, nProbe: Int,
+      joinThreshold: Int = JoinThreshold): (DataFrame, Boolean) = {
+    val regime = resolveProbeRegime(rows.sparkSession, path, joinThreshold)
+    val payload = payloadCols.map(col)
+    val normed = rows
+      .select(col("q_id") +: payload :+ V.asDoubleFast(col(vecCol)).as("dv"): _*)
+      .select(col("q_id") +: payload :+ col("dv") :+
+        V.normFast(col("dv")).as("v_norm"): _*)
+    (buildProbes(rows.sparkSession, path, normed, payloadCols, nProbe,
+      regime), regime.hier)
   }
 
   /** Static partition pruning for a cell-layout scan from a probe frame:
@@ -867,7 +875,7 @@ object Similarity {
     * cell-level IN list only while it stays literal-sized — beyond the cap
     * the super filter plus the broadcast cell-join carry the pruning (an
     * unbounded IN list would itself be the scale bug). */
-  private[operators] def cellPruneFilter(spark: SparkSession,
+  private def cellPruneFilter(spark: SparkSession,
       probes: DataFrame, hier: Boolean, cellIsinCap: Int): Column = {
     import spark.implicits._
     val probed = probes.select(col("super"), col("cell")).distinct()
@@ -883,12 +891,20 @@ object Similarity {
     }
   }
 
+  /** The rows of layout table `table` in the cells `probes` names (the
+    * [[probeLayout]] rows of a `hier` or flat layout), pruned statically
+    * through the readers' [[cellPruneFilter]]. */
+  private[operators] def probedCells(spark: SparkSession, path: String,
+      table: String, probes: DataFrame, hier: Boolean): DataFrame =
+    FastParquet.read(spark, s"$path/$table")
+      .where(cellPruneFilter(spark, probes, hier, cellIsinCap = 2048))
+
   /** Whether a persisted cell layout is two-level (supercentroids sidecar
     * present) — resolved through the session's HADOOP filesystem, not
     * java.nio: layouts live wherever the data does (HDFS/S3/local), and a
     * driver-local existence check on a remote URI silently reports false,
     * downgrading every reader to the flat path and corrupting appends. */
-  private[operators] def layoutIsHier(
+  private def layoutIsHier(
       spark: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(s"$path/supercentroids")
     p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
@@ -957,7 +973,7 @@ object Similarity {
   }
 
   /** (cell, c_vec, c_norm) sorted by cell — the flat-layout model state. */
-  private[operators] def centroidsOf(spark: SparkSession, path: String):
+  private def centroidsOf(spark: SparkSession, path: String):
       Seq[(Long, Seq[Double], Double)] =
     cachedSidecar(spark, path, Seq("centroids")) {
       readCentroids(spark, s"$path/centroids", "cell", "c_vec", "c_norm")
@@ -978,23 +994,37 @@ object Similarity {
     }
 
   /** (super, s_vec, s_norm) sorted by super — the join-regime top level. */
-  private[operators] def superCentroidsOf(spark: SparkSession, path: String):
+  private def superCentroidsOf(spark: SparkSession, path: String):
       Seq[(Long, Seq[Double], Double)] =
     cachedSidecar(spark, path, Seq("supercentroids")) {
       readCentroids(spark, s"$path/supercentroids", "super", "s_vec", "s_norm")
     }
 
-  /** The two-level hierarchy, cached over BOTH sidecar tables' stamps. */
-  private[operators] def hierarchyOf(spark: SparkSession,
-      path: String): IvfHierarchy =
+  /** The write-time [[IvfHierarchy]] from the two sidecar tables (bounded
+    * collects — ≤ nLists + √nLists rows), cached over BOTH tables' stamps:
+    * the persisted one, never a rebuild — rebuilt from differently ordered
+    * centroids, a near-equidistant centroid's super can flip (driver-side
+    * float summation order), and a row probed or landed under a super the
+    * sidecar disagrees with is pruned away by every reader. */
+  private def hierarchyOf(spark: SparkSession, path: String): IvfHierarchy =
     cachedSidecar(spark, path, Seq("supercentroids", "centroids")) {
-      readHierarchy(spark, path)
+      import spark.implicits._
+      val supers = superCentroidsOf(spark, path)
+      val childRows = FastParquet.read(spark, s"$path/centroids")
+        .select(col("super"), col("cell"), col("c_vec"), col("c_norm"))
+        .as[(Long, Long, Seq[Double], Double)].collect()
+        .groupBy(_._1)
+      IvfHierarchy(supers,
+        supers.map { case (sid, _, _) =>
+          childRows.getOrElse(sid,
+            Array.empty[(Long, Long, Seq[Double], Double)])
+            .map(r => (r._2, r._3, r._4)).toSeq.sortBy(_._1) })
     }
 
   /** PQ meta (m, ksub, dsub, d) plus the ASSEMBLED codebook
     * cb(j)(code) = subvector — one cached load instead of the meta +
     * codebook read-and-regroup that every PQ read/append repeated. */
-  private[operators] def pqModelOf(spark: SparkSession, path: String):
+  private def pqModelOf(spark: SparkSession, path: String):
       ((Int, Int, Int, Int), Seq[Seq[Seq[Double]]]) =
     cachedSidecar(spark, path, Seq("meta", "codebook")) {
       import spark.implicits._
@@ -1010,24 +1040,8 @@ object Similarity {
       (meta, cb)
     }
 
-  /** Reconstruct the write-time [[IvfHierarchy]] from the two sidecar
-    * tables (bounded collects — ≤ nLists + √nLists rows). */
-  private[operators] def readHierarchy(spark: SparkSession,
-      path: String): IvfHierarchy = {
-    import spark.implicits._
-    val supers = superCentroidsOf(spark, path)
-    val childRows = FastParquet.read(spark, s"$path/centroids")
-      .select(col("super"), col("cell"), col("c_vec"), col("c_norm"))
-      .as[(Long, Long, Seq[Double], Double)].collect()
-      .groupBy(_._1)
-    IvfHierarchy(supers,
-      supers.map { case (sid, _, _) =>
-        childRows.getOrElse(sid, Array.empty[(Long, Long, Seq[Double], Double)])
-          .map(r => (r._2, r._3, r._4)).toSeq.sortBy(_._1) })
-  }
-
-  /** Batch k-NN over a PERSISTED PQ layout ([[pqWrite]]) — the batch twin
-    * of [[pqReadTopK]]. Each query precomputes its m×ksub ADC lookup table
+  /** Batch k-NN over a PERSISTED PQ layout ([[pqWrite]]); [[pqReadTopK]]
+    * is its one-row call. Each query precomputes its m×ksub ADC lookup table
     * ONCE, map-side on the query frame (ksub·d multiplies per QUERY, the
     * classic ADC trade), so the |corpus|·|Q| sweep over the compressed
     * codes table costs m array lookups per pair — not a d-wide dot — and
@@ -1409,37 +1423,16 @@ object Similarity {
     landSidecar(Seq(meta).toDF("m", "ksub", "dsub", "d"), s"$path/meta")
   }
 
-  /** Query a persisted PQ layout: rebuild the ADC table from the codebook
-    * sidecar (≤ m·ksub rows — the broadcast-build idiom), sweep the codes
-    * table, then fetch ONLY the shortlisted ids from the vector table for
-    * the exact re-rank.
+  /** Query a persisted PQ layout with ONE vector: a one-row
+    * [[pqBatchTopK]] — the same ADC sweep over the codes table and exact
+    * re-rank of the shortlisted vector rows — with `excludeId` as the
+    * query's `q_id`. `(idCol, cos)` rows, ordered by (cos desc, id asc).
     */
   def pqReadTopK(spark: SparkSession, path: String,
       queryVec: Array[Float], excludeId: Option[Long], k: Int,
-      rerank: Int = 64, idCol: String = "vec_id"): DataFrame = {
-    import spark.implicits._
-    require(rerank >= k, s"rerank ($rerank) must cover k ($k)")
-    val ((m, ksub, dsub, d), cb) = pqModelOf(spark, path)
-    val qd = queryVec.map(_.toDouble)
-    val qn = math.sqrt(qd.map(x => x * x).sum)
-    val q: Seq[Double] = (if (qn == 0.0) qd else qd.map(_ / qn)).toSeq
-    val table = pqAdcTable(cb, q, dsub, d)
-    val approx = V.adcFast(col("codes"), typedLit(table))
-    // ADC sweep touches ONLY the compressed codes table
-    val shortlist = FastParquet.read(spark, s"$path/codes")
-      .where(excludeId.map(col(idCol) =!= _).getOrElse(lit(true)))
-      .select(col(idCol), approx.as("approx"))
-      .orderBy(col("approx").desc, col(idCol).asc)
-      .limit(math.max(rerank, k))
-      .select(col(idCol))
-    // exact re-rank reads just the shortlisted vector rows (broadcast semi)
-    FastParquet.read(spark, s"$path/vectors")
-      .join(broadcast(shortlist), idCol)
-      .select(col(idCol),
-        round(V.dotFast(col("dv"), typedLit(q)), 6).as("cos"))
-      .orderBy(col("cos").desc, col(idCol).asc)
-      .limit(k)
-  }
+      rerank: Int = 64, idCol: String = "vec_id"): DataFrame =
+    oneRowRead(spark, queryVec, excludeId, idCol)((q, excl) =>
+      pqBatchTopK(spark, path, q, "q_id", "q_vec", k, rerank, excl, idCol))
 
   /** IVFADC layout (Jégou, Douze, Schmid — TPAMI 2011 §V): IVF cell
     * pruning composed IN FRONT of the PQ code sweep — the layout every
@@ -1464,33 +1457,22 @@ object Similarity {
       centroidsIn, PqCodec((m, ksub, dsub, d), cb))
   }
 
-  /** Cell-assign a batch against a persisted layout's SIDECAR centroids —
-    * the shared front of every append ([[ivfAppend]], [[ivfCodecAppend]])
-    * and of the exactly-once streaming ingest
-    * ([[graft.streaming.IndexIngest]]). Returns the batch rows with
-    * `super`/`cell` columns (super = 0 on flat layouts) plus the layout's
-    * hier flag. Hier layouts assign against the PERSISTED sidecar
-    * hierarchy, never a rebuilt one: a rebuild from differently ordered
-    * centroids can flip a near-equidistant centroid's super (driver-side
-    * float summation order), and a row landed under a super the sidecar
-    * disagrees with is pruned away by every reader (round-8 review
-    * finding). */
+  /** Cell-assign a batch against a persisted layout — the front of every
+    * append ([[ivfAppend]], [[ivfCodecAppend]]) and of the exactly-once
+    * streaming ingest ([[graft.streaming.IndexIngest]]): the `nProbe = 1`
+    * [[probeLayout]], so in every regime the assigned cell is the read
+    * side's first probe cell (a landed row is found by a probe of its own
+    * vector) and `super` (0 on flat layouts) is the persisted sidecar's.
+    * Returns the batch rows with `super`/`cell` plus the hier flag. */
   private[graft] def assignToLayout(batch: DataFrame, idCol: String,
-      vecCol: String, path: String,
-      payloadCols: Seq[String] = Nil): (DataFrame, Boolean) = {
-    val spark = batch.sparkSession
-    val hier = layoutIsHier(spark, path)
-    val payload = payloadCols.map(col)
-    val withNorm = batch
-      .select(col(idCol) +: col(vecCol) +: payload :+
-        V.asDoubleFast(col(vecCol)).as("dv"): _*)
-      .select(col(idCol) +: col(vecCol) +: payload :+ col("dv") :+
-        V.normFast(col("dv")).as("v_norm"): _*)
-    val assigned =
-      if (hier) withCellAssignmentHier(withNorm, hierarchyOf(spark, path))
-      else withCellAssignment(withNorm, centroidsOf(spark, path))
-    (assigned.select(col(idCol) +: col(vecCol) +: payload :+
-      col("super") :+ col("cell"): _*), hier)
+      vecCol: String, path: String, payloadCols: Seq[String] = Nil,
+      joinThreshold: Int = JoinThreshold): (DataFrame, Boolean) = {
+    val cols = col(vecCol) +: payloadCols.map(col)
+    val (probes, hier) = probeLayout(
+      batch.select(col(idCol).as("q_id") +: cols: _*), vecCol,
+      vecCol +: payloadCols, path, 1, joinThreshold)
+    (probes.select(col("q_id").as(idCol) +: cols :+ col("super") :+
+      col("cell"): _*), hier)
   }
 
   /** Internal column names the quantized layouts own. A payload column
@@ -1561,9 +1543,11 @@ object Similarity {
 
   /** Append a batch to a persisted IVF layout ([[ivfWrite]]) WITHOUT
     * retraining — the nightly-ingest maintenance story for a 100 TB index.
-    * Each batch row is assigned to its nearest EXISTING cell (sidecar
-    * centroids; the two-level path above [[HierThreshold]]) and appended
-    * as new files inside that cell's partition directory, so every reader
+    * Each batch row is assigned to the EXISTING cell a read of its own
+    * vector probes first ([[assignToLayout]]: the readers' probe regime,
+    * so a two-level layout above [[JoinThreshold]] lists assigns by the
+    * centroid-sidecar join) and appended as new files inside that cell's
+    * partition directory, so every reader
     * ([[ivfReadTopK]], [[ivfBatchTopK]], the incremental dedup paths) sees
     * the union transparently and partition pruning is unchanged. Cost:
     * O(|batch|·assign) + a |batch|-sized partitioned append — the corpus

@@ -86,7 +86,7 @@ object LakeWriter {
     val withParts =
       if (partCols.nonEmpty) configured.partitionBy(partCols: _*) else configured
     withParts.parquet(path)
-    val files = countParquetFiles(java.nio.file.Paths.get(path))
+    val files = countParquetFiles(df.sparkSession, path)
     WriteResult(path, partCols, files, observedRows(landed), out0.schema)
   }
 
@@ -213,12 +213,20 @@ object LakeWriter {
     registerInCatalog(spark, db, table, path, partitionColumns,
       spark.read.parquet(path).schema)
 
-  private def countParquetFiles(p: java.nio.file.Path): Long = {
-    if (!java.nio.file.Files.exists(p)) 0L
-    else {
-      val s = java.nio.file.Files.walk(p)
-      try s.filter(f => f.toString.endsWith(".parquet")).count()
-      finally s.close()
-    }
+  /** Parquet files under `path`, listed through the path's Hadoop
+    * `FileSystem` — the one Spark landed them through — so a `file:` or
+    * `s3a://` base counts as a bare local path does. A path that does not
+    * exist holds none. Walks with `listStatus`: the local FileSystem's
+    * `listFiles` builds a `LocatedFileStatus`, which reads each file's
+    * permissions by forking `ls`. */
+  private def countParquetFiles(spark: SparkSession, path: String): Long = {
+    import org.apache.hadoop.fs.Path
+    val root = new Path(path)
+    val fs = graft.FsSeam.fs(root, spark.sessionState.newHadoopConf())
+    def walk(dir: Path): Long = fs.listStatus(dir).map { st =>
+      if (st.isDirectory) walk(st.getPath)
+      else if (st.getPath.getName.endsWith(".parquet")) 1L else 0L
+    }.sum
+    if (fs.exists(root)) walk(root) else 0L
   }
 }

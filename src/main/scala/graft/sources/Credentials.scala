@@ -1,39 +1,21 @@
 package graft.sources
 
-import org.json4s._
-import org.json4s.jackson.JsonMethods
-
 /** X9 — credential resolution (`sybaseiq_extractor.py:57-95`): connection
   * secrets are fetched at runtime by reference and never stored in plans or
   * the ledger (the reference scrubs them before the ledger write,
   * `routing/lambda_function.py:125-127`; our LedgerEntry simply has no
   * credential fields).
   *
-  * The reference resolves a Secrets Manager ARN; locally the reference
-  * string resolves to a JSON file path (FileCredentialsProvider) or the
-  * process environment (EnvCredentialsProvider).
+  * The reference resolves a Secrets Manager ARN. graft's runner resolves
+  * credentials from the process environment (EnvCredentialsProvider), which
+  * ignores the reference string; embedded sources and tests pass fixed
+  * ones (StaticCredentialsProvider).
   */
 final case class JdbcCredentials(user: String, password: String,
     driver: Option[String] = None)
 
 trait CredentialsProvider {
   def resolve(ref: Option[String]): JdbcCredentials
-}
-
-/** Secret "ARN" = path of a JSON file `{"user": …, "password": …,
-  * "driver": …}` — the local analogue of a secret store entry. */
-object FileCredentialsProvider extends CredentialsProvider {
-  def resolve(ref: Option[String]): JdbcCredentials = {
-    val path = ref.getOrElse(
-      throw new IllegalArgumentException("CredentialsSecretArn required"))
-    val j = JsonMethods.parse(
-      java.nio.file.Files.readString(java.nio.file.Paths.get(path)))
-    def s(k: String): Option[String] = j \ k match {
-      case JString(v) => Some(v); case _ => None
-    }
-    JdbcCredentials(s("user").getOrElse(""), s("password").getOrElse(""),
-      s("driver"))
-  }
 }
 
 /** Credentials from the environment (GRAFT_JDBC_USER / _PASSWORD / _DRIVER). */

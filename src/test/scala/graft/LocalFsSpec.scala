@@ -131,6 +131,20 @@ class LocalFsSpec extends SparkSpec {
     assert(unset.get("fs.file.impl") == classOf[LocalFs].getName)
   }
 
+  test("a lake write to a file: URI base counts the files it landed") {
+    val lake = Files.createTempDirectory("graft_lfs_uri").toUri.toString
+      .stripSuffix("/")
+    assert(lake.startsWith("file:"), lake)
+    val days = spark.range(0, 60).select(
+      expr("date_add(date'2024-03-01', cast(id % 3 as int))").as("d"),
+      col("id"))
+    for ((suffix, part) <- Seq("k2/main/t" -> Some("d"), "k1/main/t" -> None)) {
+      val r = LakeWriter.write(days, lake, suffix, part, 60L)
+      assert(r.rows == 60 && r.files > 0, r)
+      assert(r.files == spark.read.parquet(r.path).inputFiles.length, r)
+    }
+  }
+
   test("a partitioned lake write and a stateful stream fork no Hadoop shell") {
     val lake = Files.createTempDirectory("graft_lfs_lake").toString
     val days = spark.range(0, 600).select(

@@ -146,8 +146,25 @@ class SimilaritySpec extends SparkSpec {
     def run(jt: Int) = Similarity.ivfBatchTopK(spark, path, queries,
       "vec_id", "embedding", 10, nProbe = 16, joinThreshold = jt)
       .orderBy($"q_id", $"vec_id").as[(Long, Long, Double)].collect().toSeq
+    // the append front: each row's (id, super, cell)
+    def assign(jt: Int) = Similarity.assignToLayout(emb, "vec_id",
+      "embedding", path, joinThreshold = jt)._1
+      .select($"vec_id", $"super", $"cell").as[(Long, Long, Long)]
+      .collect().sorted.toSeq
+    // the shared front as the incremental dedup probes it: nProbe = 2,
+    // checkpointed, rank 0 the primary cell
+    def dedupProbes(jt: Int) = {
+      val (probes, hier) = Similarity.probeLayout(
+        emb.select($"vec_id".as("q_id"), $"embedding"), "embedding",
+        Seq("embedding"), path, 2, joinThreshold = jt)
+      assert(hier)
+      probes.localCheckpoint(false)
+        .select($"q_id", $"rank".cast("long"), $"super", $"cell")
+        .as[(Long, Long, Long, Long)].collect().sorted.toSeq
+    }
     // every action's output columns, recorded while only the join-regime
-    // read runs against the fresh layout (nothing of it cached yet)
+    // read, append assignment and dedup probe run against the fresh
+    // layout (nothing of it cached yet)
     val outputs =
       new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
     val qel = new org.apache.spark.sql.util.QueryExecutionListener {
@@ -160,8 +177,8 @@ class SimilaritySpec extends SparkSpec {
           e: Exception): Unit = ()
     }
     spark.listenerManager.register(qel)
-    val joinMode = try {
-      val r = run(1)
+    val (joinMode, joinAssign, joinProbes) = try {
+      val r = (run(1), assign(1), dedupProbes(1))
       // the listener fires asynchronously and in order: wait for a marker
       // action submitted after the read
       spark.range(1).toDF("listener_marker").collect()
@@ -178,6 +195,12 @@ class SimilaritySpec extends SparkSpec {
       s"join regime collected centroid vectors: $collected")
     assert(joinMode.nonEmpty)
     assert(joinMode == run(4096), "join-mode read must equal the literal path")
+    assert(joinAssign.length == emb.count())
+    assert(joinAssign == assign(4096),
+      "join-mode append assignment must equal the literal one")
+    assert(joinProbes.length == 2 * emb.count())
+    assert(joinProbes == dedupProbes(4096),
+      "join-mode dedup probes must equal the literal ones")
   }
 
   test("IVFADC: recall clears the floor, shortlist cosines are exact, and " +
