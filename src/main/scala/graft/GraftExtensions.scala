@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.SparkConf
+import org.apache.spark.sql.{GraftSqlBridge, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.types.{IntegerType, LongType}
@@ -37,7 +38,30 @@ import graft.plans.{AutoBandedRangeJoin, TopKPerKeyStrategy}
   *    checkpoint rename; graft's answers both through `java.nio`. The
   *    extension runs before Hadoop caches the `file://` instance (that
   *    happens when the session's shared state is built), so every local
-  *    write of the session goes through it.
+  *    write of the session goes through it; and
+  *  - two Spark defaults on the SparkContext's `SparkConf`
+  *    ([[GraftExtensions.SparkDefaults]]) that keep a warm query from
+  *    compiling its generated code again. Spark keys its code-generation
+  *    cache by (task class loader, source text):
+  *     - `spark.sql.artifact.isolation.enabled=false`: with isolation on,
+  *       every session gets its own executor class loader, so a new
+  *       session (`newSession()`, which each stream query opens) compiles
+  *       every executor-side class again even when the source is the same.
+  *       graft adds no per-session artifacts (no `addArtifact`, no Spark
+  *       Connect);
+  *     - `spark.sql.codegen.cache.maxEntries=1000`, 10× Spark's default: a
+  *       cold pass over one query of each family compiles about 170
+  *       classes, and the cache splits its cap over 4 LRU segments, so at
+  *       100 entries every pass evicts what the next one needs.
+  *    The extension runs before the session's shared state copies the
+  *    `SparkConf` and before the JVM's first compile, so both take effect.
+  *    Spark reads the cache cap once per JVM, at its first compile: a
+  *    session built after that keeps the cap the first one had.
+  *
+  * Each default (the `LocalFs` keys too) applies only where the deployment
+  * left the key unset: a value the deployment configured is kept. A
+  * deployment that needs per-session artifacts sets
+  * `spark.sql.artifact.isolation.enabled=true` itself.
   *
   * Injection is configuration, applied uniformly at session build — no
   * ordering hazard between registration and first query. Graft's own
@@ -50,12 +74,23 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => AutoBandedRangeJoin)
     ext.injectPlannerStrategy(_ => TopKPerKeyStrategy)
     GraftExtensions.functions.foreach(ext.injectFunction)
-    org.apache.spark.sql.GraftSqlBridge.activeContext.foreach(sc =>
-      graft.fs.LocalFs.install(sc.hadoopConfiguration))
+    GraftSqlBridge.activeContext.foreach { sc =>
+      graft.fs.LocalFs.install(sc.hadoopConfiguration)
+      GraftExtensions.installSparkDefaults(GraftSqlBridge.conf(sc))
+    }
   }
 }
 
 object GraftExtensions {
+
+  /** The Spark keys graft sets where the deployment left them unset (see
+    * the class doc for why each). */
+  private[graft] val SparkDefaults: Seq[(String, String)] = Seq(
+    "spark.sql.artifact.isolation.enabled" -> "false",
+    "spark.sql.codegen.cache.maxEntries" -> "1000")
+
+  private[graft] def installSparkDefaults(conf: SparkConf): Unit =
+    SparkDefaults.foreach { case (k, v) => conf.setIfMissing(k, v) }
 
   /** The catalog functions every session gets, as injector builders. */
   val functions: Seq[(FunctionIdentifier, ExpressionInfo,

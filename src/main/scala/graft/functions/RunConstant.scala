@@ -13,8 +13,10 @@ import org.apache.spark.sql.types.DataType
   *
   * Spark's `Literal` writes primitive-typed values (`TimestampType` among
   * them) into the generated source as constants, and the codegen cache is
-  * keyed by that source text, so a `lit(loadTs)` makes every run compile its
-  * stages again. This expression reads the value through the generated
+  * keyed by (class loader, source text), so a `lit(loadTs)` makes every run
+  * compile its stages again. (The class loader half is why
+  * [[graft.GraftExtensions]] turns off per-session artifact class loaders.)
+  * This expression reads the value through the generated
   * class's `references` array instead (the `MinHashSig` pattern), so two runs
   * that differ only in the value share one compiled class.
   *

@@ -522,6 +522,16 @@ object Similarity {
       .orderBy(col("cos").desc, col(idCol).asc)
   }
 
+  /** Row count of a batch read's query frame, for sizing its broadcast
+    * chunks. A local frame ([[oneRowRead]]'s one row, any `toDF` of driver
+    * values) carries its rows in the plan, so counting it runs no job. */
+  private def queryCount(queries: DataFrame): Long =
+    queries.queryExecution.optimizedPlan match {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        l.data.size.toLong
+      case _ => queries.count()
+    }
+
   /** Exact batch top-k: the brute-force baseline for a DATAFRAME of query
     * vectors — every query row scored against every corpus row (broadcast
     * of the query side, codegen'd cosine, [[graft.plans.TopKPerKey]] k-cut:
@@ -704,7 +714,7 @@ object Similarity {
     // shortlist rows, which carry q_dv): chunks filter the PREPARED,
     // checkpointed queries by id hash, so each q_id lives wholly in one
     // chunk and the union IS the unchunked result.
-    val nQ = queries.count()
+    val nQ = queryCount(queries)
     val d = regime.d.toLong
     val estBytes = nQ * (np * codec.probeRowBytes(d) +
       (if (codec.reranked) cut.toLong * (d * 8 + 32) else 0L))
@@ -1096,7 +1106,7 @@ object Similarity {
     // the round-8 review caught the shortlist term missing). Chunks filter
     // the CHECKPOINTED qtable frame — the query source and the per-query
     // ADC tables are computed once, not once per chunk.
-    val nQ = queries.count()
+    val nQ = queryCount(queries)
     val estBytes = nQ * (m.toLong * ksub * 8 + d.toLong * 8 + 48 +
       math.max(rerank, k).toLong * (d.toLong * 8 + 32))
     if (estBytes > maxBroadcastBytes && nQ > 1) {

@@ -270,13 +270,19 @@ object SnapshotLake {
     * winner's version. ADVISORY both ways (r13 review): a crash here
     * leaves a snapshot that simply doesn't skip, and an exception must not
     * propagate either — the commit IS durable, and a caller that saw it
-    * fail would retry and append twice. */
+    * fail would retry and append twice. `footerStats` holds the stats
+    * lines the commit's own footer pass read ([[stagedFooters]]); None
+    * takes the Spark-aggregate fallback. */
   private def publishCommitSidecars(spark: SparkSession, table: String,
       v: Long, staged: Seq[String], store: CommitStore,
+      footerStats: Option[Seq[String]],
       kinds: (Sidecar[_], Seq[String])*): Unit =
     try kinds.foreach { case (kind, cols) =>
       if (cols.nonEmpty)
-        publishSidecar(table, kind, v, kind.build(spark, table, staged, cols),
+        publishSidecar(table, kind, v,
+          if (kind eq Stats)
+            footerStats.getOrElse(aggStatsLines(spark, table, staged, cols))
+          else kind.build(spark, table, staged, cols),
           store)
     } catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[lake] advisory sidecar publish failed for " +
@@ -561,7 +567,7 @@ object SnapshotLake {
       baseEntries: Seq[(String, Option[Long])], removes: Set[String],
       df: DataFrame, store: CommitStore, dedup: String,
       cols: Option[Seq[String]]): Option[Long] = {
-    val adds = stagedEntries(spark, table, stage(df, table))
+    val adds = stagedFooters(spark, table, stage(df, table), Nil)._1
     val ok = writeOnBase(table, base + 1, base,
       headerLineOf(table, base, store), baseEntries.size, baseEntries,
       removes, adds, store, Some(dedup), cols)
@@ -576,23 +582,31 @@ object SnapshotLake {
     spark.read.option("mergeSchema", "true")
       .parquet(files.map(f => s"$table/$f"): _*)
 
-  /** Row-count entries for freshly staged files, read from the parquet
-    * footers the write just produced (page-cache-hot; bounded-parallel).
-    * A file whose footer can't be read records no count — [[countRows]]
-    * falls back to walking just that file. */
-  private def stagedEntries(spark: SparkSession, table: String,
-      staged: Seq[String]): Seq[(String, Option[Long])] = {
+  /** One parquet footer read per file of `files` (for a commit, the files
+    * the write just produced: page-cache-hot; bounded-parallel), giving
+    * both what a commit needs from it:
+    *  - each file's row-count manifest entry. A file whose footer can't be
+    *    read records no count — [[countRows]] falls back to walking just
+    *    that file;
+    *  - the files' [min,max] lines for `statsCols` ([[footerStats]]), or
+    *    None when any file's footer can't serve them and the stats take
+    *    the Spark-aggregate fallback. */
+  private def stagedFooters(spark: SparkSession, table: String,
+      files: Seq[String], statsCols: Seq[String])
+      : (Seq[(String, Option[Long])], Option[Seq[String]]) = {
     val conf = spark.sessionState.newHadoopConf()
-    parFiles(staged) { f =>
-      f -> (try Some(footerRows(conf, table, f))
-        catch { case scala.util.control.NonFatal(_) => None })
+    val read = parFiles(files) { f =>
+      scala.util.Try(footer(conf, table, f)).fold(_ => (f -> None, None),
+        ft => (f -> Some(footerRows(ft)),
+          scala.util.Try(footerStats(ft, f, statsCols)).toOption))
     }
+    (read.map(_._1),
+      if (read.forall(_._2.isDefined)) Some(read.flatMap(_._2.get)) else None)
   }
 
-  /** Row count of data file `f` from its parquet footer. */
-  private def footerRows(conf: org.apache.hadoop.conf.Configuration,
-      table: String, f: String): Long =
-    footer(conf, table, f).getBlocks.asScala.map(_.getRowCount).sum
+  private def footerRows(
+      ft: org.apache.parquet.hadoop.metadata.ParquetMetadata): Long =
+    ft.getBlocks.asScala.map(_.getRowCount).sum
 
   private def footer(conf: org.apache.hadoop.conf.Configuration,
       table: String,
@@ -926,13 +940,15 @@ object SnapshotLake {
     // Partition-alias columns are directory metadata, not file content —
     // they must not enter the recorded data schema.
     val dataCols = df.columns.filterNot(stagePartitionCols.contains).toSeq
+    val (entries, footerStats) =
+      stagedFooters(df.sparkSession, table, staged, statsCols)
     val (v, won) = publishManifest(table, append, store, dedup, baseVersion,
-      stagedEntries(df.sparkSession, table, staged), dataCols)
+      entries, dataCols)
     if (!won) return v // a same-key winner's version: OUR staged files are
     // orphaned — publishing sidecars describing them under the winner's
     // version would be wrong (and was never done pre-refactor)
     publishCommitSidecars(df.sparkSession, table, v, staged, store,
-      Stats -> statsCols, Ndv -> ndvCols, Bloom -> bloomCols)
+      footerStats, Stats -> statsCols, Ndv -> ndvCols, Bloom -> bloomCols)
     v
   }
 
@@ -948,9 +964,14 @@ object SnapshotLake {
     */
   private def fileStatsLines(spark: SparkSession, table: String,
       staged: Seq[String], cols: Seq[String]): Seq[String] =
-    footerStatsLines(spark, table, staged, cols).getOrElse(
-      perFileLines(spark, table, staged, cols,
-        c => Seq(min(c).cast("double"), max(c).cast("double"))))
+    stagedFooters(spark, table, staged, cols)._2.getOrElse(
+      aggStatsLines(spark, table, staged, cols))
+
+  /** [[fileStatsLines]]'s Spark-aggregate fallback. */
+  private def aggStatsLines(spark: SparkSession, table: String,
+      staged: Seq[String], cols: Seq[String]): Seq[String] =
+    perFileLines(spark, table, staged, cols,
+      c => Seq(min(c).cast("double"), max(c).cast("double")))
 
   /** Sidecar lines `relpath \t column \t a1 \t … \t an` from one scan of
     * `staged` grouped by file, with the n aggregates `aggs(column)` of each
@@ -972,55 +993,52 @@ object SnapshotLake {
       }
   }
 
-  private def footerStatsLines(spark: SparkSession, table: String,
-      staged: Seq[String], cols: Seq[String]): Option[Seq[String]] = try {
-    val conf = spark.sessionState.newHadoopConf()
-    // bounded-parallel footer reads ([[parFiles]]): commit-time cost stays
-    // flat as numFiles grows; any per-file failure propagates out of the
-    // pool un-wrapped and lands in the catch-all → Spark-aggregate fallback
-    Some(parFiles(staged) { f =>
-      val ft = footer(conf, table, f)
-      val (blocks, schema) =
-        (ft.getBlocks.asScala, ft.getFileMetaData.getSchema)
-      cols.flatMap { c =>
-        // only PLAIN numeric primitives: an annotated INT64 (timestamp
-        // micros, decimal) has footer stats in different UNITS than the
-        // Spark-side cast-to-double the readers compare against — mispruned
-        // files would silently drop rows, so anything annotated falls back
-        val pt = schema.getType(Seq(c): _*).asPrimitiveType()
-        if (pt.getLogicalTypeAnnotation != null)
-          throw new IllegalStateException(s"annotated type for $c")
-        import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-        pt.getPrimitiveTypeName match {
-          case INT32 | INT64 | FLOAT | DOUBLE => ()
-          case other =>
-            throw new IllegalStateException(s"non-numeric $other for $c")
-        }
-        var mn = Double.PositiveInfinity
-        var mx = Double.NegativeInfinity
-        var seen = false
-        blocks.foreach { b =>
-          val cc = b.getColumns.asScala
-            .find(_.getPath.toDotString == c)
-            .getOrElse(throw new IllegalStateException(s"no footer column $c"))
-          val st = cc.getStatistics
-          if (st == null || st.isEmpty)
-            throw new IllegalStateException(s"no footer stats for $c")
-          if (st.hasNonNullValue) {
-            (st.genericGetMin, st.genericGetMax) match {
-              case (a: Number, b2: Number) =>
-                mn = math.min(mn, a.doubleValue)
-                mx = math.max(mx, b2.doubleValue)
-                seen = true
-              case _ =>
-                throw new IllegalStateException(s"non-numeric stats for $c")
-            }
+  /** `f`'s [min,max] lines for `cols` from its footer `ft`; throws when a
+    * column's footer stats can't serve the sidecar (the caller then takes
+    * the Spark-aggregate fallback). */
+  private def footerStats(
+      ft: org.apache.parquet.hadoop.metadata.ParquetMetadata, f: String,
+      cols: Seq[String]): Seq[String] = {
+    val (blocks, schema) =
+      (ft.getBlocks.asScala, ft.getFileMetaData.getSchema)
+    cols.flatMap { c =>
+      // only PLAIN numeric primitives: an annotated INT64 (timestamp
+      // micros, decimal) has footer stats in different UNITS than the
+      // Spark-side cast-to-double the readers compare against — mispruned
+      // files would silently drop rows, so anything annotated falls back
+      val pt = schema.getType(Seq(c): _*).asPrimitiveType()
+      if (pt.getLogicalTypeAnnotation != null)
+        throw new IllegalStateException(s"annotated type for $c")
+      import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+      pt.getPrimitiveTypeName match {
+        case INT32 | INT64 | FLOAT | DOUBLE => ()
+        case other =>
+          throw new IllegalStateException(s"non-numeric $other for $c")
+      }
+      var mn = Double.PositiveInfinity
+      var mx = Double.NegativeInfinity
+      var seen = false
+      blocks.foreach { b =>
+        val cc = b.getColumns.asScala
+          .find(_.getPath.toDotString == c)
+          .getOrElse(throw new IllegalStateException(s"no footer column $c"))
+        val st = cc.getStatistics
+        if (st == null || st.isEmpty)
+          throw new IllegalStateException(s"no footer stats for $c")
+        if (st.hasNonNullValue) {
+          (st.genericGetMin, st.genericGetMax) match {
+            case (a: Number, b2: Number) =>
+              mn = math.min(mn, a.doubleValue)
+              mx = math.max(mx, b2.doubleValue)
+              seen = true
+            case _ =>
+              throw new IllegalStateException(s"non-numeric stats for $c")
           }
         }
-        if (seen) Some(s"$f\t$c\t$mn\t$mx") else None
       }
-    }.flatten)
-  } catch { case _: Exception => None }
+      if (seen) Some(s"$f\t$c\t$mn\t$mx") else None
+    }
+  }
 
   /** Data-skipping range read: `read(version).where(lo <= column <= hi)`
     * with files whose sidecar [min,max] misses [lo, hi] never opened — the
@@ -1101,14 +1119,14 @@ object SnapshotLake {
     // the rewritten head (r13 review)
     val df = read(spark, table, Some(base), store, mergeSchema = true)
     val staged = stage(layout(df), table)
-    if (writeFullManifestAtomic(table, base + 1,
-        stagedEntries(spark, table, staged), store,
+    val (entries, footerStats) = stagedFooters(spark, table, staged, statsCols)
+    if (writeFullManifestAtomic(table, base + 1, entries, store,
         Some(s"$tag-of-v$base"), Some(df.columns.toSeq))) {
       // an exception here must not propagate: a caller that saw it would
       // retry against the advanced head and misread the CAS-lost None as
       // contention (r13 ADVICE)
       publishCommitSidecars(spark, table, base + 1, staged, store,
-        Stats -> statsCols)
+        footerStats, Stats -> statsCols)
       Some(base + 1)
     } else None
   }
@@ -1782,7 +1800,8 @@ object SnapshotLake {
     val (counted, uncounted) = entries.partition(_._2.isDefined)
     val conf = spark.sessionState.newHadoopConf()
     counted.iterator.map(_._2.get).sum +
-      parFiles(uncounted.map(_._1))(footerRows(conf, table, _)).sum
+      parFiles(uncounted.map(_._1))(f => footerRows(footer(conf, table, f)))
+        .sum
   }
 
   /** Retrofit per-file ROW COUNTS for a snapshot committed before counts
@@ -1802,7 +1821,7 @@ object SnapshotLake {
     if (missing == 0) return 0
     val conf = spark.sessionState.newHadoopConf()
     val filled = parFiles(entries) { case (f, rows) =>
-      (f, rows.orElse(Some(footerRows(conf, table, f))))
+      (f, rows.orElse(Some(footerRows(footer(conf, table, f)))))
     }
     // an earlier (count-less) checkpoint must not shadow the counted one.
     // Checkpoints are derived state under the single-maintenance-writer
@@ -1824,7 +1843,7 @@ object SnapshotLake {
     * result in join order, deterministically. Small lists skip the pool:
     * thread spin-up would dominate. Failures propagate with their
     * original exception (un-wrapped from the executor) so callers'
-    * fallback semantics (e.g. [[footerStatsLines]]'s catch-all) are
+    * fallback semantics (e.g. [[stagedFooters]]'s per-file `Try`) are
     * unchanged.
     */
   private def parFiles[A, B](files: Seq[A])(f: A => B): Seq[B] =

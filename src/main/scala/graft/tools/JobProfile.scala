@@ -13,10 +13,16 @@ import org.apache.spark.sql.SparkSession
   * Usage: JobProfile <query> [sfDir] [runs]
   * Each run `collect()`s the query, as `Verify` and the benchmarks do
   * (a `count()` lets the optimizer prune the columns they compute).
-  * Prints, for the LAST run (warm): one line per job (start offset, wall,
-  * #tasks, call site of the SQL execution the job belongs to, else the
-  * job's last stage) and a summary line with the inter-job gap total and
-  * the number of classes Janino compiled during the run (this JVM only).
+  * Prints, for every run, its wall, row count and the number of classes
+  * Janino compiled during it (this JVM only); and for the LAST run (warm):
+  * one line per job (start offset, wall, #tasks, call site of the SQL
+  * execution the job belongs to, else the job's last stage) and a summary
+  * line with the inter-job gap total.
+  *
+  * A warm run compiles nothing because [[graft.GraftExtensions]] turns off
+  * Spark's per-session artifact class loaders;
+  * `GRAFT_CONF=spark.sql.artifact.isolation.enabled=true` brings back the
+  * per-session recompile for an A/B.
   *
   * GRAFT_PRERUN=q1,q2,... runs those queries once each (untimed) BEFORE the
   * profiled target — reproduces in-bench JVM state (accumulated cached
@@ -154,7 +160,8 @@ object JobProfile {
       lastWall = (System.nanoTime() - t0) / 1e9
       val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0
       sampling = false
-      System.err.println(f"[prof] $name run$i $lastWall%8.2fs rows=$n")
+      System.err.println(
+        f"[prof] $name run$i $lastWall%8.2fs rows=$n compiled=$compiled")
       jvmState(s"after run$i")
       if (capture) {
         import scala.jdk.CollectionConverters._
@@ -194,7 +201,6 @@ object JobProfile {
             f"inter-job-gap=${span - covered / 1e3}%.2fs " +
             f"outside-span=${lastWall - span}%.2fs (pre/post driver work) " +
             f"cpu_total=${js.map(_.cpuNs).sum / 1e9}%.2fs " +
-            f"compiled=$compiled " +
             f"spill_total=${js.map(j => j.spillMem + j.spillDisk).sum / 1e6}%.0fMB")
         } else System.err.println("[prof] no jobs captured")
       }

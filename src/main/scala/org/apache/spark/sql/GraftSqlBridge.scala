@@ -1,6 +1,6 @@
 package org.apache.spark.sql
 
-import org.apache.spark.SparkContext
+import org.apache.spark.{SparkConf, SparkContext}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * DataFrame from a raw LogicalPlan (to hand custom logical nodes such as
   * [[graft.plans.TopKPerKey]] to the planner), extracting the Catalyst
   * expression behind a public Column, and reaching the active SparkContext
-  * from a session extension. All are `private[sql]`/`private[spark]` in
+  * and its live configuration from a session extension. All are `private[sql]`/`private[spark]` in
   * Spark 4's classic API — the standard extension-library move is a
   * package-scoped bridge; everything else in graft stays on public surface.
   */
@@ -32,4 +32,8 @@ object GraftSqlBridge {
 
   /** The SparkContext a session is being built on (`private[spark]`). */
   def activeContext: Option[SparkContext] = SparkContext.getActive
+
+  /** The context's own `SparkConf` (`private[spark]`; the public `getConf`
+    * is a copy, so a key set on it reaches no session). */
+  def conf(sc: SparkContext): SparkConf = sc.conf
 }

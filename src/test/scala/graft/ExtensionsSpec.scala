@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.SparkConf
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -151,5 +153,46 @@ class ExtensionsSpec extends SparkSpec {
       spark.conf.unset(AutoBandedRangeJoin.BinSizeKey)
       spark.experimental.extraOptimizations = before
     }
+  }
+
+  /** Classes Janino compiled while `f` ran. The counter is JVM-global; the
+    * forked test JVM runs one suite at a time, so only `f` adds to it. */
+  private def compiledDuring(f: => Unit): Long = {
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    f
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+  }
+
+  test("a fresh session reuses the classes another session compiled") {
+    def aggregate(s: SparkSession): Array[org.apache.spark.sql.Row] =
+      s.range(0, 5000).select((col("id") % 7).as("k"), (col("id") * 3).as("v"))
+        .groupBy("k").agg(sum("v").as("s"), max("v").as("m"))
+        .orderBy("k").collect()
+    val first = aggregate(spark.newSession())
+    var second: Array[org.apache.spark.sql.Row] = null
+    val compiled = compiledDuring { second = aggregate(spark.newSession()) }
+    assert(compiled == 0, "a second session recompiled the same stages")
+    assert(second.toSeq == first.toSeq)
+  }
+
+  test("a warm stream query compiles nothing") {
+    def run(): Int =
+      SparkEntry.queries("ev_stream_tumbling")(spark, sf0001).collect().length
+    val rows = run()
+    var again = 0
+    assert(compiledDuring { again = run() } == 0)
+    assert(again == rows && rows > 0)
+  }
+
+  test("graft's Spark defaults fill only the keys a deployment left unset") {
+    val Seq(isolation, cap) = GraftExtensions.SparkDefaults.map(_._1)
+    val set = new SparkConf(false).set(isolation, "true").set(cap, "50")
+    GraftExtensions.installSparkDefaults(set)
+    assert(set.get(isolation) == "true" && set.get(cap) == "50")
+    val unset = new SparkConf(false)
+    GraftExtensions.installSparkDefaults(unset)
+    assert(unset.get(isolation) == "false" && unset.get(cap) == "1000")
+    // the shared test session is built with the extension, so it has both
+    assert(spark.conf.get(isolation) == "false" && spark.conf.get(cap) == "1000")
   }
 }
