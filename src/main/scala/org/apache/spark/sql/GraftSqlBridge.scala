@@ -8,7 +8,8 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * DataFrame from a raw LogicalPlan (to hand custom logical nodes such as
   * [[graft.plans.TopKPerKey]] to the planner), extracting the Catalyst
   * expression behind a public Column, and reaching the active SparkContext
-  * and its live configuration from a session extension. All are `private[sql]`/`private[spark]` in
+  * and its live configuration from a session extension. All are
+  * `private[sql]`/`private[spark]` in
   * Spark 4's classic API — the standard extension-library move is a
   * package-scoped bridge; everything else in graft stays on public surface.
   */
